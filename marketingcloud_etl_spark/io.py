@@ -6,9 +6,11 @@ scans so Catalyst gets full predicate-pushdown + column-pruning freedom.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +28,14 @@ TABLES = (
     "embeddings",
 )
 
-__all__ = ["TABLES", "table", "register_views", "atomic_cached_write"]
+__all__ = [
+    "TABLES",
+    "table",
+    "register_views",
+    "atomic_cached_write",
+    "query_state",
+    "scratch_dir",
+]
 
 
 def atomic_cached_write(path: str, write_fn) -> str:
@@ -151,3 +160,70 @@ def fixture_tag(sf_dir: str) -> str:
     abs_dir = os.path.abspath(sf_dir.rstrip("/"))
     leaf = os.path.basename(abs_dir).replace(".", "_")
     return f"{leaf}_{hashlib.sha1(abs_dir.encode()).hexdigest()[:10]}"
+
+
+# Per-query state: where it lives, what keys it, how it appears
+# atomically and when it is removed are decided here and nowhere else.
+_STATE_ROOT: str | None = None
+_STATES: dict[tuple[str, str], tuple[str, object]] = {}
+_STATE_LOCK = threading.RLock()
+
+
+def _remove_state_root(root: str, owner: int) -> None:
+    # a forked child inherits the atexit hook; only the creator removes
+    if os.getpid() == owner:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _state_root() -> str:
+    """The per-process dir every query state and scratch dir lives
+    under: created on first use, removed when the interpreter exits.
+    Deliberately not a cross-process /tmp cache — a state's content
+    depends on the code that built it, so a dir left behind by an older
+    checkout must never be served."""
+    global _STATE_ROOT
+    with _STATE_LOCK:
+        if _STATE_ROOT is None:
+            root = tempfile.mkdtemp(prefix="mcetl_state_")
+            atexit.register(_remove_state_root, root, os.getpid())
+            _STATE_ROOT = root
+        return _STATE_ROOT
+
+
+def query_state(name: str, sf_dir: str, build) -> tuple[str, object]:
+    """Memoized per-process state of query ``name`` over fixture
+    ``sf_dir``; returns ``(dir, value)``.
+
+    On the first call, or once ``dir`` has gone, ``build(d)`` writes
+    the state's files under ``d`` and returns any Python value the
+    state carries (a codebook, a merge list; ``None`` for file-only
+    states). ``d`` is a tmp sibling that :func:`atomic_cached_write`
+    renames into place after a top-level ``_SUCCESS`` marker is written
+    (multi-table states have no Spark marker at their top), so a build
+    that raises leaves nothing behind and the next call builds again.
+    Because of the rename, nothing ``build`` persists may embed ``d``
+    itself — store paths relative to it. Keyed on
+    :func:`fixture_tag`, so every spelling of one fixture path shares
+    one state."""
+    key = (name, fixture_tag(sf_dir))
+    with _STATE_LOCK:
+        hit = _STATES.get(key)
+        if hit is None or not os.path.exists(os.path.join(hit[0], "_SUCCESS")):
+            built = []
+
+            def write(tmp: str) -> None:
+                os.makedirs(tmp)
+                built.append(build(tmp))
+                open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+            path = os.path.join(_state_root(), f"{name}_{key[1]}")
+            hit = _STATES[key] = (atomic_cached_write(path, write), built[0])
+        return hit
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh empty dir for one call of query ``name`` (replay copies,
+    stream checkpoints, sink outputs). It shares the per-process root
+    with :func:`query_state` and is removed with it at exit, not at
+    return: the caller's result may be a lazy frame still reading it."""
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_state_root())

@@ -433,35 +433,19 @@ def grouped_quantile_cont(
     if len(ps) != len(ocols):
         raise ValueError("p and out_col lists must pair up")
     gcols = list(group_cols)
-    # FUSED counts+prefix partitioning (r13): range-partition the raw
-    # (group, value) pairs ONCE on the prefix order; the counts
-    # aggregation then runs WITHIN those partitions with no second
-    # exchange, because RangePartitioning on (group, value) satisfies
-    # the aggregation's ClusteredDistribution on the same keys — plan
-    # shows hash=0/range=1 where the former hash-agg-then-range chain
-    # paid two full exchanges of the pair frame (A/B: 2.6→2.1 s at
-    # sf0.1, bitwise-equal results). The partition id is captured on
-    # the aggregated rows so the prefix window needs no re-derivation.
-    # Scale note: the exchange moves RAW pairs (no map-side combine) —
-    # in this operator's regime (continuous values: prices, measures)
-    # distinct (group, value) pairs ≈ raw rows, so the bytes are the
-    # same and one exchange strictly wins; for heavily-repeating
-    # values feed :func:`grouped_quantile_from_counts` a pre-combined
-    # counts table instead.
-    # NULL values are excluded BEFORE counting — the builtin aggregate
-    # ignores them (they carry no rank), and without the filter they
-    # would range-partition as the lowest sort key and shift every
-    # group's rank arithmetic.
+    # Scale note: the range exchange moves RAW pairs (no map-side
+    # combine) — in this operator's regime (continuous values: prices,
+    # measures) distinct (group, value) pairs ≈ raw rows, so the bytes
+    # are the same as a combined exchange; for heavily-repeating values
+    # feed :func:`grouped_quantile_from_counts` a pre-combined counts
+    # table instead.
     # The counts frame feeds THREE consumers (the prefix sum, the
     # per-group totals, and — through anchored — the rank-cover test);
     # without the pin each consumer re-runs the scan + exchange.
     counts = pin_cache(
-        df.filter(F.col(value_col).isNotNull())
-        .select(*gcols, value_col)
-        .repartitionByRange(*gcols, value_col)
-        .groupBy(*gcols, value_col)
-        .agg(F.count(F.lit(1)).alias("__qc_cnt"))
-        .withColumn(_PID, F.spark_partition_id()),
+        _range_clustered_counts(
+            df.select(*gcols, value_col), gcols, value_col, F.count(F.lit(1))
+        ),
         sticky=True,
     )
     res = _quantile_over_counts(
@@ -499,15 +483,12 @@ def grouped_quantile_from_counts(
     if len(ps) != len(ocols):
         raise ValueError("p and out_col lists must pair up")
     gcols = list(group_cols)
-    # same fused partitioning as grouped_quantile_cont: one range
-    # exchange of the (state ∪ batch) counts rows, merge-agg within
-    # partitions, partition id captured for the prefix window
+    # (state ∪ batch) counts rows merge-aggregate within their range
+    # partitions, as in grouped_quantile_cont
     c = pin_cache(
-        counts.filter(F.col(value_col).isNotNull())
-        .repartitionByRange(*gcols, value_col)
-        .groupBy(*gcols, value_col)
-        .agg(F.sum(cnt_col).cast("long").alias("__qc_cnt"))
-        .withColumn(_PID, F.spark_partition_id())
+        _range_clustered_counts(
+            counts, gcols, value_col, F.sum(cnt_col).cast("long")
+        )
     )
     return _quantile_over_counts(
         c, gcols, value_col, ps, ocols, sticky=False, clustered=True
@@ -593,6 +574,43 @@ def grouped_quantile_from_bounded_counts(
     return rows.select(*gcols, *outs, "n")
 
 
+def _range_clustered_counts(
+    df: DataFrame, gcols: list, value_col: str, cnt: Column
+) -> DataFrame:
+    """Per-(group, value) counts ``cnt`` AS ``__qc_cnt``, range-
+    partitioned on (gcols..., value) with the range partition id
+    captured in ``_PID`` — the ``clustered=True`` input of
+    :func:`_quantile_over_counts`.
+
+    The raw rows are range-partitioned ONCE on the prefix order, and
+    the counts aggregation runs within those partitions with no
+    exchange of its own, because RangePartitioning on (group, value)
+    satisfies the aggregation's ClusteredDistribution on the same keys.
+    That is the only exchange the fusion saves: the prefix window's
+    ``partitionBy(_PID)`` still plans a hashpartitioning(_PID) exchange
+    of the distinct-pair frame (visible in q357's plan).
+
+    Planner contract the prefix sum relies on: each ``_PID``'s key
+    range is disjoint from the others and ascending in ``_PID``. An
+    exchange planned between the range repartition and the aggregate
+    (a Spark upgrade, or a conf such as
+    ``spark.sql.requireAllClusterKeysForDistribution``) would break it
+    and yield wrong quantiles, not an error — tests/test_operators.py
+    pins it.
+
+    NULL values are excluded BEFORE counting — the builtin aggregate
+    ignores them (they carry no rank), and without the filter they
+    would range-partition as the lowest sort key and shift every
+    group's rank arithmetic."""
+    return (
+        df.filter(F.col(value_col).isNotNull())
+        .repartitionByRange(*gcols, value_col)
+        .groupBy(*gcols, value_col)
+        .agg(cnt.alias("__qc_cnt"))
+        .withColumn(_PID, F.spark_partition_id())
+    )
+
+
 def _quantile_over_counts(
     counts: DataFrame,
     gcols: list,
@@ -609,9 +627,9 @@ def _quantile_over_counts(
     cache tier (q357/q365 share it; state-fed counts do not).
     ``clustered=True`` declares that ``counts`` is ALREADY
     range-partitioned on (gcols..., value) and carries its partition
-    id in ``_PID`` (the fused entry points) — the prefix sum then
-    runs its local window + P²-broadcast offsets directly instead of
-    re-partitioning through :func:`global_prefix_sum`."""
+    id in ``_PID`` (:func:`_range_clustered_counts`) — the prefix sum
+    then runs its per-pid window + P²-broadcast offsets instead of
+    range-partitioning again through :func:`global_prefix_sum`."""
     # The prefix-sum result is the operator's expensive pass (the
     # per-bucket window over the distinct-pair frame); with
     # sticky=True two catalog queries over the same input (q357's

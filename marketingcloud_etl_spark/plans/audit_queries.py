@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..io import table
+from ..io import query_state, table
 from ..session import prep
 from .catalog import query
 
@@ -775,10 +775,6 @@ def merge_checksum_triples(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-# q417 state cache: sf_dir -> parquet dir of per-source checksum state
-_Q417_STATE: dict[str, str] = {}
-
-
 @query(
     "q417_incremental_checksum_state",
     oracle=f"""
@@ -806,9 +802,6 @@ def q417_incremental_checksum_state(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: batch-slice scan (date filter pushed) + one keyed agg over
     the 5-value source domain + a domain-sized merge join. The state
     is one constant-width row per source."""
-    import os
-    import tempfile
-
     prep(spark)
     e = table(spark, sf_dir, "events")
 
@@ -818,18 +811,16 @@ def q417_incremental_checksum_state(spark: SparkSession, sf_dir: str) -> DataFra
             *_checksum_sums_spark(_row_digest_spark(_EVENTS_COLS)),
         )
 
-    state_dir = _Q417_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q417_") + "/checksum_state"
+    def build(sd: str) -> None:
         # NULL-ts rows belong to exactly ONE window or the incremental
         # result diverges from the from-scratch checksum: `ts < cut`
         # AND `ts >= cut` are both NULL-false, so a plain split drops
         # them from both sides. They fold into the history state.
         triple(
             e.filter((F.col("ts") < "2024-01-16") | F.col("ts").isNull())
-        ).write.parquet(state_dir)
-        _Q417_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+        ).write.parquet(sd + "/checksum_state")
+
+    state = spark.read.parquet(query_state("q417", sf_dir, build)[0] + "/checksum_state")
 
     batch = triple(e.filter(F.col("ts") >= "2024-01-16"))
     return merge_checksum_triples(state, batch)

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import content_hash, content_hash_sql
 from ..functions.money import dec
-from ..io import atomic_cached_write, fixture_tag, table
+from ..io import atomic_cached_write, fixture_tag, query_state, scratch_dir, table
 from ..session import prep
 from .catalog import query
 
@@ -301,8 +301,6 @@ def q83_rest_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing keys, query-string strip, 256-char cap, bad dates.
     Rows-only: the HTTP source has no DuckDB twin."""
     prep(spark)
-    import tempfile
-
     from ..etl.lead_activity import flatten_lead_activity, read_lead_activity
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
 
@@ -312,7 +310,7 @@ def q83_rest_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # return the re-read so the caller can collect after the server is
     # gone. This mirrors the production bulk path
     # (etl/lead_activity.py::bulk_load).
-    out = tempfile.mkdtemp(prefix="mcetl_q83_") + "/lead_activity"
+    out = scratch_dir("q83") + "/lead_activity"
     with MockSfmcServer(n_items=35) as server:
         items = read_lead_activity(
             spark,
@@ -342,13 +340,11 @@ def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HTTP source has no DuckDB twin); restart-idempotence pinned in
     tests/test_etl_rest.py."""
     prep(spark)
-    import tempfile
-
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
     from ..sources.rest import register_rest_source
 
     register_rest_source(spark)
-    base = tempfile.mkdtemp(prefix="mcetl_q148_")
+    base = scratch_dir("q148")
     out_dir, ck = f"{base}/rows", f"{base}/ck"
 
     def sink(batch_df, batch_id):
@@ -428,12 +424,11 @@ def q93_jdbc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline is identical; see sinks/jdbc_merge.py.)"""
     prep(spark)
     import sqlite3
-    import tempfile
 
     from ..functions.hashing import content_hash
     from ..sinks.jdbc_merge import merge_upsert, sqlite_standins
 
-    db = tempfile.mkdtemp(prefix="mcetl_q93_") + "/wh.db"
+    db = scratch_dir("q93") + "/wh.db"
     stage_writer, statement_runner = sqlite_standins(db)
 
     e = table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
@@ -489,12 +484,11 @@ def q339_jdbc_merge_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     JDBC source). Same q168 pattern as the custom-writer sink."""
     prep(spark)
     import sqlite3
-    import tempfile
 
     from ..functions.hashing import content_hash
     from ..sinks.jdbc_merge import merge_upsert, sqlite_standins
 
-    db = tempfile.mkdtemp(prefix="mcetl_q339_") + "/wh.db"
+    db = scratch_dir("q339") + "/wh.db"
     stage_writer, statement_runner = sqlite_standins(db)
 
     e = table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
@@ -580,12 +574,10 @@ def q340_rest_flatten_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     specific digest); dedup-by-hash equals dedup-by-content because
     the hash is a pure function of the raw fields."""
     prep(spark)
-    import tempfile
-
     from ..etl.lead_activity import flatten_lead_activity, read_lead_activity
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
 
-    out = tempfile.mkdtemp(prefix="mcetl_q340_") + "/flat"
+    out = scratch_dir("q340") + "/flat"
     with MockSfmcServer(n_items=35) as server:
         items = read_lead_activity(
             spark,
@@ -636,13 +628,11 @@ def q341_rest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join, q340), raw uncleaned event_name proving the stream
     carries source fidelity."""
     prep(spark)
-    import tempfile
-
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
     from ..sources.rest import register_rest_source
 
     register_rest_source(spark)
-    base = tempfile.mkdtemp(prefix="mcetl_q341_")
+    base = scratch_dir("q341")
     out_dir, ck = f"{base}/rows", f"{base}/ck"
 
     def sink(batch_df, batch_id):
@@ -1381,7 +1371,6 @@ def q343_pydatasource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     (salesforce_extractor.py:197-230) — here each epoch is one
     distributed transactional append."""
     import os
-    import tempfile
 
     prep(spark)
     from ..sinks.pydatasource import JsonLinesSinkDataSource, read_stream_manifests
@@ -1394,7 +1383,7 @@ def q343_pydatasource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     # Per-invocation dir (not fixture-keyed): a driver verification run
     # and a concurrent pytest run on the same fixture must not rmtree
     # each other's in-flight sink/checkpoint dirs.
-    base = tempfile.mkdtemp(prefix="mcetl_pystreamsink_")
+    base = scratch_dir("q343") + "/sink"
     src = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     q = (
         src.writeStream.format("mcetl_jsonl_sink")
@@ -3994,10 +3983,6 @@ def q377_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q400 state cache: sf_dir -> parquet dir of the history bitmap state
-_Q400_STATE: dict[str, str] = {}
-
-
 @query(
     "q400_incremental_distinct_state",
     oracle="""
@@ -4042,9 +4027,6 @@ def q400_incremental_distinct_state(spark: SparkSession, sf_dir: str) -> DataFra
     combines map-side. This is R16's count-watermark posture applied
     to the one aggregate incremental pipelines most often get wrong
     (re-scanning history for every daily distinct-users report)."""
-    import os
-    import tempfile
-
     prep(spark)
     o = table(spark, sf_dir, "orders")
 
@@ -4059,13 +4041,11 @@ def q400_incremental_distinct_state(spark: SparkSession, sf_dir: str) -> DataFra
             .agg(F.expr("bitmap_construct_agg(pos)").alias("bm"))
         )
 
-    state_dir = _Q400_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q400_") + "/bitmap_state"
+    def build(sd: str) -> None:
         hist = o.filter(F.col("o_orderdate") < "1997-01-01")
-        bitmaps(hist).write.mode("overwrite").parquet(state_dir)
-        _Q400_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+        bitmaps(hist).write.parquet(sd + "/bitmap_state")
+
+    state = spark.read.parquet(query_state("q400", sf_dir, build)[0] + "/bitmap_state")
 
     batch = o.filter(F.col("o_orderdate") >= "1997-01-01")
     merged = (
@@ -4086,10 +4066,6 @@ def q400_incremental_distinct_state(spark: SparkSession, sf_dir: str) -> DataFra
         .cast("bigint")
         .alias("n_new_customers"),
     )
-
-
-# q406 state cache: sf_dir -> parquet dir of the maintained join view
-_Q406_STATE: dict[str, str] = {}
 
 
 @query(
@@ -4141,9 +4117,6 @@ def q406_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     test; q304 remains the insert-only delta-JOIN decomposition
     (dA⋈B ∪ A⋈dB ∪ dA⋈dB) — this query adds the retraction algebra
     both need at the aggregation layer."""
-    import os
-    import tempfile
-
     prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -4158,9 +4131,7 @@ def q406_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
 
-    state_dir = _Q406_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q406_") + "/join_view"
+    def build(sd: str) -> None:
         base = o.filter(F.col("o_orderkey") % 5 != 0).withColumn(
             "__sign", F.lit(1).cast("bigint")
         )
@@ -4171,11 +4142,10 @@ def q406_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("sign").cast("bigint").alias("n_orders"),
                 F.sum("cents").cast("bigint").alias("revenue_cents"),
             )
-            .write.mode("overwrite")
-            .parquet(state_dir)
+            .write.parquet(sd + "/join_view")
         )
-        _Q406_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+
+    state = spark.read.parquet(query_state("q406", sf_dir, build)[0] + "/join_view")
 
     # the mixed CDC batch: inserts (+1) and deletes of base rows (-1,
     # full before-images — the Debezium 'before' payload shape)
@@ -4492,10 +4462,6 @@ def q428_cdc_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q424 state cache: sf_dir -> parquet dir of the (month x nation) MV
-_Q424_STATE: dict[str, str] = {}
-
-
 @query(
     "q424_mv_rewrite_routing",
     oracle="""
@@ -4539,9 +4505,6 @@ def q424_mv_rewrite_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     read reduction is the entire point of summary tables; both dim
     joins broadcast, and MV maintenance (not re-derivation) is
     already covered by the signed-delta machinery of q304/q406."""
-    import os
-    import tempfile
-
     prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
@@ -4549,9 +4512,7 @@ def q424_mv_rewrite_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
 
-    state_dir = _Q424_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q424_") + "/mv_month_nation"
+    def build(sd: str) -> None:
         rev = dec("l_extendedprice", 12, 2) * (
             F.lit(1).cast("decimal(3,2)") - dec("l_discount", 4, 2)
         )
@@ -4568,12 +4529,10 @@ def q424_mv_rewrite_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(rev).alias("rev_dec"),
                 F.count(F.lit(1)).cast("bigint").alias("n_items"),
             )
-            .write.mode("overwrite")
-            .parquet(state_dir)
+            .write.parquet(sd + "/mv_month_nation")
         )
-        _Q424_STATE[sf_dir] = state_dir
 
-    mv = spark.read.parquet(state_dir)
+    mv = spark.read.parquet(query_state("q424", sf_dir, build)[0] + "/mv_month_nation")
     return (
         mv.join(F.broadcast(n), mv.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -4584,9 +4543,6 @@ def q424_mv_rewrite_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# q429 state cache: sf_dir -> parquet dir of the signed-IVM-ready MV
-_Q429_STATE: dict[str, str] = {}
 
 # revenue as an exact x10^4 integer: l_extendedprice is 2-decimal and
 # (1 - l_discount) is 2-decimal, so cents x discount-cents is exact —
@@ -4644,9 +4600,6 @@ def q429_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the refreshed MV + broadcast dims exactly like q424. This
     is the full lifecycle of a production summary table: build once
     (setup), maintain by delta, serve by rollup."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..operators.state import signed_view_merge
 
@@ -4677,12 +4630,11 @@ def q429_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     hist = o.filter(F.col("o_orderdate") < "1998-01-01")
-    state_dir = _Q429_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q429_") + "/mv_signed"
-        cells(hist, +1).write.mode("overwrite").parquet(state_dir)
-        _Q429_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+
+    def build(sd: str) -> None:
+        cells(hist, +1).write.parquet(sd + "/mv_signed")
+
+    state = spark.read.parquet(query_state("q429", sf_dir, build)[0] + "/mv_signed")
 
     batch = cells(o.filter(F.col("o_orderdate") >= "1998-01-01"), +1)
     retract = cells(hist.filter(F.col("o_orderkey") % 97 == 0), -1)

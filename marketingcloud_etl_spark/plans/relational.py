@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.money import dec
-from ..io import fixture_tag, table
+from ..io import fixture_tag, query_state, table
 from ..session import prep
 from .catalog import query
 
@@ -4794,10 +4794,6 @@ def q387_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q402 state cache: sf_dir -> parquet dir of the history counts state
-_Q402_STATE: dict[str, str] = {}
-
-
 @query(
     "q402_incremental_quantile_state",
     oracle="""
@@ -4844,9 +4840,6 @@ def q402_incremental_quantile_state(spark: SparkSession, sf_dir: str) -> DataFra
     (sub-cent floats) should quantize first (cents — q357) or take the
     GK-sketch path (q112) — the counts posture needs a bounded value
     domain to stay small."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..operators.ranking import grouped_quantile_from_bounded_counts
 
@@ -4856,18 +4849,15 @@ def q402_incremental_quantile_state(spark: SparkSession, sf_dir: str) -> DataFra
         "l_shipdate",
     )
 
-    state_dir = _Q402_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q402_") + "/quantile_counts"
+    def build(sd: str) -> None:
         (
             li.filter(F.col("l_shipdate") < "1997-01-01")
             .groupBy("l_returnflag", "qty")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(state_dir)
+            .write.parquet(sd + "/quantile_counts")
         )
-        _Q402_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+
+    state = spark.read.parquet(query_state("q402", sf_dir, build)[0] + "/quantile_counts")
 
     batch_counts = (
         li.filter(F.col("l_shipdate") >= "1997-01-01")

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import dec
-from ..io import fixture_tag, table
+from ..io import fixture_tag, query_state, scratch_dir, table
 from ..operators.sessionize import sessionize
 from ..session import prep
 from .catalog import query
@@ -539,12 +539,10 @@ def q147_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch aggregate — proving the on-disk state IS the
     answer, the property checkpoint recovery (and this debugging
     workflow at 100 TB) relies on."""
-    import tempfile
-
     prep(spark)
     from ..streaming.jobs import events_stream
 
-    ck = tempfile.mkdtemp(prefix="mcetl_q147_ckpt_")
+    ck = scratch_dir("q147")
     agg = (
         events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -1498,10 +1496,29 @@ _SH3Q = (
 _TOKSQ = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t != '')"
 _FPQ = f"md5(array_to_string(list_sort({_SH3Q.format(t=_TOKSQ)}), chr(31)))"
 
-# q392 golden-input cache: sf_dir -> dir holding the immutable arrival
-# files + generation-0 corpus index (each run file-copies a fresh
-# mutable state from it — the replay appends survivors per batch)
-_Q392_GOLDEN: dict[str, str] = {}
+
+def _replay_copy(name: str, golden: str, state: str) -> str:
+    """Fresh per-run copy of a stream replay's golden inputs: returns
+    the run's scratch dir holding ``arrivals/`` and ``<state>/`` (the
+    caller's stream checkpoint goes there too). The replay appends to
+    its state, so every run starts from its own copy of the golden dir.
+    Arrival files are re-stamped one second apart per batch ``b=0..2``:
+    mtime order defines the batch boundaries (one file per arrival)."""
+    import os
+    import shutil
+    import time
+
+    base = scratch_dir(name)
+    src = os.path.join(base, "arrivals")
+    shutil.copytree(os.path.join(golden, "arrivals"), src)
+    shutil.copytree(os.path.join(golden, state), os.path.join(base, state))
+    now = time.time()
+    for b in range(3):
+        sub = os.path.join(src, f"b={b}")
+        for f in os.listdir(sub):
+            if f.endswith(".parquet"):
+                os.utime(os.path.join(sub, f), (now + b, now + b))
+    return base
 
 
 @query(
@@ -1564,9 +1581,6 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     boundary is data-defined (one file per arrival), so re-running the
     replay reproduces byte-identical counts."""
     import os
-    import tempfile
-    import shutil
-    import time as _time
 
     prep(spark)
     from ..operators.dedup import build_minhash_index, probe_minhash_rows
@@ -1580,9 +1594,7 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # This is exactly the production posture (a replay test starts
     # from an immutable snapshot), and it keeps the benched cost the
     # STREAM — probe + append per micro-batch — not index re-derivation.
-    golden = _Q392_GOLDEN.get(sf_dir)
-    if golden is None or not os.path.isdir(golden):
-        golden = tempfile.mkdtemp(prefix="mcetl_q392_golden_")
+    def build(golden: str) -> None:
         gsrc = os.path.join(golden, "arrivals")
         os.makedirs(gsrc)
         for b in range(3):
@@ -1594,20 +1606,10 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         build_minhash_index(corpus).repartition("band").write.partitionBy(
             "band"
         ).parquet(os.path.join(golden, "minhash_index"))
-        _Q392_GOLDEN[sf_dir] = golden
 
-    base = tempfile.mkdtemp(prefix="mcetl_q392_")
-    src = os.path.join(base, "arrivals")
-    state_dir = os.path.join(base, "minhash_index")
-    shutil.copytree(os.path.join(golden, "arrivals"), src)
-    shutil.copytree(os.path.join(golden, "minhash_index"), state_dir)
-    # mtime order defines the batch boundaries (one file per arrival)
-    now = _time.time()
-    for b in range(3):
-        sub = os.path.join(src, f"b={b}")
-        for name in os.listdir(sub):
-            if name.endswith(".parquet"):
-                os.utime(os.path.join(sub, name), (now + b, now + b))
+    golden, _ = query_state("q392", sf_dir, build)
+    base = _replay_copy("q392", golden, "minhash_index")
+    src, state_dir = os.path.join(base, "arrivals"), os.path.join(base, "minhash_index")
 
     # keyed by batch_id so an at-least-once foreachBatch redelivery
     # overwrites rather than duplicates a count row. (A redelivery
@@ -1668,11 +1670,6 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
         "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
     )
-
-
-# q437 golden-input cache: sf_dir -> (dir holding the immutable arrival
-# files + generation-0 semantic index, trained IVF codebook)
-_Q437_GOLDEN: dict[str, tuple] = {}
 
 
 @query(
@@ -1750,9 +1747,6 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline codebook. Batch boundaries are data-defined (one file per
     arrival), so the replay is deterministic end-to-end."""
     import os
-    import shutil
-    import tempfile
-    import time as _time
 
     prep(spark)
     from ..operators.semantic_dedup import (
@@ -1763,9 +1757,9 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "embeddings")
 
-    golden = _Q437_GOLDEN.get(sf_dir)
-    if golden is None or not os.path.isdir(golden[0]):
-        gdir = tempfile.mkdtemp(prefix="mcetl_q437_golden_")
+    # immutable golden inputs, built once; each run replays on a fresh
+    # file copy because the replay appends to its state (see q392)
+    def build(gdir: str) -> list:
         gsrc = os.path.join(gdir, "arrivals")
         os.makedirs(gsrc)
         for b in range(3):
@@ -1779,28 +1773,18 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(gsrc, f"b={b}")
             )
         corpus = e.filter(F.col("vec_id") % 4 == 3).select("vec_id", "embedding")
-        # the codebook rides the in-process golden tuple; a fresh
-        # process rebuilds the whole golden dir (training is
+        # the codebook is the state's in-process value, not a file: a
+        # fresh process rebuilds the whole golden dir (training is
         # deterministic), so persisting it would be dead weight
         codebook = train_ivf_codebook(corpus, n_cells=16, refine_iters=1)
         build_semantic_index(corpus, codebook).repartition("cell").write.partitionBy(
             "cell"
         ).parquet(os.path.join(gdir, "semantic_index"))
-        golden = (gdir, codebook)
-        _Q437_GOLDEN[sf_dir] = golden
-    gdir, codebook = golden
+        return codebook
 
-    base = tempfile.mkdtemp(prefix="mcetl_q437_")
-    src = os.path.join(base, "arrivals")
-    state_dir = os.path.join(base, "semantic_index")
-    shutil.copytree(os.path.join(gdir, "arrivals"), src)
-    shutil.copytree(os.path.join(gdir, "semantic_index"), state_dir)
-    now = _time.time()
-    for b in range(3):
-        sub = os.path.join(src, f"b={b}")
-        for name in os.listdir(sub):
-            if name.endswith(".parquet"):
-                os.utime(os.path.join(sub, name), (now + b, now + b))
+    gdir, codebook = query_state("q437", sf_dir, build)
+    base = _replay_copy("q437", gdir, "semantic_index")
+    src, state_dir = os.path.join(base, "arrivals"), os.path.join(base, "semantic_index")
 
     results: dict[int, tuple[int, int]] = {}
 
@@ -1850,11 +1834,6 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
         "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
     )
-
-
-# q443 golden-input cache: sf_dir -> dir holding the immutable arrival
-# files + generation-0 corpus postings index
-_Q443_GOLDEN: dict[str, str] = {}
 
 
 def _q443_oracle() -> str:
@@ -1962,9 +1941,6 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted row-group layout the appends erode; none of this re-reads
     the corpus text."""
     import os
-    import shutil
-    import tempfile
-    import time as _time
 
     prep(spark)
     from ..operators.retrieval import bm25_serve, build_bm25_index
@@ -1972,9 +1948,9 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
 
-    golden = _Q443_GOLDEN.get(sf_dir)
-    if golden is None or not os.path.isdir(golden):
-        golden = tempfile.mkdtemp(prefix="mcetl_q443_golden_")
+    # immutable golden inputs, built once; each run replays on a fresh
+    # file copy because the replay appends to its state (see q392)
+    def build(golden: str) -> None:
         gsrc = os.path.join(golden, "arrivals")
         os.makedirs(gsrc)
         for b in range(3):
@@ -1992,19 +1968,10 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("t", "doc_id")
             .write.parquet(os.path.join(golden, "bm25", "postings"))
         )
-        _Q443_GOLDEN[sf_dir] = golden
 
-    base = tempfile.mkdtemp(prefix="mcetl_q443_")
-    src = os.path.join(base, "arrivals")
-    state = os.path.join(base, "bm25")
-    shutil.copytree(os.path.join(golden, "arrivals"), src)
-    shutil.copytree(os.path.join(golden, "bm25"), state)
-    now = _time.time()
-    for b in range(3):
-        sub = os.path.join(src, f"b={b}")
-        for name in os.listdir(sub):
-            if name.endswith(".parquet"):
-                os.utime(os.path.join(sub, name), (now + b, now + b))
+    golden, _ = query_state("q443", sf_dir, build)
+    base = _replay_copy("q443", golden, "bm25")
+    src, state = os.path.join(base, "arrivals"), os.path.join(base, "bm25")
 
     qt = spark.createDataFrame(
         list(_Q390_QUERY_TERMS), "query_id int, t string"
@@ -2085,10 +2052,6 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q403 state cache: sf_dir -> parquet dir of the per-user session state
-_Q403_STATE: dict[str, str] = {}
-
-
 @query(
     "q403_incremental_session_state",
     oracle="""
@@ -2142,22 +2105,17 @@ def q403_incremental_session_state(spark: SparkSession, sf_dir: str) -> DataFram
     applyInPandasWithState's per-key state, but oracle-checkable).
     Non-decomposable session metrics (median length) take the q402
     counts posture instead."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..operators.sessionize import merge_session_state, session_state
 
     e = table(spark, sf_dir, "events").select("user_id", "ts")
 
-    state_dir = _Q403_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q403_") + "/session_state"
-        session_state(e.filter(F.col("ts") < "2024-01-16")).write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        _Q403_STATE[sf_dir] = state_dir
-    state = spark.read.parquet(state_dir)
+    def build(sd: str) -> None:
+        session_state(e.filter(F.col("ts") < "2024-01-16")).write.parquet(
+            sd + "/session_state"
+        )
+
+    state = spark.read.parquet(query_state("q403", sf_dir, build)[0] + "/session_state")
 
     batch = e.filter(F.col("ts") >= "2024-01-16")
     merged = merge_session_state(state, batch)

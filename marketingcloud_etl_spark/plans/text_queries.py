@@ -13,7 +13,7 @@ from ..functions.vectors import cosine_sql
 from ..operators.dedup import word_shingles
 from ..operators.partitioning import spread_partitions as _spread
 from .dedup_queries import _H32, _H32_DUCK
-from ..io import table
+from ..io import query_state, scratch_dir, table
 from ..session import prep
 from .catalog import query
 
@@ -2338,15 +2338,6 @@ def q277_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# per-process trained-merges cache, keyed by (dataset, k): the merge
-# sequence is deterministic, so q277 (train) and q345 (encode) share one
-# training run per session — the offline-train / online-apply split the
-# IVF codebook cache (vector_queries._IVF_CODEBOOKS) established. A
-# cache hit replays the merges as k narrow string replaces (no pair
-# aggregations, no argmax collects).
-_BPE_MERGES: dict[tuple[str, int], list] = {}
-
-
 def _bpe_train_frames(spark: SparkSession, sf_dir: str, k: int = 3):
     """Run the k-iteration BPE merge loop (q277's algorithm) and return
     ``(vocab, merges)``: the post-merge vocabulary frame
@@ -2371,41 +2362,47 @@ def _bpe_train_frames(spark: SparkSession, sf_dir: str, k: int = 3):
             F.lit("·"),
         ).alias("s"),
     )
-    cached = _BPE_MERGES.get((sf_dir, k))
-    if cached is not None:
-        for _i, a, b, _n in cached:
-            vocab = vocab.withColumn(
-                "s", F.replace(F.col("s"), F.lit(f"·{a}··{b}·"), F.lit(f"·{a}{b}·"))
-            )
-        return vocab, list(cached)
-    out = []
-    for i in range(1, k + 1):
-        syms = F.expr("filter(split(trim(BOTH '·' FROM s), '··'), x -> x != '')")
-        pairs = (
-            vocab.select("cnt", syms.alias("sy"))
-            .filter(F.size("sy") >= 2)
-            .select(
-                "cnt",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("sy") - 1),
-                        lambda j: F.struct(
-                            F.element_at("sy", j.cast("int")).alias("a"),
-                            F.element_at("sy", (j + 1).cast("int")).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("n"))
+
+    def merge(v: DataFrame, a: str, b: str) -> DataFrame:
+        return v.withColumn(
+            "s", F.replace(F.col("s"), F.lit(f"·{a}··{b}·"), F.lit(f"·{a}{b}·"))
         )
-        best = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1).first()
-        out.append((i, best["a"], best["b"], int(best["n"])))
-        pat = f"·{best['a']}··{best['b']}·"
-        rep = f"·{best['a']}{best['b']}·"
-        vocab = vocab.withColumn("s", F.replace(F.col("s"), F.lit(pat), F.lit(rep)))
-    _BPE_MERGES[(sf_dir, k)] = list(out)
-    return vocab, out
+
+    # the merge sequence is deterministic, so q277 (train) and q345
+    # (encode) share one training run per process; later calls replay
+    # the merges as k narrow string replaces (no pair aggregations, no
+    # argmax collects)
+    def train(_sd: str) -> list:
+        v, out = vocab, []
+        for i in range(1, k + 1):
+            syms = F.expr("filter(split(trim(BOTH '·' FROM s), '··'), x -> x != '')")
+            pairs = (
+                v.select("cnt", syms.alias("sy"))
+                .filter(F.size("sy") >= 2)
+                .select(
+                    "cnt",
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("sy") - 1),
+                            lambda j: F.struct(
+                                F.element_at("sy", j.cast("int")).alias("a"),
+                                F.element_at("sy", (j + 1).cast("int")).alias("b"),
+                            ),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("cnt").alias("n"))
+            )
+            best = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1).first()
+            out.append((i, best["a"], best["b"], int(best["n"])))
+            v = merge(v, best["a"], best["b"])
+        return out
+
+    merges = query_state(f"bpe_k{k}", sf_dir, train)[1]
+    for _i, a, b, _n in merges:
+        vocab = merge(vocab, a, b)
+    return vocab, list(merges)
 
 
 # BM25 oracle CTE chain ending in agg(doc_id, bm25, n_terms_hit) —
@@ -3500,9 +3497,6 @@ def q383_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q390 state cache: sf_dir -> index base dir
-_Q390_STATE: dict[str, str] = {}
-
 _Q390_QUERY_TERMS = (
     (1, "spark"), (1, "stream"),
     (2, "data"), (2, "window"), (2, "batch"),
@@ -3585,17 +3579,12 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hit-bounded (query, doc) aggregation — per-batch cost scales
     with HITS, not corpus. Maintenance is an append of the new docs'
     postings + a df/stats re-fold, R16's incremental posture."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..operators.retrieval import bm25_serve, write_bm25_index
 
-    base = _Q390_STATE.get(sf_dir)
-    if base is None or not os.path.isdir(os.path.join(base, "postings")):
-        base = tempfile.mkdtemp(prefix="mcetl_q390_")
-        write_bm25_index(table(spark, sf_dir, "documents"), base)
-        _Q390_STATE[sf_dir] = base
+    base, _ = query_state(
+        "q390", sf_dir, lambda sd: write_bm25_index(table(spark, sf_dir, "documents"), sd)
+    )
     postings = spark.read.parquet(base + "/postings")
     dfreq = spark.read.parquet(base + "/df")
     stats = spark.read.parquet(base + "/stats")
@@ -3611,10 +3600,6 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("bm25", 6).alias("bm25"),
         F.col("n_terms_hit").cast("bigint").alias("n_terms_hit"),
     )
-
-
-# q396 state cache: sf_dir -> base dir of the two-generation BM25 index
-_Q396_STATE: dict[str, str] = {}
 
 
 @query(
@@ -3694,7 +3679,6 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the exchange. Serving keeps q390's shape — term IN-list
     pushed into the sorted postings scan, hit-bounded aggregation."""
     import os
-    import tempfile
 
     prep(spark)
     from ..operators.retrieval import (
@@ -3705,9 +3689,8 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    base = _Q396_STATE.get(sf_dir)
-    if base is None or not os.path.isdir(os.path.join(base, "postings")):
-        base = tempfile.mkdtemp(prefix="mcetl_q396_")
+
+    def build(base: str) -> None:
         write_bm25_index(d.filter(F.col("doc_id") % 3 != 0), base)
         # maintenance append: the new docs' postings extend the shards
         # (breaking sort order within shards — compaction's job to fix)
@@ -3715,7 +3698,8 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_postings.repartition(8, "t").sortWithinPartitions("t", "doc_id").write.mode(
             "append"
         ).parquet(base + "/postings")
-        _Q396_STATE[sf_dir] = base
+
+    base, _ = query_state("q396", sf_dir, build)
     out_dir = os.path.join(base, "compacted")
     postings, dfreq, stats = compact_bm25_index(
         spark, base, out_dir, keep=F.col("doc_id") % 7 != 2
@@ -3784,7 +3768,6 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation discipline (fresh files per batch; compaction via q393's
     pass when file counts grow)."""
     import os
-    import tempfile
 
     prep(spark)
     from ..operators.partitioning import needs_spread
@@ -3827,8 +3810,7 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     if narrow:
         toks = pin_cache(toks)
 
-    base = tempfile.mkdtemp(prefix="mcetl_q401_")
-    state_dir = os.path.join(base, "vocab_state")
+    state_dir = os.path.join(scratch_dir("q401"), "vocab_state")
     # batch 0 seeds the state
     toks.filter(F.col("batch") == 0).select("tok").distinct().select(
         "tok", F.lit(0).cast("int").alias("first_batch")
@@ -3867,10 +3849,6 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_new_tokens",
         F.sum("n_new_tokens").over(w).cast("bigint").alias("vocab_after"),
     )
-
-
-# q404 state cache: sf_dir -> parquet dir of the benchmark gram registry
-_Q404_STATE: dict[str, str] = {}
 
 
 @query(
@@ -3926,9 +3904,6 @@ def q404_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     training text. The per-(shard × registry-gen) report composes the
     same way the reference's count watermark does (R16): state remembers
     what was screened, arrivals pay only their own size."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..operators.dedup import poly_ngram_hashes
     from ..operators.skew import salted_join_key
@@ -3941,13 +3916,12 @@ def q404_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.array_distinct(poly_ngram_hashes("text", 8))).alias("gram"),
         )
 
-    state_dir = _Q404_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q404_") + "/gram_registry"
-        grams(d.filter(F.col("doc_id") < 20)).select("gram").distinct().write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        _Q404_STATE[sf_dir] = state_dir
+    def build(sd: str) -> None:
+        grams(d.filter(F.col("doc_id") < 20)).select("gram").distinct().write.parquet(
+            sd + "/gram_registry"
+        )
+
+    state_dir = query_state("q404", sf_dir, build)[0] + "/gram_registry"
 
     # a new benchmark suite (docs 20-39) lands: append only its unseen
     # gram fingerprints (set-union state; idempotent on re-run)
@@ -4216,11 +4190,6 @@ def q444_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q445 state cache: sf_dir -> parquet dir of the merged (w, c_t, c_r)
-# unigram-count state over the target slice + HISTORY raw pool
-_Q445_STATE: dict[str, str] = {}
-
-
 @query(
     "q445_incremental_dsir_state",
     oracle=f"""
@@ -4289,16 +4258,11 @@ def q445_incremental_dsir_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — functionals, the q443 identity), and a batch-sized scoring
     join. The daily DSIR refresh never touches history text — the
     posture SemDeDup-style offline re-scoring lacks."""
-    import os
-    import tempfile
-
     prep(spark)
     d = table(spark, sf_dir, "documents")
     toks_all = d.select("doc_id", F.explode(tokens("text")).alias("w"))
 
-    state_dir = _Q445_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q445_") + "/lm_counts"
+    def build(sd: str) -> None:
         tgt = toks_all.filter(F.col("doc_id") % 7 == 0)
         hist = toks_all.filter(
             (F.col("doc_id") % 7 != 0) & (F.col("doc_id") % 5 != 4)
@@ -4317,14 +4281,13 @@ def q445_incremental_dsir_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("c_r", F.lit(0)).cast("bigint").alias("c_r"),
             )
         )
-        state.write.parquet(state_dir)
-        _Q445_STATE[sf_dir] = state_dir
+        state.write.parquet(sd + "/lm_counts")
 
     batch_toks = toks_all.filter(
         (F.col("doc_id") % 7 != 0) & (F.col("doc_id") % 5 == 4)
     )
     bcounts = batch_toks.groupBy("w").agg(F.count(F.lit(1)).alias("c_b"))
-    state = spark.read.parquet(state_dir)
+    state = spark.read.parquet(query_state("q445", sf_dir, build)[0] + "/lm_counts")
     # ONE keyed additive merge — the only touch history counts get
     merged = (
         state.join(bcounts, "w", "full_outer")
@@ -4989,12 +4952,6 @@ def q451_quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q450 state cache: sf_dir -> parquet dir holding the persisted span
-# index over HISTORY docs (postings/ = (doc_id, pos, span),
-# freq/ = (span, c_h))
-_Q450_STATE: dict[str, str] = {}
-
-
 @query(
     "q450_incremental_span_state",
     oracle=_DUP_SPAN_CTES
@@ -5039,9 +4996,6 @@ def q450_incremental_span_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by doc length). The daily dedup refresh touches history
     only through its index — the posture that makes substring dedup
     affordable as a standing pipeline instead of a corpus rescan."""
-    import os
-    import tempfile
-
     prep(spark)
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -5061,15 +5015,14 @@ def q450_incremental_span_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    state_dir = _Q450_STATE.get(sf_dir)
-    if state_dir is None or not os.path.isdir(state_dir):
-        state_dir = tempfile.mkdtemp(prefix="mcetl_q450_")
+    def build(sd: str) -> None:
         hist = windows(d.filter(F.col("doc_id") % 5 != 4))
-        hist.write.parquet(state_dir + "/postings")
+        hist.write.parquet(sd + "/postings")
         hist.groupBy("span").agg(
             F.count(F.lit(1)).cast("bigint").alias("c_h")
-        ).write.parquet(state_dir + "/freq")
-        _Q450_STATE[sf_dir] = state_dir
+        ).write.parquet(sd + "/freq")
+
+    state_dir, _ = query_state("q450", sf_dir, build)
 
     postings = spark.read.parquet(state_dir + "/postings")
     freq_h = spark.read.parquet(state_dir + "/freq")

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, cosine_sql
-from ..io import table
+from ..io import query_state, table
 from ..operators.multimodal import attach_binary_payload, extract_features
 from ..operators.similarity import ann_lsh_topk, knn_bruteforce
 from ..session import prep
@@ -19,9 +19,28 @@ from .catalog import query
 
 _COS_AB = cosine_sql("a.embedding", "b.embedding")
 
-# per-process trained-codebook cache: deterministic Lloyd result, keyed
-# by dataset — the offline-train / online-search split
-_IVF_CODEBOOKS: dict[str, list] = {}
+
+def _ivf_codebook(e: DataFrame, sf_dir: str, n_cells: int = 16) -> list:
+    """The IVF codebook of embeddings frame ``e``, trained once per
+    process and dataset (a deterministic Lloyd result) — the
+    offline-train / online-search split."""
+    from ..operators.similarity import train_ivf_codebook
+
+    return query_state(
+        f"ivf_codebook_{n_cells}",
+        sf_dir,
+        lambda _sd: train_ivf_codebook(e, n_cells=n_cells, refine_iters=1),
+    )[1]
+
+
+def _pq_codebooks(e: DataFrame, sf_dir: str) -> list:
+    """The m=8 × 16-code PQ codebooks of ``e``, trained once per
+    process and dataset like :func:`_ivf_codebook`."""
+    from ..operators.similarity import train_pq_codebooks
+
+    return query_state(
+        "pq_codebooks", sf_dir, lambda _sd: train_pq_codebooks(e, m=8, n_codes=16)
+    )[1]
 
 
 @query(
@@ -147,13 +166,11 @@ def q66_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the offline-train / online-search split of a real vector store.
     Recall vs brute force is pinned in tests/test_operators.py."""
     prep(spark)
-    from ..operators.similarity import ann_ivf_topk, train_ivf_codebook
+    from ..operators.similarity import ann_ivf_topk
 
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    cb = _IVF_CODEBOOKS.get(sf_dir)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[sf_dir] = train_ivf_codebook(e, n_cells=16, refine_iters=1)
+    cb = _ivf_codebook(e, sf_dir)
     return ann_ivf_topk(e, q, k=5, n_cells=16, n_probe=6, codebook=cb)
 
 
@@ -287,18 +304,12 @@ def q138_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import (
         ann_ivf_pq_topk,
         build_ivf_pq_index,
-        train_ivf_codebook,
-        train_pq_codebooks,
     )
 
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    ivf_cb = _IVF_CODEBOOKS.get(sf_dir)
-    if ivf_cb is None:
-        ivf_cb = _IVF_CODEBOOKS[sf_dir] = train_ivf_codebook(e, n_cells=16, refine_iters=1)
-    pq_cb = _PQ_CODEBOOKS.get(sf_dir)
-    if pq_cb is None:
-        pq_cb = _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(e, m=8, n_codes=16)
+    ivf_cb = _ivf_codebook(e, sf_dir)
+    pq_cb = _pq_codebooks(e, sf_dir)
     idx_dir = os.path.join(
         tempfile.gettempdir(), f"mcetl_ivfpq_idx_{fixture_tag(sf_dir)}"
     )
@@ -342,18 +353,12 @@ def q139_ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_ivf_topk,
         ann_pq_topk,
         knn_bruteforce,
-        train_ivf_codebook,
-        train_pq_codebooks,
     )
 
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    ivf_cb = _IVF_CODEBOOKS.get(sf_dir)
-    if ivf_cb is None:
-        ivf_cb = _IVF_CODEBOOKS[sf_dir] = train_ivf_codebook(e, n_cells=16, refine_iters=1)
-    pq_cb = _PQ_CODEBOOKS.get(sf_dir)
-    if pq_cb is None:
-        pq_cb = _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(e, m=8, n_codes=16)
+    ivf_cb = _ivf_codebook(e, sf_dir)
+    pq_cb = _pq_codebooks(e, sf_dir)
 
     exact = knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
     methods = {
@@ -425,7 +430,6 @@ def q134_semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_semantic_dedup.py), not the oracle."""
     prep(spark)
     from ..operators.semantic_dedup import semantic_dedup
-    from ..operators.similarity import train_ivf_codebook
 
     e = table(spark, sf_dir, "embeddings")
     # dedup wants cells sized ~32 vectors (within-cell pair count is
@@ -434,10 +438,7 @@ def q134_semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of reusing q66's fixed search-tuned 16. Trained once per
     # (dataset, cell count) — the offline-train / online-run split.
     n_cells = max(16, min(4096, e.count() // 32))
-    key = f"{sf_dir}::dedup{n_cells}"
-    cb = _IVF_CODEBOOKS.get(key)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(e, n_cells=n_cells, refine_iters=1)
+    cb = _ivf_codebook(e, sf_dir, n_cells)
     # 0.45 puts the fixture's random vectors in the sparse-edge regime
     # real near-dup thresholds produce (small clusters, shallow CC) —
     # 0.35 sits near the random-graph percolation point and grows one
@@ -477,9 +478,6 @@ def q134_semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CODEBOOKS: dict[str, list] = {}
-
-
 @query("q105_ann_pq_topk", oracle=None, tags=("vector", "rows-only"))
 def q105_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (q66's IVF complement): the corpus
@@ -489,13 +487,11 @@ def q105_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     process and dataset (deterministic per-subspace Lloyd). Recall and
     determinism are pinned in tests/test_operators.py."""
     prep(spark)
-    from ..operators.similarity import ann_pq_topk, train_pq_codebooks
+    from ..operators.similarity import ann_pq_topk
 
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    cb = _PQ_CODEBOOKS.get(sf_dir)
-    if cb is None:
-        cb = _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(e, m=8, n_codes=16)
+    cb = _pq_codebooks(e, sf_dir)
     return ann_pq_topk(e, q, k=5, m=8, n_codes=16, rerank=50, codebooks=cb)
 
 
@@ -1614,9 +1610,8 @@ def q374_mmr_diversified_retrieval(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # q439: the composed pipeline's query terms (all with postings in the
-# fixture vocabulary) and per-sf chunk-index state cache
+# fixture vocabulary)
 _Q439_TERMS = ("join", "spark", "stream")
-_Q439_STATE: dict[str, str] = {}
 
 
 def _q439_oracle() -> str:
@@ -1752,9 +1747,6 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. The only corpus-sized passes are index construction (once)
     and the dense leg's scan (swap in the q66 IVF tier past ~10⁵
     vectors, unchanged downstream)."""
-    import os
-    import tempfile
-
     from pyspark.sql.window import Window as W
 
     prep(spark)
@@ -1764,9 +1756,7 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     e = table(spark, sf_dir, "embeddings")
 
-    base = _Q439_STATE.get(sf_dir)
-    if base is None or not os.path.isdir(os.path.join(base, "postings")):
-        base = tempfile.mkdtemp(prefix="mcetl_q439_")
+    def build(base: str) -> None:
         corp = d.join(
             e.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_semi"
         )
@@ -1788,7 +1778,8 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         write_bm25_index(chunks, base, id_col="ckey", text_col="ctext")
-        _Q439_STATE[sf_dir] = base
+
+    base, _ = query_state("q439", sf_dir, build)
     postings = spark.read.parquet(base + "/postings")
     dfreq = spark.read.parquet(base + "/df")
     stats = spark.read.parquet(base + "/stats")

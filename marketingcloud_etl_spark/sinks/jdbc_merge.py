@@ -292,13 +292,15 @@ def sqlite_standins(db_path: str) -> tuple:
     parquet (distributed write), then streams into sqlite in bounded
     Arrow record batches, so peak driver memory is one 10k-row batch
     regardless of batch size. Used by q93 / q339."""
+    import shutil
     import sqlite3
-    import tempfile
+
+    from ..io import scratch_dir
 
     def stage_writer(batch: DataFrame, tbl: str) -> None:
         import pyarrow.dataset as ds
 
-        stage_dir = tempfile.mkdtemp(prefix="mcetl_jdbc_stage_")
+        stage_dir = scratch_dir("jdbc_stage")
         batch.write.mode("overwrite").parquet(stage_dir)
         con = sqlite3.connect(db_path)
         try:
@@ -316,6 +318,7 @@ def sqlite_standins(db_path: str) -> tuple:
             con.commit()
         finally:
             con.close()
+            shutil.rmtree(stage_dir, ignore_errors=True)
 
     def statement_runner(stmts) -> None:
         con = sqlite3.connect(db_path)

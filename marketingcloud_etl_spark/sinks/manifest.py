@@ -97,8 +97,15 @@ def _write_doc(manifest_path: str, doc: dict) -> None:
         os.close(dfd)
 
 
+def _resolve(manifest_path: str, gen_dir: str) -> str:
+    # a relative gen_dir is relative to the manifest's own dir, so a
+    # state tree built in a tmp dir and renamed into place stays valid
+    return os.path.join(os.path.dirname(manifest_path), gen_dir)
+
+
 def publish_generation(manifest_path: str, gen_dir: str, meta: dict | None = None) -> dict:
-    """Atomically repoint ``manifest_path`` at ``gen_dir``. The
+    """Atomically repoint ``manifest_path`` at ``gen_dir`` (absolute,
+    or relative to the manifest's dir). The
     manifest JSON is written to a sibling temp file, fsync'd, then
     ``os.replace``d over the manifest (parent dir fsync'd so the
     rename survives power loss) — readers racing the publish see the
@@ -126,7 +133,7 @@ def publish_generation(manifest_path: str, gen_dir: str, meta: dict | None = Non
 def current_generation(manifest_path: str) -> str:
     """The generation dir the manifest currently points at."""
     with open(manifest_path) as f:
-        return json.load(f)["current"]
+        return _resolve(manifest_path, json.load(f)["current"])
 
 
 def read_current(spark, manifest_path: str):
@@ -150,7 +157,7 @@ def generation_at(manifest_path: str, index: int) -> str:
         raise LookupError(
             f"generation {index} ({entry['dir']}) was garbage-collected"
         )
-    return entry["dir"]
+    return _resolve(manifest_path, entry["dir"])
 
 
 def gc_generations(manifest_path: str, keep_last: int = 2) -> dict:
@@ -209,10 +216,10 @@ def gc_generations(manifest_path: str, keep_last: int = 2) -> dict:
         # concurrent publish/gc observes a half-deleted pass.
         deleted: list[str] = []
         for h in history:
-            d = h["dir"]
-            if h.get("gc") and d not in keep_dirs and os.path.isdir(d):
+            d = _resolve(manifest_path, h["dir"])
+            if h.get("gc") and h["dir"] not in keep_dirs and os.path.isdir(d):
                 shutil.rmtree(d)
-                deleted.append(d)
+                deleted.append(h["dir"])
     kept = sorted({h["dir"] for h in history if not h.get("gc")})
     return {"current": doc.get("current"), "kept": kept, "deleted": sorted(set(deleted))}
 

@@ -1,1 +1,1 @@
-from .rest import RestPagesDataSource, register_rest_source, fetch_pages_to_df  # noqa: F401
+from .rest import RestPagesDataSource, register_rest_source  # noqa: F401

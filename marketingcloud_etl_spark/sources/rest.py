@@ -70,16 +70,11 @@ def get_auth_token(auth_url: str, client_id: str, client_secret: str) -> str:
     return _http_json(auth_url, data=payload)["access_token"]
 
 
-def fetch_page(base_url: str, page: int, token: str, auth: tuple[str, str, str] | None = None) -> dict:
-    """GET one page; on 401 re-auth once and retry (R2, :128-135)."""
+def fetch_page(base_url: str, page: int, token: str) -> dict:
+    """GET one page with a Bearer token. The 401 re-auth retry (R2,
+    :128-135) lives in ``_RestPagesReader._fetch``."""
     url = f"{base_url}?$page={page}"  # pagination pattern, :265/:278
-    try:
-        return _http_json(url, headers={"Authorization": f"Bearer {token}"})
-    except urllib.error.HTTPError as e:
-        if e.code == 401 and auth is not None:
-            token = get_auth_token(*auth)
-            return _http_json(url, headers={"Authorization": f"Bearer {token}"})
-        raise
+    return _http_json(url, headers={"Authorization": f"Bearer {token}"})
 
 
 def plan_pages(api_count: int, db_count: int, page_size: int = DEFAULT_PAGE_SIZE) -> list[int]:
@@ -112,16 +107,9 @@ def _cached_token(auth_url: str, client_id: str, client_secret: str) -> str:
     return tok
 
 
-# ship the probe's page-1 payload with its partition only when small —
-# a 2500-item page in every serialized task descriptor costs more than
-# one extra GET on the executor
-_CACHE_MAX_ITEMS = 200
-
-
 class _PagePartition(InputPartition):
-    def __init__(self, page: int, cached_resp: dict | None = None):
+    def __init__(self, page: int):
         self.page = page
-        self.cached_resp = cached_resp
 
 
 class _RestPagesReader(DataSourceReader):
@@ -156,14 +144,10 @@ class _RestPagesReader(DataSourceReader):
         probe = self._fetch(1)
         api_count = int(probe.get("count", 0))
         pages = plan_pages(api_count, self.db_count, self.page_size)
-        small = len(probe.get("items", [])) <= _CACHE_MAX_ITEMS
-        return [_PagePartition(p, probe if p == 1 and small else None) for p in pages]
+        return [_PagePartition(p) for p in pages]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        if partition.cached_resp is not None:
-            resp = partition.cached_resp
-        else:
-            resp = self._fetch(partition.page)
+        resp = self._fetch(partition.page)
         for item in resp.get("items", []):
             keys = item.get("keys", {}) or {}
             values = item.get("values", {}) or {}
@@ -247,26 +231,3 @@ class RestPagesDataSource(DataSource):
 
 def register_rest_source(spark) -> None:
     spark.dataSource.register(RestPagesDataSource)
-
-
-def fetch_pages_to_df(spark, base_url: str, db_count: int = 0, auth: tuple[str, str, str] | None = None):
-    """Fallback path (SURVEY.md §7 risk 2): driver-side sequential fetch
-    → createDataFrame, same pruning math — for Spark builds without the
-    Python DataSource API. Prefer the DataSource (parallel fetch)."""
-    token = get_auth_token(*auth) if auth else ""
-    probe = fetch_page(base_url, 1, token, auth)
-    pages = plan_pages(int(probe.get("count", 0)), db_count)
-    rows = []
-    for p in pages:
-        resp = probe if p == 1 else fetch_page(base_url, p, token, auth)
-        for item in resp.get("items", []):
-            keys = item.get("keys", {}) or {}
-            values = item.get("values", {}) or {}
-            rows.append(
-                (
-                    (keys.get("lead_id"), keys.get("url"), keys.get("session_id"), keys.get("order")),
-                    (values.get("type_id"), values.get("event_category"), values.get("event_name"), values.get("date")),
-                    p,
-                )
-            )
-    return spark.createDataFrame(rows, ITEM_DDL)

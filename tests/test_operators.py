@@ -575,6 +575,19 @@ def test_connected_components_long_chain_converges(spark):
     assert len(got) == 64 and all(r.component == 0 for r in got)
 
 
+@pytest.mark.parametrize("id_type", ["double", "string"])
+def test_connected_components_rejects_inexact_ids_before_materializing(spark, id_type):
+    """Float/double and string ids raise TypeError at entry. The edge
+    columns raise if evaluated, so the TypeError also proves no edge
+    was materialized first."""
+    from marketingcloud_etl_spark.operators.components import connected_components
+
+    boom = F.raise_error(F.lit("edges materialized")).cast(id_type)
+    edges = spark.range(3).select(boom.alias("id_a"), boom.alias("id_b"))
+    with pytest.raises(TypeError, match="integral node ids"):
+        connected_components(edges)
+
+
 def test_pq_recall_vs_bruteforce(spark, sf_dir):
     """PQ ADC scan + exact rerank: recall floor vs brute force, and
     candidate sanity (surfaced neighbors genuinely high-cosine)."""
@@ -1739,6 +1752,44 @@ def test_grouped_quantile_cont_plan_has_no_single_partition(spark):
     plan = got._jdf.queryExecution().executedPlan().toString()
     release_ranking_caches()
     assert "Exchange SinglePartition" not in plan, plan
+
+
+def test_range_clustered_counts_pid_ranges_are_disjoint_and_ascending(spark):
+    """Planner contract of the fused quantile path: the partition id
+    captured after the counts aggregation must be the RANGE partition
+    id, i.e. max key of pid i < min key of pid i+1. If the planner ever
+    puts an exchange between the range repartition and the aggregate,
+    this fails instead of the quantiles going silently wrong."""
+    from marketingcloud_etl_spark.operators.ranking import (
+        _PID,
+        _range_clustered_counts,
+    )
+
+    df = spark.range(60_000).select(
+        (F.col("id") % 3).alias("g"),
+        ((F.col("id") * 2654435761) % 20011).alias("v"),
+    )
+    # at test scale AQE would coalesce every range partition into one
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for cnt in (F.count(F.lit(1)), F.sum(F.lit(1)).cast("long")):
+            spans = (
+                _range_clustered_counts(df, ["g"], "v", cnt)
+                .groupBy(_PID)
+                .agg(
+                    F.min(F.struct("g", "v")).alias("lo"),
+                    F.max(F.struct("g", "v")).alias("hi"),
+                )
+                .orderBy(_PID)
+                .collect()
+            )
+            assert len(spans) > 1, "needs several range partitions to test"
+            for a, b in zip(spans, spans[1:]):
+                assert tuple(a.hi) < tuple(b.lo), (a, b)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_pagerank_fixed_point_matches_integer_reference(spark):

@@ -228,11 +228,16 @@ def test_q445_state_is_not_rebuilt_per_call(spark, sf_dir):
     import glob
     import os
 
-    from marketingcloud_etl_spark.plans import text_queries as tq
+    import pytest
+
+    from marketingcloud_etl_spark.io import query_state
 
     fn = REGISTRY["q445_incremental_dsir_state"].fn
     first = [tuple(r) for r in fn(spark, sf_dir).collect()]
-    state_dir = tq._Q445_STATE[sf_dir]
+    state_dir = (
+        query_state("q445", sf_dir, lambda d: pytest.fail("q445 state not registered"))[0]
+        + "/lm_counts"
+    )
     stamps = {
         f: os.path.getmtime(f) for f in glob.glob(state_dir + "/*.parquet")
     }

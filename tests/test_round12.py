@@ -167,11 +167,15 @@ def test_q450_state_equals_from_scratch_and_is_reused(spark, sf_dir):
     import glob
     import os
 
-    from marketingcloud_etl_spark.plans import text_queries as tq
+    import pytest
+
+    from marketingcloud_etl_spark.io import query_state
 
     fn = REGISTRY["q450_incremental_span_state"].fn
     first = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    state_dir = tq._Q450_STATE[sf_dir]
+    state_dir = query_state(
+        "q450", sf_dir, lambda d: pytest.fail("q450 state not registered")
+    )[0]
     stamps = {
         f: os.path.getmtime(f)
         for f in glob.glob(state_dir + "/*/*.parquet")

@@ -1,0 +1,161 @@
+"""The per-query state registry (``io.query_state`` / ``io.scratch_dir``)
+and the source guard that keeps it the only owner of per-query state
+in ``plans/`` and ``sinks/``."""
+
+from __future__ import annotations
+
+import ast
+import os
+import shutil
+import subprocess
+import sys
+import uuid
+from pathlib import Path
+
+import pytest
+
+from marketingcloud_etl_spark import io
+
+PKG = Path(io.__file__).resolve().parent
+
+
+def _name() -> str:
+    # the registry is process-global: every test owns fresh state names
+    return f"t_{uuid.uuid4().hex[:8]}"
+
+
+def test_build_runs_once_per_name_and_fixture(tmp_path):
+    name, calls = _name(), []
+
+    def build(d):
+        calls.append(d)
+        with open(os.path.join(d, "payload"), "w") as f:
+            f.write("x")
+        return ["codebook"]
+
+    d1, v1 = io.query_state(name, str(tmp_path / "sfA"), build)
+    d2, v2 = io.query_state(name, str(tmp_path / "sfA"), build)
+    assert len(calls) == 1
+    assert (d1, v1) == (d2, v2) and v1 == ["codebook"]
+    assert open(os.path.join(d1, "payload")).read() == "x"
+    # the build saw a tmp sibling, never the published dir
+    assert calls[0] != d1 and not os.path.exists(calls[0])
+
+    # another fixture, or another name, is another state
+    d3, _ = io.query_state(name, str(tmp_path / "sfB"), build)
+    d4, _ = io.query_state(_name(), str(tmp_path / "sfA"), build)
+    assert len(calls) == 3 and len({d1, d3, d4}) == 3
+
+    # a state whose dir is gone is built again
+    shutil.rmtree(d1)
+    d5, _ = io.query_state(name, str(tmp_path / "sfA"), build)
+    assert len(calls) == 4 and os.path.isfile(os.path.join(d5, "payload"))
+
+
+def test_failed_build_leaves_nothing_and_retries(tmp_path):
+    name, sf = _name(), str(tmp_path / "sf")
+    seen = []
+
+    def bad(d):
+        seen.append(d)
+        with open(os.path.join(d, "half"), "w") as f:
+            f.write("partial")
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError, match="boom"):
+        io.query_state(name, sf, bad)
+    root = io._state_root()
+    assert not os.path.exists(seen[0])
+    assert not [e for e in os.listdir(root) if e.startswith(name) and
+                os.path.isdir(os.path.join(root, e))]
+
+    d, v = io.query_state(name, sf, lambda d: 7)
+    assert v == 7 and os.path.isfile(os.path.join(d, "_SUCCESS"))
+
+
+def test_path_spellings_share_one_state(tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    name, calls = _name(), []
+
+    def build(d):
+        calls.append(d)
+
+    got = {
+        io.query_state(name, spelling, build)[0]
+        for spelling in ("sf0.001", "./sf0.001/", str(tmp_path / "sf0.001"))
+    }
+    assert len(got) == 1 and len(calls) == 1
+
+
+def test_scratch_dirs_are_fresh_and_share_the_root():
+    a, b = io.scratch_dir("q0"), io.scratch_dir("q0")
+    assert a != b and os.listdir(a) == [] and os.listdir(b) == []
+    assert os.path.dirname(a) == os.path.dirname(b) == io._state_root()
+
+
+def test_root_is_removed_at_interpreter_exit(tmp_path):
+    code = (
+        "from marketingcloud_etl_spark import io\n"
+        "d, _ = io.query_state('q0', 'sf', lambda d: open(d + '/f', 'w').close())\n"
+        "s = io.scratch_dir('q0')\n"
+        "assert d.startswith(io._state_root()) and s.startswith(io._state_root())\n"
+        "print(io._state_root())\n"
+    )
+    env = dict(os.environ, PYTHONPATH=str(PKG.parent), TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=env, capture_output=True, text=True, timeout=120, check=True,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert root.startswith(str(tmp_path))
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []
+
+
+# the catalog's query registry is filled by @query at import time —
+# it names queries, it holds no per-query state
+_ALLOWED_MODULE_CONTAINERS = {("plans/catalog.py", "QUERIES")}
+
+
+def _empty_container(v: ast.expr) -> bool:
+    if isinstance(v, ast.Dict):
+        return not v.keys
+    if isinstance(v, (ast.List, ast.Set)):
+        return not v.elts
+    return (
+        isinstance(v, ast.Call)
+        and isinstance(v.func, ast.Name)
+        and v.func.id in ("dict", "list", "set", "defaultdict", "OrderedDict")
+        and not v.args
+    )
+
+
+def test_plans_and_sinks_keep_no_state_of_their_own():
+    """Per-query state belongs to io.query_state / io.scratch_dir: no
+    plans/ or sinks/ module may create temp dirs itself or hold a
+    module-level memo container."""
+    found = []
+    for sub in ("plans", "sinks"):
+        for path in sorted((PKG / sub).glob("*.py")):
+            rel = f"{sub}/{path.name}"
+            tree = ast.parse(path.read_text())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "mkdtemp"
+                    or isinstance(node, ast.alias)
+                    and node.name == "mkdtemp"
+                ):
+                    found.append(f"{rel}:{node.lineno}: mkdtemp")
+            for st in tree.body:
+                if isinstance(st, ast.Assign):
+                    targets, value = st.targets, st.value
+                elif isinstance(st, ast.AnnAssign) and st.value is not None:
+                    targets, value = [st.target], st.value
+                else:
+                    continue
+                for t in targets:
+                    name = ast.unparse(t)
+                    if _empty_container(value) and (rel, name) not in _ALLOWED_MODULE_CONTAINERS:
+                        found.append(f"{rel}:{st.lineno}: module-level {name} = empty container")
+    assert not found, "\n".join(found)
