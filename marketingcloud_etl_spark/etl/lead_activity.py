@@ -12,8 +12,8 @@ emits page-partitioned nested rows, ``flatten_lead_activity`` is a
 single select (Catalyst fuses it into the scan projection), dedup is
 dropDuplicates + anti-join against the target, and the sink is
 overwrite/append parquet (JDBC variant in sinks/upsert.py). Pages
-fetch in parallel, one task per page — the reference's sequential loop
-(:276-278) becomes the cluster's fan-out.
+fetch in parallel, one contiguous page range per task slot — the
+reference's sequential loop (:276-278) becomes the cluster's fan-out.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import content_hash
 from ..sinks.upsert import overwrite_parquet, upsert_parquet
-from ..sources.rest import register_rest_source
+from ..sources.rest import register_rest_source, slot_options
 
 # reference date format "%m/%d/%Y %I:%M:%S %p" (:140) → Spark pattern;
 # both parsers accept non-padded month/day/hour and return null on
@@ -91,6 +91,7 @@ def read_lead_activity(
         .option("client_secret", client_secret)
         .option("db_count", str(db_count))
         .option("page_size", str(page_size))
+        .options(**slot_options(spark))
         .load()
     )
 

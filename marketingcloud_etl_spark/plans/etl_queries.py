@@ -334,14 +334,14 @@ def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetched twice and no item duplicates (exactly-once without sink
     dedup; the batch path instead re-reads the partial page and
     anti-joins). 35 mock items / page size 10 → exactly 30 rows from
-    pages 1-3, page 4 deferred until it completes. Page fetches stay
-    one InputPartition each — a wide cluster drains a backlog in
+    pages 1-3, page 4 deferred until it completes. Page fetches pack
+    into one range per task slot — a wide cluster drains a backlog in
     parallel inside one micro-batch. Deterministic output; rows-only
     (HTTP source has no DuckDB twin); restart-idempotence pinned in
     tests/test_etl_rest.py."""
     prep(spark)
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
-    from ..sources.rest import register_rest_source
+    from ..sources.rest import register_rest_source, slot_options
 
     register_rest_source(spark)
     base = scratch_dir("q148")
@@ -359,6 +359,7 @@ def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 client_id="demo",
                 client_secret="demo",
                 page_size=PAGE_SIZE,
+                **slot_options(spark),
             )
             .load()
             .writeStream.foreachBatch(sink)
@@ -629,7 +630,7 @@ def q341_rest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries source fidelity."""
     prep(spark)
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
-    from ..sources.rest import register_rest_source
+    from ..sources.rest import register_rest_source, slot_options
 
     register_rest_source(spark)
     base = scratch_dir("q341")
@@ -647,6 +648,7 @@ def q341_rest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 client_id="demo",
                 client_secret="demo",
                 page_size=PAGE_SIZE,
+                **slot_options(spark),
             )
             .load()
             .writeStream.foreachBatch(sink)

@@ -20,18 +20,21 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 def overwrite_parquet(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> int:
     """Full refresh (R15): replace the target atomically (staging write
-    + swap is handled by Spark's output committer)."""
-    w = df.write.mode("overwrite")
+    + swap is handled by Spark's output committer). Returns the rows
+    written, counted by an observation on the write itself — no second
+    listing and scan of the target."""
+    written = Observation()
+    w = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(path)
-    return df.sparkSession.read.parquet(path).count()
+    return written.get["n"]
 
 
 def upsert_parquet(

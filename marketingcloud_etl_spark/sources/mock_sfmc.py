@@ -57,10 +57,20 @@ def corpus(n_items: int) -> list[dict]:
 class MockSfmcServer:
     """Threaded mock server; use as a context manager."""
 
-    def __init__(self, n_items: int = 35, require_auth: bool = True, fail_first_with_401: bool = False):
+    def __init__(
+        self,
+        n_items: int = 35,
+        require_auth: bool = True,
+        fail_first_with_401: bool = False,
+        expire_token_on_page: int | None = None,
+    ):
         self.items = corpus(n_items)
         self.require_auth = require_auth
         self.fail_first_with_401 = fail_first_with_401
+        # the first GET of this page rotates the token, so the request
+        # (and every holder of the old token) gets a 401 until re-auth
+        self.expire_token_on_page = expire_token_on_page
+        self.token = TOKEN
         self.auth_calls = 0
         self.page_calls: list[int] = []
         self._401_sent = False
@@ -81,7 +91,7 @@ class MockSfmcServer:
             def do_POST(self):
                 if urlparse(self.path).path == "/auth":
                     outer.auth_calls += 1
-                    self._send(200, {"access_token": TOKEN, "rest_instance_url": "http://mock"})
+                    self._send(200, {"access_token": outer.token, "rest_instance_url": "http://mock"})
                 else:
                     self._send(404, {})
 
@@ -94,10 +104,13 @@ class MockSfmcServer:
                     outer._401_sent = True
                     self._send(401, {"error": "expired"})
                     return
-                if outer.require_auth and self.headers.get("Authorization") != f"Bearer {TOKEN}":
+                page = int(parse_qs(parsed.query).get("$page", ["1"])[0])
+                if page == outer.expire_token_on_page:
+                    outer.expire_token_on_page = None
+                    outer.token = TOKEN + "-rotated"
+                if outer.require_auth and self.headers.get("Authorization") != f"Bearer {outer.token}":
                     self._send(401, {"error": "unauthorized"})
                     return
-                page = int(parse_qs(parsed.query).get("$page", ["1"])[0])
                 outer.page_calls.append(page)
                 lo, hi = (page - 1) * PAGE_SIZE, page * PAGE_SIZE
                 self._send(200, {"count": len(outer.items), "items": outer.items[lo:hi]})

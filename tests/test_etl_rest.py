@@ -3,9 +3,10 @@ the engine's reference-parity surface (R1-R16), driven against the
 deterministic mock SFMC server.
 
 Pins: flatten/clean semantics (R5-R9), cross-page dedup (R10/R12),
-count-watermark page pruning (R3/R16), 401 re-auth retry (R2), and
-idempotence (re-running incremental inserts nothing) — the reference
-pipeline's core invariant (unique hash constraint + insert-ignore,
+count-watermark page pruning (R3/R16), 401 re-auth retry (R2), page
+ranges packed one per task slot, and idempotence (re-running
+incremental inserts nothing) — the reference pipeline's core
+invariant (unique hash constraint + insert-ignore,
 /root/reference/app/salesforce_extractor.py:66,214-217).
 """
 
@@ -14,10 +15,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+import marketingcloud_etl_spark.etl.lead_activity as la
 from marketingcloud_etl_spark.etl.cli import main as cli_main
-from marketingcloud_etl_spark.etl.lead_activity import bulk_extract, incremental_extract
+from marketingcloud_etl_spark.etl.lead_activity import bulk_extract, incremental_extract, read_lead_activity
+from marketingcloud_etl_spark.sinks.upsert import overwrite_parquet
 from marketingcloud_etl_spark.sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
-from marketingcloud_etl_spark.sources.rest import plan_pages
+from marketingcloud_etl_spark.sources.rest import _PagePartition, plan_pages, split_pages
 
 N_ITEMS = 35  # 4 pages of 10; item[10] duplicates item[0]
 
@@ -95,8 +98,6 @@ def test_incremental_idempotent_and_pruned(spark, server, tmp_path):
 
 def test_rest_source_401_reauth_retry(spark, server_factory=None):
     with MockSfmcServer(n_items=N_ITEMS, fail_first_with_401=True) as s:
-        from marketingcloud_etl_spark.etl.lead_activity import read_lead_activity
-
         df = read_lead_activity(
             spark,
             base_url=s.base_url,
@@ -225,3 +226,108 @@ def test_streaming_rest_source_complete_pages(spark, server, tmp_path):
 
     again = run_once("rest_stream_2")
     assert again.count() == 0  # restart: offset already at 3 complete pages
+
+
+def _with_slots(monkeypatch, slots: str | None) -> None:
+    """Make ``read_lead_activity`` pass ``slots`` (None: no option)."""
+    monkeypatch.setattr(la, "slot_options", lambda spark: {"slots": slots} if slots else {})
+
+
+@pytest.mark.parametrize("slots", [1, 2, 3, 4, 7])
+@pytest.mark.parametrize(
+    "plan",
+    [(35, db_count, 10) for db_count in (0, 9, 10, 15, 25, 34, 35)] + [(2500 * 47 + 1, 0, 2500)],
+)
+def test_split_pages_contiguous_balanced_ranges(slots, plan):
+    pages = plan_pages(*plan)
+    runs = split_pages(pages, slots)
+    assert len(runs) == min(slots, len(pages))
+    # contiguous runs, in order, that together are exactly the plan
+    assert [p for run in runs for p in run] == pages
+    assert all(list(run) == list(range(run[0], run[-1] + 1)) for run in runs)
+    sizes = [len(run) for run in runs]
+    assert not sizes or max(sizes) - min(sizes) <= 1
+    # no slot count → one page per partition, as the one-page form builds
+    assert [list(run) for run in split_pages(pages, None)] == [[p] for p in pages]
+    assert [list(_PagePartition(p).pages) for p in pages] == [[p] for p in pages]
+
+
+def test_bulk_rows_identical_for_any_slot_count(spark, server, tmp_path, monkeypatch):
+    """Packing pages into fewer tasks changes neither the source rows
+    (``page`` included), nor the target rows, nor the fetches: every
+    planned page exactly once, plus the count probe of page 1."""
+    planned = plan_pages(N_ITEMS, 0, PAGE_SIZE)
+    results = {}
+    for slots in ("1", "2", None):
+        _with_slots(monkeypatch, slots)
+        server.page_calls.clear()
+        target = str(tmp_path / f"slots_{slots}")
+        assert _bulk(spark, server, target) == N_ITEMS - 1
+        assert sorted(server.page_calls) == sorted([1] + planned)
+        items = read_lead_activity(
+            spark, server.base_url, server.auth_url, "id", "secret", page_size=PAGE_SIZE
+        ).collect()
+        assert {r["page"] for r in items} == set(planned)
+        results[slots] = (
+            sorted(map(str, items)),
+            sorted(tuple(r) for r in spark.read.parquet(target).collect()),
+        )
+    assert results["1"] == results["2"] == results[None]
+
+
+def test_rest_source_reauth_mid_partition(spark, monkeypatch):
+    """A token that goes stale between two pages of one partition is
+    refreshed once and the partition carries on: every page fetched
+    once, every raw item delivered with its own page number."""
+    _with_slots(monkeypatch, "1")  # one partition holding pages 1-4
+    with MockSfmcServer(n_items=N_ITEMS, expire_token_on_page=3) as s:
+        df = read_lead_activity(
+            spark, base_url=s.base_url, auth_url=s.auth_url, client_id="id", client_secret="secret", page_size=PAGE_SIZE
+        )
+        assert df.rdd.getNumPartitions() == 1
+        pages = [r["page"] for r in df.select("page").collect()]
+        assert s.expire_token_on_page is None  # the token did rotate
+        assert s.auth_calls >= 2  # the probe's auth, then the re-auth
+        assert sorted(s.page_calls[1:]) == [1, 2, 3, 4]  # after the probe
+    assert pages == sorted(pages) and len(pages) == N_ITEMS
+    assert {p: pages.count(p) for p in set(pages)} == {1: 10, 2: 10, 3: 10, 4: 5}
+
+
+def test_rest_scan_fans_out_at_most_default_parallelism(spark):
+    """Fan-out guard: the REST scan stage runs at most one task per
+    slot, however many pages are planned — a return to one task per
+    page fails here instead of silently costing a Python task each."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    n_pages = 2 * slots + 3
+    group = "test-rest-fanout"
+    with MockSfmcServer(n_items=n_pages * PAGE_SIZE) as s:
+        sc.setJobGroup(group, group)
+        try:
+            n = read_lead_activity(
+                spark, base_url=s.base_url, auth_url=s.auth_url, client_id="id", client_secret="secret",
+                page_size=PAGE_SIZE,
+            ).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sorted(s.page_calls[1:]) == list(range(1, n_pages + 1))
+    assert n == n_pages * PAGE_SIZE
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert max(tasks) == slots, tasks
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["p"]])
+def test_overwrite_parquet_returns_written_rows(spark, tmp_path, partition_cols):
+    """The count observed on the write equals a re-read of the target,
+    after an in-batch dedup, for a plain and a partitioned target."""
+    target = str(tmp_path / "t")
+    df = spark.range(1000).selectExpr("id % 317 AS k", "id % 3 AS p").dropDuplicates(["k"])
+    assert overwrite_parquet(df, target, partition_cols) == spark.read.parquet(target).count() == 317
+    # overwriting with an empty frame writes, and returns, 0 rows
+    empty = df.filter("k < 0")
+    assert overwrite_parquet(empty, target, partition_cols) == 0
