@@ -33,10 +33,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from marketingcloud_etl_spark.io import table  # noqa: E402
-from marketingcloud_etl_spark.operators.ranking import (  # noqa: E402
-    release_ranking_caches,
-    release_sticky_caches,
-)
+from marketingcloud_etl_spark.operators.ranking import release_ranking_caches  # noqa: E402
 from marketingcloud_etl_spark.plans.catalog import load_all  # noqa: E402
 from marketingcloud_etl_spark.session import get_spark  # noqa: E402
 
@@ -598,7 +595,7 @@ def main() -> None:
         t0 = time.perf_counter()
         registry[name].fn(spark, sf_dir).collect()
         setup[name] = round(time.perf_counter() - t0, 3)
-    release_sticky_caches()
+    release_ranking_caches()
     spark.stop()
     import gc
 
@@ -617,7 +614,6 @@ def main() -> None:
         for name in HEADLINE:
             registry[name].fn(spark, warm_dir).collect()
             release_ranking_caches()
-    release_sticky_caches()
 
     timings: dict[str, float] = {}
     for i, name in enumerate(HEADLINE):
@@ -726,7 +722,6 @@ def main() -> None:
     with open(os.path.join(_REPO, "bench_full.json"), "w") as fh:
         json.dump(full, fh, indent=1)
     print(json.dumps(compact, separators=(",", ":")))
-    release_sticky_caches()
     spark.stop()
 
 

@@ -68,98 +68,45 @@ TOTAL_COL = _N
 # fence tallies) — same never-the-literal rule as TOTAL_COL.
 COUNT_COL = "__qc_cnt"
 
-# Every frame global_row_number pins is registered here so long-lived
-# sessions (catalog sweeps, benchmarks) can release the blocks between
-# queries: q132 alone chains three distributed_ntile calls, and without
-# a release point the MEMORY_AND_DISK blocks accumulate for the session
-# lifetime.
+# The one registry of pinned frames: every multi-consumer frame a
+# query persists goes through pin_cache and stays here until the next
+# release_ranking_caches().
 _PINNED: list[DataFrame] = []
-# frames registered for semantic reuse (pin_cache(dedupe=True)) — kept
-# separate so ordinary pins never pay the py4j plan-compare scan
-_DEDUP_PINNED: list[DataFrame] = []
-# sticky pins: semantic-reuse frames that SURVIVE release_ranking_caches
-# so two catalog queries in one session can share a pass (q357's quartile
-# counts/prefix frames feed q365's IQR fences). Only
-# release_sticky_caches() frees them — callers opt in knowingly.
-_STICKY_PINNED: list[DataFrame] = []
 
 
-def pin_cache(df: DataFrame, dedupe: bool = False, sticky: bool = False) -> DataFrame:
+def pin_cache(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for the next
-    :func:`release_ranking_caches` — the session-wide release point for
-    every multi-consumer frame a catalog query persists (ranking
-    partitions, LSH bucket tables, bigram streams). Without the
-    registry each benchmarked query would leave its MEMORY_AND_DISK
-    blocks pinned for the session lifetime, and a long sweep slowly
-    squeezes execution memory (q119 ran 1.8× slower mid-bench than
-    fresh before q50/q127 released their caches).
-
-    ``dedupe=True`` additionally registers the frame for semantic
-    reuse: a later ``dedupe=True`` pin that is plan-equivalent
-    (Spark's own canonicalized ``sameResult``) returns the cached
-    frame instead of persisting a twin — so two queries in one session
-    sharing a pass (q357's and q365's quartile counts over the same
-    lineitem projection) compute and cache it once. The lookup is
-    OPT-IN and scans only dedupe-registered frames: probing costs two
-    py4j round-trips per registered frame, which must not tax the
-    dozens of ordinary pin sites. A miss just pins normally;
-    correctness never depends on a hit.
-
-    ``sticky=True`` (implies ``dedupe``) keeps the pin alive ACROSS
-    :func:`release_ranking_caches` — the cross-QUERY sharing tier, so
-    a later catalog query in the same session (q365 after q357) reuses
-    the frame instead of recomputing the pass. Sticky frames are freed
-    only by :func:`release_sticky_caches`; they must be small
-    (counts/prefix frames bounded by distinct pairs, never fact-sized).
-
-    A dedupe hit additionally requires equal ``df.columns``:
-    canonicalized ``sameResult`` ignores output aliases, so a
-    plan-equivalent frame with different column names must MISS or
-    downstream references against the cached names would fail."""
-    if sticky:
-        dedupe = True
-    if dedupe:
-        try:
-            analyzed = df._jdf.queryExecution().analyzed()
-            for p in _DEDUP_PINNED:
-                if p.columns == df.columns and p._jdf.queryExecution().analyzed().sameResult(analyzed):
-                    return p
-        except Exception:
-            pass  # py4j plan probing is best-effort; fall through to pin
+    :func:`release_ranking_caches` — the one place a catalog query or
+    operator persists a multi-consumer frame (ranking partitions, LSH
+    bucket tables, gram and bigram streams, quantile counts). Without
+    the registry each query would leave its MEMORY_AND_DISK blocks
+    pinned for the session lifetime, and a long sweep slowly squeezes
+    execution memory (q119 ran 1.8× slower mid-bench than fresh before
+    q50/q127 released their caches). Pins never outlive a release, so
+    no query reuses another query's cached frame."""
     df = df.persist()
-    if sticky:
-        _STICKY_PINNED.append(df)
-    else:
-        _PINNED.append(df)
-    if dedupe:
-        _DEDUP_PINNED.append(df)
+    _PINNED.append(df)
     return df
 
 
 def release_ranking_caches(blocking: bool = False) -> int:
-    """Unpersist every frame pinned by :func:`global_row_number` or
-    :func:`pin_cache` since the last release. Call after the consuming
-    action has materialized its result (unpersisting earlier just
-    re-runs the producing exchange). Returns the number released.
+    """Unpersist every frame pinned by :func:`pin_cache` since the last
+    release. Call after the consuming action has materialized its
+    result (unpersisting earlier just re-runs the producing exchange).
+    Returns the number released.
 
-    Sticky pins survive (that is their contract — cross-query reuse);
-    the dedupe-lookup registry is trimmed to just them."""
+    A pin whose SparkContext has stopped is dropped without
+    ``unpersist``: its blocks died with that context, and unpersisting
+    through it raises."""
     n = len(_PINNED)
     while _PINNED:
-        _PINNED.pop().unpersist(blocking=blocking)
-    _DEDUP_PINNED[:] = [p for p in _DEDUP_PINNED if p in _STICKY_PINNED]
+        df = _PINNED.pop()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist(blocking=blocking)
     return n
 
 
-def release_sticky_caches(blocking: bool = False) -> int:
-    """Unpersist the sticky (cross-query) pins too — the session-end
-    release point. Implies :func:`release_ranking_caches`."""
-    n = release_ranking_caches(blocking=blocking)
-    n += len(_STICKY_PINNED)
-    while _STICKY_PINNED:
-        _STICKY_PINNED.pop().unpersist(blocking=blocking)
-    _DEDUP_PINNED.clear()
-    return n
+release_sticky_caches = release_ranking_caches  # old name, kept for callers
 
 
 def global_row_number(
@@ -181,13 +128,7 @@ def global_row_number(
     partitioner equalizes bucket sizes by sampling), one tiny
     per-partition-count frame, two broadcasts. Nothing is ever
     single-partitioned except the count frame (<= shuffle.partitions
-    rows by construction). (r13 negative result, recorded so it isn't
-    re-tried: decoding local ranks from monotonically_increasing_id
-    over sorted persisted partitions removes the PID-hash exchange and
-    won ~0.2 s on a single fresh-frame call, but LOST ~0.6 s on q132's
-    chained 3×ntile shape in a controlled same-session A/B — the
-    nondeterministic id column defeats optimizations through the
-    chained cache/join subtrees. The window form stands.)
+    rows by construction).
 
     Caller note: ``repartitionByRange``'s sampling pass executes the
     input subtree once BEFORE the shuffle executes it again — when
@@ -196,12 +137,9 @@ def global_row_number(
     once.
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(*cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
+    part = pin_cache(
+        df.repartitionByRange(*cols).withColumn(_PID, F.spark_partition_id())
     )
-    _PINNED.append(part)
     counts = part.groupBy(_PID).agg(F.count(F.lit(1)).alias("__cnt"))
     # start offsets + grand total from ONE broadcast self-join of the
     # per-partition counts (P² rows, P <= shuffle.partitions — trivially
@@ -288,12 +226,9 @@ def global_prefix_sum(
     if len(vcols) != len(ocols):
         raise ValueError("value_col and out_col lists must pair up")
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(*cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
+    part = pin_cache(
+        df.repartitionByRange(*cols).withColumn(_PID, F.spark_partition_id())
     )
-    _PINNED.append(part)
     sums = part.groupBy(_PID).agg(
         *[F.sum(v).alias(f"__psum{i}") for i, v in enumerate(vcols)]
     )
@@ -347,12 +282,9 @@ def global_prefix_max(
     frame. ``order_cols`` must be a total order for a deterministic
     result."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(*cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
+    part = pin_cache(
+        df.repartitionByRange(*cols).withColumn(_PID, F.spark_partition_id())
     )
-    _PINNED.append(part)
     maxes = part.groupBy(_PID).agg(F.max(value_col).alias("__pmax"))
     x, y = maxes.alias("x"), maxes.alias("y")
     offsets = (
@@ -445,12 +377,9 @@ def grouped_quantile_cont(
     counts = pin_cache(
         _range_clustered_counts(
             df.select(*gcols, value_col), gcols, value_col, F.count(F.lit(1))
-        ),
-        sticky=True,
+        )
     )
-    res = _quantile_over_counts(
-        counts, gcols, value_col, ps, ocols, sticky=True, clustered=True
-    )
+    res = _quantile_over_counts(counts, gcols, value_col, ps, ocols)
     if return_counts:
         # hand the PINNED per-(group, value) counts to the caller —
         # downstream tallies (q365's fence counts) fold the cached
@@ -490,9 +419,7 @@ def grouped_quantile_from_counts(
             counts, gcols, value_col, F.sum(cnt_col).cast("long")
         )
     )
-    return _quantile_over_counts(
-        c, gcols, value_col, ps, ocols, sticky=False, clustered=True
-    )
+    return _quantile_over_counts(c, gcols, value_col, ps, ocols)
 
 
 def grouped_quantile_from_bounded_counts(
@@ -579,7 +506,7 @@ def _range_clustered_counts(
 ) -> DataFrame:
     """Per-(group, value) counts ``cnt`` AS ``__qc_cnt``, range-
     partitioned on (gcols..., value) with the range partition id
-    captured in ``_PID`` — the ``clustered=True`` input of
+    captured in ``_PID`` — the ``counts`` input of
     :func:`_quantile_over_counts`.
 
     The raw rows are range-partitioned ONCE on the prefix order, and
@@ -617,57 +544,42 @@ def _quantile_over_counts(
     value_col: str,
     ps: list,
     ocols: list,
-    sticky: bool,
-    clustered: bool = False,
 ) -> DataFrame:
     """Shared tail of the exact-quantile machinery: distributed prefix
     sum over the (group, value) distinct-pair ``counts`` frame (column
     ``__qc_cnt``), rank-cover filter, builtin-verbatim interpolation.
-    ``sticky`` controls whether the prefix frame joins the cross-query
-    cache tier (q357/q365 share it; state-fed counts do not).
-    ``clustered=True`` declares that ``counts`` is ALREADY
-    range-partitioned on (gcols..., value) and carries its partition
-    id in ``_PID`` (:func:`_range_clustered_counts`) — the prefix sum
-    then runs its per-pid window + P²-broadcast offsets instead of
-    range-partitioning again through :func:`global_prefix_sum`."""
-    # The prefix-sum result is the operator's expensive pass (the
-    # per-bucket window over the distinct-pair frame); with
-    # sticky=True two catalog queries over the same input (q357's
-    # quartile battery, q365's IQR fences) share it — the second
-    # query's plan reduces to rank-cover filter + interpolation over
-    # the cached frame. Bounded by distinct (group, value) pairs,
-    # never fact-sized, so holding it for the session is cheap.
-    if clustered:
-        w_local = (
-            W.partitionBy(_PID)
-            .orderBy(*gcols, value_col)
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
+    ``counts`` is ALREADY range-partitioned on (gcols..., value) and
+    carries its partition id in ``_PID``
+    (:func:`_range_clustered_counts`), so the prefix sum runs its
+    per-pid window + P²-broadcast offsets without range-partitioning
+    again."""
+    w_local = (
+        W.partitionBy(_PID)
+        .orderBy(*gcols, value_col)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    sums = counts.groupBy(_PID).agg(F.sum("__qc_cnt").alias("__psum"))
+    x, y = sums.alias("x"), sums.alias("y")
+    offsets = (
+        x.join(F.broadcast(y), F.lit(True))
+        .groupBy(F.col(f"x.{_PID}").alias(_PID))
+        .agg(
+            F.sum(
+                F.when(
+                    F.col(f"y.{_PID}") < F.col(f"x.{_PID}"), F.col("y.__psum")
+                ).otherwise(0)
+            ).alias(_OFF)
         )
-        sums = counts.groupBy(_PID).agg(F.sum("__qc_cnt").alias("__psum"))
-        x, y = sums.alias("x"), sums.alias("y")
-        offsets = (
-            x.join(F.broadcast(y), F.lit(True))
-            .groupBy(F.col(f"x.{_PID}").alias(_PID))
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col(f"y.{_PID}") < F.col(f"x.{_PID}"), F.col("y.__psum")
-                    ).otherwise(0)
-                ).alias(_OFF)
-            )
-        )
-        cum = pin_cache(
-            counts.withColumn(_LRN, F.sum("__qc_cnt").over(w_local))
-            .join(F.broadcast(offsets), _PID)
-            .withColumn("__qc_cum", F.col(_OFF) + F.col(_LRN))
-            .drop(_PID, _LRN, _OFF),
-            sticky=sticky,
-        )
-    else:
-        cum = pin_cache(
-            global_prefix_sum(counts, [*gcols, value_col], "__qc_cnt", "__qc_cum"),
-            sticky=sticky,
-        )
+    )
+    # the prefix-sum result is the operator's expensive pass (the
+    # per-bucket window over the distinct-pair frame); it has a single
+    # consumer, so whether this pin pays is an open ROADMAP item
+    cum = pin_cache(
+        counts.withColumn(_LRN, F.sum("__qc_cnt").over(w_local))
+        .join(F.broadcast(offsets), _PID)
+        .withColumn("__qc_cum", F.col(_OFF) + F.col(_LRN))
+        .drop(_PID, _LRN, _OFF)
+    )
     totals = counts.groupBy(*gcols).agg(F.sum("__qc_cnt").alias("n"))
     # 0-indexed interpolation anchors, Spark Percentile's exact
     # arithmetic: pos = p*(n-1), lower = floor(pos), higher = ceil(pos)

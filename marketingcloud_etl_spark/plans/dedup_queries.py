@@ -17,6 +17,7 @@ from ..operators.dedup import (
     simhash64,
     simhash_band_candidates,
 )
+from ..operators.ranking import pin_cache
 from ..session import prep
 from .catalog import query
 
@@ -264,42 +265,28 @@ def _dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark side of _CC_CTE: similarity edges -> (id, component)."""
     from ..operators.components import connected_components
 
-    edges, release = _dup_edges(spark, sf_dir)
-    comp = connected_components(edges)
-    # labels are localCheckpoint()ed inside connected_components, so the
-    # lineage no longer references the gram table — release it instead
-    # of holding it until session end (q95/q109/q110 each build their own)
-    release()
-    return comp
-
-
-def _dup_edges(spark: SparkSession, sf_dir: str):
-    """Similarity edges (2-gram Jaccard >= 0.05, gaps 1-2, doc_id<500
-    battery — the q47 verify-stage shape). Returns (edges, release):
-    call release() once the edge consumer has cut lineage."""
-    from ..operators.dedup import ngram_jaccard, ngram_set
-
     d = table(spark, sf_dir, "documents")
-    g = (
-        d.filter(F.col("doc_id") < 500)
-        .select("doc_id", ngram_set("text", 2).alias("gs"))
-        .persist()  # read twice by the gap-1/gap-2 self-join
-    )
+    return connected_components(_gap_edges(d.filter(F.col("doc_id") < 500)))
+
+
+def _gap_edges(docs: DataFrame) -> DataFrame:
+    """Similarity edges (id_a, id_b) between ``docs`` whose ids differ
+    by 1 or 2 and whose 2-gram Jaccard is >= 0.05 — the q47
+    verify-stage shape. The gram frame is read by both gap joins, so
+    it is pinned (freed by the next release_ranking_caches)."""
+    g = pin_cache(docs.select("doc_id", ngram_set("text", 2).alias("gs")))
     a = g.select(F.col("doc_id").alias("id_a"), F.col("gs").alias("ga"))
     b = g.select(F.col("doc_id").alias("id_b"), F.col("gs").alias("gb"))
-
     # one equi-join per gap, unioned — an OR-of-equalities join condition
     # would plan as a nested-loop join (every row pair evaluated); the
     # equi-joins hash-partition on the id arithmetic instead
-    def gap_edges(gap: int) -> DataFrame:
-        return (
-            a.join(b, F.col("id_b") == F.col("id_a") + gap)
-            .filter(ngram_jaccard(F.col("ga"), F.col("gb")) >= 0.05)
-            .select("id_a", "id_b")
-        )
-
-    edges = gap_edges(1).unionByName(gap_edges(2))
-    return edges, g.unpersist
+    parts = [
+        a.join(b, F.col("id_b") == F.col("id_a") + gap)
+        .filter(ngram_jaccard(F.col("ga"), F.col("gb")) >= 0.05)
+        .select("id_a", "id_b")
+        for gap in (1, 2)
+    ]
+    return parts[0].unionByName(parts[1])
 
 
 @query(
@@ -699,12 +686,12 @@ def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     from ..operators.pagerank import pagerank
 
-    edges, release = _dup_edges(spark, sf_dir)
+    d = table(spark, sf_dir, "documents")
+    edges = _gap_edges(d.filter(F.col("doc_id") < 500))
     sym = edges.unionByName(
         edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     )
     ranks = pagerank(sym, iters=5, symmetric=True)
-    release()
     return (
         ranks.orderBy(F.col("rank").desc(), F.col("id"))
         .limit(20)
@@ -2962,36 +2949,25 @@ def q391_incremental_components_state(spark: SparkSession, sf_dir: str) -> DataF
     closure check, SURVEY §5) carries over unchanged."""
     prep(spark)
     from ..operators.components import connected_components, incremental_components
-    from ..operators.dedup import ngram_jaccard, ngram_set
 
     d = table(spark, sf_dir, "documents")
     SPLIT = 325
 
-    def gap_edges(lo: int, hi: int) -> DataFrame:
-        g = (
-            d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .select("doc_id", ngram_set("text", 2).alias("gs"))
-            .persist()
-        )
-        a = g.select(F.col("doc_id").alias("id_a"), F.col("gs").alias("ga"))
-        b = g.select(F.col("doc_id").alias("id_b"), F.col("gs").alias("gb"))
-        parts = [
-            a.join(b, F.col("id_b") == F.col("id_a") + gap)
-            .filter(ngram_jaccard(F.col("ga"), F.col("gb")) >= 0.05)
-            .select("id_a", "id_b")
-            for gap in (1, 2)
-        ]
-        e = parts[0].unionByName(parts[1]).localCheckpoint(eager=True)
-        g.unpersist()
-        return e
-
     def build(sd: str) -> None:
-        connected_components(gap_edges(0, SPLIT)).write.parquet(sd + "/labels")
+        old = d.filter(F.col("doc_id").between(0, SPLIT - 1))
+        connected_components(
+            _gap_edges(old).localCheckpoint(eager=True)
+        ).write.parquet(sd + "/labels")
 
     labels = spark.read.parquet(query_state("q391", sf_dir, build)[0] + "/labels")
     # batch edges: the arriving docs plus the 2-doc lookback; edges with
     # id_b < SPLIT already live in the state graph — only NEW edges merge
-    new_edges = gap_edges(SPLIT - 2, 500).filter(F.col("id_b") >= SPLIT)
+    batch = d.filter(F.col("doc_id").between(SPLIT - 2, 499))
+    new_edges = (
+        _gap_edges(batch)
+        .localCheckpoint(eager=True)
+        .filter(F.col("id_b") >= SPLIT)
+    )
     merged = incremental_components(labels, new_edges)
     return merged.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -3309,37 +3285,20 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prep(spark)
     from ..operators.components import connected_components, incremental_components
-    from ..operators.dedup import (
-        build_minhash_index,
-        ngram_jaccard,
-        ngram_set,
-        probe_minhash_index,
-    )
+    from ..operators.dedup import build_minhash_index, probe_minhash_index
     from ..operators.ranking import global_prefix_sum
 
     d = table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
     batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
 
-    def gap_edges(docs: DataFrame) -> DataFrame:
-        g = docs.select("doc_id", ngram_set("text", 2).alias("gs")).persist()
-        a = g.select(F.col("doc_id").alias("id_a"), F.col("gs").alias("ga"))
-        b = g.select(F.col("doc_id").alias("id_b"), F.col("gs").alias("gb"))
-        parts = [
-            a.join(b, F.col("id_b") == F.col("id_a") + gap)
-            .filter(ngram_jaccard(F.col("ga"), F.col("gb")) >= 0.05)
-            .select("id_a", "id_b")
-            for gap in (1, 2)
-        ]
-        e = parts[0].unionByName(parts[1]).localCheckpoint(eager=True)
-        g.unpersist()
-        return e
-
     def build(base: str) -> None:
         build_minhash_index(corpus).repartition("band").write.partitionBy(
             "band"
         ).parquet(os.path.join(base, "index"))
-        connected_components(gap_edges(corpus)).write.parquet(
+        connected_components(
+            _gap_edges(corpus).localCheckpoint(eager=True)
+        ).write.parquet(
             os.path.join(base, "labels")
         )
 
@@ -3382,7 +3341,7 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("doc_id") % 3 != 0) | F.col("__s"))
         .select("doc_id", "text")
     )
-    new_edges = gap_edges(cone).filter(
+    new_edges = _gap_edges(cone).localCheckpoint(eager=True).filter(
         (F.col("id_a") % 3 == 0) | (F.col("id_b") % 3 == 0)
     )
     merged = incremental_components(labels, new_edges)
@@ -4028,7 +3987,6 @@ def q405_incremental_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     filter) and is pinned for the duration of the query."""
     prep(spark)
     from ..functions.text import tokens
-    from ..operators.ranking import pin_cache
 
     d = table(spark, sf_dir, "documents")
 
@@ -4409,7 +4367,6 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band", "bucket"),
     )
     from ..operators.dedup import split_hot_buckets
-    from ..operators.ranking import pin_cache
 
     # the signature subtree feeds FOUR consumers (before-stats, the
     # operator's own sizing, the rewrite, after-stats) — pin it or the

@@ -4353,11 +4353,7 @@ def q365_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier-fence job the builtin's one-reducer-per-group percentile
     cannot finish."""
     prep(spark)
-    from ..operators.ranking import (
-        COUNT_COL,
-        grouped_quantile_cont,
-        release_ranking_caches,
-    )
+    from ..operators.ranking import COUNT_COL, grouped_quantile_cont
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -4382,7 +4378,7 @@ def q365_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-paying the broadcast join over the fact rows (r13; the fence
     # comparisons stay integer-vs-exact-double, so the tallies remain
     # INTEGER-exact)
-    out = (
+    return (
         counts.join(F.broadcast(fences), "l_returnflag")
         .groupBy("l_returnflag", "q1", "q3", "lo_fence", "hi_fence")
         .agg(
@@ -4411,11 +4407,6 @@ def q365_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_above",
         )
     )
-    # the fences frame is consumed once; materialize before releasing
-    # the operator's pinned counts cache
-    out = out.localCheckpoint(eager=True)
-    release_ranking_caches()
-    return out
 
 
 @query(

@@ -1792,6 +1792,86 @@ def test_range_clustered_counts_pid_ranges_are_disjoint_and_ascending(spark):
         spark.conf.set(key, prev)
 
 
+def test_release_frees_every_quantile_pin(spark):
+    """Pins never outlive a release: after two grouped_quantile_cont
+    calls over the same input, one release_ranking_caches() leaves
+    Spark's cache manager empty, so no query can be served another
+    query's cached counts or prefix frames."""
+    from marketingcloud_etl_spark.operators.ranking import (
+        grouped_quantile_cont,
+        release_ranking_caches,
+    )
+
+    release_ranking_caches()
+    spark.catalog.clearCache()
+    df = spark.range(5_000).select(
+        (F.col("id") % 3).alias("g"), ((F.col("id") * 7919) % 1009).alias("v")
+    )
+    first = grouped_quantile_cont(df, ["g"], "v", [0.25, 0.75], ["q1", "q3"])
+    second = grouped_quantile_cont(df, ["g"], "v", [0.25, 0.75], ["q1", "q3"])
+    assert sorted(first.collect()) == sorted(second.collect())
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.isEmpty()
+    assert release_ranking_caches() == 4  # counts + prefix frame, per call
+    assert cache.isEmpty()
+
+
+_RESTART_SCRIPT = """
+from marketingcloud_etl_spark.operators import dedup, ranking
+from marketingcloud_etl_spark.session import get_spark
+
+DOCS = [(i, f"alpha beta gamma delta word{i % 7} omega") for i in range(40)]
+KEY = ("sig", "text", 32, 3, 42)
+
+
+def start():
+    return get_spark(app_name="restart", master="local[2]", shuffle_partitions=4)
+
+
+def signatures(spark):
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    return sorted(tuple(r) for r in dedup.minhash_signature(df).collect())
+
+
+spark = start()
+before, expr = signatures(spark), dedup._EXPR_CACHE[KEY]
+ranking.pin_cache(spark.range(100)).count()
+spark.stop()
+
+spark = start()
+# the old session's pin is dropped without touching its dead context
+assert ranking.release_ranking_caches() == 1 and not ranking._PINNED
+# the memoized expression tree is reused and gives the same rows
+assert signatures(spark) == before and dedup._EXPR_CACHE[KEY] is expr
+cache = spark._jsparkSession.sharedState().cacheManager()
+ranking.pin_cache(spark.range(50)).count()
+assert not cache.isEmpty()
+assert ranking.release_ranking_caches() == 1 and cache.isEmpty()
+spark.stop()
+print("restart-ok")
+"""
+
+
+def test_release_and_expression_memo_survive_a_session_restart(tmp_path):
+    """A frame pinned in a session that is later stopped must not break
+    the release point, and dedup's expression memo stays valid in the
+    next session. Runs in its own interpreter: the suite shares one
+    session that this test must not stop."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = dict(os.environ, PYTHONPATH=repo, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "restart-ok" in out.stdout
+
+
 def test_pagerank_fixed_point_matches_integer_reference(spark):
     """pagerank_fixed_point vs a pure-Python integer power iteration on
     the same graph: EXACT equality (the operator's whole point is

@@ -1,6 +1,7 @@
 """The per-query state registry (``io.query_state`` / ``io.scratch_dir``)
-and the source guard that keeps it the only owner of per-query state
-in ``plans/`` and ``sinks/``."""
+and the source guards that keep it the only owner of per-query state
+in ``plans/`` and ``sinks/`` and keep ``ranking.pin_cache`` the only
+place ``plans/`` and ``operators/`` persist a frame."""
 
 from __future__ import annotations
 
@@ -112,9 +113,15 @@ def test_root_is_removed_at_interpreter_exit(tmp_path):
     assert os.listdir(tmp_path) == []
 
 
-# the catalog's query registry is filled by @query at import time —
-# it names queries, it holds no per-query state
-_ALLOWED_MODULE_CONTAINERS = {("plans/catalog.py", "QUERIES")}
+_ALLOWED_MODULE_CONTAINERS = {
+    # the catalog's query registry is filled by @query at import time —
+    # it names queries, it holds no per-query state
+    ("plans/catalog.py", "QUERIES"),
+    # the one frame-pin registry, emptied by release_ranking_caches()
+    ("operators/ranking.py", "_PINNED"),
+    # Column-tree plan memo, no data; reuse across a restart is tested
+    ("operators/dedup.py", "_EXPR_CACHE"),
+}
 
 
 def _empty_container(v: ast.expr) -> bool:
@@ -130,32 +137,74 @@ def _empty_container(v: ast.expr) -> bool:
     )
 
 
+def _modules(*subs: str):
+    for sub in subs:
+        for path in sorted((PKG / sub).glob("*.py")):
+            yield f"{sub}/{path.name}", ast.parse(path.read_text())
+
+
+def _module_containers(rel: str, tree: ast.Module) -> list[str]:
+    found = []
+    for st in tree.body:
+        if isinstance(st, ast.Assign):
+            targets, value = st.targets, st.value
+        elif isinstance(st, ast.AnnAssign) and st.value is not None:
+            targets, value = [st.target], st.value
+        else:
+            continue
+        for t in targets:
+            name = ast.unparse(t)
+            if _empty_container(value) and (rel, name) not in _ALLOWED_MODULE_CONTAINERS:
+                found.append(f"{rel}:{st.lineno}: module-level {name} = empty container")
+    return found
+
+
 def test_plans_and_sinks_keep_no_state_of_their_own():
     """Per-query state belongs to io.query_state / io.scratch_dir: no
     plans/ or sinks/ module may create temp dirs itself or hold a
     module-level memo container."""
     found = []
-    for sub in ("plans", "sinks"):
-        for path in sorted((PKG / sub).glob("*.py")):
-            rel = f"{sub}/{path.name}"
-            tree = ast.parse(path.read_text())
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Attribute)
-                    and node.attr == "mkdtemp"
-                    or isinstance(node, ast.alias)
-                    and node.name == "mkdtemp"
-                ):
-                    found.append(f"{rel}:{node.lineno}: mkdtemp")
-            for st in tree.body:
-                if isinstance(st, ast.Assign):
-                    targets, value = st.targets, st.value
-                elif isinstance(st, ast.AnnAssign) and st.value is not None:
-                    targets, value = [st.target], st.value
-                else:
-                    continue
-                for t in targets:
-                    name = ast.unparse(t)
-                    if _empty_container(value) and (rel, name) not in _ALLOWED_MODULE_CONTAINERS:
-                        found.append(f"{rel}:{st.lineno}: module-level {name} = empty container")
+    for rel, tree in _modules("plans", "sinks"):
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "mkdtemp"
+                or isinstance(node, ast.alias)
+                and node.name == "mkdtemp"
+            ):
+                found.append(f"{rel}:{node.lineno}: mkdtemp")
+        found += _module_containers(rel, tree)
+    assert not found, "\n".join(found)
+
+
+def test_operators_hold_only_the_allowed_module_containers():
+    """No operators/ module may grow a module-level memo container
+    beyond the two listed in _ALLOWED_MODULE_CONTAINERS."""
+    found = []
+    for rel, tree in _modules("operators"):
+        found += _module_containers(rel, tree)
+    assert not found, "\n".join(found)
+
+
+def test_only_pin_cache_persists_frames():
+    """Every persisted frame in plans/ and operators/ goes through
+    ranking.pin_cache, so release_ranking_caches() frees them all.
+    (sinks/upsert.py keeps its own try/finally persist lifecycle.)"""
+    found = []
+    for rel, tree in _modules("plans", "operators"):
+        allowed = set()
+        if rel == "operators/ranking.py":
+            pin = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "pin_cache"
+            )
+            allowed = {id(n) for n in ast.walk(pin)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+                and id(node) not in allowed
+            ):
+                found.append(f"{rel}:{node.lineno}: .{node.func.attr}()")
     assert not found, "\n".join(found)

@@ -15,10 +15,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from marketingcloud_etl_spark.operators.ranking import (  # noqa: E402
-    release_ranking_caches,
-    release_sticky_caches,
-)
+from marketingcloud_etl_spark.operators.ranking import release_ranking_caches  # noqa: E402
 from marketingcloud_etl_spark.plans.catalog import load_all  # noqa: E402
 from marketingcloud_etl_spark.session import get_spark  # noqa: E402
 
@@ -41,7 +38,6 @@ def main() -> None:
         except Exception as ex:  # state-building queries may need actions
             print("SKIP", name, str(ex)[:120], flush=True)
         release_ranking_caches()
-        release_sticky_caches()
     spark.stop()
 
 

@@ -6,6 +6,9 @@ Runs one or more catalog queries in a FRESH SparkSession at
 action the bench uses (plan + execute + collect of the small result)
 after a sf0.001 warm-up, so numbers are comparable with bench.py while
 isolating the query from sweep effects (GC pressure, cache residue).
+Every frame a run pins is released before the next run starts, so
+each run computes from scratch: no run reuses an earlier run's (or an
+earlier query's) cached frames.
 
 Usage:
     python tools/isolate.py q357_grouped_quantile_scalable [more...] \
@@ -29,10 +32,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from marketingcloud_etl_spark.operators.ranking import (  # noqa: E402
-    release_ranking_caches,
-    release_sticky_caches,
-)
+from marketingcloud_etl_spark.operators.ranking import release_ranking_caches  # noqa: E402
 from marketingcloud_etl_spark.plans.catalog import load_all  # noqa: E402
 from marketingcloud_etl_spark.session import get_spark  # noqa: E402
 
@@ -87,7 +87,6 @@ def main() -> None:
                 fh.write(txt)
             release_ranking_caches()
             print(f"  explain -> {out}")
-        release_sticky_caches()
 
     spark.stop()
 
