@@ -2,6 +2,18 @@
 
 All ten tables from TESTDATA.md / FIXTURES.md, loaded as plain parquet
 scans so Catalyst gets full predicate-pushdown + column-pruning freedom.
+
+Scan parallelism is decided here and nowhere else. Spark splits parquet
+on row groups, so a table with fewer row groups than the session's
+``defaultParallelism`` would scan on fewer tasks than there are cores
+(every fixture file is one row group: one task, whatever the core
+count). Such a table is served from a per-process copy of
+``min(rows, defaultParallelism)`` parquet files, each a contiguous
+slice of the source rows in source order, so the scan itself runs on
+every core and no operator needs an exchange to spread it. A table
+with at least ``defaultParallelism`` row groups is read in place.
+``events`` always goes through the copy, which normalizes its ``ts``
+column (see :func:`_normalize_events`).
 """
 
 from __future__ import annotations
@@ -12,8 +24,10 @@ import shutil
 import tempfile
 import threading
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -85,63 +99,53 @@ def atomic_cached_write(path: str, write_fn) -> str:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    slots = spark.sparkContext.defaultParallelism
+    if not os.path.exists(src):
+        # not a local file: Spark reads it (or raises PATH_NOT_FOUND)
+        return spark.read.parquet(src)
+    if name != "events" and _row_groups(src) >= slots:
+        return spark.read.parquet(src)
+
+    def build(out: str) -> None:
+        t = pq.read_table(src)
+        _write_slices(_normalize_events(t) if name == "events" else t, out, slots)
+
+    path, _ = query_state(f"{name}.parquet", sf_dir, build)
+    return spark.read.parquet(path)
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load ``events`` with its timestamp normalized to a UTC-instant
-    TIMESTAMP column, robust to both fixture generations:
+def _row_groups(src: str) -> int:
+    return sum(f.metadata.num_row_groups for f in ds.dataset(src, format="parquet").get_fragments())
 
-     - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read as
-       raw int64 (``nanosAsLong``) and truncate to micros — identical
-       to DuckDB's ns→us truncation, so oracle comparisons stay exact.
-     - TIMESTAMP(MICROS, isAdjustedToUTC=false): with NTZ inference on
-       this becomes TIMESTAMP_NTZ, which unix_micros()/watermarks
-       reject; with inference off the stored micros read as UTC epoch
-       instants (what DuckDB's naive read shows under the UTC session
-       timezone prep() pins).
 
-    Both knobs are SESSION-GLOBAL and consulted again at physical
-    planning, so returning a lazy frame and restoring the confs is a
-    race: a later action (or a concurrent read on the same session)
-    could see the wrong settings. Instead the first load MATERIALIZES
-    the normalized table to a per-fixture parquet cache while the confs
-    are held — the write is an action, so the conversion provably runs
-    under them — and every return path is a plain conf-independent scan
-    of the cache. The cache appears atomically (write to a tmp sibling,
-    ``os.rename``), so a concurrent creator either wins the rename or
-    discards its tmp; no half-written directory is ever scanned.
+def _write_slices(t: pa.Table, out: str, slots: int) -> None:
+    """Write ``t`` to ``out`` as ``min(rows, slots)`` parquet files (at
+    least one), file ``i`` holding the ``i``-th contiguous slice of the
+    rows in order."""
+    n = max(1, min(t.num_rows, slots))
+    for i in range(n):
+        lo, hi = i * t.num_rows // n, (i + 1) * t.num_rows // n
+        pq.write_table(t.slice(lo, hi - lo), os.path.join(out, f"part-{i:05d}.parquet"))
+
+
+def _normalize_events(t: pa.Table) -> pa.Table:
+    """``events.ts`` as a UTC-instant microsecond timestamp, robust to
+    both fixture generations:
+
+     - TIMESTAMP(NANOS), which Spark's reader rejects: truncated to
+       micros, identical to DuckDB's ns→us truncation, so oracle
+       comparisons stay exact;
+     - naive TIMESTAMP(MICROS), which Spark would read as
+       TIMESTAMP_NTZ (rejected by unix_micros() and watermarks): the
+       stored micros kept as UTC epoch instants, what DuckDB's naive
+       read shows under the UTC session timezone prep() pins.
+
     (Sandbox-fixture shim: a production deployment writes the table
     timestamp-correct once and never needs this.)"""
-    cache_dir = os.path.join(
-        tempfile.gettempdir(), f"mcetl_events_norm_{fixture_tag(sf_dir)}"
-    )
-
-    def _normalize(tmp_dir: str) -> None:
-        prev = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.legacy.parquet.nanosAsLong",
-                "spark.sql.parquet.inferTimestampNTZ.enabled",
-            )
-        }
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        try:
-            df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            if dict(df.dtypes).get("ts") == "bigint":
-                df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-            df.write.mode("overwrite").parquet(tmp_dir)
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    return spark.read.parquet(atomic_cached_write(cache_dir, _normalize))
+    i = t.schema.get_field_index("ts")
+    ts = t.column(i).cast(pa.timestamp("us", tz="UTC"), safe=False)
+    return t.set_column(i, "ts", ts)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.hashing import content_hash
-from .partitioning import spread_partitions
 from ..functions.text import tokens
 
 # universal-hash params sized so a*h32 + b < 2^63: works identically
@@ -279,7 +278,6 @@ def minhash_band_buckets(
     shingles there is no shingle-set similarity to detect."""
     if num_perm % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
-    df = spread_partitions(df)
     df = df.filter(_min_tokens_filter(text_col, shingle_n))
     sig = minhash_signature(df, text_col, num_perm, shingle_n, seed).select(id_col, "minhash_sig")
     return sig.withColumn("bb", F.explode(_minhash_band_structs(num_perm, bands))).select(
@@ -348,7 +346,6 @@ def build_minhash_index(
     bands: int = 8,
     shingle_n: int = 3,
     seed: int = 42,
-    spread: bool = True,
 ) -> DataFrame:
     """The persisted near-dup STATE for cross-batch incremental dedup:
     one row per (doc, band) — (id, band, bucket, set_fp). Write it out
@@ -369,17 +366,9 @@ def build_minhash_index(
     # (band buckets JOIN per-doc fingerprints on id) scanned the corpus
     # text twice and paid a join exchange per index build / per probed
     # micro-batch (q392/q395 build these in their hot loop).
-    # ``spread=False`` is the HOT-LOOP opt-out: a per-micro-batch
-    # caller (q392's foreachBatch) passes frames that either probe as
-    # no-files (post-shuffle) or as one tiny arrival file — the
-    # conditional spread would repartition every batch's text rows for
-    # a batch-sized build, adding a per-batch exchange for nothing.
-    # One-time corpus builds keep the default (single-split fixture
-    # scans parallelize; a no-op whenever the scan is already wide).
     if num_perm % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
-    df = spread_partitions(corpus) if spread else corpus
-    df = df.filter(_min_tokens_filter(text_col, shingle_n))
+    df = corpus.filter(_min_tokens_filter(text_col, shingle_n))
     sig = minhash_signature(df, text_col, num_perm, shingle_n, seed).select(
         id_col,
         "minhash_sig",
@@ -630,7 +619,6 @@ def simhash_band_candidates(
         raise ValueError(f"bands ({bands}) must divide 64")
     width = 64 // bands
     mask = (1 << width) - 1
-    df = spread_partitions(df)
     # token-less docs share simhash 0 — same bucket-collision blowup as
     # empty-shingle MinHash; exclude them (nothing to compare)
     df = df.filter(F.size(tokens(text_col)) > 0)

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.vectors import cosine
-from .partitioning import spread_partitions
 
 
 def knn_bruteforce(
@@ -120,10 +119,6 @@ def ann_lsh_topk(
     all_planes = [
         _hyperplanes(dim, n_planes, seed + 7919 * t) for t in range(n_tables)
     ]
-    # signature computation is CPU-heavy and narrow — spread a
-    # single-file corpus across all cores (real clusters get this from
-    # their input splits)
-    corpus = spread_partitions(corpus)
 
     def bucket_rows(df: DataFrame, out_id: str) -> DataFrame:
         # One SQL expression computes every table's bucket in a single

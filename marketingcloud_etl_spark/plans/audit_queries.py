@@ -196,17 +196,9 @@ def q408_table_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
     100 TB this is the cheapest possible full-content audit: cost =
     one pass, parallel across every file."""
     prep(spark)
-    from ..operators.partitioning import spread_partitions
-
     outs = []
     for tbl, cols in _CHECKSUM_TABLES.items():
-        # the per-row md5 digest is the dominant cost and runs in the
-        # SCAN stage: a single-file fixture table scans as ONE split,
-        # serializing the whole digest pass on one core. Conditional
-        # spread (no-op when the scan already yields >= cores splits —
-        # the 100 TB case) parallelizes it; measured 3.2 -> 2.2 s for
-        # the battery at sf0.1.
-        t = spread_partitions(table(spark, sf_dir, tbl).select(*[c for c, _ in cols]))
+        t = table(spark, sf_dir, tbl).select(*[c for c, _ in cols])
         outs.append(
             t.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -326,14 +318,7 @@ def q409_column_profile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivots driver-side into one row per column. No per-column
     rescans: profiling 100 TB costs one read."""
     prep(spark)
-    from ..operators.partitioning import spread_partitions
-
-    # the Expand(xN_cols) + multi-key Sort + SortAggregate the
-    # multi-distinct plans all execute in the SCAN stage — one task on
-    # a single-file input. Conditional spread (no-op at scale, see
-    # operators/partitioning.py) parallelizes the whole first stage;
-    # measured 3.2 -> 2.3 s at sf0.1.
-    o = spread_partitions(table(spark, sf_dir, "orders"))
+    o = table(spark, sf_dir, "orders")
     aggs = []
     for name, typ in _PROFILE_COLS:
         canon = _canon_spark(name, typ)
@@ -410,10 +395,6 @@ def q410_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     prep(spark)
     outs = []
     for rel, ct, ck, pt, pk in _FK_RELS:
-        # NOT spread: ckeys feeds three consumers, and the measured A/B
-        # (r12) showed the round-robin exchange re-runs per consumer
-        # (2.8 -> 6.0 s) — the cheap keyed partial count does not repay
-        # a raw-row shuffle
         child = table(spark, sf_dir, ct).select(F.col(ck).alias("k"))
         parent = table(spark, sf_dir, pt).select(F.col(pk).alias("k"))
         ckeys = child.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
@@ -728,8 +709,6 @@ def q413_uniqueness_contract_audit(spark: SparkSession, sf_dir: str) -> DataFram
     prep(spark)
     outs = []
     for label, tbl, keys in _UNIQUE_CONTRACTS:
-        # NOT spread: measured A/B (r12) 1.2 -> 2.5 s — a plain keyed
-        # partial count is cheaper than shuffling the raw keys first
         t = table(spark, sf_dir, tbl).select(*keys)
         m = t.groupBy(*keys).agg(F.count(F.lit(1)).alias("m"))
         outs.append(
@@ -1089,8 +1068,7 @@ def q431_anti_entropy_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # five times (measured 5.9 s -> ~3 s at sf0.1)
     # the row digest is STORED on the pinned frame — ta/tb/tr are three
     # aggregation passes, and recomputing the md5 in each tripled the
-    # hash work; only B's corrupted rows re-digest. (A spread before
-    # the pin fill measured WORSE in the r12 A/B: 3.2 -> 4.1 s.)
+    # hash work; only B's corrupted rows re-digest.
     a = pin_cache(
         li.select(
             "l_orderkey",

@@ -12,6 +12,9 @@ sources/ and sinks/ with their own tests.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -269,10 +272,8 @@ def q67_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes the same aggregate straight from parquet, so
     any round-trip corruption (type drift, quoting, double formatting)
     breaks the hash match."""
-    import os
-
     prep(spark)
-    base = f"/tmp/mcetl_roundtrip_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_roundtrip_{fixture_tag(sf_dir)}")
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     e.write.mode("overwrite").option("header", True).csv(f"{base}/csv")
     e.write.mode("overwrite").json(f"{base}/json")
@@ -683,10 +684,8 @@ def q98_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet, so any round-trip drift (type mapping, date/decimal
     encoding) breaks the hash match. ORC is Spark-native columnar with
     predicate pushdown, the common interchange with Hive warehouses."""
-    import os
-
     prep(spark)
-    base = f"/tmp/mcetl_orc_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_orc_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -726,10 +725,8 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset relies on). The oracle builds the same union explicitly,
     so a wrong merge (dropped column, misaligned rows) breaks the
     hash."""
-    import os
-
     prep(spark)
-    base = f"/tmp/mcetl_evolve_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_evolve_{fixture_tag(sf_dir)}")
     e = table(spark, sf_dir, "events")
     old = e.filter(F.col("event_id") < 5000).select("event_id", "event_type")
     new = e.filter(F.col("event_id") >= 5000).select("event_id", "event_type", "value")
@@ -776,14 +773,12 @@ def q113_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no global ordering), bounded file sizes for object-store-friendly
     parallel reads. At 100 TB this is exactly `repartition(4096,
     shard)` + the same write."""
-    import os
-
     prep(spark)
     shard = F.pmod(
         F.expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"),
         F.lit(8),
     )
-    base = f"/tmp/mcetl_export_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_export_{fixture_tag(sf_dir)}")
     atomic_cached_write(
         base,
         lambda tmp: (
@@ -880,8 +875,6 @@ def q140_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays columnar binary; everything downstream is q54/q73's
     payload-column machinery."""
     prep(spark)
-    import os
-    import tempfile
 
     from ..io import atomic_cached_write, fixture_tag
 
@@ -941,10 +934,8 @@ def q120_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     any row lost or duplicated by the rewrite breaks the hash; the
     file-count contract (fewer, bounded files) is pinned in
     tests/test_operators.py."""
-    import os
-
     prep(spark)
-    base = f"/tmp/mcetl_compact_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_compact_{fixture_tag(sf_dir)}")
     frag, compact = f"{base}/frag", f"{base}/compact"
     atomic_cached_write(
         frag,
@@ -1155,7 +1146,7 @@ def q156_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass at scale. XML is the interchange the reference's SFMC world
     (SOAP-era Salesforce APIs) still speaks."""
     prep(spark)
-    base = f"/tmp/mcetl_xml_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_xml_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -1320,9 +1311,6 @@ def q168_pydatasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     read loop, and the ``manifest_matches`` boolean pins the manifest's
     committed row count against the re-read. Completes the DataSource
     surface: batch reader (q83) + stream reader (q148) + this writer."""
-    import os
-    import tempfile
-
     prep(spark)
     from ..sinks.pydatasource import JsonLinesSinkDataSource, read_manifest
 
@@ -1372,8 +1360,6 @@ def q343_pydatasource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     reference's closest analogue is its per-2500-row INSERT loop
     (salesforce_extractor.py:197-230) — here each epoch is one
     distributed transactional append."""
-    import os
-
     prep(spark)
     from ..sinks.pydatasource import JsonLinesSinkDataSource, read_stream_manifests
     from ..streaming.jobs import events_stream
@@ -1433,10 +1419,8 @@ def q179_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt + valid = total, and the valid-side cents match the
     oracle's reconstruction of the same planted rule. The quarantine
     router (q125) is the downstream consumer of exactly this column."""
-    import os
-
     prep(spark)
-    base = f"/tmp/mcetl_badcsv_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_badcsv_{fixture_tag(sf_dir)}")
     src = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
@@ -1499,7 +1483,7 @@ def q180_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the debugging primitive for bad-file isolation (find the
     one corrupt file among 10⁵ by provenance, reprocess only it)."""
     prep(spark)
-    base = f"/tmp/mcetl_part_orders_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_part_orders_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     atomic_cached_write(
         base,
@@ -1597,7 +1581,7 @@ def q195_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout decision (which column to range-sort on) is the single
     biggest scan-cost lever after partitioning."""
     prep(spark)
-    base = f"/tmp/mcetl_sorted_orders_v2_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_sorted_orders_v2_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     # range-partition on the sort column ALONE: the range partitioner
     # sends equal keys to one partition, so no date can straddle two
@@ -1665,9 +1649,8 @@ def q197_text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable by line, the regexes run inside codegen, and the
     aggregate is the only shuffle."""
     prep(spark)
-    import os
 
-    base = f"/tmp/mcetl_textlog_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_textlog_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
 
     def write_logs(tmp: str) -> None:
@@ -1729,7 +1712,7 @@ def q198_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     prep(spark)
     import shutil
 
-    base = f"/tmp/mcetl_dpo_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_dpo_{fixture_tag(sf_dir)}")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
@@ -1787,7 +1770,7 @@ def q203_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     TARGET = 7
-    base = f"/tmp/mcetl_gdpr_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_gdpr_{fixture_tag(sf_dir)}")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
@@ -2486,8 +2469,6 @@ def q265_nested_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization); the read flattens the merged struct so the oracle
     can reproduce it relationally."""
     prep(spark)
-    import os
-    import tempfile
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
@@ -2966,10 +2947,9 @@ def q311_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver while the data scan parallelizes over exactly the pinned
     files."""
     import json
-    import os
 
     prep(spark)
-    base = f"/tmp/mcetl_manifest_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_manifest_{fixture_tag(sf_dir)}")
 
     def _stage(tmp: str) -> None:
         e = table(spark, sf_dir, "events")
@@ -3521,7 +3501,7 @@ def q328_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-quoted, split, or dropped record breaks count, char-length
     sum, and key checksum."""
     prep(spark)
-    base = f"/tmp/mcetl_csvml_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_csvml_{fixture_tag(sf_dir)}")
     c = table(spark, sf_dir, "customer")
     noted = c.select(
         "c_custkey",

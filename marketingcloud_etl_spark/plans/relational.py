@@ -15,6 +15,9 @@ rules observed throughout:
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -864,11 +867,9 @@ def q70_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a join HINT, not session conf — conf is read at execution time, so
     mutating it from inside a query function would race with any other
     lazily-built query in the same session."""
-    import os
-
     prep(spark)
     tag = fixture_tag(sf_dir)
-    base = f"/tmp/mcetl_bucketed_{tag}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_bucketed_{tag}")
     names = {"lineitem": f"li_bkt_{tag}", "orders": f"ord_bkt_{tag}"}
     keys = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
     for t, name in names.items():
@@ -984,11 +985,9 @@ def q76_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests), the at-scale layout for low-cardinality hot
     filters. The oracle computes the same result from the unpartitioned
     table."""
-    import os
-
     prep(spark)
     tag = fixture_tag(sf_dir)
-    path = f"/tmp/mcetl_part_events_{tag}"
+    path = os.path.join(tempfile.gettempdir(), f"mcetl_part_events_{tag}")
     from ..io import atomic_cached_write
 
     atomic_cached_write(
@@ -1450,12 +1449,10 @@ def q119_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     and MADs are bitwise the raw-row results (the MAD pass maps the
     counts through |price − med| with counts carried, never re-reading
     rows), and the outlier tallies are count-weighted sums over the
-    same frame. The r12 form scanned the (spread) rows once but pushed
-    all 600k rows through three percentile/tally partials; every pass
-    here is over the ~276k-row pinned counts frame, and the scan-stage
-    partial aggregation parallelizes via the input splits at scale
-    (the counts agg is cheap-partial class, so no spread — the r12 §1
-    negative result). Exact per-group medians still merge each group's
+    same frame. The r12 form pushed all 600k rows through three
+    percentile/tally partials; every pass here is over the ~276k-row
+    pinned counts frame, and the scan-stage partial aggregation
+    parallelizes via the input splits. Exact per-group medians still merge each group's
     value map in one reducer; for billion-distinct-per-group corpora
     q357's grouped_quantile_cont (counts → distributed prefix sum →
     rank-cover, no group-sized task) is the exact alternative —
@@ -2109,7 +2106,7 @@ def q176_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     prep(spark)
     from ..io import atomic_cached_write, fixture_tag
 
-    base = f"/tmp/mcetl_part_orders_{fixture_tag(sf_dir)}"
+    base = os.path.join(tempfile.gettempdir(), f"mcetl_part_orders_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     atomic_cached_write(
         base,

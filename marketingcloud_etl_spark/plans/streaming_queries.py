@@ -8,6 +8,9 @@ driver, with batch-equivalence pinned in tests/test_streaming.py."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -206,7 +209,6 @@ def q75_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     micro-batches overlap nothing and event_id is unique, the final
     target must equal the source table exactly — which the oracle
     checks by value."""
-    import os
     import shutil
 
     prep(spark)
@@ -214,7 +216,7 @@ def q75_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming.jobs import events_stream
 
     tag = fixture_tag(sf_dir)
-    target = f"/tmp/mcetl_febatch_{tag}"
+    target = os.path.join(tempfile.gettempdir(), f"mcetl_febatch_{tag}")
     shutil.rmtree(target, ignore_errors=True)
     # also clear any checkpoint a crashed earlier run left behind —
     # stale offsets would make the stream skip every file against the
@@ -590,14 +592,13 @@ def q172_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row-rounded integers, order-proof."""
     import glob
     import json
-    import os
     import shutil
 
     prep(spark)
     from ..streaming.jobs import events_stream
 
     tag = fixture_tag(sf_dir)
-    target = f"/tmp/mcetl_feach_{tag}"
+    target = os.path.join(tempfile.gettempdir(), f"mcetl_feach_{tag}")
     shutil.rmtree(target, ignore_errors=True)
     shutil.rmtree(f"{target}_ckpt", ignore_errors=True)
     os.makedirs(target, exist_ok=True)
@@ -1504,7 +1505,6 @@ def _replay_copy(name: str, golden: str, state: str) -> str:
     its state, so every run starts from its own copy of the golden dir.
     Arrival files are re-stamped one second apart per batch ``b=0..2``:
     mtime order defines the batch boundaries (one file per arrival)."""
-    import os
     import shutil
     import time
 
@@ -1580,8 +1580,6 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     batch-sized append; state grows by survivors only. The batch
     boundary is data-defined (one file per arrival), so re-running the
     replay reproduces byte-identical counts."""
-    import os
-
     prep(spark)
     from ..operators.dedup import build_minhash_index, probe_minhash_rows
 
@@ -1625,13 +1623,10 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         # index rows once, probe the state from them, and append the
         # SURVIVOR SUBSET of the same rows — probing the text and then
         # re-fingerprinting the survivors ran the (dominant) signature
-        # compute twice per batch. spread=False: the hot-loop opt-out —
-        # a micro-batch is one tiny arrival file, and the operator's
-        # conditional spread would repartition its text rows per batch
-        # (a per-batch exchange) for a batch-sized build.
-        rows = build_minhash_index(
-            batch_df.select("doc_id", "text"), spread=False
-        ).localCheckpoint(eager=True)
+        # compute twice per batch.
+        rows = build_minhash_index(batch_df.select("doc_id", "text")).localCheckpoint(
+            eager=True
+        )
         # explicit schema — the state layout is fixed by
         # build_minhash_index; skips per-batch footer inference
         index = spark.read.schema(
@@ -1746,8 +1741,6 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and shared by every batch, exactly like the ANN path's
     offline codebook. Batch boundaries are data-defined (one file per
     arrival), so the replay is deterministic end-to-end."""
-    import os
-
     prep(spark)
     from ..operators.semantic_dedup import (
         build_semantic_index,
@@ -1940,8 +1933,6 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     by postings hits. Periodic q396 compaction restores the term-
     sorted row-group layout the appends erode; none of this re-reads
     the corpus text."""
-    import os
-
     prep(spark)
     from ..operators.retrieval import bm25_serve, build_bm25_index
     from .text_queries import _Q390_QUERY_TERMS

@@ -11,7 +11,6 @@ from pyspark.sql.window import Window as W
 from ..functions.text import tokens, tokens_sql
 from ..functions.vectors import cosine_sql
 from ..operators.dedup import word_shingles
-from ..operators.partitioning import spread_partitions as _spread
 from .dedup_queries import _H32, _H32_DUCK
 from ..io import query_state, scratch_dir, table
 from ..session import prep
@@ -1384,12 +1383,7 @@ def q173_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     spans = (
-        # spread the text scan before the window build: the span
-        # strings otherwise materialize in the single-file scan task,
-        # and the shared exchange lets BOTH consumers (frequency agg +
-        # rejoin) reuse one build (no-op at scale)
-        _spread(d.select("doc_id", "text"))
-        .select("doc_id", words.alias("words"))
+        d.select("doc_id", words.alias("words"))
         .filter(F.size("words") >= 8)
         .select(
             "doc_id",
@@ -1494,12 +1488,7 @@ def _maximal_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     spans = (
-        # spread the text scan before the window build: the span
-        # strings otherwise materialize in the single-file scan task,
-        # and the shared exchange lets BOTH consumers (frequency agg +
-        # rejoin) reuse one build (no-op at scale)
-        _spread(d.select("doc_id", "text"))
-        .select("doc_id", words.alias("words"))
+        d.select("doc_id", words.alias("words"))
         .filter(F.size("words") >= 8)
         .select(
             "doc_id",
@@ -3770,27 +3759,10 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     prep(spark)
-    from ..operators.partitioning import needs_spread
-    from ..operators.ranking import pin_cache
-
     d = table(spark, sf_dir, "documents")
-    src = d.select("doc_id", "text")
-    # single-split regime only (needs_spread — the spread_partitions
-    # probe): spread the scan AND pin the bigram stream, because the
-    # batch filter is on a DERIVED column, so each of the four
-    # sequential state steps otherwise re-runs the full
-    # tokenize+bigram-explode subtree on one task. At scale the probe
-    # is FALSE and neither the spread nor the pin — which would
-    # persist a corpus-sized exploded bigram frame, a §5 spill hazard
-    # — is taken: each step re-reads its own (already wide) splits,
-    # the production posture. The measured operation — distinct,
-    # anti-join, append — is unchanged either way.
-    narrow = needs_spread(src)
-    if narrow:
-        src = src.repartition(spark.sparkContext.defaultParallelism)
     # bigram types (q372's type space): unigram vocab saturates in the
     # first batch on any real corpus, collapsing the curve to one row
-    dt = src.select(
+    dt = d.select(
         (F.col("doc_id") % 4).cast("int").alias("batch"),
         tokens("text").alias("toks"),
     ).filter(F.size("toks") >= 2)
@@ -3807,8 +3779,6 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tok"),
     )
-    if narrow:
-        toks = pin_cache(toks)
 
     state_dir = os.path.join(scratch_dir("q401"), "vocab_state")
     # batch 0 seeds the state
@@ -4408,12 +4378,7 @@ def _contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     spans = (
-        # spread the text scan before the window build: the span
-        # strings otherwise materialize in the single-file scan task,
-        # and the shared exchange lets BOTH consumers (frequency agg +
-        # rejoin) reuse one build (no-op at scale)
-        _spread(d.select("doc_id", "text"))
-        .select("doc_id", words.alias("words"))
+        d.select("doc_id", words.alias("words"))
         .filter(F.size("words") >= 8)
         .select(
             "doc_id",
@@ -4538,10 +4503,7 @@ def q447_cross_source_dup_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     occ = (
-        # spread the text scan before the window build (q438's
-        # rationale; no-op at scale)
-        _spread(d.select("doc_id", "source", "text"))
-        .select("doc_id", "source", words.alias("words"))
+        d.select("doc_id", "source", words.alias("words"))
         .filter(F.size("words") >= 8)
         .select(
             "doc_id",

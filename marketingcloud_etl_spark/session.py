@@ -10,6 +10,7 @@ any pandas-exchange path.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -41,7 +42,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # keep managed-table metadata out of the working directory
-        .config("spark.sql.warehouse.dir", "/tmp/mcetl_warehouse")
+        .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "mcetl_warehouse"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -290,16 +290,19 @@ def test_partition_pruning_scan(spark, sf_dir):
     from marketingcloud_etl_spark.plans.catalog import load_all
 
     load_all()["q76_partition_pruning"].fn(spark, sf_dir)  # materializes layout
+    import os
+    import tempfile
+
     from marketingcloud_etl_spark.io import fixture_tag
-    tag = fixture_tag(sf_dir)
+    path = os.path.join(tempfile.gettempdir(), f"mcetl_part_events_{fixture_tag(sf_dir)}")
     df = (
-        spark.read.parquet(f"/tmp/mcetl_part_events_{tag}")
+        spark.read.parquet(path)
         .filter(F.col("event_type") == "purchase")
         .select("event_id")
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "event_type" in plan
-    n_all = spark.read.parquet(f"/tmp/mcetl_part_events_{tag}").count()
+    n_all = spark.read.parquet(path).count()
     assert df.count() < n_all  # genuinely pruned subset
 
 

@@ -846,8 +846,8 @@ def test_incremental_session_never_rescans_history(spark, sf_dir):
     the persisted per-user state — every events scan in the plan is
     the batch slice (date filter pushed), plus the state parquet."""
     plan = _plan(REGISTRY["q403_incremental_session_state"].fn(spark, sf_dir))
-    # events reach plans through io.table's normalized cache dir
-    ev_lines = [l for l in plan.splitlines() if "mcetl_events_norm_" in l]
+    # events reach plans through io.table's normalized copy
+    ev_lines = [l for l in plan.splitlines() if "events.parquet" in l]
     assert ev_lines, "no events scan at all?"
     for l in ev_lines:
         assert "2024-01-16" in l, f"events scan without the batch date filter: {l[:200]}"

@@ -1,7 +1,8 @@
 """The per-query state registry (``io.query_state`` / ``io.scratch_dir``)
 and the source guards that keep it the only owner of per-query state
-in ``plans/`` and ``sinks/`` and keep ``ranking.pin_cache`` the only
-place ``plans/`` and ``operators/`` persist a frame."""
+in ``plans/`` and ``sinks/``, keep ``ranking.pin_cache`` the only
+place ``plans/`` and ``operators/`` persist a frame, and keep
+``io.table`` the only place that decides scan parallelism."""
 
 from __future__ import annotations
 
@@ -207,4 +208,58 @@ def test_only_pin_cache_persists_frames():
                 and id(node) not in allowed
             ):
                 found.append(f"{rel}:{node.lineno}: .{node.func.attr}()")
+    assert not found, "\n".join(found)
+
+
+def test_scan_parallelism_is_decided_only_in_io():
+    """io.table lays every fixture scan out across the cores, so no
+    plans/ or operators/ module re-spreads a scan: no import of a
+    partitioning module, no inputFiles() probe, no repartition() sized
+    from defaultParallelism."""
+    found = []
+    for rel, tree in _modules("plans", "operators"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                (node.module or "").split(".")[-1] == "partitioning"
+                or any(a.name == "partitioning" for a in node.names)
+            ):
+                found.append(f"{rel}:{node.lineno}: imports operators.partitioning")
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "inputFiles":
+                    found.append(f"{rel}:{node.lineno}: inputFiles()")
+                args = [*node.args, *(k.value for k in node.keywords)]
+                if node.func.attr == "repartition" and any(
+                    "defaultParallelism" in ast.unparse(a) for a in args
+                ):
+                    found.append(f"{rel}:{node.lineno}: repartition(defaultParallelism)")
+    assert not found, "\n".join(found)
+
+
+def test_io_sets_no_session_conf():
+    """io.table returns conf-independent scans: a session conf flipped
+    around a lazy read is a race with every later action."""
+    tree = ast.parse((PKG / "io.py").read_text())
+    found = [
+        f"io.py:{n.lineno}: {ast.unparse(n.func)}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "set"
+        and ast.unparse(n.func.value).endswith("conf")
+    ]
+    assert not found, "\n".join(found)
+
+
+def test_no_hard_coded_tmp_paths():
+    """Temp paths follow TMPDIR (tempfile.gettempdir()): a literal /tmp
+    escapes a per-run TMPDIR and outlives the run."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith("/tmp")
+            ):
+                found.append(f"{path.relative_to(PKG)}:{node.lineno}: {node.value!r}")
     assert not found, "\n".join(found)
