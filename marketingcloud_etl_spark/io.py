@@ -14,6 +14,17 @@ every core and no operator needs an exchange to spread it. A table
 with at least ``defaultParallelism`` row groups is read in place.
 ``events`` always goes through the copy, which normalizes its ``ts``
 column (see :func:`_normalize_events`).
+
+Every file a catalog query writes goes through :func:`query_state`
+(build-once artifacts: layout copies, indexes, replay feeds) or
+:func:`scratch_dir` (one call's outputs and checkpoints); they are the
+only on-disk state the package keeps. Both live under one root that
+is private to the process and removed when it exits. A state's
+content depends on the fixture's bytes and on the code that built it,
+but it is keyed on the fixture's path only, so a dir shared across
+processes could serve a rewritten fixture, or an older checkout's
+output, without a sign. Within one process the path key holds as long
+as the fixture is not rewritten while the process runs.
 """
 
 from __future__ import annotations
@@ -46,54 +57,9 @@ __all__ = [
     "TABLES",
     "table",
     "register_views",
-    "atomic_cached_write",
     "query_state",
     "scratch_dir",
 ]
-
-
-def atomic_cached_write(path: str, write_fn) -> str:
-    """Populate a cache directory exactly once, atomically.
-
-    ``write_fn(tmp_dir)`` writes into a tmp sibling which is renamed
-    into place — so ``path`` either doesn't exist or is complete. A
-    pre-existing dir WITHOUT Spark's ``_SUCCESS`` marker is a stale
-    partial from a killed non-atomic writer: it is removed and rebuilt
-    (the rename protocol can't leave one).
-
-    Creators are serialized through an exclusive ``flock`` on a sibling
-    lock file, and the ``_SUCCESS`` marker is re-checked under the lock:
-    without that, a creator that lost the check-then-rmtree race could
-    delete a cache a concurrent creator had just completed (and a third
-    reader was already scanning). Readers never take the lock — the
-    fast path stays a single ``exists`` check.
-    """
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    import fcntl
-
-    parent = os.path.dirname(path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    with open(f"{path}.lock", "a") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                return path
-            shutil.rmtree(path, ignore_errors=True)
-            tmp = f"{path}.tmp{os.getpid()}"
-            try:
-                write_fn(tmp)
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                        raise
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-    return path
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -157,8 +123,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 def fixture_tag(sf_dir: str) -> str:
     """Identifier-safe cache tag for a fixture dir, keyed on the FULL
     absolute path: two trees with the same leaf name (/a/sf0.1 vs
-    /b/sf0.1) must never share a /tmp materialization or a catalog
-    table name. The leaf stays in the tag for human readability."""
+    /b/sf0.1) must never share a query state or a catalog table name.
+    The leaf stays in the tag for human readability."""
     import hashlib
 
     abs_dir = os.path.abspath(sf_dir.rstrip("/"))
@@ -181,10 +147,8 @@ def _remove_state_root(root: str, owner: int) -> None:
 
 def _state_root() -> str:
     """The per-process dir every query state and scratch dir lives
-    under: created on first use, removed when the interpreter exits.
-    Deliberately not a cross-process /tmp cache — a state's content
-    depends on the code that built it, so a dir left behind by an older
-    checkout must never be served."""
+    under: created on first use, removed when the interpreter exits
+    (the module docstring says why it is not shared across processes)."""
     global _STATE_ROOT
     with _STATE_LOCK:
         if _STATE_ROOT is None:
@@ -201,27 +165,29 @@ def query_state(name: str, sf_dir: str, build) -> tuple[str, object]:
     On the first call, or once ``dir`` has gone, ``build(d)`` writes
     the state's files under ``d`` and returns any Python value the
     state carries (a codebook, a merge list; ``None`` for file-only
-    states). ``d`` is a tmp sibling that :func:`atomic_cached_write`
-    renames into place after a top-level ``_SUCCESS`` marker is written
-    (multi-table states have no Spark marker at their top), so a build
-    that raises leaves nothing behind and the next call builds again.
-    Because of the rename, nothing ``build`` persists may embed ``d``
-    itself — store paths relative to it. Keyed on
-    :func:`fixture_tag`, so every spelling of one fixture path shares
-    one state."""
+    states). ``d`` is an empty tmp sibling that is renamed into place
+    after a top-level ``_SUCCESS`` marker is written (multi-table
+    states have no Spark marker at their top), so a build that raises
+    leaves nothing behind and the next call builds again. Because of
+    the rename, nothing ``build`` persists may embed ``d`` itself —
+    store paths relative to it. Keyed on :func:`fixture_tag`, so every
+    spelling of one fixture path shares one state. The root is private
+    to the process and the registry lock is held across the build, so
+    no other writer can race it."""
     key = (name, fixture_tag(sf_dir))
     with _STATE_LOCK:
         hit = _STATES.get(key)
         if hit is None or not os.path.exists(os.path.join(hit[0], "_SUCCESS")):
-            built = []
-
-            def write(tmp: str) -> None:
-                os.makedirs(tmp)
-                built.append(build(tmp))
-                open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
             path = os.path.join(_state_root(), f"{name}_{key[1]}")
-            hit = _STATES[key] = (atomic_cached_write(path, write), built[0])
+            tmp = f"{path}.tmp"
+            os.makedirs(tmp)
+            try:
+                value = build(tmp)
+                open(os.path.join(tmp, "_SUCCESS"), "w").close()
+                os.rename(tmp, path)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+            hit = _STATES[key] = (path, value)
         return hit
 
 

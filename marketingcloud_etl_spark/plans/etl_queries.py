@@ -13,7 +13,6 @@ sources/ and sinks/ with their own tests.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,9 +20,10 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import content_hash, content_hash_sql
 from ..functions.money import dec
-from ..io import atomic_cached_write, fixture_tag, query_state, scratch_dir, table
+from ..io import query_state, scratch_dir, table
 from ..session import prep
 from .catalog import query
+from .relational import orders_by_year_dir
 
 _EVENT_HASH_COLS = ("user_id", "event_type", "value", "props")
 _EVENT_HASH_SQL = content_hash_sql(_EVENT_HASH_COLS)
@@ -273,10 +273,10 @@ def q67_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     any round-trip corruption (type drift, quoting, double formatting)
     breaks the hash match."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_roundtrip_{fixture_tag(sf_dir)}")
+    base = scratch_dir("q67")
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    e.write.mode("overwrite").option("header", True).csv(f"{base}/csv")
-    e.write.mode("overwrite").json(f"{base}/json")
+    e.write.option("header", True).csv(f"{base}/csv")
+    e.write.json(f"{base}/json")
     schema = "event_id bigint, event_type string, value double"
     c = spark.read.schema(schema).option("header", True).option("multiLine", True).csv(f"{base}/csv")
     j = spark.read.schema(schema).json(f"{base}/json")
@@ -685,11 +685,10 @@ def q98_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding) breaks the hash match. ORC is Spark-native columnar with
     predicate pushdown, the common interchange with Hive warehouses."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_orc_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    atomic_cached_write(base, lambda tmp: o.write.mode("overwrite").orc(tmp))
+    base, _ = query_state("q98_orc_roundtrip", sf_dir, lambda d: o.write.mode("overwrite").orc(d))
     back = spark.read.orc(base)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -726,12 +725,15 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a wrong merge (dropped column, misaligned rows) breaks the
     hash."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_evolve_{fixture_tag(sf_dir)}")
     e = table(spark, sf_dir, "events")
     old = e.filter(F.col("event_id") < 5000).select("event_id", "event_type")
     new = e.filter(F.col("event_id") >= 5000).select("event_id", "event_type", "value")
-    atomic_cached_write(f"{base}/old", lambda tmp: old.write.mode("overwrite").parquet(tmp))
-    atomic_cached_write(f"{base}/new", lambda tmp: new.write.mode("overwrite").parquet(tmp))
+
+    def build(d: str) -> None:
+        old.write.parquet(f"{d}/old")
+        new.write.parquet(f"{d}/new")
+
+    base, _ = query_state("q106_schema_evolution", sf_dir, build)
     merged = spark.read.option("mergeSchema", True).parquet(f"{base}/old", f"{base}/new")
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -778,10 +780,10 @@ def q113_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"),
         F.lit(8),
     )
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_export_{fixture_tag(sf_dir)}")
-    atomic_cached_write(
-        base,
-        lambda tmp: (
+    base, _ = query_state(
+        "q113_training_export",
+        sf_dir,
+        lambda d: (
             table(spark, sf_dir, "documents")
             .select("doc_id", "source", "n_chars")
             .withColumn("shard", shard)
@@ -790,7 +792,7 @@ def q113_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .option("maxRecordsPerFile", 5000)
             .partitionBy("shard")
-            .parquet(tmp)
+            .parquet(d)
         ),
     )
     back = spark.read.parquet(base)
@@ -864,8 +866,8 @@ def q114_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q140_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-file ingestion through Spark's ``binaryFile`` source — the
     entry point of every multimodal pipeline (images/audio land as
-    files, not rows). Fixture docs are materialized once as one file
-    per document (atomic cache, same protocol as io._events); the
+    files, not rows). Fixture docs are materialized once per process
+    as one file per document (``io.query_state``); the
     query then does what a 100 TB media ingest does: scan the
     directory as (path, length, content) rows, parse the record key
     out of the path, fingerprint the payload. The oracle recomputes
@@ -876,17 +878,10 @@ def q140_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload-column machinery."""
     prep(spark)
 
-    from ..io import atomic_cached_write, fixture_tag
-
-    src_dir = os.path.join(
-        tempfile.gettempdir(), f"mcetl_binfiles_{fixture_tag(sf_dir)}"
-    )
-
-    def write_files(tmp: str) -> None:
+    def write_files(d: str) -> None:
         # sandbox-fixture shim: materialize 40 small files (a real
         # deployment ingests files that already exist). Driver-side by
         # construction — the fixture is 40 rows.
-        os.makedirs(tmp, exist_ok=True)
         rows = (
             table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 40)
@@ -894,11 +889,10 @@ def q140_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         for r in rows:
-            with open(os.path.join(tmp, f"{r.doc_id}.txt"), "wb") as f:
+            with open(os.path.join(d, f"{r.doc_id}.txt"), "wb") as f:
                 f.write(r.text.encode("utf-8"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    atomic_cached_write(src_dir, write_files)
+    src_dir, _ = query_state("q140_binaryfile_ingest", sf_dir, write_files)
     bf = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -935,19 +929,14 @@ def q120_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count contract (fewer, bounded files) is pinned in
     tests/test_operators.py."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_compact_{fixture_tag(sf_dir)}")
-    frag, compact = f"{base}/frag", f"{base}/compact"
-    atomic_cached_write(
-        frag,
-        lambda tmp: table(spark, sf_dir, "events")
-        .repartition(64)
-        .write.mode("overwrite")
-        .parquet(tmp),
-    )
     from ..sinks.upsert import compact_parquet
 
-    atomic_cached_write(compact, lambda tmp: compact_parquet(spark, frag, tmp))
-    back = spark.read.parquet(compact)
+    def build(d: str) -> None:
+        table(spark, sf_dir, "events").repartition(64).write.parquet(f"{d}/frag")
+        compact_parquet(spark, f"{d}/frag", f"{d}/compact")
+
+    base, _ = query_state("q120_compaction", sf_dir, build)
+    back = spark.read.parquet(f"{base}/compact")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("event_id").cast("long")).alias("id_sum"),
@@ -1146,16 +1135,16 @@ def q156_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass at scale. XML is the interchange the reference's SFMC world
     (SOAP-era Salesforce APIs) still speaks."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_xml_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("o_orderdate_s"),
     )
-    atomic_cached_write(
-        base,
-        lambda tmp: o.write.format("xml").option("rowTag", "order").mode("overwrite").save(tmp),
+    base, _ = query_state(
+        "q156_xml_roundtrip",
+        sf_dir,
+        lambda d: o.write.format("xml").option("rowTag", "order").mode("overwrite").save(d),
     )
     back = (
         spark.read.format("xml")
@@ -1318,8 +1307,7 @@ def q168_pydatasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(JsonLinesSinkDataSource)
     except Exception:
         pass  # already registered in this session
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_pysink_{fixture_tag(sf_dir)}")
-    os.makedirs(base, exist_ok=True)
+    base = scratch_dir("q168")
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     e.write.format("mcetl_jsonl_sink").option("path", base).mode("overwrite").save()
     manifest = read_manifest(base)
@@ -1420,29 +1408,25 @@ def q179_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's reconstruction of the same planted rule. The quarantine
     router (q125) is the downstream consumer of exactly this column."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_badcsv_{fixture_tag(sf_dir)}")
     src = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
         .select("event_id", "value")
     )
 
-    def write_fixture(tmp: str) -> None:
+    def write_fixture(d: str) -> None:
         # plant the corruption while WRITING the text lines (driver-side
         # — this builds a small source fixture, the same role as the
-        # mock REST server), then mark completion the way the atomic
-        # cache protocol expects
-        os.makedirs(tmp, exist_ok=True)
+        # mock REST server)
         rows = src.collect()
-        with open(os.path.join(tmp, "part-0.csv"), "w") as f:
+        with open(os.path.join(d, "part-0.csv"), "w") as f:
             for r in rows:
                 if r.event_id % 50 == 0:
                     f.write(f"{r.event_id},notanumber\n")
                 else:
                     f.write(f"{r.event_id},{r.value!r}\n")
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    atomic_cached_write(base, write_fixture)
+    base, _ = query_state("q179_csv_corrupt_records", sf_dir, write_fixture)
     back = (
         spark.read.schema("event_id bigint, value double, _corrupt string")
         .option("mode", "PERMISSIVE")
@@ -1475,7 +1459,7 @@ def q179_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q180_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hidden ``_metadata`` file-provenance columns — per-row lineage
     back to the physical file, free at scan time (no extra column in
-    the data). Over the hive-partitioned orders layout (q176's cache),
+    the data). Over the hive-partitioned orders layout (q176's),
     the query proves partition-layout integrity file by file: every
     file's rows carry exactly the partition value its directory
     encodes (``paths_consistent``), and per-partition row counts equal
@@ -1483,16 +1467,7 @@ def q180_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the debugging primitive for bad-file isolation (find the
     one corrupt file among 10⁵ by provenance, reprocess only it)."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_part_orders_{fixture_tag(sf_dir)}")
-    o = table(spark, sf_dir, "orders")
-    atomic_cached_write(
-        base,
-        lambda tmp: o.withColumn("order_year", F.year("o_orderdate"))
-        .write.partitionBy("order_year")
-        .mode("overwrite")
-        .parquet(tmp),
-    )
-    fact = spark.read.parquet(base)
+    fact = spark.read.parquet(orders_by_year_dir(spark, sf_dir))
     return (
         fact.select("order_year", F.col("_metadata.file_path").alias("fp"))
         .groupBy("order_year")
@@ -1581,7 +1556,6 @@ def q195_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout decision (which column to range-sort on) is the single
     biggest scan-cost lever after partitioning."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_sorted_orders_v2_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     # range-partition on the sort column ALONE: the range partitioner
     # sends equal keys to one partition, so no date can straddle two
@@ -1590,12 +1564,13 @@ def q195_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiebreak still orders rows WITHIN each file for determinism.
     # One dominant date → one fat partition is the accepted skew
     # tradeoff of any value-disjoint layout.
-    atomic_cached_write(
-        base,
-        lambda tmp: o.repartitionByRange(8, "o_orderdate")
+    base, _ = query_state(
+        "q195_sorted_layout",
+        sf_dir,
+        lambda d: o.repartitionByRange(8, "o_orderdate")
         .sortWithinPartitions("o_orderdate", "o_orderkey")
         .write.mode("overwrite")
-        .parquet(tmp),
+        .parquet(d),
     )
     rb = spark.read.parquet(base)
     fstats = rb.groupBy(F.col("_metadata.file_name").alias("fname")).agg(
@@ -1649,16 +1624,13 @@ def q197_text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable by line, the regexes run inside codegen, and the
     aggregate is the only shuffle."""
     prep(spark)
-
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_textlog_{fixture_tag(sf_dir)}")
     o = table(spark, sf_dir, "orders")
 
-    def write_logs(tmp: str) -> None:
+    def write_logs(d: str) -> None:
         import math
 
-        os.makedirs(tmp, exist_ok=True)
         rows = o.select("o_orderkey", "o_orderpriority", "o_totalprice").collect()
-        with open(os.path.join(tmp, "part-0.log"), "w") as f:
+        with open(os.path.join(d, "part-0.log"), "w") as f:
             for r in rows:
                 # half-AWAY-from-zero cents (prices non-negative), the
                 # DuckDB/Spark round() convention — python round() is
@@ -1668,9 +1640,8 @@ def q197_text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"[{r.o_orderpriority}] order={r.o_orderkey} "
                     f"amount_cents={cents}\n"
                 )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    atomic_cached_write(base, write_logs)
+    base, _ = query_state("q197_text_source_logparse", sf_dir, write_logs)
     lines = spark.read.text(os.path.join(base, "part-0.log"))
     parsed = lines.select(
         F.regexp_extract("value", r"^\[([^\]]+)\]", 1).alias("priority"),
@@ -1710,16 +1681,12 @@ def q198_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     three years of history. Conf is scoped and restored; the overwrite
     itself is atomic per partition directory."""
     prep(spark)
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_dpo_{fixture_tag(sf_dir)}")
+    base = scratch_dir("q198")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")
     try:
-        # rebuilt per call: the query IS the write protocol under test
-        shutil.rmtree(base, ignore_errors=True)
         ev.write.partitionBy("day").mode("overwrite").parquet(base)
         patch = ev.filter(F.col("day") == "2024-01-10").withColumn(
             "value", F.col("value") * 2
@@ -1767,17 +1734,13 @@ def q203_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOURCE frame — never read-modify-write of the path being
     overwritten — and the hit-day set moves as a broadcast join."""
     prep(spark)
-    import shutil
-
     TARGET = 7
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_gdpr_{fixture_tag(sf_dir)}")
+    base = scratch_dir("q203")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")
     try:
-        # rebuilt per call: the deletion protocol IS the query under test
-        shutil.rmtree(base, ignore_errors=True)
         ev.write.partitionBy("day").mode("overwrite").parquet(base)
         hit_days = ev.filter(F.col("user_id") == TARGET).select("day").distinct()
         n_hit = hit_days.count()
@@ -2465,18 +2428,14 @@ def q265_nested_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     read must unify the STRUCT TYPE itself (not just the column list),
     back-filling v1's missing nested field with NULL — the failure
     mode that silently truncates structs in naive readers. The writes
-    go to a content-keyed cache dir (one-time, like io.py's events
-    normalization); the read flattens the merged struct so the oracle
-    can reproduce it relationally."""
+    happen once per process (``io.query_state``); the read flattens
+    the merged struct so the oracle can reproduce it relationally."""
     prep(spark)
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    out = os.path.join(
-        tempfile.gettempdir(), f"mcetl_nested_evo_{fixture_tag(sf_dir)}"
-    )
 
-    def build(tmp: str) -> None:
+    def build(d: str) -> None:
         v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey",
             F.lit("v1").alias("src"),
@@ -2492,11 +2451,10 @@ def q265_nested_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("channel"),
             ).alias("meta"),
         )
-        v1.write.mode("overwrite").parquet(os.path.join(tmp, "part=v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(tmp, "part=v2"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        v1.write.parquet(os.path.join(d, "part=v1"))
+        v2.write.parquet(os.path.join(d, "part=v2"))
 
-    path = atomic_cached_write(out, build)
+    path, _ = query_state("q265_nested_schema_merge", sf_dir, build)
     merged = (
         spark.read.option("mergeSchema", "true")
         .option("recursiveFileLookup", "true")
@@ -2949,22 +2907,17 @@ def q311_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_manifest_{fixture_tag(sf_dir)}")
 
-    def _stage(tmp: str) -> None:
+    def _stage(d: str) -> None:
         e = table(spark, sf_dir, "events")
         files = []
         for k in range(3):
-            path = os.path.join(tmp, f"batch_{k}.parquet")
-            e.filter(F.col("event_id") % 3 == k).write.mode("overwrite").parquet(path)
+            e.filter(F.col("event_id") % 3 == k).write.parquet(os.path.join(d, f"batch_{k}.parquet"))
             files.append(f"batch_{k}.parquet")
-            with open(os.path.join(tmp, f"manifest_v{k + 1}.json"), "w") as fh:
+            with open(os.path.join(d, f"manifest_v{k + 1}.json"), "w") as fh:
                 json.dump({"version": k + 1, "files": list(files)}, fh)
-        # top-level completeness marker: atomic_cached_write treats a dir
-        # without _SUCCESS as a stale partial and rebuilds it every call
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    root = atomic_cached_write(base, _stage)
+    root, _ = query_state("q311_manifest_snapshot_read", sf_dir, _stage)
     with open(os.path.join(root, "manifest_v2.json")) as fh:
         manifest = json.load(fh)
     snap = spark.read.parquet(
@@ -3501,7 +3454,6 @@ def q328_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-quoted, split, or dropped record breaks count, char-length
     sum, and key checksum."""
     prep(spark)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_csvml_{fixture_tag(sf_dir)}")
     c = table(spark, sf_dir, "customer")
     noted = c.select(
         "c_custkey",
@@ -3510,14 +3462,15 @@ def q328_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_name"), F.lit("\n\""), F.col("c_mktsegment"), F.lit("\";tail")
         ).alias("note"),
     )
-    atomic_cached_write(
-        base,
-        lambda tmp: noted.write.mode("overwrite")
+    base, _ = query_state(
+        "q328_csv_multiline_roundtrip",
+        sf_dir,
+        lambda d: noted.write.mode("overwrite")
         .option("header", "true")
         .option("delimiter", ";")
         .option("quoteAll", "true")
         .option("escape", '"')
-        .csv(tmp),
+        .csv(d),
     )
     back = (
         spark.read.option("header", "true")

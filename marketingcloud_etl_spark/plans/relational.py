@@ -15,9 +15,6 @@ rules observed throughout:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -869,31 +866,35 @@ def q70_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazily-built query in the same session."""
     prep(spark)
     tag = fixture_tag(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_bucketed_{tag}")
     names = {"lineitem": f"li_bkt_{tag}", "orders": f"ord_bkt_{tag}"}
     keys = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
+
+    def build(d: str) -> None:
+        # the bucketed files land through a catalog write; the table is
+        # external, so dropping it keeps them for the DDL below
+        for t, name in names.items():
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            (
+                table(spark, sf_dir, t).write.bucketBy(8, keys[t])
+                .sortBy(keys[t])
+                .option("path", f"{d}/{name}")
+                .saveAsTable(name)
+            )
+            spark.sql(f"DROP TABLE {name}")
+
+    base, _ = query_state("q70_bucketed_join", sf_dir, build)
     for t, name in names.items():
         if spark.catalog.tableExists(name):
             continue
-        src = table(spark, sf_dir, t)
-        if os.path.exists(f"{base}/{name}/_SUCCESS"):
-            # data already on disk from an earlier session — register
-            # the bucketed DDL instead of rewriting (bucket metadata
-            # lives in the catalog, not the files)
-            cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields)
-            spark.sql(
-                f"CREATE TABLE {name} ({cols}) USING parquet "
-                f"CLUSTERED BY ({keys[t]}) SORTED BY ({keys[t]}) INTO 8 BUCKETS "
-                f"LOCATION '{base}/{name}'"
-            )
-        else:
-            (
-                src.write.bucketBy(8, keys[t])
-                .sortBy(keys[t])
-                .option("path", f"{base}/{name}")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
+        # bucket metadata lives in the catalog, not the files
+        cols = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in table(spark, sf_dir, t).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({keys[t]}) SORTED BY ({keys[t]}) INTO 8 BUCKETS "
+            f"LOCATION '{base}/{name}'"
+        )
     li, o = spark.table(names["lineitem"]), spark.table(names["orders"])
     joined = li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
     return joined.groupBy("o_orderpriority").agg(
@@ -986,16 +987,13 @@ def q76_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters. The oracle computes the same result from the unpartitioned
     table."""
     prep(spark)
-    tag = fixture_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"mcetl_part_events_{tag}")
-    from ..io import atomic_cached_write
-
-    atomic_cached_write(
-        path,
-        lambda tmp: table(spark, sf_dir, "events")
+    path, _ = query_state(
+        "q76_partition_pruning",
+        sf_dir,
+        lambda d: table(spark, sf_dir, "events")
         .write.mode("overwrite")
         .partitionBy("event_type")
-        .parquet(tmp),
+        .parquet(d),
     )
     e = spark.read.parquet(path).filter(F.col("event_type") == "purchase")
     return e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
@@ -2076,6 +2074,21 @@ def q175_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def orders_by_year_dir(spark: SparkSession, sf_dir: str) -> str:
+    """``orders`` laid out hive-partitioned by ``order_year`` (one
+    write per process and fixture), the fact layout q176 prunes and
+    q180 audits file by file."""
+    return query_state(
+        "q176_dynamic_partition_pruning",
+        sf_dir,
+        lambda d: table(spark, sf_dir, "orders")
+        .withColumn("order_year", F.year("o_orderdate"))
+        .write.partitionBy("order_year")
+        .mode("overwrite")
+        .parquet(d),
+    )[0]
+
+
 @query(
     "q176_dynamic_partition_pruning",
     oracle="""
@@ -2104,18 +2117,7 @@ def q176_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     plan assertion (``dynamicpruningexpression`` on the scan) lives in
     tests/test_plan_quality.py."""
     prep(spark)
-    from ..io import atomic_cached_write, fixture_tag
-
-    base = os.path.join(tempfile.gettempdir(), f"mcetl_part_orders_{fixture_tag(sf_dir)}")
-    o = table(spark, sf_dir, "orders")
-    atomic_cached_write(
-        base,
-        lambda tmp: o.withColumn("order_year", F.year("o_orderdate"))
-        .write.partitionBy("order_year")
-        .mode("overwrite")
-        .parquet(tmp),
-    )
-    fact = spark.read.parquet(base)
+    fact = spark.read.parquet(orders_by_year_dir(spark, sf_dir))
     years = (
         fact.filter(
             (F.col("o_orderpriority") == "1-URGENT") & (F.col("order_year") <= 1996)

@@ -9,13 +9,12 @@ driver, with batch-equivalence pinned in tests/test_streaming.py."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import dec
-from ..io import fixture_tag, query_state, scratch_dir, table
+from ..io import query_state, scratch_dir, table
 from ..operators.sessionize import sessionize
 from ..session import prep
 from .catalog import query
@@ -209,19 +208,12 @@ def q75_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     micro-batches overlap nothing and event_id is unique, the final
     target must equal the source table exactly — which the oracle
     checks by value."""
-    import shutil
-
     prep(spark)
     from ..sinks.upsert import upsert_parquet
     from ..streaming.jobs import events_stream
 
-    tag = fixture_tag(sf_dir)
-    target = os.path.join(tempfile.gettempdir(), f"mcetl_febatch_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    # also clear any checkpoint a crashed earlier run left behind —
-    # stale offsets would make the stream skip every file against the
-    # freshly-emptied target
-    shutil.rmtree(f"{target}_ckpt_new", ignore_errors=True)
+    base = scratch_dir("q75")
+    target = f"{base}/target"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(batch_df, target, key="event_id")
@@ -229,12 +221,11 @@ def q75_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     q = (
         events_stream(spark, sf_dir)
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{target}_ckpt_new")
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    shutil.rmtree(f"{target}_ckpt_new", ignore_errors=True)
     out = spark.read.parquet(target)
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -592,16 +583,11 @@ def q172_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row-rounded integers, order-proof."""
     import glob
     import json
-    import shutil
 
     prep(spark)
     from ..streaming.jobs import events_stream
 
-    tag = fixture_tag(sf_dir)
-    target = os.path.join(tempfile.gettempdir(), f"mcetl_feach_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(f"{target}_ckpt", ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
+    target = scratch_dir("q172")
 
     class RowWriter:
         def open(self, partition_id: int, epoch_id: int) -> bool:
@@ -627,12 +613,11 @@ def q172_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         events_stream(spark, sf_dir)
         .select("event_type", "value")
         .writeStream.foreach(RowWriter())
-        .option("checkpointLocation", f"{target}_ckpt")
+        .option("checkpointLocation", f"{target}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    shutil.rmtree(f"{target}_ckpt", ignore_errors=True)
     back = spark.read.schema("event_type string, cents bigint").json(
         sorted(glob.glob(os.path.join(target, "*.jsonl")))
     )

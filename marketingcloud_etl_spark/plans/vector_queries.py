@@ -292,15 +292,11 @@ def q138_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     restrict which vectors are scanned, PQ codes score the survivors
     via the m-byte ADC table walk, exact cosine reranks the top-50.
     The index — (id, cell, codes), ~5 bytes/vector — is BUILT ONCE and
-    materialized to parquet (atomic cache, the same offline/online
+    materialized to parquet (``io.query_state``, the same offline/online
     split as the codebooks); every search scans the index file, never
     re-encodes the corpus. Full vectors page in only for the rerank
     join. Recall floor vs brute force is driver-checked by q139."""
     prep(spark)
-    import os
-    import tempfile
-
-    from ..io import atomic_cached_write, fixture_tag
     from ..operators.similarity import (
         ann_ivf_pq_topk,
         build_ivf_pq_index,
@@ -310,14 +306,10 @@ def q138_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 5)
     ivf_cb = _ivf_codebook(e, sf_dir)
     pq_cb = _pq_codebooks(e, sf_dir)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(), f"mcetl_ivfpq_idx_{fixture_tag(sf_dir)}"
-    )
-    atomic_cached_write(
-        idx_dir,
-        lambda tmp: build_ivf_pq_index(e, ivf_cb, pq_cb)
-        .write.mode("overwrite")
-        .parquet(tmp),
+    idx_dir, _ = query_state(
+        "q138_ann_ivfpq_topk",
+        sf_dir,
+        lambda d: build_ivf_pq_index(e, ivf_cb, pq_cb).write.mode("overwrite").parquet(d),
     )
     return ann_ivf_pq_topk(
         e, q, k=5, n_cells=16, n_probe=6, rerank=50,

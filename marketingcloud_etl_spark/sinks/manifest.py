@@ -50,9 +50,10 @@ def _writer_lock(manifest_path: str):
     both are read-modify-write, and an unserialized interleave loses
     whichever write lands first — a publish swallowed by a concurrent
     gc repoints readers at the previous generation and strands the new
-    dir outside history forever. Same sibling-lockfile idiom as
-    io.py::atomic_cached_write. Readers stay lock-free: os.replace
-    keeps the manifest itself atomic for them."""
+    dir outside history forever. The lock is a sibling file because
+    the manifest itself is replaced, not rewritten, on every publish.
+    Readers stay lock-free: os.replace keeps the manifest itself
+    atomic for them."""
     import fcntl
 
     with open(manifest_path + ".lock", "w") as lk:

@@ -15,8 +15,8 @@ in for the DB wire protocol:
    succeeded: staging files rename into the target directory and a
    ``_SUCCESS`` manifest records the file list + total row count.
    Readers only trust directories with the manifest — so a killed job
-   leaves garbage staging files, never a half-visible dataset (same
-   atomic-visibility contract as io.atomic_cached_write).
+   leaves garbage staging files, never a half-visible dataset: the
+   manifest is renamed into place last, after every part is.
  - ``abort(messages)`` removes staging output.
 
 This is the same commit protocol Spark's file sinks use (v1 Hadoop

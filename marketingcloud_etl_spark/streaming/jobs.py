@@ -13,14 +13,13 @@ must equal the same aggregation computed in batch.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import atomic_cached_write, table
+from ..io import query_state, table
 
 
 def _cents_sum(values) -> int:
@@ -37,20 +36,16 @@ def _cents_sum(values) -> int:
 
 def replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
     """Materialize events as an n-file parquet dir (µs timestamps) so a
-    file-source stream replays it in n micro-batches. Cached per
-    (sf_dir, n_files) in the session's temp space."""
-    # key on the full absolute path, not the basename — two fixture
-    # dirs named sf0.1 under different parents must not share a cache
-    abs_dir = os.path.abspath(os.path.normpath(sf_dir))
-    tag = f"{os.path.basename(abs_dir)}_{hashlib.sha1(abs_dir.encode()).hexdigest()[:10]}"
-    out = os.path.join(tempfile.gettempdir(), f"mcetl_replay_{tag}_{n_files}")
-    return atomic_cached_write(
-        out,
-        lambda tmp: table(spark, sf_dir, "events")
+    file-source stream replays it in n micro-batches. Built once per
+    process and (sf_dir, n_files)."""
+    return query_state(
+        f"replay_{n_files}",
+        sf_dir,
+        lambda d: table(spark, sf_dir, "events")
         .repartition(n_files)
         .write.mode("overwrite")
-        .parquet(tmp),
-    )
+        .parquet(d),
+    )[0]
 
 
 def events_stream(spark: SparkSession, sf_dir: str, files_per_trigger: int = 2) -> DataFrame:
@@ -71,38 +66,8 @@ def ordered_replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> st
     watermark-sensitive operators (stream-stream OUTER joins, append-
     mode aggregations) need this: under :func:`replay_dir`'s random
     file order the watermark races ahead and drops whole files as
-    late. Cached like replay_dir."""
-    abs_dir = os.path.abspath(os.path.normpath(sf_dir))
-    tag = f"{os.path.basename(abs_dir)}_{hashlib.sha1(abs_dir.encode()).hexdigest()[:10]}"
-    out = os.path.join(tempfile.gettempdir(), f"mcetl_replay_ord_{tag}_{n_files}")
-
-    def build(tmp: str) -> None:
-        ev = table(spark, sf_dir, "events")
-        # epoch-µs bounds computed IN Spark: a naive-datetime round trip
-        # through Python .timestamp() would re-interpret in host-local TZ
-        lo_us, hi_us = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        span_us = max(int(hi_us) - int(lo_us), 1) + 1
-        bucket = F.floor(
-            (F.unix_micros("ts") - F.lit(int(lo_us))) * n_files / F.lit(span_us)
-        )
-        # sequential per-slice writes: one file per slice, mtimes pinned
-        # afterwards so the listing order equals event-time order even
-        # on coarse-mtime filesystems
-        os.makedirs(tmp, exist_ok=True)
-        import time as _time
-
-        now = _time.time()
-        for i in range(n_files):
-            sub = os.path.join(tmp, f"slice={i:02d}")
-            ev.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(sub)
-            for name in os.listdir(sub):
-                if name.endswith(".parquet"):
-                    os.utime(os.path.join(sub, name), (now + i, now + i))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    return atomic_cached_write(out, build)
+    late. It is :func:`late_replay_dir` with no shift."""
+    return late_replay_dir(spark, sf_dir, n_files, shift_hours=0)
 
 
 def late_replay_dir(
@@ -116,18 +81,15 @@ def late_replay_dir(
     whose ``event_id % late_mod == 0`` has its event time shifted back
     ``shift_hours`` while keeping its ARRIVAL position (slicing uses
     the original timestamp) — the out-of-order feed shape watermark
-    semantics exist for. Slice boundaries reuse ordered_replay_dir's
-    exact µs bucket arithmetic so an oracle can recompute batch
-    membership, and therefore the watermark at each batch, in SQL."""
-    abs_dir = os.path.abspath(os.path.normpath(sf_dir))
-    tag = f"{os.path.basename(abs_dir)}_{hashlib.sha1(abs_dir.encode()).hexdigest()[:10]}"
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"mcetl_replay_late_{tag}_{n_files}_{shift_hours}_{late_mod}",
-    )
+    semantics exist for. Slice ``i`` holds the rows whose original
+    timestamp falls in the ``i``-th of ``n_files`` equal µs spans, so
+    an oracle can recompute batch membership, and therefore the
+    watermark at each batch, in SQL."""
 
-    def build(tmp: str) -> None:
+    def build(d: str) -> None:
         ev = table(spark, sf_dir, "events")
+        # epoch-µs bounds computed IN Spark: a naive-datetime round trip
+        # through Python .timestamp() would re-interpret in host-local TZ
         lo_us, hi_us = ev.agg(
             F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
         ).first()
@@ -135,12 +97,12 @@ def late_replay_dir(
         bucket = F.floor(
             (F.unix_micros("ts") - F.lit(int(lo_us))) * n_files / F.lit(span_us)
         )
-        os.makedirs(tmp, exist_ok=True)
-        import time as _time
-
-        now = _time.time()
+        # sequential per-slice writes: one file per slice, mtimes pinned
+        # afterwards so the listing order equals event-time order even
+        # on coarse-mtime filesystems
+        now = time.time()
         for i in range(n_files):
-            sub = os.path.join(tmp, f"slice={i:02d}")
+            sub = os.path.join(d, f"slice={i:02d}")
             # bucket references the ORIGINAL ts via the pre-shift frame:
             # filter on ev's bucket, then apply the shift projection
             ev.filter(bucket == i).withColumn(
@@ -149,13 +111,12 @@ def late_replay_dir(
                     F.col("event_id") % late_mod == 0,
                     F.col("ts") - F.expr(f"INTERVAL {shift_hours} HOURS"),
                 ).otherwise(F.col("ts")),
-            ).coalesce(1).write.mode("overwrite").parquet(sub)
+            ).coalesce(1).write.parquet(sub)
             for name in os.listdir(sub):
                 if name.endswith(".parquet"):
                     os.utime(os.path.join(sub, name), (now + i, now + i))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    return atomic_cached_write(out, build)
+    return query_state(f"replay_late_{n_files}_{shift_hours}_{late_mod}", sf_dir, build)[0]
 
 
 def events_stream_ordered(

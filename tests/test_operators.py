@@ -290,11 +290,11 @@ def test_partition_pruning_scan(spark, sf_dir):
     from marketingcloud_etl_spark.plans.catalog import load_all
 
     load_all()["q76_partition_pruning"].fn(spark, sf_dir)  # materializes layout
-    import os
-    import tempfile
+    from marketingcloud_etl_spark.io import query_state
 
-    from marketingcloud_etl_spark.io import fixture_tag
-    path = os.path.join(tempfile.gettempdir(), f"mcetl_part_events_{fixture_tag(sf_dir)}")
+    path, _ = query_state(
+        "q76_partition_pruning", sf_dir, lambda d: pytest.fail("q76 layout not built")
+    )
     df = (
         spark.read.parquet(path)
         .filter(F.col("event_type") == "purchase")
@@ -655,7 +655,7 @@ def test_freq_items_includes_all_true_heavy_hitters(spark, sf_dir, duck):
     assert truth <= got, truth - got
 
 
-def test_compaction_reduces_file_count(spark, sf_dir):
+def test_compaction_reduces_file_count(spark, sf_dir, tmp_path):
     """q120's layout contract: the compacted rewrite yields strictly
     fewer, size-bounded files than the 64-file fragmented input — and
     with a target small enough to demand MULTIPLE output files, the
@@ -663,7 +663,7 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     target can't reach at tiny fixture scale)."""
     import os
 
-    from marketingcloud_etl_spark.io import fixture_tag
+    from marketingcloud_etl_spark.io import query_state
     from marketingcloud_etl_spark.plans.catalog import load_all
     from marketingcloud_etl_spark.sinks.upsert import (
         COMPACTION_TARGET_BYTES,
@@ -671,7 +671,9 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     )
 
     load_all()["q120_compaction"].fn(spark, sf_dir).collect()
-    base = f"/tmp/mcetl_compact_{fixture_tag(sf_dir)}"
+    base, _ = query_state(
+        "q120_compaction", sf_dir, lambda d: pytest.fail("q120 layout not built")
+    )
     frag = [f for f in os.listdir(f"{base}/frag") if f.endswith(".parquet")]
     comp = [f for f in os.listdir(f"{base}/compact") if f.endswith(".parquet")]
     assert len(frag) == 64
@@ -685,11 +687,12 @@ def test_compaction_reduces_file_count(spark, sf_dir):
         os.path.getsize(f"{base}/frag/{f}") for f in frag
     )
     small = max(1, frag_bytes // 7)
-    n_out = compact_parquet(spark, f"{base}/frag", f"{base}/compact_multi", small)
-    multi = [f for f in os.listdir(f"{base}/compact_multi") if f.endswith(".parquet")]
+    multi_dir = str(tmp_path / "compact_multi")
+    n_out = compact_parquet(spark, f"{base}/frag", multi_dir, small)
+    multi = [f for f in os.listdir(multi_dir) if f.endswith(".parquet")]
     assert n_out >= 7 and len(multi) == n_out, (n_out, len(multi))
     total_rows = spark.read.parquet(f"{base}/frag").count()
-    assert spark.read.parquet(f"{base}/compact_multi").count() == total_rows
+    assert spark.read.parquet(multi_dir).count() == total_rows
 
 
 def test_scd1_merge_semantics(spark):

@@ -1,8 +1,9 @@
 """The per-query state registry (``io.query_state`` / ``io.scratch_dir``)
 and the source guards that keep it the only owner of per-query state
-in ``plans/`` and ``sinks/``, keep ``ranking.pin_cache`` the only
-place ``plans/`` and ``operators/`` persist a frame, and keep
-``io.table`` the only place that decides scan parallelism."""
+in ``plans/``, ``sinks/``, ``operators/`` and ``streaming/``, keep
+``ranking.pin_cache`` the only place ``plans/`` and ``operators/``
+persist a frame, and keep ``io.table`` the only place that decides
+scan parallelism."""
 
 from __future__ import annotations
 
@@ -250,16 +251,73 @@ def test_io_sets_no_session_conf():
     assert not found, "\n".join(found)
 
 
+def test_queries_write_only_through_io():
+    """Every file a query writes lives under io.query_state /
+    io.scratch_dir: no plans/, operators/ or streaming/ module builds a
+    path of its own in the temp dir, and none calls atomic_cached_write,
+    whose path-keyed dirs outlived the process and served a rewritten
+    fixture stale."""
+    found = []
+    for rel, tree in _modules("plans", "operators", "streaming"):
+        for node in ast.walk(tree):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name in ("gettempdir", "atomic_cached_write"):
+                found.append(f"{rel}:{node.lineno}: {name}")
+    assert not found, "\n".join(found)
+
+
 def test_no_hard_coded_tmp_paths():
     """Temp paths follow TMPDIR (tempfile.gettempdir()): a literal /tmp
-    escapes a per-run TMPDIR and outlives the run."""
+    escapes a per-run TMPDIR and outlives the run, in the package and
+    in its tests alike."""
+    tmp = os.path.join(os.sep, "tmp")
     found = []
-    for path in sorted(PKG.rglob("*.py")):
+    for path in sorted([*PKG.rglob("*.py"), *Path(__file__).parent.rglob("*.py")]):
         for node in ast.walk(ast.parse(path.read_text())):
             if (
                 isinstance(node, ast.Constant)
                 and isinstance(node.value, str)
-                and node.value.startswith("/tmp")
+                and node.value.startswith(tmp)
             ):
-                found.append(f"{path.relative_to(PKG)}:{node.lineno}: {node.value!r}")
+                found.append(f"{path.relative_to(PKG.parent)}:{node.lineno}: {node.value!r}")
     assert not found, "\n".join(found)
+
+
+def test_rewritten_fixture_is_not_served_stale(tmp_path, sf_dir):
+    """A query's state never outlives its process: a fixture rewritten
+    at the same path between two runs is read afresh by the second, and
+    neither run leaves anything in TMPDIR."""
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, f), sf / f)
+    code = (
+        "import sys\n"
+        "from marketingcloud_etl_spark.plans.catalog import load_all\n"
+        "from marketingcloud_etl_spark.session import get_spark\n"
+        "spark = get_spark(master='local[2]')\n"
+        "df = load_all()['q98_orc_roundtrip'].fn(spark, sys.argv[1])\n"
+        "print(df.agg({'n': 'sum'}).first()[0])\n"
+    )
+    env = dict(os.environ, PYTHONPATH=str(PKG.parent), TMPDIR=str(tmp_path))
+
+    def n_sum() -> int:
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(sf)],
+            env=env, capture_output=True, text=True, timeout=600, check=True,
+        )
+        return int(out.stdout.strip().splitlines()[-1])
+
+    orders = pq.read_table(sf / "orders.parquet")
+    assert n_sum() == orders.num_rows
+    half = orders.slice(0, orders.num_rows // 2)
+    pq.write_table(half, sf / "orders.parquet")
+    assert n_sum() == half.num_rows
+    assert os.listdir(tmp_path) == ["sf"]
