@@ -19,7 +19,7 @@ importable under its canonical name so the stateful-processor API works:
    tests/test_streaming.py proves end-to-end against the JVM.
 
 Worker processes need the same resolution at task time (the pb2 import
-inside ``StatefulProcessorApiClient`` is lazy), so :func:`worker_zip`
+inside ``StatefulProcessorApiClient`` is lazy), so :func:`shim_zip`
 packages the shim + the bundled runtime into one zip for
 ``SparkContext.addPyFile`` — pyfiles land on worker ``sys.path`` before
 any task runs.
@@ -34,8 +34,10 @@ import importlib
 import importlib.util
 import os
 import sys
-import tempfile
+import threading
 import zipfile
+
+from .io import scratch_dir
 
 _GCLOUD_TP = "/usr/lib/google-cloud-sdk/lib/third_party"
 
@@ -105,6 +107,11 @@ if not any(isinstance(f, _PbAlias) for f in sys.meta_path):
 '''.replace("_RT_SRC_PLACEHOLDER", repr(_RT_SRC))
 
 
+# this process's shim zip, once built (see shim_zip)
+_SHIM_ZIP: str | None = None
+_SHIM_LOCK = threading.Lock()
+
+
 def real_protobuf_available() -> bool:
     """True when an actual protobuf distribution resolves WITHOUT the
     shim (checked by spec lookup so nothing is imported as a side
@@ -113,7 +120,10 @@ def real_protobuf_available() -> bool:
         spec = importlib.util.find_spec("google.protobuf")
     except (ImportError, ValueError):
         return False
-    return spec is not None and "_pbcompat" not in (spec.origin or "")
+    if spec is None:
+        return False
+    # once activated, the shim zip on sys.path resolves the name too
+    return _SHIM_ZIP is None or not (spec.origin or "").startswith(_SHIM_ZIP + "/")
 
 
 def resolvable() -> bool:
@@ -145,24 +155,19 @@ def _build_zip(out_path: str) -> None:
 
 
 def shim_zip() -> str | None:
-    """Build (once, atomically) and return the shim zip path, or None
-    when the bundled runtime isn't on this machine."""
+    """Build (once per process) and return the shim zip path, or None
+    when the bundled runtime isn't on this machine. The zip lives in an
+    ``io.scratch_dir``, so each process ships the shim text it was
+    started with and the zip is removed when the process exits."""
+    global _SHIM_ZIP
     if not os.path.isdir(os.path.join(_GCLOUD_TP, "cloudsdk", "google", "protobuf")):
         return None
-    out = os.path.join(tempfile.gettempdir(), "mcetl_pbcompat.zip")
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp{os.getpid()}"
-        try:
-            _build_zip(tmp)
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                if not os.path.exists(out):
-                    raise
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-    return out
+    with _SHIM_LOCK:
+        if _SHIM_ZIP is None:
+            out = os.path.join(scratch_dir("pbcompat"), "pbcompat.zip")
+            _build_zip(out)
+            _SHIM_ZIP = out
+        return _SHIM_ZIP
 
 
 def activate() -> bool:

@@ -369,8 +369,9 @@ def grouped_quantile_cont(
     # combine) — in this operator's regime (continuous values: prices,
     # measures) distinct (group, value) pairs ≈ raw rows, so the bytes
     # are the same as a combined exchange; for heavily-repeating values
-    # feed :func:`grouped_quantile_from_counts` a pre-combined counts
-    # table instead.
+    # over a bounded domain feed
+    # :func:`grouped_quantile_from_bounded_counts` a pre-combined
+    # counts table instead.
     # The counts frame feeds THREE consumers (the prefix sum, the
     # per-group totals, and — through anchored — the rank-cover test);
     # without the pin each consumer re-runs the scan + exchange.
@@ -389,39 +390,6 @@ def grouped_quantile_cont(
     return res
 
 
-def grouped_quantile_from_counts(
-    counts: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    cnt_col: str,
-    p: float | Sequence[float],
-    out_col: str | Sequence[str] = "q",
-) -> DataFrame:
-    """:func:`grouped_quantile_cont` over a PRE-AGGREGATED counts
-    frame — the entry point for DISTRIBUTION STATE: a persisted
-    (group, value, count) table merged additively with a batch's
-    counts gives exact quantiles across all data ever seen without
-    rescanning history facts (q402's posture). Accepts duplicate
-    (group, value) rows (state ∪ batch before the merge agg) — they
-    are summed in one keyed aggregation first. NULL values carry no
-    rank, mirroring the raw-row entry point. Interpolation arithmetic
-    is the same bitwise-builtin tree, so results equal running
-    ``percentile`` over the expanded raw rows."""
-    ps = [p] if isinstance(p, (int, float)) else list(p)
-    ocols = [out_col] if isinstance(out_col, str) else list(out_col)
-    if len(ps) != len(ocols):
-        raise ValueError("p and out_col lists must pair up")
-    gcols = list(group_cols)
-    # (state ∪ batch) counts rows merge-aggregate within their range
-    # partitions, as in grouped_quantile_cont
-    c = pin_cache(
-        _range_clustered_counts(
-            counts, gcols, value_col, F.sum(cnt_col).cast("long")
-        )
-    )
-    return _quantile_over_counts(c, gcols, value_col, ps, ocols)
-
-
 def grouped_quantile_from_bounded_counts(
     counts: DataFrame,
     group_cols: Sequence[str],
@@ -430,18 +398,22 @@ def grouped_quantile_from_bounded_counts(
     p: float | Sequence[float],
     out_col: str | Sequence[str] = "q",
 ) -> DataFrame:
-    """:func:`grouped_quantile_from_counts` for counts tables whose
-    VALUE DOMAIN is bounded (integer quantities, enum codes, bucketed
-    measures): per-group distinct values fit one task by CONSTRUCTION
-    — the premise the counts-state posture (q402) already requires —
-    so the distributed prefix-sum machinery's range exchange, pinned
-    frames and broadcast self-joins are pure overhead. One keyed
-    additive merge + one collect_list per group; the sorted (value,
-    count) array is walked with HOF folds and interpolated with the
-    builtin-verbatim arithmetic, so results are bitwise identical to
-    the machinery path (pinned in tests). Reach for
-    :func:`grouped_quantile_from_counts` when distinct values are
-    data-sized rather than domain-sized."""
+    """Exact grouped quantiles over a PRE-AGGREGATED (group, value,
+    count) frame whose VALUE DOMAIN is bounded (integer quantities,
+    enum codes, bucketed measures) — the entry point for distribution
+    state: a persisted counts table merged additively with a batch's
+    counts gives exact quantiles across all data ever seen without
+    rescanning history facts (q402's posture). Duplicate (group,
+    value) rows (state ∪ batch before the merge) are summed in one
+    keyed aggregation; NULL values carry no rank. Per-group distinct
+    values fit one task by CONSTRUCTION, so :func:`grouped_quantile_cont`'s
+    range exchange, pinned frames and broadcast self-joins are not
+    needed: one collect_list per group, the sorted (value, count) array
+    walked with HOF folds and interpolated with the builtin-verbatim
+    arithmetic, so results are bitwise the builtin ``percentile`` over
+    the expanded raw rows (pinned in tests). When distinct values are
+    data-sized rather than domain-sized, run
+    :func:`grouped_quantile_cont` over the raw rows instead."""
     ps = [p] if isinstance(p, (int, float)) else list(p)
     ocols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(ps) != len(ocols):

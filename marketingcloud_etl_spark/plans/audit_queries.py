@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..io import query_state, table
-from ..session import prep
 from .catalog import query
 
 # ---------------------------------------------------------------- canonical
@@ -59,7 +58,7 @@ def _canon_spark(col: str, typ: str) -> Column:
     if typ == "ts":
         # TPC-H fixture timestamps are TIMESTAMP_NTZ; the cast to
         # TIMESTAMP is wall-clock-identity under the UTC session TZ
-        # prep() pins, matching DuckDB's epoch_us over naive timestamps
+        # the catalog pins, matching DuckDB's epoch_us over naive timestamps
         return F.unix_micros(c.cast("timestamp"))
     return c
 
@@ -195,7 +194,6 @@ def q408_table_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
     whole-stage-codegen (md5/conv are JVM builtins, no Python). At
     100 TB this is the cheapest possible full-content audit: cost =
     one pass, parallel across every file."""
-    prep(spark)
     outs = []
     for tbl, cols in _CHECKSUM_TABLES.items():
         t = table(spark, sf_dir, tbl).select(*[c for c, _ in cols])
@@ -260,7 +258,6 @@ def q416_split_release_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen; the groupBy carries three partial aggregates
     over a 3-value key — map-side combine reduces it to one tiny
     exchange."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     bucket = F.expr(_SPLIT_SPARK)
     return (
@@ -317,7 +314,6 @@ def q409_column_profile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct via one Expand, still a single scan), then the wide row
     unpivots driver-side into one row per column. No per-column
     rescans: profiling 100 TB costs one read."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     aggs = []
     for name, typ in _PROFILE_COLS:
@@ -392,7 +388,6 @@ def q410_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     both existence checks join key-domain-sized frames — the parent
     side is dimension-sized and broadcastable. No fact-table row ever
     crosses a shuffle twice."""
-    prep(spark)
     outs = []
     for rel, ct, ck, pt, pk in _FK_RELS:
         child = table(spark, sf_dir, ct).select(F.col(ck).alias("k"))
@@ -467,7 +462,6 @@ def q411_freshness_lag_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy over the stream table (map-side combinable
     max/count), a one-row global broadcast, and a narrow projection —
     the same shape at any table size."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -526,7 +520,6 @@ def q412_join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly), a 1-row total, and windows over the post-limit 10-row
     frame only — the report never materializes the full key histogram
     to the driver."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     c = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     t = c.agg(
@@ -625,7 +618,6 @@ def q420_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the facts — no fact row is duplicated, so the salted plan moves
     exactly the same fact bytes as the unsalted one, just spread
     evenly."""
-    prep(spark)
     S = _SALT_BUCKETS
     e = table(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 100 < 50, F.lit(-1))
@@ -706,7 +698,6 @@ def q413_uniqueness_contract_audit(spark: SparkSession, sf_dir: str) -> DataFram
     by a key-domain-sized re-aggregation to the four audit numbers —
     the fact table crosses the shuffle once per contract and nothing
     key-domain-sized reaches the driver."""
-    prep(spark)
     outs = []
     for label, tbl, keys in _UNIQUE_CONTRACTS:
         t = table(spark, sf_dir, tbl).select(*keys)
@@ -781,7 +772,6 @@ def q417_incremental_checksum_state(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: batch-slice scan (date filter pushed) + one keyed agg over
     the 5-value source domain + a domain-sized merge join. The state
     is one constant-width row per source."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
 
     def triple(df: DataFrame) -> DataFrame:
@@ -832,7 +822,6 @@ def q418_partition_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable agg (~days-in-table rows out); at 100 TB the partition
     column matches the physical layout so each task checksums its own
     partition's files — zero data movement beyond day-triple rows."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     return (
         e.withColumn(
@@ -909,7 +898,6 @@ def q419_schema_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (same Expand-multi-distinct single-pass shape as q409),
     then a 6-row join — cost is two column-pruned passes regardless of
     table size."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
 
     def profile(df: DataFrame, p: str) -> DataFrame:
@@ -1059,7 +1047,6 @@ def q431_anti_entropy_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2/64ths of the table moves. The diverged-bucket registry is
     broadcast-sized by construction (it IS the point of bucketing).
     Overflow/decimal escalation as per the checksum half-sum ledger."""
-    prep(spark)
     from ..operators.ranking import pin_cache
 
     li = table(spark, sf_dir, "lineitem")
@@ -1185,7 +1172,6 @@ def q432_zonemap_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store already exposes per-file stats) and is itself
     partition-count-sized. Min/max over a skewed measure is exactly
     as combinable as count: zone maps never shuffle data rows."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     parts = o.groupBy(F.date_trunc("month", "o_orderdate").alias("mon")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1270,7 +1256,6 @@ def q433_heavy_tail_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     group. The estimator needs only the TOP of the distribution, so
     at extreme key cardinality the window input can pre-filter to
     counts above a coarse threshold without changing the answer."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     per = (
         ev.groupBy("event_type", "user_id")

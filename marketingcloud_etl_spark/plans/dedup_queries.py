@@ -18,7 +18,6 @@ from ..operators.dedup import (
     simhash_band_candidates,
 )
 from ..operators.ranking import pin_cache
-from ..session import prep
 from .catalog import query
 
 _TOKS_A = tokens_sql("a.text")
@@ -50,7 +49,6 @@ _GRAMS = (
 def q47_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-gram Jaccard similarity on consecutive doc pairs — the exact
     verify stage that LSH candidate pairs feed at scale."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     a = d.filter(F.col("doc_id") < 200).select(
         F.col("doc_id").alias("id_a"), ngram_set("text", 2).alias("ga")
@@ -76,7 +74,6 @@ def q50_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32 perms)+LSH(8 bands) near-dup candidates over
     documents. Shuffle is O(docs×bands) — never the cross product.
     Deterministic signature params (seed=42)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(d, num_perm=32, bands=8)
     return cand.agg(
@@ -92,7 +89,6 @@ def q51_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash fingerprints + banded hamming candidate counts;
     also surfaces the fingerprints of the first 10 docs so the value is
     pinned run-over-run."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     n_cand = simhash_band_candidates(d).count()
     return (
@@ -107,7 +103,6 @@ def q60_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ approximate distinct (cardinality dashboards at 100 TB —
     no exact-distinct shuffle). Estimates are engine-specific, so this
     is rows-only; the sanity bound vs exact lives in tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
@@ -139,7 +134,6 @@ def q85_hash_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs, engines, and partitionings; membership derivable from
     the key alone, so a re-run or a different engine selects the SAME
     rows). 10% sample bucket, 90/10 train/test split."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     bucket = F.pmod(F.expr(_H32), F.lit(100))
     h = d.select("lang", bucket.alias("bucket"))
@@ -168,7 +162,6 @@ def q86_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling: exactly k=20 docs per language, selected by
     hash order (deterministic, unbiased within stratum) — the balanced
     evaluation-set builder. One shuffle on the stratum key."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")
@@ -188,7 +181,6 @@ def q91_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts by band-agreement strength. The verify stage touches
     candidates, never the corpus cross product — this composition is
     what runs at 100 TB."""
-    prep(spark)
     from ..operators.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
 
     d = table(spark, sf_dir, "documents")
@@ -252,7 +244,6 @@ def q95_dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster even when they never directly collide. The oracle computes
     the same closure with a recursive CTE — a full value check of an
     iterative distributed algorithm."""
-    prep(spark)
     comp = _dup_components(spark, sf_dir)
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -321,7 +312,6 @@ def q109_dup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of dup clusters (<< corpus size). No driver-side state;
     the iterative part (CC) is O(log diameter) join rounds with
     lineage cuts (operators/components.py)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     comp = _dup_components(spark, sf_dir)
@@ -381,7 +371,6 @@ def q110_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: CC is O(log diameter) bounded join rounds; the split
     itself is one hash expression on the group id + one aggregation —
     no extra shuffle beyond the group-id join."""
-    prep(spark)
     comp = _dup_components(spark, sf_dir)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     universe = d.join(comp, comp["id"] == d["doc_id"], "left").select(
@@ -438,7 +427,6 @@ def q111_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sorted sqrt terms instead of a raw SUM(double): with sqrt
     bitwise-identical across engines, the identical addition order
     makes w_sum bitwise-exact and aggregation-order-independent."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -470,7 +458,6 @@ def q112_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch per group, not the data. Rows-only by contract (sketch
     internals are engine-specific); the rank-error bound vs the exact
     quantile is pinned in tests/test_operators.py."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     qs = F.percentile_approx(
         "l_extendedprice", F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)), 10000
@@ -511,7 +498,6 @@ def q135_hll_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwhelming margin and a broken merge/estimator flips the flag).
     The exact counts are value-checked by the oracle; the booleans
     carry the sketch evidence a rows-only check can't."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_parts"),
@@ -553,7 +539,6 @@ def q136_quantile_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank_le(q̂) ≥ (p−ε)·n − 1  — rank-based, so it's exact arithmetic,
     no float tolerance. Group sizes are value-checked by the oracle;
     the booleans carry the sketch evidence."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     qs = F.percentile_approx(
         "l_extendedprice", F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)), 10000
@@ -632,7 +617,6 @@ def q115_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings), two equi-joins on block keys, verify on candidates.
     Block sizes are bounded by name-vocabulary fan-out, not corpus
     rows; a skewed block would get the q72 salting treatment."""
-    prep(spark)
     from ..operators.ranking import global_row_number
 
     p = table(spark, sf_dir, "part")
@@ -683,7 +667,6 @@ def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rows-only by contract (float iteration); the operator itself is
     pinned against a numpy reference in tests/test_operators.py."""
-    prep(spark)
     from ..operators.pagerank import pagerank
 
     d = table(spark, sf_dir, "documents")
@@ -759,7 +742,6 @@ def q342_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative, so Python/Spark floor `div` and DuckDB's truncating
     `//` agree. Same scale shape as q128: one join + one aggregation
     per iteration, lineage cut per round, no driver-side data."""
-    prep(spark)
     from ..operators.pagerank import pagerank_fixed_point
 
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
@@ -860,7 +842,6 @@ def q414_warm_start_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cf. reference R16 (salesforce_extractor.py:373-395): the same
     resume-from-watermark posture, applied to an iterative fixpoint."""
-    prep(spark)
     from ..operators.pagerank import pagerank_fixed_point
 
     li = table(spark, sf_dir, "lineitem")
@@ -922,7 +903,6 @@ def q129_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the pruned plan loses nothing. Complements
     MinHash-LSH (q50: probabilistic recall, unbounded corpora) with
     the exact-recall variant for threshold-similarity joins."""
-    prep(spark)
     from ..operators.dedup import ngram_set
     from ..operators.setsim import setsim_join
 
@@ -960,7 +940,6 @@ def q159_hll_union_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     every rollup level is a sketch-merge of driver-small state. Bound
     booleans: lgConfigK=14 → rse ≈ 1.04/√2¹⁴ ≈ 0.8%; 5σ ≈ 4% tolerance
     against the exact counts (which the oracle value-checks)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     per = o.groupBy("o_orderstatus").agg(
         F.expr("hll_sketch_agg(o_custkey, 14)").alias("sk"),
@@ -1017,7 +996,6 @@ def q162_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization) — the standard size-biased corpus subsampling
     primitive at any scale. ln() and the division are single IEEE ops
     on identical operands, so DuckDB agrees exactly."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     u = (F.expr(_H32) + 1) / F.lit(4294967296.0)
     key = F.log(u) / F.col("n_chars")
@@ -1073,7 +1051,6 @@ def q190_training_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection window partitions BY SOURCE (parallel across sources,
     never a global sort); skewed mega-sources range-balance within
     their partition only."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     from ..functions.text import tokens
@@ -1147,7 +1124,6 @@ def q222_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked exactly; q110's cluster-aware split is the
     leakage-safe variant when near-duplicates exist — this is the
     plain i.i.d. protocol."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     folds = d.select(
         "doc_id", F.pmod(F.expr(_H32), F.lit(5)).cast("int").alias("fold")
@@ -1222,7 +1198,6 @@ def q234_minhash_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch evidence a rows-only check can't. Everything is one
     self-join-free pass for the planted pairs plus one equi-join for
     the unrelated ones — no all-pairs anywhere."""
-    prep(spark)
     from ..functions.text import tokens
     from ..operators.dedup import minhash_signature, word_shingles
 
@@ -1303,7 +1278,6 @@ def q242_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken merge or estimator still lands far outside it. Exact
     counts are value-checked by the oracle; the boolean carries the
     sketch evidence (q135 protocol)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     sk = ev.filter(F.col("event_type").isin("signup", "purchase")).select(
         "event_type", "user_id"
@@ -1370,7 +1344,6 @@ def q245_grouped_hash_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     adding rows only perturbs the selection locally — the property
     seeded ``sample()`` can't give under repartitioning. Per-group
     partitioned window: many small parallel sorts."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")
@@ -1414,7 +1387,6 @@ def q272_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate mean is a single IEEE division. The reader takes the
     spread of the 32 rows as the CI — classic Poisson-bootstrap shape
     (Chamandy et al., Google) with a bounded multiplier."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents")
@@ -1479,7 +1451,6 @@ def q285_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈ 4/|items|) stays auditable — the standard in-batch-negatives
     trade-off. The item-universe bound is one broadcast scalar; the
     explode is ×4, all narrow."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     mp = table(spark, sf_dir, "part").agg(F.max("p_partkey").alias("mp"))
     pos = li.filter(
@@ -1572,7 +1543,6 @@ def q288_containment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     as per-row booleans. Same shingle algebra as q234 — candidate
     generation at scale is the banded MinHash path; this is the
     verify-stage metric."""
-    prep(spark)
     from ..functions.text import tokens
     from ..operators.dedup import word_shingles
 
@@ -1659,7 +1629,6 @@ def q306_time_series_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold × day cross join and the per-fold aggregation never touch the
     raw events again; the temporally_ordered flag re-verifies from the
     actual day extrema that no training day reaches the test window."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     day_counts = (
         e.select(F.col("ts").cast("date").alias("day"))
@@ -1744,7 +1713,6 @@ def q312_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(double). Allocations round half-up via explicit floor(x+0.5).
     One partial-agg pass over the facts; everything after is
     stratum-sized."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     cents = F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100).cast("bigint")
     s = e.groupBy("event_type").agg(
@@ -1828,7 +1796,6 @@ def q329_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors, non-ANSI Spark clamps), so both sides fall back to the
     exact count via an explicit CASE — the standard linear-counting →
     exact/HLL handoff, made deterministic."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     m = 4096
     bucket = F.expr(
@@ -1926,7 +1893,6 @@ def q347_hits_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     count fixed ⇒ plan depth fixed; lineage does not grow with data.
     Reference has no graph surface; this extends SURVEY §2's iterative
     family (components / PageRank / triangles)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
     e = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
@@ -2020,7 +1986,6 @@ def q348_training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-keyed aggregation into 16 groups; the ideal-size normalizer is
     a one-row broadcast. At 100 TB the same plan writes the shards with
     partitionBy('shard') — the manifest aggregation is this query."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     h32 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
@@ -2115,7 +2080,6 @@ def q359_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors — at a 1% dup rate that is a 100x smaller exchange than
     dedup-by-join. Size n_bits to the corpus (see bloom_words's
     sharding note past ~10^8 keys)."""
-    prep(spark)
     from ..operators.dedup import bloom_might_contain, bloom_words
 
     d = table(spark, sf_dir, "documents")
@@ -2201,7 +2165,6 @@ def q360_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation is the semantic spec; the engine path keeps the
     grouped-aggregation form that scales past hot nodes). The oracle
     unrolls both rounds as CTEs like q342."""
-    prep(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
@@ -2284,7 +2247,6 @@ def q363_weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFra
     multiplicity math is per-row codegen. At 100 TB this samples a
     corpus in a single pass — the shape reservoir/rejection samplers
     only reach with multi-round retries."""
-    prep(spark)
     from ..operators.ranking import global_prefix_sum
 
     # zero-weight docs are excluded BEFORE the prefix sum: a wt=0 row
@@ -2356,7 +2318,6 @@ def q369_sketchguided_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFra
     10⁹-type vocabulary and a few thousand survivors. Same
     no-false-negative tiering as the q359 Bloom dedup and q229
     GK-threshold top-k."""
-    prep(spark)
     from ..functions.text import tokens
 
     toks = (
@@ -2455,7 +2416,6 @@ def q371_soundex_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the verify join is ever launched — the same
     choose-your-blocking-key-from-evidence loop as q226's skew
     report."""
-    prep(spark)
     keyed = table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_name").alias("w"),
@@ -2525,7 +2485,6 @@ def q375_er_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivorship is one grouped argmax. 100 TB of records with a
     bounded entity dictionary flows through the same plan unchanged;
     an unbounded dictionary swaps blocking keys, nothing else."""
-    prep(spark)
     from ..operators.components import connected_components
 
     names = (
@@ -2631,7 +2590,6 @@ def q376_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary back onto the point stream. No pairwise distances
     anywhere — the reason this shape survives 100 TB while textbook
     DBSCAN's ε-neighbor graph does not."""
-    prep(spark)
     from ..operators.components import connected_components
 
     e = table(spark, sf_dir, "embeddings")
@@ -2770,7 +2728,6 @@ def q388_incremental_minhash_state(spark: SparkSession, sf_dir: str) -> DataFram
     touched exactly once in its lifetime. The same posture as the
     reference's count-watermark increment (R16), for near-dup instead
     of page-count."""
-    prep(spark)
     from ..operators.dedup import build_minhash_index, probe_minhash_index
 
     d = table(spark, sf_dir, "documents")
@@ -2873,7 +2830,6 @@ def q389_incremental_semantic_state(spark: SparkSession, sf_dir: str) -> DataFra
     import json
     import os
 
-    prep(spark)
     from ..operators.semantic_dedup import build_semantic_index, probe_semantic_index
     from ..operators.similarity import train_ivf_codebook
 
@@ -2947,7 +2903,6 @@ def q391_incremental_components_state(spark: SparkSession, sf_dir: str) -> DataF
     table (broadcast relabel map, no iteration over the corpus). The
     q95 battery's own test strategy (reference-free recursive-CTE
     closure check, SURVEY §5) carries over unchanged."""
-    prep(spark)
     from ..operators.components import connected_components, incremental_components
 
     d = table(spark, sf_dir, "documents")
@@ -3047,7 +3002,6 @@ def q393_state_compaction_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     index maintenance)."""
     import os
 
-    prep(spark)
     from ..operators.dedup import (
         build_minhash_index,
         compact_minhash_index,
@@ -3148,7 +3102,6 @@ def q394_incremental_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LP analogue of q391's contracted-CC merge; the corpus is
     touched exactly once by the keyed anti-join/union that stitches
     the output."""
-    prep(spark)
     from ..operators.components import incremental_label_prop, label_propagation
 
     li = table(spark, sf_dir, "lineitem")
@@ -3283,7 +3236,6 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     yearly-rescan curation job into a daily append."""
     import os
 
-    prep(spark)
     from ..operators.components import connected_components, incremental_components
     from ..operators.dedup import build_minhash_index, probe_minhash_index
     from ..operators.ranking import global_prefix_sum
@@ -3442,7 +3394,6 @@ def q397_semantic_index_compaction(spark: SparkSession, sf_dir: str) -> DataFram
     import json
     import os
 
-    prep(spark)
     from ..operators.semantic_dedup import (
         build_semantic_index,
         compact_semantic_index,
@@ -3562,7 +3513,6 @@ def q398_generation_manifest_swap(spark: SparkSession, sf_dir: str) -> DataFrame
     generation — state-table time travel for the cost of a file."""
     import os
 
-    prep(spark)
     from ..operators.dedup import (
         build_minhash_index,
         compact_minhash_index,
@@ -3663,7 +3613,6 @@ def q415_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ordered pointer list."""
     import os
 
-    prep(spark)
     from ..operators.dedup import (
         build_minhash_index,
         compact_minhash_index,
@@ -3767,7 +3716,6 @@ def q421_manifest_generation_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``meta``."""
     import os
 
-    prep(spark)
     from ..operators.dedup import build_minhash_index, compact_minhash_index
     from ..sinks.manifest import gc_generations, publish_generation
 
@@ -3887,7 +3835,6 @@ def q399_erasure_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest publish (q398) keeps concurrent probes consistent."""
     import os
 
-    prep(spark)
     from ..operators.dedup import build_minhash_index, probe_minhash_rows
     from ..operators.state import erase_from_state
 
@@ -3985,7 +3932,6 @@ def q405_incremental_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     raw text; the state posture makes even that unnecessary. The
     merged frame feeds two consumers (the total and the threshold
     filter) and is pinned for the duration of the query."""
-    prep(spark)
     from ..functions.text import tokens
 
     d = table(spark, sf_dir, "documents")
@@ -4061,7 +4007,6 @@ def q407_incremental_sample_state(spark: SparkSession, sf_dir: str) -> DataFrame
     history scan, state is k rows in perpetuity. The weighted
     systematic sampler (q363) is the Σmult=k EXACT-quota alternative;
     A-ES is the without-replacement streaming-mergeable one."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
 
     def keyed(df: DataFrame) -> DataFrame:
@@ -4160,7 +4105,6 @@ def q422_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition instead of the key set. The bounded merge agg
     (k × |groups| rows) is the only single-partition stage — the
     same class as every one-row aggregation final in PLAN_AUDIT.md."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -4341,7 +4285,6 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the (broadcast-sized) over-cap registry — state rows
     shuffle zero times; repeated splits (2 bits, 3 bits …) extend the
     same registry exactly like extendible hashing's directory."""
-    prep(spark)
     from ..operators.dedup import word_shingles
 
     d = table(spark, sf_dir, "documents")
@@ -4493,7 +4436,6 @@ def q434_lsh_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a production index, the same verdict columns come from
     the q426 probe path, and the ground-truth leg runs on a SAMPLE of
     pairs because exact Jaccard is the expensive side, not the LSH."""
-    prep(spark)
     from ..functions.text import tokens
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
@@ -4639,7 +4581,6 @@ def q436_sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at production scale it runs on a hash-sampled key slice with the
     exact leg confined to that slice (the expensive side is exactness,
     never the sketches)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")

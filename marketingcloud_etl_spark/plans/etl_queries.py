@@ -21,7 +21,6 @@ from pyspark.sql.window import Window as W
 from ..functions.hashing import content_hash, content_hash_sql
 from ..functions.money import dec
 from ..io import query_state, scratch_dir, table
-from ..session import prep
 from .catalog import query
 from .relational import orders_by_year_dir
 
@@ -53,7 +52,6 @@ def q00_flagship_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same batch twice, content-hash each record (R10), drop duplicates
     (R12 insert-ignore), aggregate (R11). Idempotence invariant: counts
     equal a single ingest."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(*_EVENT_HASH_COLS)
     src = e.unionByName(e)
     hashed = src.withColumn("hash", content_hash(_EVENT_HASH_COLS))
@@ -80,7 +78,6 @@ def q35_flatten_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R5 flatten: build the reference's nested {keys,values} document
     (JSON round-trip), then flatten with nested-field projection and R6
     missing-key "" defaults (salesforce_extractor.py:153-181)."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     nested = e.select(
         "event_id",
@@ -118,7 +115,6 @@ def q35_flatten_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q36_clean_strip_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R7+R8: strip everything after '?' (Spark split is regex — '?'
     must be escaped) and cap at 256 chars (salesforce_extractor.py:171)."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     # coalesce each arg: Spark concat is NULL on any NULL argument,
     # DuckDB concat skips NULLs — empty-string both sides
@@ -155,7 +151,6 @@ _DOC_HASH_SQL = content_hash_sql(_DOC_HASH_COLS)
 def q37_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by full-record content hash (R10+R12) on documents —
     double-ingest collapses back to one copy per document."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").select(*_DOC_HASH_COLS)
     src = d.unionByName(d)
     hashed = src.withColumn("hash", content_hash(_DOC_HASH_COLS)).dropDuplicates(["hash"])
@@ -179,7 +174,6 @@ def q37_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q38_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup keep-first-by-order: earliest event per (user, type) —
     the deterministic form of dropDuplicates."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events")
@@ -210,7 +204,6 @@ def q39_incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R16 incremental mode as a high-watermark filter: everything newer
     than max(ts) of the already-ingested half. The watermark is computed
     distributed (broadcast scalar), never collected to the driver."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     half = e.agg(F.floor(F.max("event_id") / 2.0).cast("long").alias("half"))
     wm = (
@@ -245,7 +238,6 @@ def q40_upsert_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R12 upsert as insert-only merge: rows of the source batch whose
     key is absent from the target (here: target = even event_ids) —
     the anti-join half of sinks/upsert.py."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     target = e.filter(F.col("event_id") % 2 == 0).select("event_id")
     return (
@@ -272,7 +264,6 @@ def q67_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes the same aggregate straight from parquet, so
     any round-trip corruption (type drift, quoting, double formatting)
     breaks the hash match."""
-    prep(spark)
     base = scratch_dir("q67")
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     e.write.option("header", True).csv(f"{base}/csv")
@@ -301,7 +292,6 @@ def q83_rest_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-page duplicate), every reference edge case exercised —
     missing keys, query-string strip, 256-char cap, bad dates.
     Rows-only: the HTTP source has no DuckDB twin."""
-    prep(spark)
     from ..etl.lead_activity import flatten_lead_activity, read_lead_activity
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
 
@@ -340,7 +330,6 @@ def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel inside one micro-batch. Deterministic output; rows-only
     (HTTP source has no DuckDB twin); restart-idempotence pinned in
     tests/test_etl_rest.py."""
-    prep(spark)
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
     from ..sources.rest import register_rest_source, slot_options
 
@@ -395,7 +384,6 @@ def q87_scd2_versioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     change becomes a versioned row with [valid_from, valid_to) validity
     and an is_current flag — the warehouse pattern for dimension
     history, one window pass, no self-join."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events").filter(
@@ -424,7 +412,6 @@ def q93_jdbc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The sandbox has no JDBC driver jar, so the staging write and the
     statements run through sqlite3 DBAPI stand-ins — the statement
     pipeline is identical; see sinks/jdbc_merge.py.)"""
-    prep(spark)
     import sqlite3
 
     from ..functions.hashing import content_hash
@@ -484,7 +471,6 @@ def q339_jdbc_merge_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded driver cursor (500 keyed rows by construction — the
     merge battery's declared fixture size; production read-back is the
     JDBC source). Same q168 pattern as the custom-writer sink."""
-    prep(spark)
     import sqlite3
 
     from ..functions.hashing import content_hash
@@ -575,7 +561,6 @@ def q340_rest_flatten_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hashed values. The hash column itself stays internal (engine-
     specific digest); dedup-by-hash equals dedup-by-content because
     the hash is a pure function of the raw fields."""
-    prep(spark)
     from ..etl.lead_activity import flatten_lead_activity, read_lead_activity
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
 
@@ -629,7 +614,6 @@ def q341_rest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once, not content dedup — that's the batch path's
     anti-join, q340), raw uncleaned event_name proving the stream
     carries source fidelity."""
-    prep(spark)
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
     from ..sources.rest import register_rest_source, slot_options
 
@@ -684,7 +668,6 @@ def q98_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet, so any round-trip drift (type mapping, date/decimal
     encoding) breaks the hash match. ORC is Spark-native columnar with
     predicate pushdown, the common interchange with Hive warehouses."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -724,7 +707,6 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset relies on). The oracle builds the same union explicitly,
     so a wrong merge (dropped column, misaligned rows) breaks the
     hash."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     old = e.filter(F.col("event_id") < 5000).select("event_id", "event_type")
     new = e.filter(F.col("event_id") >= 5000).select("event_id", "event_type", "value")
@@ -775,7 +757,6 @@ def q113_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no global ordering), bounded file sizes for object-store-friendly
     parallel reads. At 100 TB this is exactly `repartition(4096,
     shard)` + the same write."""
-    prep(spark)
     shard = F.pmod(
         F.expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"),
         F.lit(8),
@@ -827,7 +808,6 @@ def q114_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number. The only corpus-sized shuffle is the per-source window
     — same key as q107's packing, embarrassingly parallel across
     sources."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -876,7 +856,6 @@ def q140_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory listing parallelizes across executors and ``content``
     stays columnar binary; everything downstream is q54/q73's
     payload-column machinery."""
-    prep(spark)
 
     def write_files(d: str) -> None:
         # sandbox-fixture shim: materialize 40 small files (a real
@@ -928,7 +907,6 @@ def q120_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     any row lost or duplicated by the rewrite breaks the hash; the
     file-count contract (fewer, bounded files) is pinned in
     tests/test_operators.py."""
-    prep(spark)
     from ..sinks.upsert import compact_parquet
 
     def build(d: str) -> None:
@@ -985,7 +963,6 @@ def q122_snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff exchange-free (the q70 layout). The simulated old/new
     snapshots derive from deterministic key arithmetic so the oracle
     reproduces them exactly."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     old = o.filter(F.col("o_orderkey") % 10 != 3)
     new = o.filter(F.col("o_orderkey") % 10 != 7).select(
@@ -1036,7 +1013,6 @@ def q124_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATCHED THEN UPDATE counterpart to q40's insert-ignore and q87's
     versioned SCD2. One key-partitioned anti-join + union; the oracle
     rebuilds the merged table arithmetically and aggregates it."""
-    prep(spark)
     from ..sinks.upsert import scd1_merge
 
     cust = table(spark, sf_dir, "customer").select(
@@ -1091,7 +1067,6 @@ def q125_quarantine_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces the same dirty input. One pass, pure
     conditional expressions, partial-aggregated counts — the routing
     adds zero shuffles beyond the final rollup."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "props")
     raw = e.select(
         "event_id",
@@ -1134,7 +1109,6 @@ def q156_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read schema is the production posture — inference is a full extra
     pass at scale. XML is the interchange the reference's SFMC world
     (SOAP-era Salesforce APIs) still speaks."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -1233,7 +1207,6 @@ def q167_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (distributed sort by interleaved key, then per-file stats)."""
     from ..operators.ranking import distributed_ntile, pin_cache
 
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
@@ -1300,7 +1273,6 @@ def q168_pydatasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     read loop, and the ``manifest_matches`` boolean pins the manifest's
     committed row count against the re-read. Completes the DataSource
     surface: batch reader (q83) + stream reader (q148) + this writer."""
-    prep(spark)
     from ..sinks.pydatasource import JsonLinesSinkDataSource, read_manifest
 
     try:
@@ -1348,7 +1320,6 @@ def q343_pydatasource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     reference's closest analogue is its per-2500-row INSERT loop
     (salesforce_extractor.py:197-230) — here each epoch is one
     distributed transactional append."""
-    prep(spark)
     from ..sinks.pydatasource import JsonLinesSinkDataSource, read_stream_manifests
     from ..streaming.jobs import events_stream
 
@@ -1407,7 +1378,6 @@ def q179_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt + valid = total, and the valid-side cents match the
     oracle's reconstruction of the same planted rule. The quarantine
     router (q125) is the downstream consumer of exactly this column."""
-    prep(spark)
     src = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
@@ -1466,7 +1436,6 @@ def q180_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the logical group-by — which is what the oracle checks. At 100 TB
     this is the debugging primitive for bad-file isolation (find the
     one corrupt file among 10⁵ by provenance, reprocess only it)."""
-    prep(spark)
     fact = spark.read.parquet(orders_by_year_dir(spark, sf_dir))
     return (
         fact.select("order_year", F.col("_metadata.file_path").alias("fp"))
@@ -1510,7 +1479,6 @@ def q186_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge is lossless. At 100 TB this is the difference between
     scanning one day and scanning three years; every aggregate in the
     merged schema must stay algebraic (no raw AVG — keep (sum, n))."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-15").cast("timestamp")
 
@@ -1555,7 +1523,6 @@ def q195_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked boolean beside exact row conservation. At 100 TB this
     layout decision (which column to range-sort on) is the single
     biggest scan-cost lever after partitioning."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     # range-partition on the sort column ALONE: the range partitioner
     # sends equal keys to one partition, so no date can straddle two
@@ -1623,7 +1590,6 @@ def q197_text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed extraction (null key). The 100 TB shape: text scan is
     splittable by line, the regexes run inside codegen, and the
     aggregate is the only shuffle."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
 
     def write_logs(d: str) -> None:
@@ -1657,6 +1623,18 @@ def q197_text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _overwrite_days(df: DataFrame, base: str) -> None:
+    """Write ``df`` day-partitioned under ``base``, replacing only the
+    day partitions ``df`` holds (the writer's dynamic overwrite mode;
+    the session's partitionOverwriteMode is left as it is)."""
+    (
+        df.write.partitionBy("day")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(base)
+    )
+
+
 @query(
     "q198_dynamic_partition_overwrite",
     oracle="""
@@ -1678,25 +1656,16 @@ def q198_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     the read-back per-day aggregate must show exactly one day changed
     and every other day byte-identical — which is what the oracle
     encodes. At 100 TB this is how daily reprocessing avoids rewriting
-    three years of history. Conf is scoped and restored; the overwrite
-    itself is atomic per partition directory."""
-    prep(spark)
+    three years of history. The mode is a writer option, so the session
+    conf is untouched; the overwrite itself is atomic per partition
+    directory."""
     base = scratch_dir("q198")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        ev.write.partitionBy("day").mode("overwrite").parquet(base)
-        patch = ev.filter(F.col("day") == "2024-01-10").withColumn(
-            "value", F.col("value") * 2
-        )
-        patch.write.partitionBy("day").mode("overwrite").parquet(base)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    _overwrite_days(ev, base)
+    patch = ev.filter(F.col("day") == "2024-01-10").withColumn(
+        "value", F.col("value") * 2
+    )
+    _overwrite_days(patch, base)
     back = spark.read.parquet(base)
     return (
         back.groupBy("day")
@@ -1733,27 +1702,17 @@ def q203_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     day directories and the whole table. The patch is built from the
     SOURCE frame — never read-modify-write of the path being
     overwritten — and the hit-day set moves as a broadcast join."""
-    prep(spark)
     TARGET = 7
     base = scratch_dir("q203")
     ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        ev.write.partitionBy("day").mode("overwrite").parquet(base)
-        hit_days = ev.filter(F.col("user_id") == TARGET).select("day").distinct()
-        n_hit = hit_days.count()
-        n_days_total = ev.select("day").distinct().count()
-        rewrite = ev.join(F.broadcast(hit_days), "day").filter(
-            F.col("user_id") != TARGET
-        )
-        rewrite.write.partitionBy("day").mode("overwrite").parquet(base)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    _overwrite_days(ev, base)
+    hit_days = ev.filter(F.col("user_id") == TARGET).select("day").distinct()
+    n_hit = hit_days.count()
+    n_days_total = ev.select("day").distinct().count()
+    rewrite = ev.join(F.broadcast(hit_days), "day").filter(
+        F.col("user_id") != TARGET
+    )
+    _overwrite_days(rewrite, base)
     after = spark.read.parquet(base)
     return after.agg(
         F.count(F.lit(1)).alias("n_rows_after"),
@@ -1792,7 +1751,6 @@ def q212_scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     most one version per entity matches by construction; the validity
     predicate is sargable, so a valid_from-sorted layout (q195) skips
     every file newer than the as-of instant."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     AS_OF = F.lit("2024-01-15 00:00:00").cast("timestamp")
@@ -1860,7 +1818,6 @@ def q214_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing scans a table more than the contract requires; at 100 TB
     the suite rides the scans the load job already pays for (q144's
     observe() is the zero-extra-pass variant for inline metrics)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
 
@@ -1932,7 +1889,6 @@ def q215_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's handful of versions, so there is no range-join blowup; at
     100 TB both sides shuffle once on the user key (or co-locate via
     bucketing, q70) and the per-key interval scan is O(versions)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -1988,7 +1944,6 @@ def q223_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-type keep/bounce counts are exact. At scale this is one
     key-partitioned window pass — the dedup cousin of q61's streaming
     watermark dedup, with time distance instead of key identity."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -2039,7 +1994,6 @@ def q225_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stddev comparison invites). One bounded-frame window per type
     partition over day-cardinality rows; warm-up days (n < 3) are
     never flagged."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -2119,7 +2073,6 @@ def q247_source_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ~|sources| rows, and the float log terms folded in sorted
     order (q217's float-order-proof protocol) so both engines sum
     identically."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     ref = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_ref"))
     cur = (
@@ -2205,7 +2158,6 @@ def q251_binary_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — it never needs a BLOB, which is the point: the Spark
     side's binary plumbing is what's under test. At scale this is the
     narrow per-row stage before q73's frame sampling; no shuffle."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings").select("vec_id")
     width = F.lit(1280) + (F.col("vec_id") % 8) * 80
     height = F.lit(720) + (F.col("vec_id") % 8) * 45
@@ -2268,7 +2220,6 @@ def q258_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order-proof, one aggregation, no shuffle beyond the
     final combine. The reference's R10 content hash lifted from row to
     TABLE granularity."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     row_str = F.concat_ws(
         "\x1f",
@@ -2332,7 +2283,6 @@ def q259_lambda_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the batch side reads a pre-aggregated table, not history
     — both sides here derive from events so the oracle can see the
     same world."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     cut = e.agg(
         (F.date_trunc("day", F.max("ts")) - F.expr("INTERVAL 3 DAYS")).alias("cut")
@@ -2385,7 +2335,6 @@ def q262_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     check deterministic and oracle-able). One aggregation, a broadcast
     of the 1-row now-proxy, exact µs lag arithmetic, and a 12-hour
     alarm boolean per feed."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     now = e.agg(F.max("ts").alias("now_ts"))
     pt = e.groupBy("event_type").agg(
@@ -2430,7 +2379,6 @@ def q265_nested_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode that silently truncates structs in naive readers. The writes
     happen once per process (``io.query_state``); the read flattens
     the merged struct so the oracle can reproduce it relationally."""
-    prep(spark)
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
@@ -2504,7 +2452,6 @@ def q270_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation by 10 — q225's no-float-ulp discipline), so the alarm
     boolean cannot flip between engines. Baseline = first 10 days per
     type; per-type ordered windows over the tiny daily frame."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -2571,7 +2518,6 @@ def q274_cdc_apply_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-deletes emit — an upsert-only pipeline silently resurrects
     them. Result summarized per status in exact cents; the key-keyed
     shuffle is the only wide op."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     snap = o.filter(F.col("o_orderkey") % 7 != 0).select(
@@ -2654,7 +2600,6 @@ def q282_numeric_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins both sides so absent bins contribute their full probability
     mass instead of silently vanishing. Sorted-fold float protocol
     throughout."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     half = F.when(F.col("o_orderkey") % 2 == 0, "ref").otherwise("cur")
     bin_ = F.least(F.floor(F.col("o_totalprice") / 25000.0).cast("bigint"), F.lit(9))
@@ -2727,7 +2672,6 @@ def q289_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists to raise. Zero data rows are read (schema comes from the
     parquet footer); pairs with q125's row-level validation and
     q106/q265's evolution handling."""
-    prep(spark)
     df = table(spark, sf_dir, "events")
     contract = {
         "event_id": "bigint",
@@ -2808,7 +2752,6 @@ def q304_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own proof of correctness. At 100 TB only the deltas (and the
     delta-side of each join) are new work per refresh; every join keys
     on o_orderkey, so the three delta joins reuse one partitioning."""
-    prep(spark)
     cutoff = "2000-01-01"
     vol = dec("l_extendedprice", 12, 2) * (
         F.lit(1.00).cast("decimal(4,2)") - dec("l_discount", 4, 2)
@@ -2906,8 +2849,6 @@ def q311_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     files."""
     import json
 
-    prep(spark)
-
     def _stage(d: str) -> None:
         e = table(spark, sf_dir, "events")
         files = []
@@ -2972,7 +2913,6 @@ def q313_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     OUTPUT row (9 rows) — the digit spine is generated so digits with
     zero observations still appear. One partial-agg pass; everything
     downstream is 9 rows at any scale."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digits = o.select(
         F.substring(
@@ -3043,7 +2983,6 @@ def q314_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     downstream join into a fan-out. Each check is one anti-join or
     grouped HAVING — the same shuffle keys the production joins use, so
     the audit costs no more than the joins it protects."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     c = table(spark, sf_dir, "customer")
@@ -3111,7 +3050,6 @@ def q317_source_priority_conflation(spark: SparkSession, sf_dir: str) -> DataFra
     left-join ladder (the naive formulation that adds a shuffle per
     source). Priorities are unique per (key, source) so the pick is
     deterministic without a tiebreak."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     multi = (
         c.filter(F.col("c_custkey") % 3 != 0).select(
@@ -3174,7 +3112,6 @@ def q318_late_arriving_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate. The park-and-retry runs the identical custkey-keyed
     shuffle as the main join (no extra partitioning), and each fact is
     joined exactly once per phase it's alive in."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     dim1 = c.filter(F.col("c_custkey") % 4 != 0)
@@ -3236,7 +3173,6 @@ def q325_synthetic_data_generator(spark: SparkSession, sf_dir: str) -> DataFrame
     changes). The oracle regenerates the same 100k rows from the same
     hash algebra and checks the grouped checksums — proving generator
     determinism across engines, not just across runs."""
-    prep(spark)
     n_rows = 100_000
     g = spark.range(0, n_rows)
 
@@ -3309,7 +3245,6 @@ def q326_end_to_end_revenue_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
     itself. One user-grain shuffle for dedup, one (tier, day) shuffle
     for the rollup; the audit sides are one-row broadcasts. The text
     twin is q90's curation pipeline; this is the revenue DAG."""
-    prep(spark)
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     w = W.partitionBy("event_id").orderBy("ts", "user_id")
     deduped = e.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
@@ -3386,7 +3321,6 @@ def q327_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditing/backtesting: moving T replays exactly what any past
     report saw. One custkey-partitioned window over the ~2–3 rows per
     entity that survive the interval filters."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     d = lambda s: F.lit(s).cast("date")  # noqa: E731
     v1 = c.select(
@@ -3453,7 +3387,6 @@ def q328_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the aggregates from the SOURCE derivation, so any
     mis-quoted, split, or dropped record breaks count, char-length
     sum, and key checksum."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     noted = c.select(
         "c_custkey",
@@ -3555,7 +3488,6 @@ def q332_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q50); the dirty side is a deterministic perturbation of the clean
     side so ground truth (id equality) rides along and the class
     purity is itself verified."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
     dirty = c.select(
@@ -3651,7 +3583,6 @@ def q335_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalization this release needs. Bucketing is explicit floor()
     on exact cents — truncating integer division would disagree
     between engines on negative balances."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
     base = c.select("c_mktsegment", "c_nationkey", cents.alias("cents"))
@@ -3728,7 +3659,6 @@ def q354_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     double, so a single mis-decoded byte, swapped endianness, or
     off-by-one window boundary breaks the hash. 64 payloads × 4
     windows; the decode stage is per-row narrow, no shuffle."""
-    prep(spark)
     from ..operators.multimodal import pcm_window_energy
 
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
@@ -3812,7 +3742,6 @@ def q370_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     out across executors, and no single-partition exchange exists in
     the plan. The day the argmax stops being a real level shift,
     recursing into [1,k),[k,n) segments reuses this exact shape."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -3897,7 +3826,6 @@ def q377_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by QI-groups × |sensitive domain|). The release decision
     reads BOTH audits: q335 for re-identification, this for attribute
     disclosure."""
-    prep(spark)
     base = table(spark, sf_dir, "customer").select(
         "c_nationkey",
         F.floor(
@@ -3962,7 +3890,6 @@ def q400_incremental_distinct_state(spark: SparkSession, sf_dir: str) -> DataFra
     combines map-side. This is R16's count-watermark posture applied
     to the one aggregate incremental pipelines most often get wrong
     (re-scanning history for every daily distinct-users report)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
 
     def bitmaps(df: DataFrame) -> DataFrame:
@@ -4052,7 +3979,6 @@ def q406_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     test; q304 remains the insert-only delta-JOIN decomposition
     (dA⋈B ∪ A⋈dB ∪ dA⋈dB) — this query adds the retraction algebra
     both need at the aggregation layer."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
 
@@ -4175,7 +4101,6 @@ def q423_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Numerator magnitude is ≤ 2·N_c·N: past ~10¹² customers
     move the ppm step to decimal(38,0) (same escalation note as the
     checksum half-sums)."""
-    prep(spark)
     base = table(spark, sf_dir, "customer").select(
         "c_nationkey",
         F.floor(
@@ -4354,7 +4279,6 @@ def q428_cdc_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-per-key collapses via max_by-style aggregation instead of
     the window if rank ties never matter (they do here: ties broken
     by event_id for a deterministic checksum)."""
-    prep(spark)
     from ..functions.hashing import checksum_half_sums
 
     ops = _cdc_ops(table(spark, sf_dir, "events"))
@@ -4440,7 +4364,6 @@ def q424_mv_rewrite_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     read reduction is the entire point of summary tables; both dim
     joins broadcast, and MV maintenance (not re-derivation) is
     already covered by the signed-delta machinery of q304/q406."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -4535,7 +4458,6 @@ def q429_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the refreshed MV + broadcast dims exactly like q424. This
     is the full lifecycle of a production summary table: build once
     (setup), maintain by delta, serve by rollup."""
-    prep(spark)
     from ..operators.state import signed_view_merge
 
     li = table(spark, sf_dir, "lineitem")
@@ -4638,7 +4560,6 @@ def q430_asof_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     K simultaneous versions cost one K-way fan-out of the pruned
     slice, not K scans — how backfill jobs diff a pipeline against
     its last-known-good snapshot without replaying the log twice."""
-    prep(spark)
     from ..functions.hashing import checksum_half_sums
 
     ops = _cdc_ops(table(spark, sf_dir, "events"))

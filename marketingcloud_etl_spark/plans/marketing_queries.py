@@ -12,7 +12,6 @@ from pyspark.sql.window import Window as W
 from ..functions.money import dec
 from ..io import table
 from ..operators.ranking import distributed_ntile, pin_cache
-from ..session import prep
 from .catalog import query
 
 
@@ -46,7 +45,6 @@ def q130_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one grouped min (signup), one distinct projection
     (activity), one user_id-keyed join — the same co-partitioning
     story as the funnel (q121)."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     signup = (
         e.filter(F.col("event_type") == "signup")
@@ -105,7 +103,6 @@ def q131_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the as-of-join shape (q11) with a lookback bound: the
     join and the ranking both key on user_id/purchase id, revenue
     sums ride the decimal protocol."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"), "user_id", F.col("ts").alias("p_ts"), "value"
@@ -173,7 +170,6 @@ def q132_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metric, user_id) order is total, so tie placement matches the
     window-function oracle row for row — while every stage stays
     parallel at 10^9 customers."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
     anchor = p.agg(F.max("ts").cast("date").alias("max_day"))
@@ -243,7 +239,6 @@ def q133_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one user-level rollup (partial-aggregated max), one
     two-row arm aggregate, then scalar math on a single row."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     converted = F.when(
         (F.col("event_type") == "purchase") & (F.col("value") >= 100.0), 1
@@ -327,7 +322,6 @@ def q166_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     so aggregation order can't drift the total (q81's protocol). The
     join is the bounded as-of shape (q131) with a window share
     normalization keyed by purchase id."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"), "user_id", F.col("ts").alias("p_ts"), "value"
@@ -399,7 +393,6 @@ def q200_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths. The (ts, event_id) order key is total, so ties are
     deterministic; the |types|² matrix is tiny by construction at any
     corpus scale."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -453,7 +446,6 @@ def q204_propensity_lift_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY would single-partition; this path never does, while
     reproducing its bucket boundaries row for row under the total
     (score desc, user_id) order."""
-    prep(spark)
     from ..operators.ranking import distributed_ntile
 
     # pinned: repartitionByRange's sampling pass re-executes the input
@@ -516,7 +508,6 @@ def q211_market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick that keeps rule generation bounded by frequent pairs, not
     all pairs; at 100 TB the same floor applies map-side via the
     pre-aggregated pair counts. Top-50 by lift, full tiebreak."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # four consumers (supp, both self-join sides, n_orders) — one
     # materialization of the distinct basket projection (q208's
@@ -581,7 +572,6 @@ def q216_trending_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     period, so periods rank in parallel; the per-period top-k is what
     feeds 'trending now' surfaces and the q22 global top-k cannot
     express per-group."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     li = table(spark, sf_dir, "lineitem")
@@ -629,7 +619,6 @@ def q224_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as an ordered window over that TINY daily frame — the
     single-partition window is over |days| rows by construction, the
     documented bounded-frame exception (q114's protocol)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -675,7 +664,6 @@ def q227_experiment_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-test consumes arms produced exactly this way. This is the
     layered-experimentation infrastructure pattern: adding a layer
     never reshuffles existing ones."""
-    prep(spark)
     H1 = (
         "cast(conv(substring(md5(concat('layer1:', cast(user_id as string))), 1, 8),"
         " 16, 10) as bigint)"
@@ -742,7 +730,6 @@ def q260_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree over those exact sums — bit-reproducible in both
     engines. Per-arm adjusted means are what the experimenter reads;
     a broken θ or a per-arm θ fit would shift them."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     # interval halving in pure timestamp algebra differs between
     # engines; compute mid identically: min + (max-min)//2 via epoch µs
@@ -829,7 +816,6 @@ def q269_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary fraction). Two keyed min-aggregations + one broadcast-scale
     join; the quantile state is a value→count map over the bounded
     minute domain."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     v = (
         e.filter(F.col("event_type") == "view")
@@ -884,7 +870,6 @@ def q280_path_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenated into a path string, counted, top-20. One user-
     partitioned window + one path-keyed count — both shuffles keyed on
     high-cardinality columns."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events")
@@ -941,7 +926,6 @@ def q281_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer rates (one IEEE division each). Index > 1 = busy
     day. DuckDB's dayofweek is 0=Sunday; Spark's dayofweek is
     1=Sunday — the Spark side subtracts 1 to pin the same convention."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         F.date_trunc("day", "ts").alias("day"),
@@ -1011,7 +995,6 @@ def q287_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     no exp(Σln) round trip through libm), so both engines agree
     bit-for-bit. The at-risk counts come from a descending cumulative
     sum; the whole curve lives on a ≤|distinct-tenure| frame."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events")
@@ -1101,7 +1084,6 @@ def q290_adstock_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical slice). Per-channel series are driver-small (weeks ×
     channels); the weekly aggregation underneath is the only wide
     op — the universal shape for distributed recursive filters."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     weekly = (
         e.filter(F.col("event_type").isin("purchase", "click"))
@@ -1177,7 +1159,6 @@ def q291_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     either engine), δ = relative MDE × p̄, plus the go/no-go boolean
     against the population actually available. One aggregation; the
     sizing formula is a single IEEE expression over exact counts."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     arms = e.groupBy((F.col("user_id") % 2).alias("arm"), "user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
@@ -1255,7 +1236,6 @@ def q307_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     under any partitioning. Orphan purchases (no click in the 7-day
     lookback) credit channel -1 in full, so total credited value is
     conserved. Same user-keyed bounded lookback join as q131."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"), "user_id", F.col("ts").alias("p_ts"), "value"
@@ -1351,7 +1331,6 @@ def q310_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-decimal-rounded WOE are all value-matched across engines."""
     from ..operators.ranking import distributed_ntile
 
-    prep(spark)
     e = table(spark, sf_dir, "events")
     # pinned: base feeds the totals row, the labeled join AND the range
     # exchange's sampling+shuffle passes — four executions of the event
@@ -1442,7 +1421,6 @@ def q319_mom_growth_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL rather than a fake 0. The windowed frame is month-domain-
     sized per segment at any fact scale because aggregation precedes
     the window."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     monthly = (
@@ -1503,7 +1481,6 @@ def q320_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window over the (cohort × offset) AGGREGATE — a few dozen rows
     per cohort at any fact scale, because the user-grain aggregation
     happens first on the same user_id-keyed shuffle as the funnel."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     signup = (
         e.filter(F.col("event_type") == "signup")
@@ -1575,7 +1552,6 @@ def q324_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaks under a (streak, user) total order. Complements q56:
     sessionization cuts on TIME GAPS within a day, this finds runs of
     DISTINCT CALENDAR DAYS."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     days = e.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
     w = W.partitionBy("user_id").orderBy("day")
@@ -1631,7 +1607,6 @@ def q330_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     because a backtest harness that introduces its own float noise
     can't adjudicate models. The first 7 days score NULL and are
     excluded, not zero-filled."""
-    prep(spark)
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents")
@@ -1682,7 +1657,6 @@ def q333_wilson_ctr_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     into literal constants so both engines evaluate the identical IEEE
     tree over exact integer counts. Naive rate rides alongside to show
     the re-ranking. One partial-agg pass; channel-domain-sized output."""
-    prep(spark)
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
     by_channel = e.groupBy(
         (F.get_json_object("props", "$.k").cast("int") % 5).alias("channel")
@@ -1753,7 +1727,6 @@ def q336_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves as an internal group/join key that never reaches the final
     projection, and any bijection of the key domain yields the same
     groups — so each engine keeps its native convention."""
-    prep(spark)
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents")
@@ -1894,7 +1867,6 @@ def q346_event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-scale (the q56 regime) — for multi-million-event users
     the same automaton runs incrementally in transformWithState
     (q350's path) instead of one collected array."""
-    prep(spark)
     from ..operators.patterns import sequential_pattern_count
 
     ev = table(spark, sf_dir, "events").select(
@@ -1937,7 +1909,6 @@ def q352_pattern_4stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stages, gaps) spec, so any drift between the generator's CASE
     chains and the documented semantics breaks the hash. Same scale
     shape as q346: one shuffle, O(1) state per key, codegen'd fold."""
-    prep(spark)
     from ..operators.patterns import sequential_pattern_count
 
     ev = table(spark, sf_dir, "events").select(
@@ -2087,7 +2058,6 @@ def q349_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a join+agg loop on these tiny frames costs seconds of pure
     stage scheduling at ANY data scale). The event log is touched
     exactly once however many channels or steps."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -2316,7 +2286,6 @@ def q351_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     before ln — a 6e-6 LLR drift), so every ratio casts to double
     explicitly and both engines take ln of the identical IEEE value.
     """
-    prep(spark)
     from ..operators.ranking import global_prefix_sum
 
     DAY_US = 86_400_000_000  # pin below: see q132's sampling-pass note
@@ -2432,7 +2401,6 @@ def q364_grouped_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE partial-aggregated pass over the fact table, G output
     rows — the regression never sees a group-sized task. At 100 TB the
     only change is widening the per-row product types."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     x = F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
     y = F.round(F.col("value") * 100).cast("bigint")
@@ -2555,7 +2523,6 @@ def q366_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exponential-in-channels is the algorithm's nature; the fact-table
     cost is ONE pass regardless (the mask agg), which is why exact
     Shapley is viable at 100 TB when the channel set is small."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     conv = (
         e.filter(F.col("event_type") == "purchase")
@@ -2688,7 +2655,6 @@ def q373_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_prefix_sum's range exchange, and the test statistic folds
     in one final one-row aggregation. The corpus is scanned once; at
     100 TB the only data-sized op is the first groupBy."""
-    prep(spark)
     from ..operators.ranking import global_prefix_sum
 
     s = (
@@ -2793,7 +2759,6 @@ def q378_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold protocol with + for ×), so every prefix hashes. Frame sizes:
     the whole curve lives on the ≤|distinct-tenure| frame; the corpus
     is touched once by the per-user groupBy."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events")
@@ -2903,7 +2868,6 @@ def q379_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined); each series folds independently inside its
     own row — thousands of series parallelize as rows, state is O(1)
     per series, and no window ever spans more than one series."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -3000,7 +2964,6 @@ def q380_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-series O(1)-state fold inside one row; the corpus
     collapses to per-series daily rollups first. The forecast is
     l + h·b + s[slot(n+h)] — pure post-fold arithmetic."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -3109,7 +3072,6 @@ def q381_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PSI fold are grid-sized. Monitoring 10⁴ features over 100 TB
     is 10⁴ × 20 cells, not 10⁴ scans — add feature as a key and the
     same plan serves the whole feature store."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     bounds = e.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")

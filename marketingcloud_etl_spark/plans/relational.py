@@ -21,7 +21,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.money import dec
 from ..io import fixture_tag, query_state, table
-from ..session import prep
+from ..session import conf_scope
 from .catalog import query
 
 # ---------------------------------------------------------------- helpers
@@ -64,7 +64,6 @@ def _one() -> F.Column:
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary. Exercises scan→filter→hash-agg
     with partial/final split; the filter pushes down to the parquet scan."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     disc_price = _ext() * (_one() - dec("l_discount", 4, 2))
     charge = disc_price * (_one() + dec("l_tax", 4, 2))
@@ -101,7 +100,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q02_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BETWEEN / IN / LIKE / null test / boolean combos — all pushed to scan."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.filter(
         F.col("o_orderdate").between("1998-01-01 00:00:00", "1999-12-31 00:00:00")
@@ -128,7 +126,6 @@ def q02_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q03_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional expression (CASE WHEN) as a grouping key."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     band = (
         F.when(F.col("o_totalprice") < 100000, "small")
@@ -158,7 +155,6 @@ def q03_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q04_cast_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cast / coalesce / nullif over a JSON-string column (R6 missing-key
     default semantics: absent → sentinel, cf. salesforce_extractor.py:163-168)."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return e.groupBy("event_type").agg(
@@ -188,7 +184,6 @@ def q04_cast_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q05_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way equi-join star query: fact⋈fact⋈dim⋈dim with an explicit
     broadcast hint on the tiny nation dim; AQE handles the rest."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
@@ -223,7 +218,6 @@ def q05_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q06_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving customers with zero orders."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     return (
@@ -251,7 +245,6 @@ def q06_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q07_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS): BUILDING customers that placed orders."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
@@ -269,7 +262,6 @@ def q08_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (NOT EXISTS): customers with no orders — the
     dedup-vs-target primitive behind the reference's insert-ignore upsert
     (R12, salesforce_extractor.py:214-217)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_mktsegment")
@@ -288,7 +280,6 @@ def q08_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q09_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join of two tiny sets (region × distinct order status)."""
-    prep(spark)
     r = table(spark, sf_dir, "region")
     s = table(spark, sf_dir, "orders").select(F.col("o_orderstatus").alias("status")).distinct()
     return r.crossJoin(s).groupBy("r_name", "status").agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -314,7 +305,6 @@ def q10_join_theta_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (theta) join against a small inline band table — Spark
     plans this as a broadcast nested-loop join, the right physical choice
     since the band side is 5 rows."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     bands = spark.createDataFrame(
         [("xs", 0.0, 10.0), ("s", 10.0, 20.0), ("m", 20.0, 30.0), ("l", 30.0, 40.0), ("xl", 40.0, 1e9)],
@@ -351,7 +341,6 @@ def q11_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest click by the same user at-or-before the purchase timestamp.
     (operators/asof.py holds the scale-path merge_asof implementation —
     this formulation stays oracle-expressible.)"""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
@@ -386,7 +375,6 @@ def q11_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q12_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count / countDistinct / min / max / sum / avg in one hash-agg."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -413,7 +401,6 @@ def q12_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q13_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple COUNT(DISTINCT) in one aggregate (expand-based plan)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -437,7 +424,6 @@ def q13_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered aggregation via CASE WHEN (portable form of FILTER (WHERE ...))."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     price = dec("o_totalprice", 14, 2)
     zero = F.lit(0).cast("decimal(14,2)")
@@ -469,7 +455,6 @@ def q14_agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q15_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (region → nation → grand total)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
@@ -500,7 +485,6 @@ def q15_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q16_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two grouping dims with decimal-protocol measure."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -532,7 +516,6 @@ def q16_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via the SQL API (Catalyst expands to the same plan
     as cube/rollup)."""
-    prep(spark)
     table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
@@ -561,7 +544,6 @@ def q17_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set, order-normalized (sorted + joined to a string so the
     value-hash is insensitive to Spark's nondeterministic collect order)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.array_join(F.array_sort(F.collect_set("source")), ",").alias("sources"),
@@ -588,7 +570,6 @@ def q18_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q19_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window functions with a unique tiebreak; top-10 per segment."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
     return (
@@ -619,7 +600,6 @@ def q19_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag / lead / first_value analytics per user session stream."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return e.select(
@@ -649,7 +629,6 @@ def q20_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q21_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total + 3-row moving average (frame clauses), decimal-exact."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     order_cols = [F.col("o_orderdate"), F.col("o_orderkey")]
     w_run = W.partitionBy("o_custkey").orderBy(*order_cols).rowsBetween(W.unboundedPreceding, 0)
@@ -676,7 +655,6 @@ def q21_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q22_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer — the canonical top-k-per-group pattern."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
@@ -697,7 +675,6 @@ def q22_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q23_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-100 by price — Spark plans TakeOrderedAndProject, no full sort."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -719,7 +696,6 @@ def q23_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q24_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL by name, then aggregate."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
     s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
     return c.unionByName(s).groupBy("nk").agg(F.count(F.lit(1)).alias("n"))
@@ -736,7 +712,6 @@ def q24_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q25_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct) of two key sets."""
-    prep(spark)
     a = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -763,7 +738,6 @@ def q25_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q26_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (multiset difference) then aggregate."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("ck"))
     c = (
         table(spark, sf_dir, "customer")
@@ -792,7 +766,6 @@ def q34_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (linear interpolation — same definition as
     DuckDB quantile_cont); approx_percentile is the sketch path for
     100 TB (rows-only, see q60)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     j = o.join(c, o.o_custkey == c.c_custkey)
@@ -826,7 +799,6 @@ _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 def q33_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot market segments into columns (explicit value list so the
     output schema is static — required for plan caching at scale)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     piv = (
@@ -864,7 +836,6 @@ def q70_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a join HINT, not session conf — conf is read at execution time, so
     mutating it from inside a query function would race with any other
     lazily-built query in the same session."""
-    prep(spark)
     tag = fixture_tag(sf_dir)
     names = {"lineitem": f"li_bkt_{tag}", "orders": f"ord_bkt_{tag}"}
     keys = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
@@ -922,7 +893,6 @@ def q71_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     long histories. Checked against DuckDB's native ASOF JOIN. Only
     the matched timestamp is surfaced (among equal timestamps the
     matched *row* is tie-ambiguous; the max ts is not)."""
-    prep(spark)
     from ..operators.asof import asof_join_cogroup
 
     e = table(spark, sf_dir, "events")
@@ -954,7 +924,6 @@ def q72_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     salts, the join runs on (key, salt) — identical results, hot keys
     spread over n_salts partitions. Oracle = the plain join, proving
     result equality; the partitioning is the only thing that changes."""
-    prep(spark)
     from ..operators.skew import salted_join_key
 
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag", "l_quantity")
@@ -986,7 +955,6 @@ def q76_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests), the at-scale layout for low-cardinality hot
     filters. The oracle computes the same result from the unpartitioned
     table."""
-    prep(spark)
     path, _ = query_state(
         "q76_partition_pruning",
         sf_dir,
@@ -1026,7 +994,6 @@ def q77_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     selective filters on both fact and dimension sides, revenue
     aggregation, top-10 — the canonical filter-pushdown + broadcast +
     partial-agg pipeline."""
-    prep(spark)
     cutoff = "1998-03-15"
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
@@ -1071,7 +1038,6 @@ def q78_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item reporting shape (TPC-H Q10): fact filter + three
     dimension joins + grouped revenue + top-20. Dimensions broadcast;
     the one shuffle is the final aggregation on customer."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     o = table(spark, sf_dir, "orders")
@@ -1112,7 +1078,6 @@ def q80_sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql with a correlated EXISTS subquery, which Catalyst
     decorrelates into a semi join — the one subquery form the
     DataFrame API can't write directly."""
-    prep(spark)
     table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(
@@ -1147,7 +1112,6 @@ def q84_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch microseconds (full timestamp precision — seconds would
     merge sub-second-distinct peers and shift the 30-day bound) with
     the equivalent ±bounds; RANGE includes peers on both engines."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -1190,7 +1154,6 @@ def q94_sort_nullable_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST); the rank column pins the exact order. The post-limit window
     runs on 50 rows — the global TakeOrderedAndProject does the heavy
     lifting distributed."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "event_id",
         F.when(F.col("event_id") % 7 == 0, F.lit(None)).otherwise(F.col("value")).alias("k"),
@@ -1237,7 +1200,6 @@ def q99_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric rollup. The oracle uses the portable UNION ALL formulation;
     Spark plans unpivot as Expand (one pass, rows×metrics output — no
     join, no shuffle before the aggregate)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     long = li.unpivot(
         ["l_orderkey", "l_linenumber"],
@@ -1284,7 +1246,6 @@ def q100_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the exact totals — deterministic across partitionings and
     engines, unlike naive float stddev/corr accumulation. One partial-
     aggregated pass; no second scan for the means."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     s = li.groupBy("l_returnflag").agg(
@@ -1346,7 +1307,6 @@ def q101_gapfill_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last(ignorenulls) over an unbounded-preceding frame). The spine
     build is a broadcast cross of two tiny aggregates; the only real
     shuffle is the daily rollup."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "events")
@@ -1397,7 +1357,6 @@ def q102_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distribution profile for numeric columns, computed with
     explicit portable bucket math. Partial aggregation collapses to
     ≤ types×buckets rows per task before the shuffle."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     bucket = F.least(F.floor(F.col("value") / 50.0), F.lit(9)).cast("int")
     return (
@@ -1457,7 +1416,6 @@ def q119_median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured here, the builtin wins below ~10⁶ distinct values per
     group, so this query keeps it and the crossover is the documented
     trade."""
-    prep(spark)
     from ..operators.ranking import pin_cache
 
     li = table(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
@@ -1537,7 +1495,6 @@ def q121_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, so a pre-partitioned events table co-locates the whole
     funnel with ZERO extra exchanges (AQE turns the later, shrinking
     step tables into broadcasts). Step filters push into the scan."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     v = (
         e.filter(F.col("event_type") == "view")
@@ -1613,7 +1570,6 @@ def q126_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     one result). At 100 TB the exact count(DISTINCT) per column is
     the expensive honest version; q60's HLL path is the sketch
     alternative."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
 
     def prof(c: str):
@@ -1652,7 +1608,6 @@ def q144_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-flight accumulator path (driver-merged per-task updates) agrees
     exactly with a dedicated aggregation, decimal money protocol
     included."""
-    prep(spark)
     from pyspark.sql import Observation
 
     li = table(spark, sf_dir, "lineitem")
@@ -1713,7 +1668,6 @@ def q145_recursive_cte_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which handles the CYCLIC (symmetrized-edge) closure Spark's
     UNION-ALL-only recursion cannot express — together they cover both
     recursive-query regimes."""
-    prep(spark)
     table(spark, sf_dir, "documents").createOrReplaceTempView("q145_documents")
     return spark.sql("""
       WITH RECURSIVE tree AS (
@@ -1757,7 +1711,6 @@ def q146_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulated state. The oracle recomputes the same totals
     relationally — proving the loop visited every branch exactly
     once."""
-    prep(spark)
     table(spark, sf_dir, "events").createOrReplaceTempView("q146_events")
     return spark.sql("""
       BEGIN
@@ -1797,7 +1750,6 @@ def q149_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arbitrary correlated filters/limits); DuckDB runs the identical
     LATERAL as the oracle. Tiebreak on o_orderkey makes the top-2
     deterministic."""
-    prep(spark)
     c = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= 10)
@@ -1840,7 +1792,6 @@ def q150_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     transposed width is the input row count, so transposing raw data
     would build a 10⁹-column schema. The oracle reconstructs the same
     flip with scalar subqueries."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n_rows"),
@@ -1870,7 +1821,6 @@ def q154_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Tiebreak on c_custkey pins ntile assignment. The
     window partitions by nation — 25 balanced partitions, no
     single-partition exchange."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     w = W.partitionBy("n_name").orderBy("c_acctbal", "c_custkey")
@@ -1905,7 +1855,6 @@ def q155_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     unordered concat would vary with partition visit order. Only safe
     on bounded groups (suppliers per nation); for unbounded groups use
     collect+slice (q-family 18) so one group can't OOM an executor."""
-    prep(spark)
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     return (
@@ -1938,7 +1887,6 @@ def q158_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is exact — which is why the oracle is plain
     COUNT(DISTINCT). The two-level groupBy shuffles (status, bucket)
     pairs, never raw keys."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     per_bucket = (
         o.select(
@@ -1974,7 +1922,6 @@ def q169_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is only safe when that cardinality is bounded (5 segments); the
     oracle reproduces the same table with explicit conditional sums.
     Sorted by the row key for a deterministic driver hash."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     ct = c.stat.crosstab("c_nationkey", "c_mktsegment")
     segs = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -2005,7 +1952,6 @@ def q170_sampleby_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (subset property, left_anti count == 0). q85/q86 are the
     cross-engine-deterministic hash alternatives; sampleBy is the
     API-parity entry."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     fracs = {
         "AUTOMOBILE": 0.3, "BUILDING": 0.1, "FURNITURE": 0.3,
@@ -2061,7 +2007,6 @@ def q175_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to any strategy — the hint is physical only, which is exactly what
     the oracle checks; the plan-level assertion (ShuffledHashJoin,
     no SortMergeJoin) lives in tests/test_plan_quality.py."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders").hint("shuffle_hash")
     return (
@@ -2116,7 +2061,6 @@ def q176_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     and scanning 2. The oracle reproduces the semantic result; the
     plan assertion (``dynamicpruningexpression`` on the scan) lives in
     tests/test_plan_quality.py."""
-    prep(spark)
     fact = spark.read.parquet(orders_by_year_dir(spark, sf_dir))
     years = (
         fact.filter(
@@ -2165,7 +2109,6 @@ def q177_modern_agg_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-arbitrary, so the ordering key packs (cents, orderkey) into
     ONE exact bigint — the key itself carries the tiebreak. All
     partial-aggregable — no shuffle beyond the group key."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # self-tiebreaking scalar key: exact integer (cents, orderkey) pack —
     # max_by/min_by tie behavior is engine-arbitrary, so the key itself
@@ -2204,7 +2147,6 @@ def q178_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoting and poisons the plan cache with one plan per literal).
     The parameters arrive typed (double, string), the plan is identical
     to the literal query — which is what the oracle checks."""
-    prep(spark)
     table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_178")
     return spark.sql(
         """
@@ -2243,65 +2185,42 @@ def q181_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shuffle-side complement to DPP (q176): DPP prunes
     directories, the bloom filter prunes rows within the files that
     survive."""
-    prep(spark)
-    out, restore = bloom_join_frame(spark, sf_dir)
-    try:
-        # physical planning (and so the runtime-filter rewrite) happens
-        # at ACTION time under the session confs then in force — so the
-        # rows are materialized here while the bloom confs are held, and
-        # the caller gets a conf-independent checkpointed frame back
-        return out.localCheckpoint(eager=True)
-    finally:
-        restore()
+    # physical planning (and so the runtime-filter rewrite) happens at
+    # ACTION time under the session confs then in force — so the rows
+    # are materialized while the bloom confs are held, and the caller
+    # gets a conf-independent checkpointed frame back
+    with conf_scope(spark, BLOOM_CONFS):
+        return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
 
 
-def bloom_join_frame(spark: SparkSession, sf_dir: str):
-    """Build the q181 join frame with the runtime-bloom-filter confs set,
-    returning ``(frame, restore_fn)`` — shared by the query (which
-    materializes under the confs) and the plan-quality test (which
-    inspects the physical plan before restoring)."""
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        # the fixture sides are far below the default 10 MB creation
-        # threshold / 10 GB application threshold — force the rewrite
-        # so the plan exercised locally is the one a 100 TB join gets
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
+# the runtime-bloom-filter rewrite q181 runs under (the plan-quality
+# test inspects the frame under the same confs)
+BLOOM_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # the fixture sides are far below the default 10 MB creation
+    # threshold / 10 GB application threshold — force the rewrite so
+    # the plan exercised locally is the one a 100 TB join gets
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
-    def restore() -> None:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
-    # a failure while building the frame must not leak the confs into
-    # the long-lived session (broadcast stays disabled for every later
-    # query otherwise) — restore and re-raise
-    try:
-        li = table(spark, sf_dir, "lineitem")
-        o = table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
+def bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q181 join frame; its plan carries the bloom filter only when
+    planned under :data:`BLOOM_CONFS`."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    return (
+        li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).alias(
+                "price_cents"
+            ),
         )
-        out = (
-            li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
-            .groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).alias(
-                    "price_cents"
-                ),
-            )
-        )
-    except BaseException:
-        restore()
-        raise
-    return out, restore
+    )
 
 
 @query(
@@ -2329,7 +2248,6 @@ def q183_group_by_all_union_by_name(spark: SparkSession, sf_dir: str) -> DataFra
     modern idioms for multi-source ingestion where upstream schemas
     evolve independently; the oracle is the same shape in DuckDB's
     dialect (which also supports GROUP BY ALL)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     a = o.select(
         F.col("o_orderpriority").alias("priority"),
@@ -2370,7 +2288,6 @@ def q185_time_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution — multiplies 100 TB reads by the number of grains;
     grouping sets share the scan and the partial aggregation, and
     every aggregate is algebraic so map-side combine still applies."""
-    prep(spark)
     table(spark, sf_dir, "events").createOrReplaceTempView("v_ev185")
     return spark.sql(
         """
@@ -2407,7 +2324,6 @@ def q191_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     group is a skew key (operators/skew.py's salting applies). The
     fixture nulls every 7th customer's nation key; the oracle is
     DuckDB's IS NOT DISTINCT FROM."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").withColumn(
         "nk",
         F.when(F.col("c_custkey") % 7 == 0, None).otherwise(F.col("c_nationkey")),
@@ -2451,7 +2367,6 @@ def q193_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin exactly. Scale: per-user groups are small and the pass is
     one shuffle of (user, ts, id) triples; a mega-user hot key would
     salt by time range (operators/skew.py)."""
-    prep(spark)
     from ..operators.asof import nearest_asof_merge
 
     ev = table(spark, sf_dir, "events")
@@ -2495,7 +2410,6 @@ def q202_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets), so unlike the SQL window oracle it never materializes a
     single-partition sort — the exact boundary-value semantics are
     identical row for row under the total (price, key) order."""
-    prep(spark)
     from ..operators.ranking import distributed_ntile
 
     o = table(spark, sf_dir, "orders")
@@ -2537,7 +2451,6 @@ def q208_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-degree skew (a production corpus would orient by ascending
     degree instead). The edge set is localCheckpoint-pinned: three
     self-join consumers, one materialization."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 600)
     e = (
         li.alias("a")
@@ -2581,7 +2494,6 @@ def q209_bucketized_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     refines the candidates. Cost drops from |A|·|B| to Σ per-bucket
     products — the standard range-join optimization. The oracle is the
     naive theta join; the plan test pins that no NestedLoop survives."""
-    prep(spark)
     W_US = 10 * 60 * 1_000_000
     ev = table(spark, sf_dir, "events")
     err = ev.filter(F.col("event_type") == "error").select(
@@ -2631,7 +2543,6 @@ def q210_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT`` column exclusion. Semantically identical to the classic
     query the oracle runs — pipes are pure surface syntax over the
     same Catalyst plan, which is exactly what the compare proves."""
-    prep(spark)
     table(spark, sf_dir, "orders").createOrReplaceTempView("v_o210")
     return spark.sql(
         """
@@ -2674,7 +2585,6 @@ def q217_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast arithmetic; the χ² sum folds the per-cell terms in
     SORTED order (q111's protocol) so float addition order can never
     drift the 6-dp rounded statistic between engines."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     cells = (
         ev.select((F.col("user_id") % 2).alias("seg"), "event_type")
@@ -2738,7 +2648,6 @@ def q218_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by group); a billion-row single group would switch to
     a weight-aware GK sketch (q112's family) — this is the exact
     verified baseline."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     li = table(spark, sf_dir, "lineitem")
@@ -2795,7 +2704,6 @@ def q226_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     must not single-partition-sort what it is diagnosing. The SQL
     window oracle reproduces the identical ranks under the total
     (cnt, key) order."""
-    prep(spark)
     from ..operators.ranking import global_row_number, pin_cache
 
     li = table(spark, sf_dir, "lineitem")
@@ -2865,7 +2773,6 @@ def q228_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the earlier class deterministically, in exact integer
     arithmetic. The classic inventory/revenue-concentration readout at
     any key cardinality."""
-    prep(spark)
     from ..operators.ranking import TOTAL_COL, global_prefix_sum, pin_cache
 
     li = table(spark, sf_dir, "lineitem")
@@ -2921,7 +2828,6 @@ def q229_threshold_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-member's, so the survivor set provably contains the true top-k;
     the final (value, key) total order makes the selected SET identical
     to the oracle's global ORDER BY LIMIT."""
-    prep(spark)
     k, acc = 1000, 10000
     eps = 1.0 / acc
     li = table(spark, sf_dir, "lineitem").select(
@@ -2978,7 +2884,6 @@ def q230_stack_wide_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits 3 long rows per input row inside the SAME projection — an
     Expand node, zero extra shuffles (the oracle needs 3 UNION ALL
     branches to say the same thing). Money stays in integer cents."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
@@ -3025,7 +2930,6 @@ def q231_explode_outer_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OUTER variant keeps them as a (NULL pos, NULL element) row.
     Array order is pinned by ``array_sort`` so the emitted positions
     match the oracle's window rank exactly."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     rich = (
@@ -3090,7 +2994,6 @@ def q232_percentile_exact_battery(spark: SparkSession, sf_dir: str) -> DataFrame
     rank rule rather than trusting ``quantile_disc``'s convention).
     Integer cents make every interpolated quartile an exact binary
     fraction — no float tolerance anywhere."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("c"),
@@ -3143,7 +3046,6 @@ def q237_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row transform helpers (salesforce_extractor.py:153-181) are the
     shape this replaces at scale. The oracle inlines the same
     expressions — which is exactly what the engine does internally."""
-    prep(spark)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION mcetl_cents(x DOUBLE) "
         "RETURNS BIGINT RETURN cast(round(x * 100) as bigint)"
@@ -3185,7 +3087,6 @@ def q238_sample_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked; the sample itself is engine-specific, so the
     boolean carries the evidence. Complements q170's sampleBy
     (stratified) with the plain-fraction path."""
-    prep(spark)
     p = 0.2
     li = table(spark, sf_dir, "lineitem").select("l_returnflag")
     tot = li.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n_total"))
@@ -3221,7 +3122,6 @@ def q239_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no tiebreak column — the property ROWS frames can't give on
     a timestamp order with duplicates. Partitioned by customer: many
     small parallel frames, never a global sort."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("__q239_orders")
     return spark.sql(
@@ -3255,7 +3155,6 @@ def q240_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     which computes the same padding math without needing AES. ECB keeps
     the check deterministic; production uses GCM (random IV), same
     expressions."""
-    prep(spark)
     key = "0123456789abcdef"
     p = table(spark, sf_dir, "part")
     enc = F.expr(f"aes_encrypt(p_name, '{key}', 'ECB')")
@@ -3288,7 +3187,6 @@ def q241_sql_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     not discovered, so no extra distinct-scan pass and no unbounded
     column explosion. Counts land in one hash aggregate, same plan as
     the oracle's conditional sums."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("__q241_orders")
     return spark.sql(
@@ -3345,7 +3243,6 @@ def q246_window_analytic_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is customer-partitioned under a unique (cents, key) total
     order, so NULL-skipping semantics are deterministic and both
     engines agree bit-for-bit."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("__q246_orders")
     # lag(... IGNORE NULLS) has no PySpark Column API — SQL surface
@@ -3415,7 +3312,6 @@ def q279_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped sum and clip count in one broadcast-join pass. The
     winsorized total is order-proof integer arithmetic end to end —
     no float mean anywhere."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("c"),
@@ -3479,7 +3375,6 @@ def q284_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/ranking.py's distributed global row number — same
     semantics, no single-partition sort — and q226 already exercises
     exactly that substitution."""
-    prep(spark)
     from ..operators.ranking import global_row_number
 
     p = table(spark, sf_dir, "part").select("p_partkey", "p_retailprice", "p_size")
@@ -3534,7 +3429,6 @@ def q286_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation broadcast back onto the rows; every numerator is an
     exact integer and each encoding is a single IEEE division —
     deterministic without any fold ordering concern."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
@@ -3601,7 +3495,6 @@ def q303_subquery_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     which by three-valued logic can never be true, so its count is
     provably 0 in both engines; the battery pins that Spark and DuckDB
     agree on that trap. Averages use the decimal-money protocol."""
-    prep(spark)
     for t in ("customer", "nation", "orders"):
         table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
     return spark.sql(
@@ -3660,7 +3553,6 @@ def q308_skyline_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned scan of that domain, one broadcast join back."""
     from ..operators.ranking import global_prefix_max
 
-    prep(spark)
     p = table(spark, sf_dir, "part").select("p_partkey", "p_retailprice", "p_size")
     per_price = p.groupBy(F.col("p_retailprice").alias("price")).agg(
         F.max("p_size").alias("msize")
@@ -3726,7 +3618,6 @@ def q309_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     estimator's error is itself the verified output. The stats passes
     are narrow aggregations (histograms are bucket-sized, not
     data-sized); only the ground-truth join touches full data."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     width = c.agg(
@@ -3826,7 +3717,6 @@ def q315_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from one union-all aggregation. The coefficient is one IEEE
     division per output row over exact integers. Top-20 under a
     (degree, node) total order."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 600)
     e = (
         li.alias("a")
@@ -3909,7 +3799,6 @@ def q316_rollup_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized); revenue is compared for ranking in EXACT decimal and
     cast to double only on output; rolled-up NULLs are canonicalized to
     'ALL' so both engines agree on tiebreak ordering."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     g = (
@@ -3970,7 +3859,6 @@ def q321_shipping_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-day attainment rate in exact integer ppm. One orderkey-keyed
     join and one grouped percentile pass; priorities bound the group
     count at any scale."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     lateness = (
@@ -4051,7 +3939,6 @@ def q322_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequalities from exact power sums. Two narrow aggregation passes
     + one partkey-aligned join; the 9-cell output is constant-size at
     any scale."""
-    prep(spark)
     from ..operators.ranking import TOTAL_COL, global_prefix_sum, pin_cache
 
     li = table(spark, sf_dir, "lineitem")
@@ -4140,7 +4027,6 @@ def q323_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     past the bigint overflow point of rank×cents products at cluster
     scale — and the final formula is one IEEE expression per the
     one-row output."""
-    prep(spark)
     from ..operators.ranking import global_row_number
 
     o = table(spark, sf_dir, "orders")
@@ -4214,7 +4100,6 @@ def q334_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value-domain-sized, cents ≤ 10⁷ distinct at any fact scale); the
     α=0.05 asymptotic critical value and reject flag are one IEEE
     expression on the one-row output."""
-    prep(spark)
     from ..operators.ranking import global_prefix_sum
 
     o = table(spark, sf_dir, "orders")
@@ -4294,7 +4179,6 @@ def q357_grouped_quantile_scalable(spark: SparkSession, sf_dir: str) -> DataFram
     builtin stays faster when groups are many and small; this is the
     exact path when they aren't. Compare q112 (GK sketch) for the
     approximate alternative."""
-    prep(spark)
     from ..operators.ranking import grouped_quantile_cont
 
     li = table(spark, sf_dir, "lineitem").select(
@@ -4351,7 +4235,6 @@ def q365_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, not tolerance-matched. At 100 TB this is the
     outlier-fence job the builtin's one-reducer-per-group percentile
     cannot finish."""
-    prep(spark)
     from ..operators.ranking import COUNT_COL, grouped_quantile_cont
 
     li = table(spark, sf_dir, "lineitem").select(
@@ -4447,7 +4330,6 @@ def q384_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the statistic a segmentation decision actually reads). Same exact
     integer contingency cells and sorted-fold χ² as q217; V is one
     more fixed-order IEEE expression over that fold."""
-    prep(spark)
     cells = (
         table(spark, sf_dir, "customer")
         .groupBy(
@@ -4553,7 +4435,6 @@ def q385_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE corpus pass builds the grid (map-side combined); the
     grid self-join is constant-size. The 100 TB version is the same
     plan with a bigger first groupBy."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     cells = o.select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1)
@@ -4655,7 +4536,6 @@ def q386_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     total; the sorted fold runs over per-row terms collected per
     group at 100 TB (swap the global fold for the per-group +
     between-group decomposition this index exists for)."""
-    prep(spark)
     base = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0)
@@ -4733,7 +4613,6 @@ def q387_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are a one-row broadcast. This IS the 100 TB form of q386:
     the global sorted fold shards into per-group folds plus a
     groups-sized between-term frame."""
-    prep(spark)
     base = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0)
@@ -4830,7 +4709,6 @@ def q402_incremental_quantile_state(spark: SparkSession, sf_dir: str) -> DataFra
     (sub-cent floats) should quantize first (cents — q357) or take the
     GK-sketch path (q112) — the counts posture needs a bounded value
     domain to stay small."""
-    prep(spark)
     from ..operators.ranking import grouped_quantile_from_bounded_counts
 
     li = table(spark, sf_dir, "lineitem").select(
@@ -4932,7 +4810,6 @@ def q427_rank_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is an equi-join on idx, and the per-lag re-rank windows are
     partitioned by lag — every stage is bounded by the DATE domain,
     not the fact table."""
-    prep(spark)
     from ..operators.ranking import global_row_number, pin_cache
 
     o = table(spark, sf_dir, "orders")
@@ -5023,7 +4900,6 @@ def q425_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely-colliding pair. Calendar-skewed weeks (quarter-end
     bursts) split further by AQE skew-join or a second-level salt —
     the q420 machinery applies unchanged."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
 
     def intervals(prio: str, tag: str) -> DataFrame:

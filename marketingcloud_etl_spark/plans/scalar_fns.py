@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import prep
 from .catalog import query
 
 
@@ -39,7 +38,6 @@ from .catalog import query
 def q27_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String battery incl. the reference's R7 split semantics
     (salesforce_extractor.py:171 — note Spark split is regex)."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -73,7 +71,6 @@ def q27_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q28_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time battery incl. R9 timestamp semantics (UTC-pinned)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -110,7 +107,6 @@ def q28_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q29_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math battery; per-row IEEE ops are deterministic, transcendentals
     rounded to absorb JVM-vs-libm last-ulp differences."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 500)
     return li.select(
         "l_orderkey",
@@ -141,7 +137,6 @@ def q29_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q30_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content hashes (R10 family; md5/sha2 are
     oracle-portable, xxhash64 is Spark-only and used in rows-only ops)."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -171,7 +166,6 @@ def q30_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q31_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array battery over tokenized text: size/distinct/element_at/
     contains/slice/sort — all higher-order built-ins, no UDFs."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")
     return d.select(
@@ -205,7 +199,6 @@ def q32_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an unquoted integer. Outside that contract the engines
     diverge by design: Spark returns NULL for quoted/fractional/
     malformed values where DuckDB coerces or errors."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     parsed = e.withColumn("pj", F.from_json("props", "k LONG"))
     return parsed.select(
@@ -232,7 +225,6 @@ def q74_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: from_json to map<string,string>, map_keys,
     explode of the map to (key, value) rows, re-aggregated. The oracle
     reaches the same numbers through JSON path extraction."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     m = e.withColumn("pm", F.from_json("props", "map<string,string>"))
     exploded = m.select(
@@ -269,7 +261,6 @@ def q143_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter). VARIANT is the 100 TB answer to schema-on-read event
     blobs: one binary column, no per-field string re-parsing, paths
     pushed into the scan."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 200)
     js = o.select(
         "o_orderkey",
@@ -314,7 +305,6 @@ def q153_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to a single group, which the oracle checks via the
     explicit lower() formulation. Output key normalized to lower()
     (the collated group representative is otherwise first-seen)."""
-    prep(spark)
     p = table(spark, sf_dir, "part").select(F.col("p_type").alias("t"))
     mixed = p.unionAll(p.select(F.lower("t").alias("t")))
     return (
@@ -348,7 +338,6 @@ def q157_interval_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     %a/%b three-letter forms), and exact day differences. All pure
     codegen'd expressions — the date dimension of the scalar battery
     q27–q32 left uncovered."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 400)
     d = F.col("o_orderdate").cast("date")
     return o.select(
@@ -388,7 +377,6 @@ def q171_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     representable edge). The division runs in DOUBLE on an exactly-decimal-quantized
     numerator — one IEEE op on identical operands (decimal division
     result-scale rules differ between engines, money.py's warning)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 200)
     return li.select(
         "l_orderkey",
@@ -431,7 +419,6 @@ def q182_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expresses. At scale the lambdas run inside whole-stage codegen;
     this is the idiom for nested (array-typed) columns without
     exploding 100 TB into rows."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
     arr = (
         li.select(
@@ -491,7 +478,6 @@ def q184_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes host/section/counts from the source columns directly.
     At 100 TB URL canonicalization is the key-normalization step
     before host-level dedup/aggregation — all built-ins, no UDF."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     urls = o.select(
         "o_orderkey",
@@ -555,7 +541,6 @@ def q192_array_setops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     the idiom for set-valued columns (tags, token vocabularies,
     audience segments) without a second scan or an explode round
     trip."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
     pa = li.groupBy("l_orderkey").agg(
         F.array_distinct(F.collect_list("l_partkey")).alias("all_parts"),
@@ -601,7 +586,6 @@ def q233_string_fn_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     and overlay (DuckDB spells it substr||..||substr — the oracle
     proves the splice semantics, not the function name). All codegen'd
     builtins — per-row Python never enters the picture."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -648,7 +632,6 @@ def q249_map_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-shuffle idiom for nested per-entity aggregates at scale (one
     map column per user instead of T rows/user downstream). DuckDB
     models the same algebra relationally."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     m = counts.groupBy("user_id").agg(
@@ -717,7 +700,6 @@ def q252_unicode_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded: full case mapping of ß (Spark upper('straße') =
     'STRASSE', DuckDB = 'STRAẞE' capital sharp s) — the upper column
     therefore tests a ß-free value on that row."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     s = (
         F.when(F.col("doc_id") % 4 == 0, F.lit("café"))
@@ -761,7 +743,6 @@ def q253_number_format_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     no DuckDB twin, so the oracle reproduces the VALUES via printf
     grouping and strip-and-cast — same results, different spelling,
     which is exactly the cross-engine check."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
     return p.select(
@@ -802,9 +783,8 @@ def q254_timestamp_ntz_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from DST transitions, so the oracle can pin the −5/−4 offsets
     explicitly rather than trusting two engines' tz databases to
     agree), make_timestamp_ntz construction, and ntz differencing.
-    session.prep()'s UTC pin means ltz↔ntz conversion is identity for
+    The catalog's UTC pin (session.prep) means ltz↔ntz conversion is identity for
     the fixture columns — asserted by the ntz_ts column itself."""
-    prep(spark)
     e = table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
     ntz = F.to_timestamp_ntz("ts")
     return e.select(
@@ -852,7 +832,6 @@ def q255_array_mutation_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     final projection — the driver's comparator cannot sort raw array
     columns (q165's round-4 failure class), and the join preserves the
     full element sequence, so nothing is lost to the fold."""
-    prep(spark)
     from ..functions.text import tokens
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
@@ -894,7 +873,6 @@ def q256_inline_structs(spark: SparkSession, sf_dir: str) -> DataFrame:
     single all-NULL row. The nested-to-flat hinge for struct-array
     columns (order lists, span annotations); array_sort pins struct
     ordering so both engines emit identical rows."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 50 == 0)
     agg = (

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.money import dec
 from ..io import query_state, scratch_dir, table
 from ..operators.sessionize import sessionize
-from ..session import prep
+from ..session import conf_scope
 from .catalog import query
 
 
@@ -49,7 +49,6 @@ from .catalog import query
 def q56_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (lag + gap > 30min + cumsum) — the
     oracle-checkable twin of session_window streaming."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     s = sessionize(e, gap_minutes=30)
     return s.groupBy("user_id").agg(
@@ -71,7 +70,6 @@ def q56_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q57_batch_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour aggregation in batch form (date_trunc) — the
     equivalence target for the streaming version below."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     return e.groupBy(
         F.date_trunc("hour", "ts").alias("hour_start"), F.col("event_type")
@@ -86,7 +84,6 @@ def q58_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window agg executed as a real Structured
     Streaming query (multi-file replay → availableNow → memory sink).
     Must equal q57 row-for-row (pinned in tests)."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory, tumbling_counts
 
     agg = tumbling_counts(events_stream(spark, sf_dir))
@@ -100,7 +97,6 @@ def q59_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window(gap=30min) streaming aggregation run to
     completion; session count per user must match q56 (pinned in
     tests)."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory, session_windows
 
     # unbounded watermark: the replay files arrive time-unordered, and
@@ -118,7 +114,6 @@ def q59_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q61_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark on (user_id, event_type): state
     bounded by the watermark horizon; emits first-seen rows."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory, stream_dedup
 
     dd = stream_dedup(events_stream(spark, sf_dir), watermark="365 days")
@@ -147,7 +142,6 @@ def q68_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     two windows. ``F.window(ts, '2 hours', '1 hour')`` — the oracle
     expresses the same membership by exploding each row to its two
     window starts. Batch form of the streaming sliding aggregation."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), F.col("event_type"))
@@ -176,7 +170,6 @@ def q69_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — and must equal the same join computed in batch, which
     is exactly what the oracle checks. The one streaming query with a
     full value-hash gate."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory, stream_static_join
 
     dim = table(spark, sf_dir, "customer").select(
@@ -208,7 +201,6 @@ def q75_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     micro-batches overlap nothing and event_id is unique, the final
     target must equal the source table exactly — which the oracle
     checks by value."""
-    prep(spark)
     from ..sinks.upsert import upsert_parquet
     from ..streaming.jobs import events_stream
 
@@ -250,7 +242,6 @@ def q81_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks by value. Cents are summed as exact integers on both sides
     (per-row rounding first: a float sum of 2-dp doubles then one
     round drifts at batch boundaries)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     from ..streaming.jobs import events_stream, run_to_memory, stateful_running_totals
@@ -300,11 +291,10 @@ def q104_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-family) and protobuf in every Python worker; see
     streaming/jobs.py::enable_transform_with_state — the session conf
     is restored after the query finishes."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     from ..streaming.jobs import (
-        RUN_ROCKSDB,
+        ROCKSDB_CONFS,
         enable_transform_with_state,
         events_stream,
         run_to_memory,
@@ -316,20 +306,12 @@ def q104_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithState needs protobuf; neither a real "
             "distribution nor the _pbcompat bundled runtime is available"
         )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         out = run_to_memory(
             stateful_running_totals_tws(events_stream(spark, sf_dir)),
             "q104_out",
             output_mode="update",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("__rn", F.row_number().over(w))
@@ -346,7 +328,7 @@ def _run_tws_final(spark: SparkSession, sf_dir: str, builder, sink_name: str, ou
     from pyspark.sql.window import Window as W
 
     from ..streaming.jobs import (
-        RUN_ROCKSDB,
+        ROCKSDB_CONFS,
         enable_transform_with_state,
         events_stream,
         run_to_memory,
@@ -357,18 +339,10 @@ def _run_tws_final(spark: SparkSession, sf_dir: str, builder, sink_name: str, ou
             "transformWithState needs protobuf; neither a real "
             "distribution nor the _pbcompat bundled runtime is available"
         )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         out = run_to_memory(
             builder(events_stream(spark, sf_dir)), sink_name, output_mode="update"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = W.partitionBy("user_id").orderBy(F.col("processed_n").desc())
     return (
         out.withColumn("__rn", F.row_number().over(w))
@@ -412,7 +386,6 @@ def q141_tws_liststate_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes it with a batch window. Runs under RocksDB with
     protobuf via _pbcompat (q104's protocol, incl. the final-emission
     pick by cumulative row count)."""
-    prep(spark)
     from ..streaming.jobs import top3_events_tws
 
     return _run_tws_final(
@@ -447,7 +420,6 @@ def q142_tws_mapstate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated incrementally — the typed-state form of a grouped pivot,
     O(|types|) state per key. Final per-user map must equal the batch
     group-by, which the oracle checks by value (q104's protocol)."""
-    prep(spark)
     from ..streaming.jobs import type_counts_tws
 
     return _run_tws_final(
@@ -489,7 +461,6 @@ def q123_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch shape: both sides hash-partition on user_id (one shuffle
     each), the interval predicate evaluates inside the joined
     partitions; lead times are summed as exact integer microseconds."""
-    prep(spark)
     from ..streaming.jobs import stream_stream_join  # noqa: F401  (streaming twin)
 
     e = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -532,7 +503,6 @@ def q147_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch aggregate — proving the on-disk state IS the
     answer, the property checkpoint recovery (and this debugging
     workflow at 100 TB) relies on."""
-    prep(spark)
     from ..streaming.jobs import events_stream
 
     ck = scratch_dir("q147")
@@ -584,7 +554,6 @@ def q172_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import json
 
-    prep(spark)
     from ..streaming.jobs import events_stream
 
     target = scratch_dir("q172")
@@ -649,7 +618,6 @@ def q188_chained_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed uses its real disorder bound). The oracle is the batch
     aggregate of the ORIGINAL events — dedup must exactly cancel the
     doubling for every window."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory
 
     s = events_stream(spark, sf_dir)
@@ -685,7 +653,6 @@ def q344_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at 100 TB feed scale (state size tracks the disorder window,
     not the corpus). The oracle is the batch aggregate of the ORIGINAL
     events; per-row-rounded integer cents make the sum order-proof."""
-    prep(spark)
     from ..streaming.jobs import events_stream, run_to_memory
 
     s = events_stream(spark, sf_dir)
@@ -739,7 +706,6 @@ def q196_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     (30 min join bound + 60 min watermark + 5 min slack) — the same
     cutoff applied to the streamed result, so the compare covers both
     matched multiplicities and the null emissions."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -824,7 +790,6 @@ def q213_session_append_finalized(spark: SparkSession, sf_dir: str) -> DataFrame
     Spark's session_window definition) and restricts both sides to
     sessions provably finalized at stream end (end ≤ max ts − 95 min:
     60 watermark + 30 gap + 5 slack)."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -884,7 +849,6 @@ def q219_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery (q123/q196) is only needed when BOTH sides move. The
     oracle is the batch q215 aggregate — stream and batch enrichment
     must agree row-for-row."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     from ..streaming.jobs import events_stream, run_to_memory
@@ -978,7 +942,6 @@ def q236_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     overshoots the lagged watermark are provably dropped — the oracle
     counts must agree exactly, proving drop semantics, not just
     plumbing."""
-    prep(spark)
     from ..streaming.jobs import late_replay_dir, run_to_memory
 
     src = late_replay_dir(spark, sf_dir, shift_hours=120)
@@ -1032,7 +995,6 @@ def q243_update_mode_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale state, skipped an update, or double-counted a batch, some
     row's total would drift. No watermark: state is O(|keys|), the
     shape dashboard counters run at scale."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -1085,7 +1047,6 @@ def q250_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     the asymmetry that makes naive symmetric-cutoff oracles wrong).
     Matched multiplicities, null-padded purchases AND null-padded
     clicks all hash-match the batch reconstruction."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -1181,7 +1142,6 @@ def q358_stream_stream_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole log, and the at-most-once emission is itself the verified
     property (a double-emit breaks the count column's hash). State
     stays watermark-bounded on both sides like the other modes."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -1248,7 +1208,6 @@ def q257_batch_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming runs then inherit. Batch session_window is one
     partitioned aggregation — no state store, no watermark — so it's
     also the cheap backfill twin of the streaming job."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -1296,7 +1255,6 @@ def q273_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     past day end (oracle cutoff = final watermark, ms-truncated —
     q236's arithmetic). Peak-hour-of-day is the classic capacity
     metric; both levels are exact integers."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -1351,9 +1309,8 @@ def _register_q350() -> None:
         here is O(1) per user on an UNBOUNDED feed — this is the shape
         the operator runs at production scale; RocksDB state store,
         checkpoint-recoverable like q104/q141/q142."""
-        prep(spark)
         from ..streaming.jobs import (
-            RUN_ROCKSDB,
+            ROCKSDB_CONFS,
             enable_transform_with_state,
             events_stream_ordered,
             pattern_match_tws,
@@ -1371,18 +1328,10 @@ def _register_q350() -> None:
             F.col("event_id").alias("eid"),
             F.col("event_type").alias("et"),
         )
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, RUN_ROCKSDB)
-        try:
+        with conf_scope(spark, ROCKSDB_CONFS):
             out = run_to_memory(
                 pattern_match_tws(src), "q350_out", output_mode="update"
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         final = out.groupBy("user_id").agg(F.max("matches").alias("m"))
         return final.groupBy(F.col("m").cast("int").alias("n_matches")).agg(
             F.count(F.lit(1)).alias("n_users"),
@@ -1429,7 +1378,6 @@ def q367_stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFram
     right join (written as the swapped left join) restricted to clicks
     whose outer decision is final at stream end — cut − (30 min bound
     + 60 min watermark + 5 min slack), q196's cutoff protocol."""
-    prep(spark)
     from ..streaming.jobs import events_stream_ordered, run_to_memory
 
     s = events_stream_ordered(spark, sf_dir)
@@ -1565,7 +1513,6 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     batch-sized append; state grows by survivors only. The batch
     boundary is data-defined (one file per arrival), so re-running the
     replay reproduces byte-identical counts."""
-    prep(spark)
     from ..operators.dedup import build_minhash_index, probe_minhash_rows
 
     d = table(spark, sf_dir, "documents")
@@ -1726,7 +1673,6 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and shared by every batch, exactly like the ANN path's
     offline codebook. Batch boundaries are data-defined (one file per
     arrival), so the replay is deterministic end-to-end."""
-    prep(spark)
     from ..operators.semantic_dedup import (
         build_semantic_index,
         probe_semantic_rows,
@@ -1918,7 +1864,6 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     by postings hits. Periodic q396 compaction restores the term-
     sorted row-group layout the appends erode; none of this re-reads
     the corpus text."""
-    prep(spark)
     from ..operators.retrieval import bm25_serve, build_bm25_index
     from .text_queries import _Q390_QUERY_TERMS
 
@@ -2081,7 +2026,6 @@ def q403_incremental_session_state(spark: SparkSession, sf_dir: str) -> DataFram
     applyInPandasWithState's per-key state, but oracle-checkable).
     Non-decomposable session metrics (median length) take the q402
     counts posture instead."""
-    prep(spark)
     from ..operators.sessionize import merge_session_state, session_state
 
     e = table(spark, sf_dir, "events").select("user_id", "ts")

@@ -13,7 +13,6 @@ from ..functions.vectors import cosine_sql
 from ..operators.dedup import word_shingles
 from .dedup_queries import _H32, _H32_DUCK
 from ..io import query_state, scratch_dir, table
-from ..session import prep
 from .catalog import query
 
 _TOKS = tokens_sql("text")
@@ -31,7 +30,6 @@ _TOKS = tokens_sql("text")
 def q41_tokenize_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize + explode + count: global top-20 words (deterministic
     tiebreak on the word)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     return (
         d.select(F.explode(tokens("text")).alias("word"))
@@ -77,7 +75,6 @@ def q42_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     document) — so it goes through the salted two-phase count-distinct
     (operators/skew.py): exact same result, per-key reduce fan-in
     bounded by n_salts."""
-    prep(spark)
     from ..operators.skew import salted_count_distinct
 
     d = table(spark, sf_dir, "documents")
@@ -118,7 +115,6 @@ def q42_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q43_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus statistics (counts are exact integers, so
     plain sums are deterministic)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     n_toks = F.size(tokens("text"))
     return d.groupBy("lang").agg(
@@ -174,7 +170,6 @@ def q44_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword hits per candidate language, argmax with a fixed
     preference order, confusion-matrix style output vs the labeled
     ``lang`` column."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
 
@@ -227,7 +222,6 @@ def q45_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality features: lexical diversity, mean token length,
     stopword ratio, length prior — combined into one bounded score
     (the LLM-data curation filter shape)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
     stop = F.filter(toks, lambda t: t.isin("the", "a", "of", "and", "to", "el", "la", "de"))
@@ -278,7 +272,6 @@ def q46_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive document fingerprint: md5 over the sorted
     distinct vocabulary — catches token-shuffled duplicates that exact
     content hashing misses."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens("text"))), " "))
     return (
@@ -320,7 +313,6 @@ def q79_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     each window of 32-bit token hashes. Every value is exact integer
     arithmetic shared with the oracle (md5-prefix token hashes, the
     same modulus), so the whole fingerprint table hash-matches."""
-    prep(spark)
     k, b, p = 4, 257, (1 << 31) - 1
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     th = F.transform(
@@ -370,7 +362,6 @@ def q82_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     single digits | single punctuation — the GPT-2 pre-tokenizer's
     coarse shape). Same pattern evaluates identically under Java regex
     and RE2, so the counts hash-match the oracle."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     n_bpe = F.size(F.regexp_extract_all("text", F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"), F.lit(0)))
     n_ws = F.size(tokens("text"))
@@ -406,7 +397,6 @@ def q88_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence + slice + explode, no UDF, so chunking runs inside the
     scan stage. Chunk count = ceil((n_tokens - overlap) / stride),
     min 1 for any non-empty doc."""
-    prep(spark)
     size, overlap = 50, 10
     stride = size - overlap
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -461,7 +451,6 @@ def q89_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     side gets a per-row salt, the bench side is replicated across the
     salts — a hot gram's rows spread over n_salts reducers, result
     identical to the plain join."""
-    prep(spark)
     from ..operators.skew import salted_join_key
 
     n = 8
@@ -527,7 +516,6 @@ def q90_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id per text hash) → deterministic hash train/test split →
     per-split counts. Catalyst fuses the feature projection into the
     scan; the only shuffles are the dedup window and the final agg."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
     feat = d.select(
@@ -600,7 +588,6 @@ def q92_langid_chargram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first 100 labeled docs, remaining docs scored by profile
     overlap, argmax with deterministic tiebreak — a full train/score
     workflow in one declarative plan, hash-matched end-to-end."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     doc_grams = d.select(
         "doc_id",
@@ -677,7 +664,6 @@ def q96_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is single-line, so 2-grams are the non-vacuous signal).
     Shuffle is O(total 2-grams) keyed on (doc_id, gram) — fine-grained,
     skew-free; the per-doc rollup rides the same partial-agg path."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     ts = tokens("text")
     base = d.select(
@@ -749,7 +735,6 @@ def q97_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     under test, on both engines. Patterns use explicit ASCII classes
     (Java regex and RE2 agree on those; \\d and \\s have corner-case
     divergences). Pure codegen'd string expressions — no UDFs."""
-    prep(spark)
     email_re = "[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z][a-z]+"
     phone_re = "[0-9][0-9][0-9]-[0-9][0-9][0-9][0-9]"
     d = table(spark, sf_dir, "documents")
@@ -822,7 +807,6 @@ def q107_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is hash(source); no global ordering bottleneck. At 100 TB
     the per-source streams pack in parallel across executors; a single
     global pack order would serialize the corpus through one task."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     w = (
         W.partitionBy("source")
@@ -885,7 +869,6 @@ def q108_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic and engine-identical. The array is per-document
     (bounded by doc vocabulary), not per-corpus, so this stays
     scale-safe."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     counts = (
         d.select("doc_id", F.explode(tokens("text")).alias("t"))
@@ -934,7 +917,6 @@ def q116_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Word length is guarded >= 2 on both engines: Spark's sequence(1,
     len-1) would step DOWNWARD for single-char words ([1,0]), silently
     emitting garbage pairs."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = d.select(F.explode(tokens("text")).alias("w")).filter(F.length("w") >= 2)
     pairs = words.select(
@@ -966,7 +948,6 @@ def q117_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells are unhashable), so the catalog-wide contract is scalar-only
     final projections (test_plan_quality.py::
     test_oracle_query_outputs_are_driver_hashable, no exemptions)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(F.explode(tokens("text")).alias("t"))
     hits = toks.stat.freqItems(["t"], support=0.02)
@@ -1002,7 +983,6 @@ def q137_freqitems_inclusion_check(spark: SparkSession, sf_dir: str) -> DataFram
     value-checked by the oracle (same tokenizer on both engines); the
     ``all_included`` boolean carries the sketch evidence — a broken
     per-partition merge drops true heavy hitters and flips it."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(F.explode(tokens("text")).alias("t"))
     freq = (
@@ -1070,7 +1050,6 @@ def q127_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized, never doc-count-sized. The per-doc log sum uses the
     sorted-fold protocol (deterministic, engine-identical addition
     order)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     dt = d.select("doc_id", tokens("text").alias("toks")).filter(F.size("toks") >= 2)
     bg = dt.select(
@@ -1140,7 +1119,6 @@ def q151_bin_packing_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity, and FFD's structural property that at most one
     non-oversize bin per shard ends up under half capacity. A broken
     fit loop, a dropped doc, or a capacity breach flips a flag."""
-    prep(spark)
     from ..operators.packing import bin_pack_ffd
 
     cap = 256
@@ -1218,7 +1196,6 @@ def q161_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape exact dedup (q37) already scales with. Output per
     doc: chunk counts + surviving chars (the rebuild is a groupBy
     concat away; counts are what curation dashboards track)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_chunks = F.ceil(F.size(words) / F.lit(10.0)).cast("int")
@@ -1266,7 +1243,6 @@ def q164_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken hash or merge flips the boolean. The top-20 exact counts are
     value-checked by the oracle; the driver-small grid (8192 rows)
     broadcasts to the probe join."""
-    prep(spark)
     _D, _W = 4, 2048
     d = table(spark, sf_dir, "documents")
     toks = d.select(F.explode(tokens("text")).alias("word"))
@@ -1322,7 +1298,6 @@ def q165_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same aggregation. One shuffle keyed by token; Zipf skew on common
     tokens is exactly the shape AQE skew-split handles (and q42's
     salted tf-idf is the manual alternative)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens("text")).alias("word")).distinct()
     return (
@@ -1379,7 +1354,6 @@ def q173_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as q37/q161. Docs shorter than 8 words contribute (and
     report) zero windows, dropping out of the grouped join on both
     engines identically."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     spans = (
@@ -1476,7 +1450,6 @@ def q438_maximal_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. No all-pairs anywhere; the doc-keyed window is bounded by
     per-doc window counts (document length), the same skew bound as
     every per-doc op in the catalog."""
-    prep(spark)
     return _maximal_dup_spans(spark, sf_dir)
 
 
@@ -1581,7 +1554,6 @@ def q442_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the removal write set streams out partitioned by doc ranges, and
     untouched docs are passed through by the writer without entering
     the anti-join (the IN-filter on affected docs prunes first)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     return _span_removal_report(d, _maximal_dup_spans(spark, sf_dir))
 
@@ -1673,7 +1645,6 @@ def q189_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     one narrow map — no shuffle until the final (tiny) projection;
     fingerprint→doc inversion for cross-doc matching is then one
     explode + groupBy, the q161/q173 shape."""
-    prep(spark)
     k, b, p, wsel = 4, 257, (1 << 31) - 1, 4
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     th = F.transform(
@@ -1741,7 +1712,6 @@ def q201_sparse_tfidf_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and hash-matches the oracle bit for bit; ln()
     on identical operands is IEEE-identical across engines (q162's
     protocol). Top-25 with full tiebreak."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -1825,7 +1795,6 @@ def q235_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q79 established, so the whole per-source chunk accounting
     hash-matches the oracle. One chunk-keyed shuffle (the occ window),
     never all-pairs; chunk construction is a narrow per-doc pass."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     planted = d.filter(F.col("doc_id") % 10 == 0).withColumn(
         "doc_id", F.col("doc_id") + 100000
@@ -1921,7 +1890,6 @@ def q244_simhash_exact_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     far stronger evidence than q51's candidate-bucket smoke test. The
     production 64-bit xxhash64 variant differs only in hash source and
     width."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     th = F.transform(
         tokens("text"),
@@ -1993,7 +1961,6 @@ def q266_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SMOG's input). All counts are exact integers; the two ratios and
     the affine formula are single IEEE expressions — hash-stable.
     One pass, no shuffle beyond the source aggregation."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
     syll = lambda w: F.greatest(  # noqa: E731
@@ -2057,7 +2024,6 @@ def q267_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     High OOV → the tokenizer will fragment that source into bytes.
     Two shuffles total (vocab agg, source rollup); the vocab join is
     broadcast so the corpus never re-shuffles."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", "source", F.explode(tokens("text")).alias("t"))
     vocab = (
@@ -2120,7 +2086,6 @@ def q268_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the pair table). One pair-keyed shuffle + two broadcast-able
     unigram joins; the PMI expression is a single IEEE tree over exact
     counts. Top-50 by (pmi, pair) total order."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = tokens("text")
     pairs = (
@@ -2214,7 +2179,6 @@ def q275_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|² pair weight per SHARED token — bounded, because the
     distinct-vocab frame is tiny relative to the corpus (the
     projection is the point: compare PROFILES, not documents)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     v = d.select("source", F.explode(tokens("text")).alias("t")).distinct()
     sz = v.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -2320,7 +2284,6 @@ def q277_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed: pair explode + merge map over the vocab frame, whose
     size is |distinct words| — at corpus scale the loop cost is
     iterations × one narrow pass, the standard offline-train shape."""
-    prep(spark)
     _, out = _bpe_train_frames(spark, sf_dir, k=3)
     return spark.createDataFrame(
         out, "iteration int, left_sym string, right_sym string, pair_count bigint"
@@ -2448,7 +2411,6 @@ def q278_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes the token stream BEFORE the tf aggregation — at
     corpus scale this is an inverted-index probe, not a scan-and-score
     of every document."""
-    prep(spark)
     agg = _bm25_agg_frame(spark, sf_dir)
     return (
         agg.select(
@@ -2588,7 +2550,6 @@ def q283_dedup_burden_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations over one corpus scan lineage; every hash protocol is
     shared with its parent query so the report stays consistent with
     what the dedup passes would actually do."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     doc_level = d.agg(
         F.lit("doc_exact").alias("granularity"),
@@ -2689,7 +2650,6 @@ def q292_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the pipelines it describes). The detailed breakdowns live in
     q283 (dedup granularities), q247 (source mix), q266 (readability),
     q267 (OOV) — this is their cover page."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "lang", "source", "n_chars",
@@ -2745,7 +2705,6 @@ def q305_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on an unbounded token stream at 100 TB. Output is the corpus-
     level signed bucket profile (64 rows regardless of scale) plus
     per-bucket collision pressure (distinct tokens per bucket)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     tok = d.select(F.explode(tokens("text")).alias("t"))
     h32 = F.expr("cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint)")
@@ -2810,7 +2769,6 @@ def q345_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched once for counting and never re-scanned per merge. At
     100 TB the vocab frame is vocabulary-bounded (≪ corpus), exactly
     the asymmetry a broadcast join wants."""
-    prep(spark)
     vocab, _ = _bpe_train_frames(spark, sf_dir, k=3)
     d = table(spark, sf_dir, "documents")
     ws = (
@@ -2892,7 +2850,6 @@ def q353_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-length-bounded. The expensive top-bigram discovery is the
     q116 aggregation and would be replaced by a user-supplied phrase
     in an interactive deployment."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.posexplode(tokens("text")).alias("pos0", "w")
@@ -2974,7 +2931,6 @@ def q355_unicode_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     point (ligatures only decompose under NFKC) are all in the
     battery. Per-row narrow stage; at corpus scale this runs inside
     the same Arrow batch pass as tokenization."""
-    prep(spark)
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 
@@ -3029,7 +2985,6 @@ def q356_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic for a fixed zlib/level, so re-runs agree bitwise.
     Scale: per-row narrow stage, one 5-group aggregate; at 100 TB this
     shares the tokenization Arrow pass."""
-    prep(spark)
     import pandas as pd
 
     d = table(spark, sf_dir, "documents").select("source", "doc_id", "text")
@@ -3105,7 +3060,6 @@ def q361_rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     map over the corpus, which is exactly what lets it run at
     scan-speed over 100 TB (the explode multiplies rows ~n/stride
     within each task; no skew beyond document length itself)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     ws = tokens("text")
     base = d.select("doc_id", ws.alias("ws")).filter(F.size("ws") > 0)
@@ -3175,7 +3129,6 @@ def q362_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10⁵ vectors); the fusion itself joins two k-row frames — free at
     any corpus size. The per-leg ranks come from windows over
     POST-LIMIT 25-row frames, not the corpus."""
-    prep(spark)
     from ..functions.vectors import cosine
 
     bm = (
@@ -3267,7 +3220,6 @@ def q372_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window) in one multi-measure pass. At 100 TB the
     only corpus-sized shuffles are the two groupBys, both bounded by
     |types| + |batches|, and the curve frame itself is tiny."""
-    prep(spark)
     from ..operators.ranking import global_prefix_sum
 
     d = table(spark, sf_dir, "documents")
@@ -3352,7 +3304,6 @@ def q382_good_turing_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ per-source vocab) → frequency-of-frequencies table (bounded by
     distinct frequencies ≪ vocab) → one grouped fold. The corpus is
     scanned once."""
-    prep(spark)
     toks = table(spark, sf_dir, "documents").select(
         "source", F.explode(tokens("text")).alias("token")
     )
@@ -3438,7 +3389,6 @@ def q383_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, token) frequency table is the only corpus-sized shuffle
     (map-side combined); the dense source×vocab grid and the fold are
     dictionary-sized."""
-    prep(spark)
     toks = table(spark, sf_dir, "documents").select(
         "source", F.explode(tokens("text")).alias("token")
     )
@@ -3568,7 +3518,6 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hit-bounded (query, doc) aggregation — per-batch cost scales
     with HITS, not corpus. Maintenance is an append of the new docs'
     postings + a df/stats re-fold, R16's incremental posture."""
-    prep(spark)
     from ..operators.retrieval import bm25_serve, write_bm25_index
 
     base, _ = query_state(
@@ -3669,7 +3618,6 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed into the sorted postings scan, hit-bounded aggregation."""
     import os
 
-    prep(spark)
     from ..operators.retrieval import (
         bm25_serve,
         build_bm25_index,
@@ -3758,7 +3706,6 @@ def q401_incremental_vocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass when file counts grow)."""
     import os
 
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     # bigram types (q372's type space): unigram vocab saturates in the
     # first batch on any real corpus, collapsing the curve to one row
@@ -3874,7 +3821,6 @@ def q404_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     training text. The per-(shard × registry-gen) report composes the
     same way the reference's count watermark does (R16): state remembers
     what was screened, arrivals pay only their own size."""
-    prep(spark)
     from ..operators.dedup import poly_ngram_hashes
     from ..operators.skew import salted_join_key
 
@@ -3991,7 +3937,6 @@ def q441_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject — never a full sort). DSIR's hashed-ngram
     variant drops in by replacing the token key with a hash bucket,
     shrinking the vocab table to a fixed width."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens("text")).alias("w"))
     tgt = toks.filter(F.col("doc_id") % 7 == 0)
@@ -4107,7 +4052,6 @@ def q444_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking pass, and the writer that materializes the actual
     curriculum order partitions by (phase, hash) with no extra
     machinery."""
-    prep(spark)
     from ..operators.ranking import distributed_ntile
 
     d = table(spark, sf_dir, "documents")
@@ -4228,7 +4172,6 @@ def q445_incremental_dsir_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — functionals, the q443 identity), and a batch-sized scoring
     join. The daily DSIR refresh never touches history text — the
     posture SemDeDup-style offline re-scoring lacks."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks_all = d.select("doc_id", F.explode(tokens("text")).alias("w"))
 
@@ -4366,7 +4309,6 @@ def q446_decontamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (small) eval slice — a broadcast-or-bucketed semi-join key set;
     one content-keyed join + the doc-keyed island window over the HIT
     subset only. No all-pairs; training text scanned once."""
-    prep(spark)
     return _contamination_spans(spark, sf_dir)
 
 
@@ -4444,7 +4386,6 @@ def q448_decontamination_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination touches a small fraction of a 100 TB corpus, and
     untouched docs never enter the rewrite (the affected-doc semi-join
     prunes first)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     return _span_removal_report(d, _contamination_spans(spark, sf_dir))
 
@@ -4499,7 +4440,6 @@ def q447_cross_source_dup_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-all-pairs discipline as the LSH tier; group skew is bounded by
     occurrence counts, not their squares. Windows key on span content
     (the q173 frequency shuffle, reused twice)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     occ = (
@@ -4615,7 +4555,6 @@ def q449_dsir_hashed_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the (doc, bucket)-keyed agg, and the global top-20
     is TakeOrderedAndProject. The only data-sized shuffle is the
     (doc_id, bucket) groupBy — bounded at B entries per doc."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     B = _DSIR_B
     ws = d.select("doc_id", tokens("text").alias("w")).filter(F.size("w") >= 2)
@@ -4804,7 +4743,6 @@ def q451_quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); the final score+select is a narrow map plus a per-source
     agg. Quantization headroom: |term| ≤ a few units → ppm terms
     ≤ ~10⁷ per doc, so bigint sums hold to ~10¹¹ docs."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
     stop = F.filter(
@@ -4958,7 +4896,6 @@ def q450_incremental_span_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by doc length). The daily dedup refresh touches history
     only through its index — the posture that makes substring dedup
     affordable as a standing pipeline instead of a corpus rescan."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
 
@@ -5089,7 +5026,6 @@ def q453_filter_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle) + one per-(source, verdict) agg. The cascade itself is a
     CASE expression — fused into the scan by codegen, zero extra
     passes; adding a rule is one more WHEN arm, not another scan."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     tk = tokens("text")
     base = d.select(
@@ -5184,7 +5120,6 @@ def q454_deterministic_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataF
     digest folds per shard via sorted struct collect, bounded by shard
     size = corpus/16 (at real scale the digest would fold per shard
     FILE — same protocol, finer grain, embarrassingly parallel)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     k = F.expr(
         "cast(conv(substring(md5(concat('shuffle:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
@@ -5304,7 +5239,6 @@ def q455_packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     the accumulator is 3 integers regardless of shard size. The fold
     input is (doc_id, n) pairs, NOT text — collect is bounded by docs
     per source, the same bound q151's applyInPandas already carries."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "source", F.size(tokens("text")).cast("bigint").alias("n")
@@ -5462,7 +5396,6 @@ def q456_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle every dedup tier pays. Split assignment is a narrow map
     (no data motion), so the audit composes onto any hash-split
     corpus without a repartition."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     k = F.expr(
         "cast(conv(substring(md5(concat('shuffle:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
@@ -5580,7 +5513,6 @@ def q457_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, the remainder rank is a key-domain window (the q433
     bound — source count, never corpus size). The allocation table
     then drives q190's selection machinery unchanged."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from ..functions.money import dec
 from ..io import table
-from ..session import prep
 from .catalog import query
 
 _DEC_EXT = "cast(l_extendedprice as decimal(12,2))"
@@ -83,7 +82,6 @@ def q293_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     year-bucketed revenue rollup. Nation is broadcast in both roles; the
     fact-side joins stay key-shuffled (orderkey/custkey/suppkey), so the
     plan is scale-safe at any supplier/customer cardinality."""
-    prep(spark)
     ns = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -146,7 +144,6 @@ def q294_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume at an exact decimal zero rather than NULL. Both nation roles
     and region are broadcast; part/supplier/orders/customer joins shuffle
     on their natural keys."""
-    prep(spark)
     ns = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -213,7 +210,6 @@ def q295_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     no partsupp.ps_supplycost, reference Q9's cost source), rolled up by
     supplier nation and year. All arithmetic stays in exact decimal until
     the final double cast."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     cost = (
         F.lit(0.10).cast("decimal(3,2)")
@@ -261,7 +257,6 @@ def q296_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     per-customer count, then a histogram of those counts. The second agg
     re-shuffles on the tiny c_count domain, so its exchange is a few
     dozen rows regardless of fact size."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     per_cust = (
@@ -301,7 +296,6 @@ def q297_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part, reduced to a single conditional-aggregate ratio row. The date
     range predicate pushes into the parquet scan; the ratio is one double
     division of two exact decimal sums."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-02-01")
     )
@@ -350,7 +344,6 @@ def q298_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     view + subquery). The max comparison happens in EXACT decimal — no
     double round-trip — so ties are bit-identical in both engines; the
     one-row max side is broadcast."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
@@ -392,7 +385,6 @@ def q299_small_qty_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact on the same key, so no re-partitioning happens between agg and
     join. The 0.2× limit is computed identically in both engines: exact
     decimal sum → double divide by count → double multiply."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pa = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         (
@@ -442,7 +434,6 @@ def q300_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a tiny fraction of orders) drive the join, so AQE can flip the
     order/customer probes to broadcast at runtime. LIMIT is tiebroken by
     the unique o_orderkey."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy(F.col("l_orderkey").alias("big_okey"))
@@ -485,7 +476,6 @@ def q301_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and quantity/size bounds) to push below the join while the full
     disjunction evaluates after — the query exists to pin that the OR
     doesn't degrade the join to a nested loop."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     cond = (
@@ -535,7 +525,6 @@ def q302_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     above-average filter, and an anti-join against the recent-order keys.
     The anti-join shuffles on custkey; the date filter pushes into the
     orders scan so only the recent slice is shuffled."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     seg_avg = (
         c.filter(F.col("c_acctbal") > 0)

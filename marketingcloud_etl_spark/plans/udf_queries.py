@@ -28,7 +28,6 @@ from pyspark.sql.window import Window as W
 from pyspark.sql.types import DoubleType
 
 from ..io import table
-from ..session import prep
 from .catalog import query
 
 
@@ -50,7 +49,6 @@ def q62_pandas_udf_vecnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pandas_udf`` — the vectorized-Python hot path (one Arrow batch
     per task, never per-row pickling). The kernel folds sequentially in
     float64 so the result is bit-identical to the oracle's list fold."""
-    prep(spark)
 
     @F.pandas_udf(DoubleType())
     def l2_norm(vecs: pd.Series) -> pd.Series:
@@ -101,7 +99,6 @@ def q63_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: applyInPandas shuffles by the grouping key and holds
     ONE group per Arrow batch in memory — fine for bounded groups like
     ``lang``; keyed differently for heavy skew (salting, skew.py)."""
-    prep(spark)
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = [int(v) for v in pdf["n_chars"]]
@@ -139,7 +136,6 @@ def q64_pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pandas_udf`` (a UDAF, type-hint form: Series -> scalar). Median of integers is exact in binary
     (middle value, or the mean of two ints — a dyadic rational), so it
     hash-matches across engines with no rounding protocol."""
-    prep(spark)
 
     @F.pandas_udf(DoubleType())
     def med(v: pd.Series) -> float:
@@ -181,7 +177,6 @@ def q65_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     table function) with a LATERAL correlated call — the UDTF shape for
     expansions that aren't a plain ``explode``. Emits (token, pos),
     1-based, matching the oracle's parallel unnest."""
-    prep(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="token: string, pos: int")
@@ -225,7 +220,6 @@ def q103_mapinarrow_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     with pyarrow.compute kernels, then aggregated JVM-side. The fastest
     Python boundary Spark offers; the right tool when the kernel
     already exists in Arrow. Deterministic, so fully oracle-checked."""
-    prep(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -272,7 +266,6 @@ def q118_scalar_udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     row still pays a Python-function call — for string ops this stays
     ~10x slower than the codegen'd built-in (q27); use only when the
     kernel genuinely needs Python."""
-    prep(spark)
     from pyspark.sql.types import IntegerType, StringType
 
     @F.udf(returnType=StringType(), useArrow=True)
@@ -309,7 +302,6 @@ def q152_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion on either side. The money sum goes through decimal128
     inside Arrow (then one cast to double), matching the engine's
     decimal-money protocol exactly — which the oracle value-checks."""
-    prep(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -362,7 +354,6 @@ def q160_mapinpandas_charge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow channel."""
     import numpy as np
 
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_discount", "l_tax"
     )
@@ -411,7 +402,6 @@ def q194_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's whitespace tokens to the analyzed width. Used via SQL
     LATERAL correlation, one UDTF call per document row; the oracle
     recomputes the same token columns with list indexing."""
-    prep(spark)
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import LongType, StringType, StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
@@ -461,7 +451,6 @@ def q205_arrow_interop_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-off boundary to the Arrow ecosystem (polars/duckdb/feature
     stores); the driver materialization scopes it to dimension-sized
     frames — corpus-scale exchange goes through mapInArrow (q103)."""
-    prep(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -501,7 +490,6 @@ def q206_pandas_api_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Proves a pandas-habituated user gets DISTRIBUTED execution with
     values identical to the SQL path (the oracle) — including the
     exact-cents protocol expressed pandas-style (round→astype)."""
-    prep(spark)
     import warnings
 
     import pyspark.pandas as ps  # noqa: F401
@@ -564,7 +552,6 @@ def q248_udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Catalyst plans the shuffle+sort and the Python side stays a
     10-line accumulator. Oracle = the q56 lag/cumsum formulation plus
     per-session maxima."""
-    prep(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(
@@ -629,7 +616,6 @@ def q263_pandas_udf_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove the lifecycle); the arithmetic is exact integer cents so the
     oracle reproduces it in SQL. Same Arrow transfer as q62, different
     execution contract."""
-    prep(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("bigint")
@@ -667,7 +653,6 @@ def q264_pandas_udaf_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum bit-for-bit. The frame must be BOUNDED (Spark requirement for
     pandas window UDFs) — which is also the only shape that scales:
     each frame ships ≤3 values over Arrow."""
-    prep(spark)
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

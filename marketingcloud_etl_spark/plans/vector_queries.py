@@ -14,7 +14,6 @@ from ..functions.vectors import cosine, cosine_sql
 from ..io import query_state, table
 from ..operators.multimodal import attach_binary_payload, extract_features
 from ..operators.similarity import ann_lsh_topk, knn_bruteforce
-from ..session import prep
 from .catalog import query
 
 _COS_AB = cosine_sql("a.embedding", "b.embedding")
@@ -56,7 +55,6 @@ def q48_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine similarity of consecutive vector pairs — pure SQL
     higher-order fold, bit-identical across engines (float→double
     widening, sequential fold, IEEE ops in the same order)."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
@@ -88,7 +86,6 @@ def q48_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q49_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for 5 query vectors: broadcast
     cross join + window top-k (operators/similarity.knn_bruteforce)."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     return knn_bruteforce(e, e.filter(F.col("vec_id") < 5), k=5)
 
@@ -113,7 +110,6 @@ def q53_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup scan within label blocks (blocked
     pairwise compare — the verify stage downstream of ANN candidate
     generation). Sampled so the oracle's fold stays cheap."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     s = e.filter((F.col("vec_id") % 10 == 0) & (F.col("label") < 3))
     a = s.select(F.col("label"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
@@ -136,7 +132,6 @@ def q52_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets — the 100 TB similarity-search path (candidate join is
     O(n·probes), not O(n·q)). Recall vs brute force is pinned in
     tests/test_similarity.py; driver check is rows-only."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     return ann_lsh_topk(e, e.filter(F.col("vec_id") < 5), k=5)
 
@@ -146,7 +141,6 @@ def q54_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal pipeline plumbing: binary payload column + metadata
     struct → Arrow-batched mapInPandas feature extraction (decode
     stubbed deterministically) → per-type rollup."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     feats = extract_features(attach_binary_payload(d))
     return feats.groupBy("media_type").agg(
@@ -165,7 +159,6 @@ def q66_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     process and dataset (deterministic Lloyd result, cached collected)
     — the offline-train / online-search split of a real vector store.
     Recall vs brute force is pinned in tests/test_operators.py."""
-    prep(spark)
     from ..operators.similarity import ann_ivf_topk
 
     e = table(spark, sf_dir, "embeddings")
@@ -180,7 +173,6 @@ def q73_frame_sample_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mapInPandas one-to-many) → extract per-doc dims → plan aspect-
     preserving resizes — decode stubbed, every Spark boundary real.
     Deterministic digests pin the values run-over-run (tests)."""
-    prep(spark)
     from ..operators.multimodal import attach_binary_payload, extract_features, frame_sample, resize_plan
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -226,7 +218,6 @@ def q337_multimodal_feature_parity(spark: SparkSession, sf_dir: str) -> DataFram
     the byte/char equivalence explicit rather than assumed. This makes
     the mapInPandas batch boundary itself driver-evidence — q54 stays
     as the rollup form over the full corpus."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 300)
         & (F.octet_length("text") == F.length("text"))
@@ -274,7 +265,6 @@ def q338_frame_sample_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-digests them — the ASCII guard (both sides) makes byte-window
     == char-window exact. Positive operands make Python floor division
     and DuckDB's truncating // identical here."""
-    prep(spark)
     from ..operators.multimodal import frame_sample
 
     d = table(spark, sf_dir, "documents").filter(
@@ -296,7 +286,6 @@ def q138_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     split as the codebooks); every search scans the index file, never
     re-encodes the corpus. Full vectors page in only for the rerank
     join. Recall floor vs brute force is driver-checked by q139."""
-    prep(spark)
     from ..operators.similarity import (
         ann_ivf_pq_topk,
         build_ivf_pq_index,
@@ -339,7 +328,6 @@ def q139_ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ ≥ 0.2 (approximations compose multiplicatively). A broken
     signature fold, cell assignment, or ADC walk lands near chance and
     flips its flag."""
-    prep(spark)
     from ..operators.similarity import (
         ann_ivf_pq_topk,
         ann_ivf_topk,
@@ -420,7 +408,6 @@ def q134_semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-recall-dependent (approximate by design, SemDeDup-style),
     so they are pinned by the planted-near-dup e2e test
     (tests/test_semantic_dedup.py), not the oracle."""
-    prep(spark)
     from ..operators.semantic_dedup import semantic_dedup
 
     e = table(spark, sf_dir, "embeddings")
@@ -478,7 +465,6 @@ def q105_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact-cosine reranked to top-5. Codebooks train once per
     process and dataset (deterministic per-subspace Lloyd). Recall and
     determinism are pinned in tests/test_operators.py."""
-    prep(spark)
     from ..operators.similarity import ann_pq_topk
 
     e = table(spark, sf_dir, "embeddings")
@@ -513,7 +499,6 @@ def q163_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong argmin flips a boolean."""
     import numpy as np
 
-    prep(spark)
     from ..operators.similarity import _argmin_sqdist_sql, kmeans_euclidean
 
     emb = table(spark, sf_dir, "embeddings")
@@ -608,7 +593,6 @@ def q174_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     (train stats, then verify vs the broadcast 64-row stats table);
     everything is closed-form IEEE arithmetic on identical operands,
     so DuckDB reproduces the floats bit-for-bit."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     x = emb.select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "x")
@@ -666,7 +650,6 @@ def q187_jl_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 95.2 %, matching the √(2/k)=0.25 per-vector std the
     lemma predicts) — the oracle checks the booleans plus the exact
     vector count."""
-    prep(spark)
     import numpy as np
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
@@ -732,7 +715,6 @@ def q199_distributed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     explained ratio must exceed k/D (guaranteed above-isotropic: the
     top-k eigenvalues of any covariance sum to ≥ k/D of the trace).
     Two narrow passes, zero shuffles beyond the one-row aggregates."""
-    prep(spark)
     import numpy as np
     import pandas as pd
 
@@ -814,7 +796,6 @@ def q207_logistic_regression_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-model ln 2, and held-in accuracy is at least the base rate.
     (Fixed LR=0.5 full-batch — monotonicity per step is NOT claimed;
     the convergence bounds above are step-size-robust.)"""
-    prep(spark)
     import numpy as np
     import pandas as pd
 
@@ -933,7 +914,6 @@ def q220_binary_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the packed codes are the in-memory filter tier: scan
     billions of codes cheaply, rerank survivors in float (the
     q138/q139 protocol)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     emb = table(spark, sf_dir, "embeddings")
@@ -1006,7 +986,6 @@ def q221_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is total so ranks are deterministic. First-4-dims /
     first-20-vectors projection keeps the verified output bounded;
     the plan is identical for all 64."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     emb = table(spark, sf_dir, "embeddings")
@@ -1067,7 +1046,6 @@ def q261_hyperplane_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFra
     (bit-identical doubles, so borderline signs can't diverge). One
     narrow projection pass + one per-cell window; at corpus scale the
     cells shard the shuffle."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "embeddings")
@@ -1134,7 +1112,6 @@ def q271_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order would be engine-dependent, so the aggregation
     stays with the reader and every emitted value is exact. Broadcast
     query side, one pass over the corpus (q49's physical shape)."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     e = table(spark, sf_dir, "embeddings")
@@ -1209,7 +1186,6 @@ def q276_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. A cosine well below 1.0 is the alarm. One explode +
     one (half, dim)-keyed aggregation (128 output rows), then
     driver-scale arithmetic."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     half = F.when(F.col("vec_id") < 250, "a").otherwise("b")
     exploded = e.select(
@@ -1301,7 +1277,6 @@ def q331_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring parallelizes over the corpus; votes and accuracy are
     query-sized. Complements q271 (retrieval metrics) with the
     CLASSIFICATION quality lens the `label` column exists for."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"),
@@ -1396,7 +1371,6 @@ def q368_mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFr
     sorted order, so the result value-hashes. Scale: the corpus is
     touched ONCE (narrow explode + map-side-combined count); everything
     downstream is bounded by the cell table, not the data."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     pts = e.select(
         "label", F.posexplode("embedding").alias("dim", "v")
@@ -1574,7 +1548,6 @@ def q374_mmr_diversified_retrieval(spark: SparkSession, sf_dir: str) -> DataFram
     growth, found the hard way). MMR cost is k·|candidates| sims —
     independent of corpus size; only candidate generation touches the
     corpus (one pass here; the q66 IVF tier past ~10⁵ vectors)."""
-    prep(spark)
     e = table(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("v"))
     cand = (
@@ -1741,7 +1714,6 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors, unchanged downstream)."""
     from pyspark.sql.window import Window as W
 
-    prep(spark)
     from ..functions.text import tokens
     from ..operators.retrieval import bm25_serve, write_bm25_index
 
@@ -1892,7 +1864,6 @@ def q435_patch_grid_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the training-shard writer groups tiles; the Arrow batch boundary
     is the only Python crossing, and a real decoder slots into the
     same iterator without touching the plan shape."""
-    prep(spark)
     from ..operators.multimodal import attach_binary_payload, extract_features, patch_grid
 
     # the ASCII guard is applied on BOTH sides (q337/q338's explicit
@@ -2011,7 +1982,6 @@ def q452_interleaved_multimodal_packing(spark: SparkSession, sf_dir: str) -> Dat
     exchange because both item sets key on the same (source, doc_id)
     layout. Patch fan-out is Arrow-batched with a static ≤ 8×5
     bound; a real decoder slots into the same iterator."""
-    prep(spark)
     from pyspark.sql.window import Window as W
 
     from ..functions.text import tokens

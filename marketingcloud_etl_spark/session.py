@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "prep"]
+__all__ = ["get_spark", "prep", "conf_scope"]
 
 
 def get_spark(
@@ -54,8 +56,9 @@ def get_spark(
 def prep(spark: SparkSession) -> SparkSession:
     """Pin runtime-settable conf that correctness depends on.
 
-    Called at the top of every catalog query so results are stable even
-    under an externally-created SparkSession (the driver builds its own):
+    The catalog's ``query()`` decorator calls it before every registered
+    query runs, so results are stable even under an externally-created
+    SparkSession (a caller that builds its own):
     UTC session timezone (timestamp values must agree with the DuckDB
     oracle) and ANSI off (null-on-bad-cast semantics, matching the
     reference's null-on-parse-failure at
@@ -76,8 +79,29 @@ def prep(spark: SparkSession) -> SparkSession:
         cpus = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 4)))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # restore broadcast joins for dimension tables — q70 (bucketed
-    # join) disables them within its own run, and queries must not
-    # leak conf into each other
+    # the broadcast threshold get_spark sets: an externally-created
+    # session keeps Spark's 10 MB default, and the catalog's join
+    # plans are laid out for the larger one
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Hold ``confs`` on the session for the body, then put every key
+    back: a key that had a value gets it again, a key that had none is
+    unset, also when the body raises. The one way a query changes
+    session conf beyond :func:`prep`. Spark reads most conf when it
+    plans or starts a query, so the body must run the action, not only
+    build the frame."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -223,6 +223,9 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
 
 
 RUN_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+# the session conf a transformWithState query starts under (read at
+# query start, so it is held with session.conf_scope around the run)
+ROCKSDB_CONFS = {"spark.sql.streaming.stateStore.providerClass": RUN_ROCKSDB}
 
 
 def enable_transform_with_state(spark: SparkSession) -> bool:
@@ -241,7 +244,8 @@ def enable_transform_with_state(spark: SparkSession) -> bool:
     2. the RocksDB state store (multiple column families) — set
        ``spark.sql.streaming.stateStore.providerClass`` to
        :data:`RUN_ROCKSDB` before STARTING the query (per-query conf,
-       read at query start; callers restore it after).
+       read at query start; callers hold :data:`ROCKSDB_CONFS` with
+       ``session.conf_scope`` around the run).
 
     Returns False only when no protobuf can be resolved at all (then
     callers skip — never silently compute something else).

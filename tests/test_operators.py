@@ -1770,16 +1770,14 @@ def test_range_clustered_counts_pid_ranges_are_disjoint_and_ascending(spark):
         _PID,
         _range_clustered_counts,
     )
+    from marketingcloud_etl_spark.session import conf_scope
 
     df = spark.range(60_000).select(
         (F.col("id") % 3).alias("g"),
         ((F.col("id") * 2654435761) % 20011).alias("v"),
     )
     # at test scale AQE would coalesce every range partition into one
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with conf_scope(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
         for cnt in (F.count(F.lit(1)), F.sum(F.lit(1)).cast("long")):
             spans = (
                 _range_clustered_counts(df, ["g"], "v", cnt)
@@ -1794,8 +1792,6 @@ def test_range_clustered_counts_pid_ranges_are_disjoint_and_ascending(spark):
             assert len(spans) > 1, "needs several range partitions to test"
             for a, b in zip(spans, spans[1:]):
                 assert tuple(a.hi) < tuple(b.lo), (a, b)
-    finally:
-        spark.conf.set(key, prev)
 
 
 def test_release_frees_every_quantile_pin(spark):
@@ -2314,7 +2310,7 @@ def test_erase_from_state_tombstones(spark, tmp_path):
 
 
 def test_grouped_quantile_from_counts_matches_builtin(spark):
-    """grouped_quantile_from_counts (q402's operator) over a
+    """grouped_quantile_from_bounded_counts (q402's operator) over a
     pre-aggregated counts frame — including DUPLICATE (group, value)
     rows, the state ∪ batch shape before the merge agg — must be
     bitwise equal to the builtin ``percentile`` over the expanded raw
@@ -2324,8 +2320,7 @@ def test_grouped_quantile_from_counts_matches_builtin(spark):
     from pyspark.sql import functions as F
 
     from marketingcloud_etl_spark.operators.ranking import (
-        grouped_quantile_from_counts,
-        release_ranking_caches,
+        grouped_quantile_from_bounded_counts,
     )
 
     rng = random.Random(7)
@@ -2357,23 +2352,6 @@ def test_grouped_quantile_from_counts_matches_builtin(spark):
         )
         .collect()
     }
-    got = {
-        r.g: (r.q25, r.q50, r.q75, r.n)
-        for r in grouped_quantile_from_counts(
-            cdf, ["g"], "v", "cnt", [0.25, 0.5, 0.75], ["q25", "q50", "q75"]
-        ).collect()
-    }
-    release_ranking_caches()
-    assert got == want  # exact ==, no tolerance: bitwise contract
-
-    # the bounded-domain fast path (q402's operator since round 12 —
-    # one collect_list per group + HOF walk instead of the distributed
-    # prefix-sum machinery) must be BITWISE equal to both the machinery
-    # and the builtin on the same duplicate-row counts frame
-    from marketingcloud_etl_spark.operators.ranking import (
-        grouped_quantile_from_bounded_counts,
-    )
-
     got_bounded = {
         r.g: (r.q25, r.q50, r.q75, r.n)
         for r in grouped_quantile_from_bounded_counts(

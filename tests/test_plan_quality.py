@@ -326,15 +326,13 @@ def test_bloom_filter_join_injects_might_contain(spark, sf_dir):
     forced, the fact-side scan must carry the injected bloom-filter
     predicate (might_contain) — no false negatives, so results are
     unchanged (the oracle checks that); this pins the PLAN property."""
-    from marketingcloud_etl_spark.plans.relational import bloom_join_frame
+    from marketingcloud_etl_spark.plans.relational import BLOOM_CONFS, bloom_join_frame
+    from marketingcloud_etl_spark.session import conf_scope
 
-    frame, restore = bloom_join_frame(spark, sf_dir)
-    try:
-        plan = _plan(frame)
+    with conf_scope(spark, BLOOM_CONFS):
+        plan = _plan(bloom_join_frame(spark, sf_dir))
         assert "might_contain" in plan.lower()
         assert "SortMergeJoin" in plan  # broadcast really was disabled
-    finally:
-        restore()
 
 
 def test_bloom_incremental_dedup_prefilters_before_join(spark, sf_dir):

@@ -2,8 +2,9 @@
 and the source guards that keep it the only owner of per-query state
 in ``plans/``, ``sinks/``, ``operators/`` and ``streaming/``, keep
 ``ranking.pin_cache`` the only place ``plans/`` and ``operators/``
-persist a frame, and keep ``io.table`` the only place that decides
-scan parallelism."""
+persist a frame, keep ``io.table`` the only place that decides scan
+parallelism, and keep ``session.py`` the only module that changes
+session conf."""
 
 from __future__ import annotations
 
@@ -237,17 +238,32 @@ def test_scan_parallelism_is_decided_only_in_io():
 
 
 def test_io_sets_no_session_conf():
-    """io.table returns conf-independent scans: a session conf flipped
-    around a lazy read is a race with every later action."""
-    tree = ast.parse((PKG / "io.py").read_text())
-    found = [
-        f"io.py:{n.lineno}: {ast.unparse(n.func)}"
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Call)
-        and isinstance(n.func, ast.Attribute)
-        and n.func.attr == "set"
-        and ast.unparse(n.func.value).endswith("conf")
-    ]
+    """Session conf has one owner, session.py: ``prep``, which the
+    catalog's ``query()`` runs before every query, and ``conf_scope``.
+    No other module sets or unsets conf (io.table returns
+    conf-independent scans, and a conf flipped around a lazy frame is a
+    race with every later action), and no plans/ module calls ``prep``
+    itself."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "session.py":
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            name = ast.unparse(n.func)
+            attr = n.func.attr if isinstance(n.func, ast.Attribute) else None
+            sets_conf = attr in ("set", "unset") and ast.unparse(n.func.value).endswith("conf")
+            sql = ast.unparse(n.args[0]).strip("'\" ").upper() if n.args else ""
+            if sets_conf or attr == "sql" and sql.startswith(("SET ", "RESET")):
+                found.append(f"{rel}:{n.lineno}: {name}")
+            if (
+                rel.startswith("plans/")
+                and rel != "plans/catalog.py"
+                and name.split(".")[-1] == "prep"
+            ):
+                found.append(f"{rel}:{n.lineno}: {name}()")
     assert not found, "\n".join(found)
 
 
@@ -321,3 +337,35 @@ def test_rewritten_fixture_is_not_served_stale(tmp_path, sf_dir):
     pq.write_table(half, sf / "orders.parquet")
     assert n_sum() == half.num_rows
     assert os.listdir(tmp_path) == ["sf"]
+
+
+def test_shim_zip_is_not_served_stale(tmp_path):
+    """The protobuf shim zip is built once per process from that
+    process's shim text: a second process with a changed text ships the
+    change, and neither leaves a zip in TMPDIR. Activating the shim does
+    not make it pass for a real protobuf distribution."""
+    from marketingcloud_etl_spark import _pbcompat
+
+    if not os.path.isdir(os.path.join(_pbcompat._GCLOUD_TP, "cloudsdk", "google", "protobuf")):
+        pytest.skip("no bundled protobuf runtime on this machine")
+    code = (
+        "import sys, zipfile\n"
+        "from marketingcloud_etl_spark import _pbcompat\n"
+        "_pbcompat._GOOGLE_INIT += sys.argv[1]\n"
+        "real = _pbcompat.real_protobuf_available()\n"
+        "assert _pbcompat.activate()\n"
+        "assert _pbcompat.real_protobuf_available() == real\n"
+        "with zipfile.ZipFile(_pbcompat.shim_zip()) as z:\n"
+        "    sys.stdout.write(z.read('google/__init__.py').decode())\n"
+    )
+    env = dict(os.environ, PYTHONPATH=str(PKG.parent), TMPDIR=str(tmp_path))
+
+    def shipped(suffix: str) -> str:
+        return subprocess.run(
+            [sys.executable, "-c", code, suffix],
+            env=env, capture_output=True, text=True, timeout=300, check=True,
+        ).stdout
+
+    assert shipped("") == _pbcompat._GOOGLE_INIT
+    assert shipped("# patched\n") == _pbcompat._GOOGLE_INIT + "# patched\n"
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("mcetl_")]
