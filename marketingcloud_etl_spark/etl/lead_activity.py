@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import content_hash
 from ..sinks.upsert import overwrite_parquet, upsert_parquet
-from ..sources.rest import register_rest_source, slot_options
+from ..sources.rest import check_page_size, register_rest_source, slot_options
 
 # reference date format "%m/%d/%Y %I:%M:%S %p" (:140) → Spark pattern;
 # both parsers accept non-padded month/day/hour and return null on
@@ -82,6 +82,7 @@ def read_lead_activity(
     db_count: int = 0,
     page_size: int = 2500,
 ) -> DataFrame:
+    check_page_size(page_size)
     register_rest_source(spark)
     return (
         spark.read.format("rest_pages")

@@ -34,12 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hex_int_expr
 from .components import dedup_clusters
 from .similarity import _normalize
-
-# hash-split protocol shared with q85/q110: first 8 md5 hex chars of the
-# stringified key as a bigint, mod 100
-_H32_OF = "cast(conv(substring(md5(cast({e} as string)), 1, 8), 16, 10) as bigint)"
 
 
 def _probed_cells(
@@ -194,7 +191,8 @@ def semantic_dedup(
     # instead of re-running candidate generation per action
     edges = edges.localCheckpoint()
     clustered = dedup_clusters(df, edges.select("id_a", "id_b"), id_col=id_col)
-    bucket = F.pmod(F.expr(_H32_OF.format(e="component")), F.lit(100))
+    # the hash-split protocol shared with q85/q110: md5-prefix digest mod 100
+    bucket = F.pmod(F.expr(hex_int_expr("md5(cast(component as string))")), F.lit(100))
     assign = clustered.withColumn(
         "split",
         F.when(bucket >= 100 - test_pct, F.lit("test")).otherwise(F.lit("train")),

@@ -14,12 +14,12 @@ Cross-engine value protocol: audits hash and compare CANONICAL forms,
 one per type — int/varchar → plain string, double → floor(x·100)
 whole cents (a pure function of the IEEE bits, so Spark and DuckDB
 produce identical bigints without any string-formatting agreement),
-timestamp → epoch microseconds. Canonical strings are length-prefixed
-and unit-separator-joined per functions/hashing.py's injectivity
-argument, then md5'd; the 32-bit hex-prefix digest (the _H32 idiom,
-q272/q363 family) accumulates as TWO overflow-proof bigint half-sums
-into an ORDER-INSENSITIVE, ADDITIVE table checksum (see the protocol
-comment at ``_checksum_sums_spark``).
+timestamp → epoch microseconds. Canonical strings go through
+functions/hashing.py's injective field encoding, then md5; the 32-bit
+hex-prefix digest (``hex_int``) accumulates as TWO overflow-proof
+bigint half-sums into an ORDER-INSENSITIVE, ADDITIVE table checksum
+(``checksum_half_sums``; the protocol's rationale is hashing.py's
+module doc).
 """
 
 from __future__ import annotations
@@ -28,26 +28,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.hashing import (
+    checksum_half_sums,
+    checksum_half_sums_sql,
+    content_hash_sql,
+    encode_fields,
+    hex_int,
+    hex_int_expr,
+    hex_int_sql,
+)
 from ..io import query_state, table
 from .catalog import query
 
 # ---------------------------------------------------------------- canonical
-
-# the injective encoding is functions/hashing.py's — import its
-# constants rather than re-hardcoding them, so a sentinel/separator
-# change can never silently fork the audit digests from the dedup
-# family's content hashes
-from ..functions.hashing import NULL_SENTINEL, SEP
-
-# guard with an explicit raise, not `assert` — asserts are stripped
-# under `python -O`, and a silent constant drift would fork the audit
-# digests from the content-hash family with no error anywhere
-if NULL_SENTINEL != "\x00NULL\x00" or SEP != "\x1f":
-    raise ValueError(
-        "audit_queries' hardcoded DuckDB literals are out of sync with "
-        f"functions/hashing.py (NULL_SENTINEL={NULL_SENTINEL!r}, SEP={SEP!r})"
-    )
-_NULL = "chr(0) || 'NULL' || chr(0)"  # NULL_SENTINEL spelled in DuckDB
 
 
 def _canon_spark(col: str, typ: str) -> Column:
@@ -72,51 +65,11 @@ def _canon_duck(col: str, typ: str) -> str:
 
 
 def _row_digest_spark(cols: list[tuple[str, str]]) -> Column:
-    parts = []
-    for name, typ in cols:
-        s = F.coalesce(
-            _canon_spark(name, typ).cast("string"), F.lit(NULL_SENTINEL)
-        )
-        parts.append(F.concat(F.length(s).cast("string"), F.lit(":"), s))
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(SEP, *parts)), 1, 8), 16, 10
-    ).cast("bigint")
+    return hex_int(F.md5(encode_fields(_canon_spark(n, t) for n, t in cols)))
 
 
 def _row_digest_duck(cols: list[tuple[str, str]]) -> str:
-    fields = []
-    for name, typ in cols:
-        s = f"coalesce(cast({_canon_duck(name, typ)} as varchar), {_NULL})"
-        fields.append(f"cast(length({s}) as varchar) || ':' || {s}")
-    return (
-        "('0x' || substr(md5(concat_ws(chr(31), "
-        + ", ".join(fields)
-        + ")), 1, 8))::BIGINT"
-    )
-
-
-# The checksum is TWO bigint sums — the digest's low and high 16-bit
-# halves summed separately. A single bigint sum of 32-bit digests
-# exceeds int64 at ~2^32 rows (Spark wraps silently, DuckDB promotes
-# to HUGEINT and the bigint cast fails) — diverging exactly at the
-# scale a migration checksum exists for — while a decimal(38,0)
-# accumulator is exact but ~2x slower (measured: 6.0 s vs 3.7 s for
-# the q408 battery at sf0.1). Each half-sum is bounded by 2^16 × rows,
-# so int64 is exact past 10^14 rows, the full 32 bits of digest
-# entropy survive across the pair, and the aggregation stays in
-# whole-stage codegen. Both engines compute identical integers.
-
-
-def _checksum_sums_spark(digest: Column) -> list[Column]:
-    from ..functions.hashing import checksum_half_sums
-
-    return checksum_half_sums(digest)
-
-
-def _checksum_sums_duck(digest_sql: str) -> str:
-    from ..functions.hashing import checksum_half_sums_sql
-
-    return checksum_half_sums_sql(digest_sql)
+    return hex_int_sql(content_hash_sql(_canon_duck(n, t) for n, t in cols))
 
 
 # the audited tables and their typed column lists (full width each)
@@ -165,7 +118,7 @@ def _checksum_oracle() -> str:
     for tbl, cols in _CHECKSUM_TABLES.items():
         branches.append(
             f"""SELECT '{tbl}' AS tbl, cast(count(*) as bigint) AS n_rows,
-                   {_checksum_sums_duck(_row_digest_duck(cols))}
+                   {checksum_half_sums_sql(_row_digest_duck(cols))}
             FROM {tbl}"""
         )
     return "\nUNION ALL\n".join(branches)
@@ -180,7 +133,7 @@ def q408_table_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
     """CROSS-ENGINE TABLE CHECKSUM — the migration-validation
     primitive: an order-insensitive content checksum (each row's
     canonical 32-bit digest, summed as its lo/hi 16-bit halves — two
-    overflow-proof bigints, see the protocol comment above) plus row
+    overflow-proof bigints, see functions/hashing.py) plus row
     count, per audited table. Two engines that hold the same rows
     produce the same (n_rows, checksum_lo, checksum_hi) triple
     regardless of partitioning, file layout, or row order — the first
@@ -200,7 +153,7 @@ def q408_table_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
         outs.append(
             t.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                *_checksum_sums_spark(_row_digest_spark(cols)),
+                *checksum_half_sums(_row_digest_spark(cols)),
             ).select(
                 F.lit(tbl).alias("tbl"), "n_rows", "checksum_lo", "checksum_hi"
             )
@@ -219,25 +172,20 @@ _DOC_COLS: list[tuple[str, str]] = [
     ("n_chars", "int"),
 ]
 
-_SPLIT_SPARK = (
-    "conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) % 10"
-)
-_SPLIT_DUCK = "('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::BIGINT % 10"
-
 
 @query(
     "q416_split_release_audit",
     oracle=f"""
     WITH s AS (
-      SELECT *, CASE WHEN {_SPLIT_DUCK} < 8 THEN 'train'
-                     WHEN {_SPLIT_DUCK} = 8 THEN 'val'
+      SELECT *, CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
                      ELSE 'test' END AS split
-      FROM documents
+      FROM (SELECT *, {hex_int_sql("md5(cast(doc_id as varchar))")} % 10 AS b
+            FROM documents)
     )
     SELECT split,
            cast(count(*) as bigint) AS n_docs,
            cast(sum(n_chars) as bigint) AS n_chars,
-           {_checksum_sums_duck(_row_digest_duck(_DOC_COLS))}
+           {checksum_half_sums_sql(_row_digest_duck(_DOC_COLS))}
     FROM s GROUP BY split
     """,
     tags=("audit", "llm-pipeline", "reconciliation", "sampling"),
@@ -259,7 +207,7 @@ def q416_split_release_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a 3-value key — map-side combine reduces it to one tiny
     exchange."""
     d = table(spark, sf_dir, "documents")
-    bucket = F.expr(_SPLIT_SPARK)
+    bucket = F.expr(hex_int_expr("md5(cast(doc_id as string))")) % 10
     return (
         d.withColumn(
             "split",
@@ -269,7 +217,7 @@ def q416_split_release_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("n_chars"),
-            *_checksum_sums_spark(_row_digest_spark(_DOC_COLS)),
+            *checksum_half_sums(_row_digest_spark(_DOC_COLS)),
         )
     )
 
@@ -750,7 +698,7 @@ def merge_checksum_triples(state: DataFrame, batch: DataFrame) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            cast(count(*) as bigint) AS n_rows,
-           {_checksum_sums_duck(_row_digest_duck(_EVENTS_COLS))}
+           {checksum_half_sums_sql(_row_digest_duck(_EVENTS_COLS))}
     FROM events GROUP BY event_type
     """,
     tags=("audit", "incremental", "state", "reconciliation"),
@@ -777,7 +725,7 @@ def q417_incremental_checksum_state(spark: SparkSession, sf_dir: str) -> DataFra
     def triple(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            *_checksum_sums_spark(_row_digest_spark(_EVENTS_COLS)),
+            *checksum_half_sums(_row_digest_spark(_EVENTS_COLS)),
         )
 
     def build(sd: str) -> None:
@@ -803,7 +751,7 @@ def q417_incremental_checksum_state(spark: SparkSession, sf_dir: str) -> DataFra
     oracle=f"""
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
            cast(count(*) as bigint) AS n_rows,
-           {_checksum_sums_duck(_row_digest_duck(_EVENTS_COLS))}
+           {checksum_half_sums_sql(_row_digest_duck(_EVENTS_COLS))}
     FROM events GROUP BY day
     """,
     tags=("audit", "reconciliation", "partitioning"),
@@ -830,7 +778,7 @@ def q418_partition_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            *_checksum_sums_spark(_row_digest_spark(_EVENTS_COLS)),
+            *checksum_half_sums(_row_digest_spark(_EVENTS_COLS)),
         )
     )
 
@@ -954,35 +902,24 @@ def q419_schema_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------- round-10: repair
 
-# q431 row digest over the replicated projection (pk + payload), and
-# the pk-hash bucket the Merkle comparison is keyed on
+# q431's pk-hash bucket count, the partition the Merkle comparison is keyed on
 _Q431_BUCKETS = 64
-_Q431_DIG_SPARK = (
-    "cast(conv(substring(md5(concat_ws(':', l_orderkey, l_linenumber,"
-    " qty, price_c)), 1, 8), 16, 10) as bigint)"
-)
-_Q431_DIG_DUCK = (
-    "('0x' || substr(md5(l_orderkey || ':' || l_linenumber || ':' || qty"
-    " || ':' || price_c), 1, 8))::BIGINT"
-)
-_Q431_BK_SPARK = (
-    "pmod(cast(conv(substring(md5(concat_ws(':', l_orderkey, l_linenumber)),"
-    f" 1, 8), 16, 10) as bigint), {_Q431_BUCKETS})"
-)
-_Q431_BK_DUCK = (
-    "('0x' || substr(md5(l_orderkey || ':' || l_linenumber), 1, 8))::BIGINT"
-    f" % {_Q431_BUCKETS}"
-)
 
 
-@query(
-    "q431_anti_entropy_repair",
-    oracle=f"""
+def _q431_oracle() -> str:
+    bucket = hex_int_sql("md5(l_orderkey || ':' || l_linenumber)")
+    # row digest over the replicated projection (pk + payload)
+    sums = checksum_half_sums_sql(
+        hex_int_sql("md5(l_orderkey || ':' || l_linenumber || ':' || qty || ':' || price_c)"),
+        lo="lo",
+        hi="hi",
+    )
+    return f"""
     WITH a AS (
       SELECT l_orderkey, l_linenumber,
              floor(l_quantity)::BIGINT AS qty,
              round(l_extendedprice * 100)::BIGINT AS price_c,
-             {_Q431_BK_DUCK} AS bucket
+             {bucket} % {_Q431_BUCKETS} AS bucket
       FROM lineitem
     ), b AS (
       SELECT l_orderkey, l_linenumber,
@@ -992,13 +929,11 @@ _Q431_BK_DUCK = (
       FROM a WHERE bucket <> 7
     ), ta AS (
       SELECT bucket, count(*) AS n,
-             cast(sum(({_Q431_DIG_DUCK}) & 65535) as bigint) AS lo,
-             cast(sum(({_Q431_DIG_DUCK}) >> 16) as bigint) AS hi
+             {sums}
       FROM a GROUP BY bucket
     ), tb AS (
       SELECT bucket, count(*) AS n,
-             cast(sum(({_Q431_DIG_DUCK}) & 65535) as bigint) AS lo,
-             cast(sum(({_Q431_DIG_DUCK}) >> 16) as bigint) AS hi
+             {sums}
       FROM b GROUP BY bucket
     ), div AS (
       SELECT ta.bucket, ta.n AS n_a, coalesce(tb.n, 0) AS n_b
@@ -1010,8 +945,7 @@ _Q431_BK_DUCK = (
       SELECT * FROM a WHERE bucket IN (SELECT bucket FROM div)
     ), tr AS (
       SELECT bucket, count(*) AS n,
-             cast(sum(({_Q431_DIG_DUCK}) & 65535) as bigint) AS lo,
-             cast(sum(({_Q431_DIG_DUCK}) >> 16) as bigint) AS hi
+             {sums}
       FROM rep GROUP BY bucket
     )
     SELECT d.bucket::BIGINT AS bucket,
@@ -1020,7 +954,12 @@ _Q431_BK_DUCK = (
            cast(d.n_a as bigint) AS rows_copied,
            (tr.n = ta.n AND tr.lo = ta.lo AND tr.hi = ta.hi) AS equal_after
     FROM div d JOIN ta USING (bucket) JOIN tr USING (bucket)
-    """,
+    """
+
+
+@query(
+    "q431_anti_entropy_repair",
+    oracle=_q431_oracle(),
     tags=("audit", "checksum", "repair", "replication"),
 )
 def q431_anti_entropy_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1050,20 +989,23 @@ def q431_anti_entropy_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import pin_cache
 
     li = table(spark, sf_dir, "lineitem")
+    dig = F.expr(hex_int_expr("md5(concat_ws(':', l_orderkey, l_linenumber, qty, price_c))"))
     # the replica projection feeds five consumers (ta, tb via b, both
     # repair branches, tr) — pin it or the scan+digest subtree runs
-    # five times (measured 5.9 s -> ~3 s at sf0.1)
-    # the row digest is STORED on the pinned frame — ta/tb/tr are three
-    # aggregation passes, and recomputing the md5 in each tripled the
-    # hash work; only B's corrupted rows re-digest.
+    # five times. The row digest is STORED on the pinned frame —
+    # ta/tb/tr are three aggregation passes that would each redo the
+    # md5; only B's corrupted rows re-digest.
     a = pin_cache(
         li.select(
             "l_orderkey",
             "l_linenumber",
             F.floor("l_quantity").cast("bigint").alias("qty"),
             F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("price_c"),
-            F.expr(_Q431_BK_SPARK).alias("bucket"),
-        ).withColumn("dig", F.expr(_Q431_DIG_SPARK))
+            F.pmod(
+                F.expr(hex_int_expr("md5(concat_ws(':', l_orderkey, l_linenumber))")),
+                F.lit(_Q431_BUCKETS),
+            ).alias("bucket"),
+        ).withColumn("dig", dig)
     )
     corrupt = (F.col("bucket") == 21) & (F.col("l_orderkey") % 3 == 0)
     b = (
@@ -1071,11 +1013,9 @@ def q431_anti_entropy_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("qty", F.when(corrupt, F.col("qty") + 1).otherwise(F.col("qty")))
         .withColumn(
             "dig",
-            F.when(corrupt, F.expr(_Q431_DIG_SPARK)).otherwise(F.col("dig")),
+            F.when(corrupt, dig).otherwise(F.col("dig")),
         )
     )
-
-    from ..functions.hashing import checksum_half_sums
 
     def triples(df: DataFrame) -> DataFrame:
         return df.groupBy("bucket").agg(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hex_int, hex_int_expr, hex_int_sql
 from ..functions.text import tokens_sql
 from ..io import query_state, table
 from ..operators.dedup import (
@@ -111,14 +112,13 @@ def q60_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H32 = "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"
-_H32_DUCK = "('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::BIGINT"
-
-
 @query(
     "q85_hash_sample_split",
     oracle=f"""
-    WITH h AS (SELECT doc_id, lang, {_H32_DUCK} % 100 AS bucket FROM documents)
+    WITH h AS (
+      SELECT doc_id, lang, {hex_int_sql("md5(cast(doc_id as varchar))")} % 100 AS bucket
+      FROM documents
+    )
     SELECT lang,
            count(*) AS n_docs,
            cast(sum(CASE WHEN bucket < 10 THEN 1 ELSE 0 END) as bigint) AS n_sample,
@@ -135,7 +135,7 @@ def q85_hash_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key alone, so a re-run or a different engine selects the SAME
     rows). 10% sample bucket, 90/10 train/test split."""
     d = table(spark, sf_dir, "documents")
-    bucket = F.pmod(F.expr(_H32), F.lit(100))
+    bucket = F.pmod(F.expr(hex_int_expr("md5(cast(doc_id as string))")), F.lit(100))
     h = d.select("lang", bucket.alias("bucket"))
     return h.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -150,8 +150,10 @@ def q85_hash_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ranked AS (
       SELECT doc_id, lang, n_chars,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY {_H32_DUCK}, doc_id) AS rn
+             row_number() OVER (
+               PARTITION BY lang
+               ORDER BY {hex_int_sql("md5(cast(doc_id as varchar))")}, doc_id
+             ) AS rn
       FROM documents
     )
     SELECT doc_id, lang, n_chars FROM ranked WHERE rn <= 20
@@ -165,7 +167,7 @@ def q86_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")
-    w = W.partitionBy("lang").orderBy(F.expr(_H32), "doc_id")
+    w = W.partitionBy("lang").orderBy(F.expr(hex_int_expr("md5(cast(doc_id as string))")), "doc_id")
     return (
         d.select("doc_id", "lang", "n_chars", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 20)
@@ -329,12 +331,6 @@ def q109_dup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# hash32 of an arbitrary bigint expression (same fold as _H32, which is
-# pinned to doc_id): first 8 md5 hex chars as a bigint, both engines
-_H32_OF = "cast(conv(substring(md5(cast({e} as string)), 1, 8), 16, 10) as bigint)"
-_H32_OF_DUCK = "('0x' || substr(md5(cast({e} as varchar)), 1, 8))::BIGINT"
-
-
 @query(
     "q110_leakage_safe_split",
     oracle=f"""
@@ -346,7 +342,7 @@ _H32_OF_DUCK = "('0x' || substr(md5(cast({e} as varchar)), 1, 8))::BIGINT"
       WHERE d.doc_id < 500
     ), split AS (
       SELECT doc_id, component, group_id,
-             CASE WHEN {_H32_OF_DUCK.format(e='group_id')} % 100 >= 90
+             CASE WHEN {hex_int_sql("md5(cast(group_id as varchar))")} % 100 >= 90
                   THEN 'test' ELSE 'train' END AS split
       FROM universe
     )
@@ -378,7 +374,7 @@ def q110_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "component",
         F.coalesce(F.col("component"), F.col("doc_id")).alias("group_id"),
     )
-    bucket = F.pmod(F.expr(_H32_OF.format(e="group_id")), F.lit(100))
+    bucket = F.pmod(F.expr(hex_int_expr("md5(cast(group_id as string))")), F.lit(100))
     split = universe.withColumn(
         "split", F.when(bucket >= 90, F.lit("test")).otherwise(F.lit("train"))
     )
@@ -979,7 +975,8 @@ def q159_hll_union_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH keyed AS (
       SELECT doc_id, lang, n_chars,
-             ln(({_H32_DUCK} + 1) / 4294967296.0) / n_chars AS wkey
+             ln(({hex_int_sql("md5(cast(doc_id as varchar))")} + 1) / 4294967296.0)
+               / n_chars AS wkey
       FROM documents WHERE n_chars > 0
     )
     SELECT doc_id, lang, n_chars FROM keyed
@@ -997,7 +994,7 @@ def q162_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive at any scale. ln() and the division are single IEEE ops
     on identical operands, so DuckDB agrees exactly."""
     d = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = (F.expr(_H32) + 1) / F.lit(4294967296.0)
+    u = (F.expr(hex_int_expr("md5(cast(doc_id as string))")) + 1) / F.lit(4294967296.0)
     key = F.log(u) / F.col("n_chars")
     return (
         d.select("doc_id", "lang", "n_chars", key.alias("wkey"))
@@ -1034,7 +1031,7 @@ def q162_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(sum(p.n_chars) as bigint) AS sel_chars
     FROM picked p JOIN quota q USING (source)
     GROUP BY q.source, q.n_docs, q.n_quota
-    """.format(h32=_H32_DUCK, toks=tokens_sql("p.text")),
+    """.format(h32=hex_int_sql("md5(cast(doc_id as varchar))"), toks=tokens_sql("p.text")),
     tags=("sampling", "pipeline"),
 )
 def q190_training_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,7 +1069,9 @@ def q190_training_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1), F.floor(F.col("w_raw") / F.col("w_sum") * 200).cast("int")
         ).alias("n_quota"),
     )
-    sel_w = W.partitionBy("source").orderBy(F.expr(_H32), "doc_id")
+    sel_w = W.partitionBy("source").orderBy(
+        F.expr(hex_int_expr("md5(cast(doc_id as string))")), "doc_id"
+    )
     ranked = docs.withColumn("rn", F.row_number().over(sel_w))
     picked = ranked.join(F.broadcast(quota), "source").filter(
         F.col("rn") <= F.col("n_quota")
@@ -1101,7 +1100,8 @@ def q190_training_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q222_kfold_assignment",
     oracle=f"""
     WITH folds AS (
-      SELECT doc_id, cast({_H32_DUCK} % 5 as int) AS fold FROM documents
+      SELECT doc_id, cast({hex_int_sql("md5(cast(doc_id as varchar))")} % 5 as int) AS fold
+      FROM documents
     ), per AS (
       SELECT fold, count(*) AS n_docs FROM folds GROUP BY fold
     ), tot AS (
@@ -1125,9 +1125,8 @@ def q222_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage-safe variant when near-duplicates exist — this is the
     plain i.i.d. protocol."""
     d = table(spark, sf_dir, "documents")
-    folds = d.select(
-        "doc_id", F.pmod(F.expr(_H32), F.lit(5)).cast("int").alias("fold")
-    )
+    fold = F.pmod(F.expr(hex_int_expr("md5(cast(doc_id as string))")), F.lit(5))
+    folds = d.select("doc_id", fold.cast("int").alias("fold"))
     per = folds.groupBy("fold").agg(F.count(F.lit(1)).alias("n_docs"))
     tot = per.agg(
         F.sum("n_docs").alias("n_total"),
@@ -1357,14 +1356,15 @@ def q245_grouped_hash_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q272_bootstrap_ci",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id, sum(cast(round(value * 100) as bigint)) AS cents
       FROM events GROUP BY user_id
     ), reps AS (
       SELECT u.user_id, u.cents, b.b,
-             ('0x' || substr(md5(cast(u.user_id as varchar) || '_'
-                                 || cast(b.b as varchar)), 1, 4))::BIGINT % 3 AS w
+             {hex_int_sql(
+                 "md5(cast(u.user_id as varchar) || '_' || cast(b.b as varchar))", digits=4
+             )} % 3 AS w
       FROM per_user u CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
     )
     SELECT cast(b as bigint) AS replicate,
@@ -1397,15 +1397,10 @@ def q272_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(31))).alias("b"),
     ).withColumn(
         "w",
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("_", F.col("user_id").cast("string"), F.col("b").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        hex_int(
+            F.md5(F.concat_ws("_", F.col("user_id").cast("string"), F.col("b").cast("string"))),
+            digits=4,
+        )
         % 3,
     )
     return reps.groupBy(F.col("b").cast("bigint").alias("replicate")).agg(
@@ -1419,15 +1414,14 @@ def q272_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q285_negative_sampling",
-    oracle="""
+    oracle=f"""
     WITH maxp AS (SELECT max(p_partkey) AS mp FROM part),
     pos AS (
       SELECT l_orderkey, l_partkey AS pos_part
       FROM lineitem WHERE l_orderkey % 37 = 0 AND l_linenumber = 1
     ), negs AS (
       SELECT p.l_orderkey, p.pos_part, k.k AS neg_slot,
-             ('0x' || substr(md5(cast(p.l_orderkey as varchar) || ':'
-                                 || cast(k.k as varchar)), 1, 8))::BIGINT
+             {hex_int_sql("md5(cast(p.l_orderkey as varchar) || ':' || cast(k.k as varchar))")}
                % m.mp + 1 AS neg_part
       FROM pos p
       CROSS JOIN (SELECT unnest(range(0, 4)) AS k) k
@@ -1461,21 +1455,15 @@ def q285_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(mp), F.lit(True))
         .withColumn(
             "neg_part",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col("l_orderkey").cast("string"),
-                            F.col("neg_slot").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            hex_int(
+                F.md5(
+                    F.concat_ws(
+                        ":",
+                        F.col("l_orderkey").cast("string"),
+                        F.col("neg_slot").cast("string"),
+                    )
+                )
+            )
             % F.col("mp")
             + 1,
         )
@@ -1752,10 +1740,9 @@ def q312_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q329_linear_counting",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
-      SELECT DISTINCT ('0x' || substr(md5(cast(o_custkey as varchar)), 1, 8))::BIGINT % 4096
-               AS bucket
+      SELECT DISTINCT {hex_int_sql("md5(cast(o_custkey as varchar))")} % 4096 AS bucket
       FROM orders
     ), occ AS (
       SELECT cast(count(*) as bigint) AS occupied FROM hashed
@@ -1798,9 +1785,7 @@ def q329_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact/HLL handoff, made deterministic."""
     o = table(spark, sf_dir, "orders")
     m = 4096
-    bucket = F.expr(
-        "cast(conv(substring(md5(cast(o_custkey as string)), 1, 8), 16, 10) as bigint)"
-    ) % m
+    bucket = F.expr(hex_int_expr("md5(cast(o_custkey as string))")) % m
     occ = (
         o.select(bucket.alias("bucket"))
         .distinct()
@@ -1937,16 +1922,18 @@ def q347_hits_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ta.unionByName(th)
 
 
+_Q348_ROW_DUCK = (
+    "md5(cast(doc_id as varchar) || '\x1f' || source || '\x1f' || lang || '\x1f'"
+    " || cast(n_chars as varchar) || '\x1f' || md5(text))"
+)
+
+
 @query(
     "q348_training_shard_manifest",
-    oracle="""
+    oracle=f"""
     WITH per AS (
-      SELECT ('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::BIGINT % 16
-               AS shard,
-             ('0x' || substr(md5(
-                cast(doc_id as varchar) || '\x1f' || source || '\x1f' ||
-                lang || '\x1f' || cast(n_chars as varchar) || '\x1f' ||
-                md5(text)), 1, 15))::BIGINT AS rh,
+      SELECT {hex_int_sql("md5(cast(doc_id as varchar))")} % 16 AS shard,
+             {hex_int_sql(_Q348_ROW_DUCK, digits=15)} AS rh,
              len(list_filter(regexp_split_to_array(text, '\\s+'),
                              t -> t != '')) AS ntok,
              n_chars
@@ -1987,27 +1974,20 @@ def q348_training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a one-row broadcast. At 100 TB the same plan writes the shards with
     partitionBy('shard') — the manifest aggregation is this query."""
     d = table(spark, sf_dir, "documents")
-    h32 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    rh = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "\x1f",
-                    F.col("doc_id").cast("string"),
-                    F.col("source"),
-                    F.col("lang"),
-                    F.col("n_chars").cast("string"),
-                    F.md5("text"),
-                )
-            ),
-            1,
-            15,
+    h32 = hex_int(F.md5(F.col("doc_id").cast("string")))
+    rh = hex_int(
+        F.md5(
+            F.concat_ws(
+                "\x1f",
+                F.col("doc_id").cast("string"),
+                F.col("source"),
+                F.col("lang"),
+                F.col("n_chars").cast("string"),
+                F.md5("text"),
+            )
         ),
-        16,
-        10,
-    ).cast("bigint")
+        digits=15,
+    )
     from ..functions.text import tokens
 
     per = d.select(
@@ -3973,7 +3953,8 @@ def q405_incremental_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=f"""
     WITH keyed AS (
       SELECT doc_id, lang, n_chars,
-             ln(({_H32_DUCK} + 1) / 4294967296.0) / n_chars AS wkey
+             ln(({hex_int_sql("md5(cast(doc_id as varchar))")} + 1) / 4294967296.0)
+               / n_chars AS wkey
       FROM documents WHERE n_chars > 0
     )
     SELECT doc_id, lang, n_chars FROM keyed
@@ -4010,7 +3991,7 @@ def q407_incremental_sample_state(spark: SparkSession, sf_dir: str) -> DataFrame
     d = table(spark, sf_dir, "documents")
 
     def keyed(df: DataFrame) -> DataFrame:
-        u = (F.expr(_H32) + 1) / F.lit(4294967296.0)
+        u = (F.expr(hex_int_expr("md5(cast(doc_id as string))")) + 1) / F.lit(4294967296.0)
         return df.filter(F.col("n_chars") > 0).select(
             "doc_id", "lang", "n_chars", (F.log(u) / F.col("n_chars")).alias("wkey")
         )
@@ -4044,7 +4025,7 @@ _KMV_K = 16
     oracle=f"""
     WITH dh AS (
       SELECT DISTINCT event_type,
-             {_H32_OF_DUCK.format(e='user_id')} AS h
+             {hex_int_sql("md5(cast(user_id as varchar))")} AS h
       FROM events
     ), bk AS (
       SELECT event_type, h,
@@ -4086,8 +4067,8 @@ def q422_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts, never hash-comparable): keep the k smallest distinct
     hash values per group; with h_(k) the k-th smallest of a 32-bit
     hash, distinct ≈ (k−1)·2³²/h_(k) (Bar-Yossef et al. 2002). Both
-    engines hash with the md5 _H32 protocol and divide with
-    non-negative integer division, so per-group estimates AND the
+    engines hash with functions/hashing.py's md5-prefix digest and
+    divide with non-negative integer division, so per-group estimates AND the
     merged estimate hash-match exactly.
 
     The MERGE is the point: KMV sketches union by pooling the hash
@@ -4108,7 +4089,7 @@ def q422_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
-    h = F.expr(_H32_OF.format(e="user_id"))
+    h = F.expr(hex_int_expr("md5(cast(user_id as string))"))
 
     dh = ev.select("event_type", h.alias("h")).distinct()
     w = W.partitionBy("event_type").orderBy("h")
@@ -4170,44 +4151,37 @@ _Q426_CAP = 24  # split threshold (rows per (band, bucket))
 # shingle — (digest, hex offset) pairs below. Two md5 calls per shingle
 # (not six) and ONE fold computing all six minima at once: the naive
 # per-permutation array_min(transform(...)) re-hashes every shingle per
-# permutation and benched 14 s at sf0.1; this shape runs the same math
-# in one pass (the simhash64 lesson applied to minhash).
+# permutation; this shape runs the same math in one pass (the simhash64
+# lesson applied to minhash).
 _MH_CHUNKS = (("a", 1), ("a", 9), ("a", 17), ("a", 25), ("b", 1), ("b", 9))
-# templates are parameterized on the shingle COLUMN name ({col}) — a
-# blind string replace of "sh" would silently corrupt any future token
-# containing those letters (hash, shiftright, ...)
-_MH_SPARK_ALL_T = (
-    "aggregate("
-    "  transform("
-    "    transform({col}, s -> struct(md5(s) AS a, md5(concat(s, '#')) AS b)),"
-    "    x -> array("
-    + ", ".join(
-        f"cast(conv(substring(x.{d}, {o}, 8), 16, 10) as bigint)"
-        for d, o in _MH_CHUNKS
+
+
+def _mh_spark(col: str = "sh") -> str:
+    """Spark SQL: the six minima over the shingle array column ``col``."""
+    chunks = ", ".join(hex_int_expr(f"x.{d}", o) for d, o in _MH_CHUNKS)
+    return (
+        "aggregate("
+        f"  transform(transform({col}, s -> struct(md5(s) AS a, md5(concat(s, '#')) AS b)),"
+        f"    x -> array({chunks})),"
+        "  array_repeat(cast(4294967296 as bigint), 6),"
+        "  (acc, h) -> zip_with(acc, h, (u, v) -> least(u, v)))"
     )
-    + ")),"
-    "  array_repeat(cast(4294967296 as bigint), 6),"
-    "  (acc, h) -> zip_with(acc, h, (u, v) -> least(u, v)))"
-)
-_MH_SPARK_ALL = _MH_SPARK_ALL_T.format(col="sh")
-_MH_DUCK = (
-    "list_aggregate(list_transform({col}, s -> ('0x' || substr({base},"
-    " {off}, 8))::BIGINT), 'min')"
-)
 
 
 def _mh_duck(i: int, col: str = "sh") -> str:
     d, off = _MH_CHUNKS[i]
     base = "md5(s)" if d == "a" else "md5(s || '#')"
-    return _MH_DUCK.format(base=base, off=off, col=col)
-_BK_SPARK = (
-    "pmod(cast(conv(substring(md5(concat_ws(':', m{a}, m{b}, {band})), 1, 8),"
-    f" 16, 10) as bigint), {_Q426_MOD})"
-)
-_BK_DUCK = (
-    "('0x' || substr(md5(m{a} || ':' || m{b} || ':' || {band}), 1, 8))::BIGINT"
-    f" % {_Q426_MOD}"
-)
+    return f"list_aggregate(list_transform({col}, s -> {hex_int_sql(base, off)}), 'min')"
+
+
+def _band_bucket_spark(b: int) -> str:
+    md5 = f"md5(concat_ws(':', m{2 * b}, m{2 * b + 1}, {b}))"
+    return f"pmod({hex_int_expr(md5)}, {_Q426_MOD})"
+
+
+def _band_bucket_duck(b: int) -> str:
+    md5 = f"md5(m{2 * b} || ':' || m{2 * b + 1} || ':' || {b})"
+    return f"{hex_int_sql(md5)} % {_Q426_MOD}"
 
 
 @query(
@@ -4224,9 +4198,7 @@ _BK_DUCK = (
       FROM shin
     ), rows_ AS (
       {" UNION ALL ".join(
-          f"SELECT id, {b} AS band, "
-          + _BK_DUCK.format(a=2 * b, b=2 * b + 1, band=b)
-          + " AS bucket FROM sig"
+          f"SELECT id, {b} AS band, {_band_bucket_duck(b)} AS bucket FROM sig"
           for b in range(_Q426_BANDS)
       )}
     ), sizes AS (
@@ -4234,7 +4206,7 @@ _BK_DUCK = (
     ), split AS (
       SELECT r.id, r.band,
              r.bucket * 2 + CASE WHEN s.sz > {_Q426_CAP}
-               THEN ('0x' || substr(md5(cast(r.id as varchar)), 1, 8))::BIGINT % 2
+               THEN {hex_int_sql("md5(cast(r.id as varchar))")} % 2
                ELSE 0 END AS bucket
       FROM rows_ r JOIN sizes s USING (band, bucket)
     ), after AS (
@@ -4275,7 +4247,7 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-ability is the novelty: the production index hashes with
     xxhash64 (DuckDB-inexpressible, hence q50/q388's fingerprint-side
     verification), but this maintenance op is pinned end-to-end by
-    building the signatures from md5 via the _H32 protocol — the
+    building the signatures from md5 via the md5-prefix digest — the
     first exactly-hash-verified minhash pipeline in the catalog; the
     probe-equivalence contract (split probe ≡ unsplit probe) is
     pinned in tests/test_operators.py.
@@ -4291,7 +4263,7 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     corp = d.filter(F.col("doc_id") % 3 != 0).select(
         F.col("doc_id").alias("id"), word_shingles("text", 3).alias("sh")
     ).filter(F.size("sh") >= 1)
-    sig = corp.select("id", F.expr(_MH_SPARK_ALL).alias("mins")).select(
+    sig = corp.select("id", F.expr(_mh_spark()).alias("mins")).select(
         "id",
         *[
             F.element_at("mins", i + 1).alias(f"m{i}")
@@ -4303,7 +4275,7 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.array(
                 *[
-                    F.expr(_BK_SPARK.format(a=2 * b, b=2 * b + 1, band=b))
+                    F.expr(_band_bucket_spark(b))
                     for b in range(_Q426_BANDS)
                 ]
             )
@@ -4321,7 +4293,7 @@ def q426_lsh_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, _registry = split_hot_buckets(
         rows,
         _Q426_CAP,
-        bit=F.pmod(F.expr(_H32_OF.format(e="id")), F.lit(2)),
+        bit=F.pmod(F.expr(hex_int_expr("md5(cast(id as string))")), F.lit(2)),
         sizes=sizes.withColumnRenamed("sz", "__sz"),
     )
     after = split.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("sz"))
@@ -4478,8 +4450,8 @@ def q434_lsh_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level",
         inter.alias("inter"),
         uni.alias("uni"),
-        F.expr(_MH_SPARK_ALL_T.format(col="ash")).alias("amins"),
-        F.expr(_MH_SPARK_ALL_T.format(col="bsh")).alias("bmins"),
+        F.expr(_mh_spark("ash")).alias("amins"),
+        F.expr(_mh_spark("bsh")).alias("bmins"),
     )
     import functools
     import operator as _op
@@ -4524,7 +4496,7 @@ _Q436_M = 1024  # linear-counting bucket space
     oracle=f"""
     WITH dh AS (
       SELECT DISTINCT event_type,
-             {_H32_OF_DUCK.format(e='user_id')} AS h
+             {hex_int_sql("md5(cast(user_id as varchar))")} AS h
       FROM events
     ), bk AS (
       SELECT event_type, h,
@@ -4569,7 +4541,7 @@ def q436_sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     −m·ln((m−o)/m) over a 1024-bucket space) are computed next to the
     exact distinct count, and each estimator's error lands as an
     integer ppm column. Both estimators are DETERMINISTIC functions of
-    the data under the md5 _H32 protocol, so the accuracy report
+    the data under the md5-prefix digest, so the accuracy report
     itself is cross-engine hash-verified — the operator deciding
     "which sketch tier can carry this metric at 10⁹ keys" reads
     measured error, not datasheet error. The ln is a single libm call
@@ -4584,7 +4556,7 @@ def q436_sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     ev = table(spark, sf_dir, "events")
-    h = F.expr(_H32_OF.format(e="user_id"))
+    h = F.expr(hex_int_expr("md5(cast(user_id as string))"))
     dh = ev.select("event_type", h.alias("h")).distinct()
 
     w = W.partitionBy("event_type").orderBy("h")

@@ -18,7 +18,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.hashing import content_hash, content_hash_sql
+from ..functions.hashing import (
+    NULL_SQL,
+    checksum_half_sums,
+    checksum_half_sums_sql,
+    content_hash,
+    content_hash_sql,
+    hex_int,
+    hex_int_expr,
+    hex_int_sql,
+)
 from ..functions.money import dec
 from ..io import query_state, scratch_dir, table
 from .catalog import query
@@ -728,10 +737,10 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q113_training_export",
-    oracle="""
+    oracle=f"""
     WITH sharded AS (
       SELECT doc_id, source, n_chars,
-             ('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::BIGINT % 8 AS shard
+             {hex_int_sql("md5(cast(doc_id as varchar))")} % 8 AS shard
       FROM documents
     )
     SELECT shard,
@@ -757,10 +766,7 @@ def q113_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no global ordering), bounded file sizes for object-store-friendly
     parallel reads. At 100 TB this is exactly `repartition(4096,
     shard)` + the same write."""
-    shard = F.pmod(
-        F.expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"),
-        F.lit(8),
-    )
+    shard = F.pmod(F.expr(hex_int_expr("md5(cast(doc_id as string))")), F.lit(8))
     base, _ = query_state(
         "q113_training_export",
         sf_dir,
@@ -2188,15 +2194,18 @@ def q251_binary_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_Q258_ROW_DUCK = (
+    "md5(cast(l_orderkey as varchar) || '\x1f' || cast(l_linenumber as varchar)"
+    " || '\x1f' || cast(cast(round(l_extendedprice * 100) as bigint) as varchar)"
+    " || '\x1f' || l_returnflag)"
+)
+
+
 @query(
     "q258_table_checksum",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-      SELECT ('0x' || substr(md5(
-               cast(l_orderkey as varchar) || '\x1f' ||
-               cast(l_linenumber as varchar) || '\x1f' ||
-               cast(cast(round(l_extendedprice * 100) as bigint) as varchar) || '\x1f' ||
-               l_returnflag), 1, 15))::BIGINT AS rh
+      SELECT {hex_int_sql(_Q258_ROW_DUCK, digits=15)} AS rh
       FROM lineitem
     )
     SELECT cast(count(*) as bigint) AS n_rows,
@@ -2228,7 +2237,7 @@ def q258_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("bigint").cast("string"),
         F.col("l_returnflag"),
     )
-    rh = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
+    rh = hex_int(F.md5(row_str), digits=15)
     h = li.select(rh.alias("rh"))
     return h.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -3140,15 +3149,14 @@ def q318_late_arriving_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q325_synthetic_data_generator",
-    oracle="""
+    oracle=f"""
     WITH gen AS (
       SELECT r.range AS id,
-             ('0x' || substr(md5(cast(r.range as varchar) || ':cat'), 1, 8))::BIGINT % 7
-               AS category,
-             ('0x' || substr(md5(cast(r.range as varchar) || ':amt'), 1, 8))::BIGINT % 100000
+             {hex_int_sql("md5(cast(r.range as varchar) || ':cat')")} % 7 AS category,
+             {hex_int_sql("md5(cast(r.range as varchar) || ':amt')")} % 100000
                AS amount_cents,
              DATE '2024-01-01'
-               + cast(('0x' || substr(md5(cast(r.range as varchar) || ':day'), 1, 8))::BIGINT % 365
+               + cast({hex_int_sql("md5(cast(r.range as varchar) || ':day')")} % 365
                       as int) AS event_date
       FROM range(0, 100000) r
     )
@@ -3177,9 +3185,7 @@ def q325_synthetic_data_generator(spark: SparkSession, sf_dir: str) -> DataFrame
     g = spark.range(0, n_rows)
 
     def h(salt: str) -> F.Column:
-        return F.expr(
-            f"cast(conv(substring(md5(concat(cast(id as string), ':{salt}')), 1, 8), 16, 10) as bigint)"
-        )
+        return F.expr(hex_int_expr(f"md5(concat(cast(id as string), ':{salt}'))"))
 
     gen = g.select(
         F.col("id"),
@@ -3623,11 +3629,11 @@ def q335_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q354_audio_energy_windows",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT v.vec_id, cast(t.i as bigint) AS i,
-             ('0x' || substr(md5(cast(v.vec_id * 100000 + t.i as varchar)),
-                             1, 8))::BIGINT % 65536 - 32768 AS smp
+             {hex_int_sql("md5(cast(v.vec_id * 100000 + t.i as varchar))")} % 65536
+               - 32768 AS smp
       FROM (SELECT vec_id FROM embeddings WHERE vec_id < 64) v,
            unnest(range(0, 256)) AS t(i)
     ), w AS (
@@ -3663,21 +3669,13 @@ def q354_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
     # u(i) = h32(vec_id·1e5 + i) mod 65536; payload = LE bytes of u − 32768
+    u = hex_int_expr("md5(cast(vec_id * 100000 + i as string))")
+    le16 = f"lpad(hex(({u} % 65536 + 32768) % 65536), 4, '0')"
     hx = F.expr(
-        """
+        f"""
         array_join(
           transform(sequence(0, 255), i ->
-            concat(
-              substring(lpad(hex(
-                (cast(conv(substring(md5(cast(vec_id * 100000 + i as string)),
-                                    1, 8), 16, 10) as bigint) % 65536
-                 + 32768) % 65536), 4, '0'),
-                3, 2),
-              substring(lpad(hex(
-                (cast(conv(substring(md5(cast(vec_id * 100000 + i as string)),
-                                    1, 8), 16, 10) as bigint) % 65536
-                 + 32768) % 65536), 4, '0'),
-                1, 2))),
+            concat(substring({le16}, 3, 2), substring({le16}, 1, 2))),
           '')
         """
     )
@@ -4162,27 +4160,25 @@ def q423_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Row digests route NULLs through the NULL_SENTINEL protocol (the
-# audit_queries convention): Spark's concat_ws SKIPS null arguments
-# while DuckDB's || chain nullifies the whole digest, so a NULL
-# user_id/ts/value in a future events fixture would fork the q428/q430
-# checksums cross-engine silently. Coalescing every field to the
-# sentinel on BOTH engines makes the digest total. chr(0)||'NULL'||
-# chr(0) spells functions.hashing.NULL_SENTINEL in both SQL dialects.
-_CDC_NULL = "chr(0) || 'NULL' || chr(0)"
-_CDC_DIG_DUCK = (
-    f"('0x' || substr(md5("
-    f"coalesce(user_id::VARCHAR, {_CDC_NULL}) || ':' || "
-    f"coalesce(epoch_us(ts)::VARCHAR, {_CDC_NULL}) || ':' || "
-    f"coalesce((floor(value * 100)::BIGINT)::VARCHAR, {_CDC_NULL})"
-    f"), 1, 8))::BIGINT"
+# The CDC row digest routes NULLs through the NULL_SENTINEL protocol:
+# Spark's concat_ws SKIPS null arguments while DuckDB's || chain
+# nullifies the whole digest, so a NULL user_id/ts/value in a future
+# events fixture would fork the q428/q430 checksums cross-engine
+# silently. Coalescing every field to the sentinel on BOTH engines
+# makes the digest total.
+_CDC_DIG_DUCK = hex_int_sql(
+    f"md5(coalesce(user_id::VARCHAR, {NULL_SQL}) || ':' || "
+    f"coalesce(epoch_us(ts)::VARCHAR, {NULL_SQL}) || ':' || "
+    f"coalesce((floor(value * 100)::BIGINT)::VARCHAR, {NULL_SQL}))"
 )
-_CDC_DIG_SPARK = (
-    f"cast(conv(substring(md5(concat_ws(':', "
-    f"coalesce(cast(user_id as string), {_CDC_NULL}), "
-    f"coalesce(cast(unix_micros(ts) as string), {_CDC_NULL}), "
-    f"coalesce(cast(floor(value * 100) as string), {_CDC_NULL})"
-    f")), 1, 8), 16, 10) as bigint)"
+_CDC_DIG_SPARK = hex_int_expr(
+    f"md5(concat_ws(':', coalesce(cast(user_id as string), {NULL_SQL}), "
+    f"coalesce(cast(unix_micros(ts) as string), {NULL_SQL}), "
+    f"coalesce(cast(floor(value * 100) as string), {NULL_SQL})))"
+)
+_CDC_OP_DUCK = (
+    f"CASE WHEN {hex_int_sql('md5(cast(event_id as varchar))')} % 10 = 0"
+    " THEN 'D' ELSE 'U' END AS op"
 )
 
 
@@ -4197,14 +4193,7 @@ def _cdc_ops(ev: DataFrame) -> DataFrame:
         "event_id",
         "value",
         F.when(
-            F.pmod(
-                F.expr(
-                    "cast(conv(substring(md5(cast(event_id as string)), 1, 8),"
-                    " 16, 10) as bigint)"
-                ),
-                F.lit(10),
-            )
-            == 0,
+            F.pmod(F.expr(hex_int_expr("md5(cast(event_id as string))")), F.lit(10)) == 0,
             F.lit("D"),
         )
         .otherwise(F.lit("U"))
@@ -4216,9 +4205,7 @@ def _cdc_ops(ev: DataFrame) -> DataFrame:
     "q428_cdc_log_compaction",
     oracle=f"""
     WITH ops AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN ('0x' || substr(md5(cast(event_id as varchar)), 1, 8))::BIGINT
-                       % 10 = 0 THEN 'D' ELSE 'U' END AS op
+      SELECT user_id, ts, event_id, value, {_CDC_OP_DUCK}
       FROM events
     ), hor AS (
       SELECT date_trunc('day', max(ts)) - INTERVAL 6 DAY AS h FROM ops
@@ -4231,8 +4218,7 @@ def _cdc_ops(ev: DataFrame) -> DataFrame:
     ), snap AS (
       SELECT user_id % 8 AS bucket,
              count(*) AS n_keys,
-             cast(sum(({_CDC_DIG_DUCK}) & 65535) as bigint) AS checksum_lo,
-             cast(sum(({_CDC_DIG_DUCK}) >> 16) as bigint) AS checksum_hi
+             {checksum_half_sums_sql(_CDC_DIG_DUCK)}
       FROM latest WHERE op = 'U' GROUP BY 1
     ), dels AS (
       SELECT user_id % 8 AS bucket, count(*) AS n_deleted
@@ -4279,8 +4265,6 @@ def q428_cdc_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-per-key collapses via max_by-style aggregation instead of
     the window if rank ties never matter (they do here: ties broken
     by event_id for a deterministic checksum)."""
-    from ..functions.hashing import checksum_half_sums
-
     ops = _cdc_ops(table(spark, sf_dir, "events"))
     hor = ops.agg(
         (F.date_trunc("day", F.max("ts")) - F.expr("INTERVAL 6 DAYS")).alias("h")
@@ -4516,9 +4500,7 @@ def q429_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q430_asof_snapshot_read",
     oracle=f"""
     WITH ops AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN ('0x' || substr(md5(cast(event_id as varchar)), 1, 8))::BIGINT
-                       % 10 = 0 THEN 'D' ELSE 'U' END AS op
+      SELECT user_id, ts, event_id, value, {_CDC_OP_DUCK}
       FROM events
     ), vers AS (
       SELECT unnest([timestamp '2024-01-10 00:00:00',
@@ -4529,17 +4511,19 @@ def q429_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ops o JOIN vers ON o.ts < vers.v
     ), latest AS (
       SELECT * FROM head WHERE rn = 1
+    ), per AS (
+      SELECT strftime(v, '%Y-%m-%d') AS version,
+             user_id % 4 AS bucket,
+             cast(count(*) FILTER (op = 'U') as bigint) AS n_keys,
+             cast(count(*) FILTER (op = 'D') as bigint) AS n_deleted,
+             {checksum_half_sums_sql(f"CASE WHEN op = 'U' THEN {_CDC_DIG_DUCK} END")}
+      FROM latest
+      GROUP BY 1, 2
     )
-    SELECT strftime(v, '%Y-%m-%d') AS version,
-           user_id % 4 AS bucket,
-           cast(count(*) FILTER (op = 'U') as bigint) AS n_keys,
-           cast(count(*) FILTER (op = 'D') as bigint) AS n_deleted,
-           cast(coalesce(sum(({_CDC_DIG_DUCK}) & 65535) FILTER (op = 'U'), 0)
-                as bigint) AS checksum_lo,
-           cast(coalesce(sum(({_CDC_DIG_DUCK}) >> 16) FILTER (op = 'U'), 0)
-                as bigint) AS checksum_hi
-    FROM latest
-    GROUP BY 1, 2
+    SELECT version, bucket, n_keys, n_deleted,
+           cast(coalesce(checksum_lo, 0) as bigint) AS checksum_lo,
+           cast(coalesce(checksum_hi, 0) as bigint) AS checksum_hi
+    FROM per
     """,
     tags=("etl", "cdc", "timetravel", "mvcc"),
 )
@@ -4560,8 +4544,6 @@ def q430_asof_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     K simultaneous versions cost one K-way fan-out of the pruned
     slice, not K scans — how backfill jobs diff a pipeline against
     its last-known-good snapshot without replaying the log twice."""
-    from ..functions.hashing import checksum_half_sums
-
     ops = _cdc_ops(table(spark, sf_dir, "events"))
     vers = spark.range(1).select(
         F.explode(

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.hashing import hex_int_expr, hex_int_sql
 from ..functions.money import dec
 from ..io import table
 from ..operators.ranking import distributed_ntile, pin_cache
@@ -640,12 +641,12 @@ def q224_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q227_experiment_layers",
-    oracle="""
+    oracle=f"""
     WITH users AS (SELECT DISTINCT user_id FROM events),
     assigned AS (
       SELECT user_id,
-             cast(('0x' || substr(md5('layer1:' || cast(user_id as varchar)), 1, 8))::BIGINT % 2 as int) AS exp1,
-             cast(('0x' || substr(md5('layer2:' || cast(user_id as varchar)), 1, 8))::BIGINT % 2 as int) AS exp2
+             cast({hex_int_sql("md5('layer1:' || cast(user_id as varchar))")} % 2 as int) AS exp1,
+             cast({hex_int_sql("md5('layer2:' || cast(user_id as varchar))")} % 2 as int) AS exp2
       FROM users
     )
     SELECT exp1, exp2, cast(count(*) as bigint) AS n_users
@@ -664,20 +665,12 @@ def q227_experiment_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-test consumes arms produced exactly this way. This is the
     layered-experimentation infrastructure pattern: adding a layer
     never reshuffles existing ones."""
-    H1 = (
-        "cast(conv(substring(md5(concat('layer1:', cast(user_id as string))), 1, 8),"
-        " 16, 10) as bigint)"
-    )
-    H2 = (
-        "cast(conv(substring(md5(concat('layer2:', cast(user_id as string))), 1, 8),"
-        " 16, 10) as bigint)"
-    )
+    def arm(salt: str) -> F.Column:
+        h = F.expr(hex_int_expr(f"md5(concat('{salt}:', cast(user_id as string)))"))
+        return F.pmod(h, F.lit(2)).cast("int")
+
     users = table(spark, sf_dir, "events").select("user_id").distinct()
-    assigned = users.select(
-        "user_id",
-        F.pmod(F.expr(H1), F.lit(2)).cast("int").alias("exp1"),
-        F.pmod(F.expr(H2), F.lit(2)).cast("int").alias("exp2"),
-    )
+    assigned = users.select("user_id", arm("layer1").alias("exp1"), arm("layer2").alias("exp2"))
     return assigned.groupBy("exp1", "exp2").agg(F.count(F.lit(1)).alias("n_users"))
 
 

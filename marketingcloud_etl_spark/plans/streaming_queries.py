@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from ..functions.money import dec
 from ..io import query_state, scratch_dir, table
 from ..operators.sessionize import sessionize
-from ..session import conf_scope
 from .catalog import query
 
 
@@ -289,24 +288,18 @@ def q104_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState twin, so both stateful APIs carry the same
     hash-checked evidence. Needs the RocksDB state store (multi
     column-family) and protobuf in every Python worker; see
-    streaming/jobs.py::enable_transform_with_state — the session conf
+    streaming/jobs.py::transform_with_state_scope — the session conf
     is restored after the query finishes."""
     from pyspark.sql.window import Window as W
 
     from ..streaming.jobs import (
-        ROCKSDB_CONFS,
-        enable_transform_with_state,
         events_stream,
         run_to_memory,
         stateful_running_totals_tws,
+        transform_with_state_scope,
     )
 
-    if not enable_transform_with_state(spark):
-        raise RuntimeError(
-            "transformWithState needs protobuf; neither a real "
-            "distribution nor the _pbcompat bundled runtime is available"
-        )
-    with conf_scope(spark, ROCKSDB_CONFS):
+    with transform_with_state_scope(spark):
         out = run_to_memory(
             stateful_running_totals_tws(events_stream(spark, sf_dir)),
             "q104_out",
@@ -327,19 +320,9 @@ def _run_tws_final(spark: SparkSession, sf_dir: str, builder, sink_name: str, ou
     every processor carries)."""
     from pyspark.sql.window import Window as W
 
-    from ..streaming.jobs import (
-        ROCKSDB_CONFS,
-        enable_transform_with_state,
-        events_stream,
-        run_to_memory,
-    )
+    from ..streaming.jobs import events_stream, run_to_memory, transform_with_state_scope
 
-    if not enable_transform_with_state(spark):
-        raise RuntimeError(
-            "transformWithState needs protobuf; neither a real "
-            "distribution nor the _pbcompat bundled runtime is available"
-        )
-    with conf_scope(spark, ROCKSDB_CONFS):
+    with transform_with_state_scope(spark):
         out = run_to_memory(
             builder(events_stream(spark, sf_dir)), sink_name, output_mode="update"
         )
@@ -1310,25 +1293,19 @@ def _register_q350() -> None:
         the operator runs at production scale; RocksDB state store,
         checkpoint-recoverable like q104/q141/q142."""
         from ..streaming.jobs import (
-            ROCKSDB_CONFS,
-            enable_transform_with_state,
             events_stream_ordered,
             pattern_match_tws,
             run_to_memory,
+            transform_with_state_scope,
         )
 
-        if not enable_transform_with_state(spark):
-            raise RuntimeError(
-                "transformWithState needs protobuf; neither a real "
-                "distribution nor the _pbcompat bundled runtime is available"
+        with transform_with_state_scope(spark):
+            src = events_stream_ordered(spark, sf_dir).select(
+                "user_id",
+                F.unix_micros("ts").alias("ts_us"),
+                F.col("event_id").alias("eid"),
+                F.col("event_type").alias("et"),
             )
-        src = events_stream_ordered(spark, sf_dir).select(
-            "user_id",
-            F.unix_micros("ts").alias("ts_us"),
-            F.col("event_id").alias("eid"),
-            F.col("event_type").alias("et"),
-        )
-        with conf_scope(spark, ROCKSDB_CONFS):
             out = run_to_memory(
                 pattern_match_tws(src), "q350_out", output_mode="update"
             )
@@ -1767,9 +1744,9 @@ def _q443_oracle() -> str:
     derivation over that corpus returns — df and doc stats refolded
     from the postings (n_docs counted over docs WITH tokens, matching
     the Spark side's refold-from-postings semantics)."""
-    from .text_queries import _Q390_QUERY_TERMS
+    from .text_queries import Q390_QUERY_TERMS
 
-    qt_vals = ", ".join(f"({q}, '{t}')" for q, t in _Q390_QUERY_TERMS)
+    qt_vals = ", ".join(f"({q}, '{t}')" for q, t in Q390_QUERY_TERMS)
     layers = []
     for b in range(3):
         layers.append(f"""
@@ -1865,7 +1842,7 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted row-group layout the appends erode; none of this re-reads
     the corpus text."""
     from ..operators.retrieval import bm25_serve, build_bm25_index
-    from .text_queries import _Q390_QUERY_TERMS
+    from .text_queries import Q390_QUERY_TERMS
 
     d = table(spark, sf_dir, "documents")
 
@@ -1895,9 +1872,9 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, state = os.path.join(base, "arrivals"), os.path.join(base, "bm25")
 
     qt = spark.createDataFrame(
-        list(_Q390_QUERY_TERMS), "query_id int, t string"
+        list(Q390_QUERY_TERMS), "query_id int, t string"
     )
-    terms = sorted({t for _, t in _Q390_QUERY_TERMS})
+    terms = sorted({t for _, t in Q390_QUERY_TERMS})
     results: list[tuple] = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -8,10 +8,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.hashing import hex_int, hex_int_expr, hex_int_sql
 from ..functions.text import tokens, tokens_sql
 from ..functions.vectors import cosine_sql
-from ..operators.dedup import word_shingles
-from .dedup_queries import _H32, _H32_DUCK
 from ..io import query_state, scratch_dir, table
 from .catalog import query
 
@@ -289,8 +288,7 @@ def q46_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH th AS (
       SELECT doc_id,
-             list_transform({_TOKS},
-                            t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS h
+             list_transform({_TOKS}, t -> {hex_int_sql("md5(t)")}) AS h
       FROM documents WHERE doc_id < 300
     ), w AS (
       SELECT doc_id,
@@ -315,10 +313,7 @@ def q79_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same modulus), so the whole fingerprint table hash-matches."""
     k, b, p = 4, 257, (1 << 31) - 1
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    th = F.transform(
-        tokens("text"),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
-    )
+    th = F.transform(tokens("text"), lambda t: hex_int(F.md5(t)))
     d = d.withColumn("h", th).filter(F.size("h") >= k)
     # h is referenced twice (size + slice) so CollapseProject keeps the
     # alias materialized; each window folds its k hashes
@@ -500,7 +495,7 @@ def q89_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
       ) WHERE rn = 1
     ), split AS (
       SELECT lang,
-             CASE WHEN {_H32_DUCK} % 100 < 90
+             CASE WHEN {hex_int_sql("md5(cast(doc_id as varchar))")} % 100 < 90
                   THEN 'train' ELSE 'test' END AS split
       FROM deduped
     )
@@ -540,7 +535,7 @@ def q90_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = W.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = filtered.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    bucket = F.pmod(F.expr(_H32), F.lit(100))
+    bucket = F.pmod(F.expr(hex_int_expr("md5(cast(doc_id as string))")), F.lit(100))
     split = deduped.select(
         "lang", F.when(bucket < 90, "train").otherwise("test").alias("split")
     )
@@ -1609,7 +1604,7 @@ def _span_removal_report(d: DataFrame, spans: DataFrame) -> DataFrame:
     oracle=f"""
     WITH th AS (
       SELECT doc_id,
-             list_transform({_TOKS}, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS h
+             list_transform({_TOKS}, t -> {hex_int_sql("md5(t)")}) AS h
       FROM documents WHERE doc_id < 300
     ), w AS (
       SELECT doc_id,
@@ -1647,10 +1642,7 @@ def q189_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + groupBy, the q161/q173 shape."""
     k, b, p, wsel = 4, 257, (1 << 31) - 1, 4
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    th = F.transform(
-        tokens("text"),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
-    )
+    th = F.transform(tokens("text"), lambda t: hex_int(F.md5(t)))
     d = d.withColumn("h", th).filter(F.size("h") >= k + wsel - 1)
     wh = F.transform(
         F.sequence(F.lit(1), F.size("h") - (k - 1)),
@@ -1752,8 +1744,7 @@ def q201_sparse_tfidf_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id + 100000, source, text FROM documents WHERE doc_id % 10 = 0
     ), th AS (
       SELECT doc_id, source,
-             list_transform({_TOKS},
-                            t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS h
+             list_transform({_TOKS}, t -> {hex_int_sql("md5(t)")}) AS h
       FROM corpus
     ), ends AS (
       SELECT doc_id, source, h,
@@ -1800,10 +1791,7 @@ def q235_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("doc_id") + 100000
     )
     corpus = d.unionByName(planted)
-    th = F.transform(
-        tokens("text"),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
-    )
+    th = F.transform(tokens("text"), lambda t: hex_int(F.md5(t)))
     c = corpus.withColumn("h", th).filter(F.size("h") >= 1)
     n = F.size("h")
     c = c.withColumn(
@@ -1855,17 +1843,12 @@ def _simhash32_duck(h: str) -> str:
     return f"({terms})"
 
 
-_TH32 = (
-    "list_transform({t}, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)"
-)
-
-
 @query(
     "q244_simhash_exact_parity",
     oracle=f"""
     WITH th AS (
       SELECT doc_id,
-             {_TH32.format(t=_TOKS)} AS h
+             list_transform({_TOKS}, t -> {hex_int_sql("md5(t)")}) AS h
       FROM documents WHERE doc_id < 300
     ), sim AS (
       SELECT doc_id, {_simhash32_duck('h')} AS sh
@@ -1891,10 +1874,7 @@ def q244_simhash_exact_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     production 64-bit xxhash64 variant differs only in hash source and
     width."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    th = F.transform(
-        tokens("text"),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
-    )
+    th = F.transform(tokens("text"), lambda t: hex_int(F.md5(t)))
     d = d.withColumn("h", th).filter(F.size("h") >= 1)
     votes = (
         "aggregate(h, array_repeat(cast(0 as bigint), 32), "
@@ -2507,7 +2487,7 @@ def _bm25_agg_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lines
     ), th AS (
       SELECT doc_id,
-             list_transform(t, x -> ('0x' || substr(md5(x), 1, 8))::BIGINT) AS h
+             list_transform(t, x -> {hex_int_sql("md5(x)")}) AS h
       FROM toks WHERE len(t) >= 1
     ), ends AS (
       SELECT doc_id, h,
@@ -2576,9 +2556,7 @@ def q283_dedup_burden_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_units"),
         F.countDistinct("unit").alias("n_distinct"),
     )
-    th = F.transform(
-        t, lambda x: F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint")
-    )
+    th = F.transform(t, lambda x: hex_int(F.md5(x)))
     c = d.select(th.alias("h")).filter(F.size("h") >= 1)
     n = F.size("h")
     c = c.withColumn(
@@ -2683,8 +2661,8 @@ def q292_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, unnest({_TOKS}) AS t FROM documents
     ), hashed AS (
       SELECT t,
-             ('0x' || substr(md5(t), 1, 8))::BIGINT % 64 AS bucket,
-             CASE WHEN (('0x' || substr(md5(t), 1, 8))::BIGINT // 64) % 2 = 0
+             {hex_int_sql("md5(t)")} % 64 AS bucket,
+             CASE WHEN ({hex_int_sql("md5(t)")} // 64) % 2 = 0
                   THEN 1 ELSE -1 END AS sign
       FROM toks
     )
@@ -2707,7 +2685,7 @@ def q305_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket collision pressure (distinct tokens per bucket)."""
     d = table(spark, sf_dir, "documents")
     tok = d.select(F.explode(tokens("text")).alias("t"))
-    h32 = F.expr("cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint)")
+    h32 = F.expr(hex_int_expr("md5(t)"))
     hashed = tok.select(
         F.col("t"),
         (h32 % 64).alias("bucket"),
@@ -3436,7 +3414,7 @@ def q383_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q390_QUERY_TERMS = (
+Q390_QUERY_TERMS = (
     (1, "spark"), (1, "stream"),
     (2, "data"), (2, "window"), (2, "batch"),
     (3, "join"), (3, "query"),
@@ -3455,7 +3433,7 @@ _Q390_QUERY_TERMS = (
       SELECT (SELECT count(*) FROM documents) AS n_docs,
              (SELECT sum(len) FROM dl) AS total_len
     ), qt AS (
-      SELECT * FROM (VALUES {", ".join(f"({q}, '{t}')" for q, t in _Q390_QUERY_TERMS)})
+      SELECT * FROM (VALUES {", ".join(f"({q}, '{t}')" for q, t in Q390_QUERY_TERMS)})
         v(query_id, t)
     ), tf AS (
       SELECT doc_id, t, count(*) AS tf FROM toks
@@ -3526,10 +3504,10 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings = spark.read.parquet(base + "/postings")
     dfreq = spark.read.parquet(base + "/df")
     stats = spark.read.parquet(base + "/stats")
-    qt = spark.createDataFrame(list(_Q390_QUERY_TERMS), "query_id int, t string")
+    qt = spark.createDataFrame(list(Q390_QUERY_TERMS), "query_id int, t string")
     out = bm25_serve(
         qt, postings, dfreq, stats, top_k=5,
-        terms=sorted({t for _, t in _Q390_QUERY_TERMS}),
+        terms=sorted({t for _, t in Q390_QUERY_TERMS}),
     )
     return out.select(
         "query_id",
@@ -3553,7 +3531,7 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT (SELECT count(*) FROM dl) AS n_docs,
              (SELECT sum(len) FROM dl) AS total_len
     ), qt AS (
-      SELECT * FROM (VALUES {", ".join(f"({q}, '{t}')" for q, t in _Q390_QUERY_TERMS)})
+      SELECT * FROM (VALUES {", ".join(f"({q}, '{t}')" for q, t in Q390_QUERY_TERMS)})
         v(query_id, t)
     ), tf AS (
       SELECT doc_id, t, count(*) AS tf FROM toks
@@ -3641,10 +3619,10 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings, dfreq, stats = compact_bm25_index(
         spark, base, out_dir, keep=F.col("doc_id") % 7 != 2
     )
-    qt = spark.createDataFrame(list(_Q390_QUERY_TERMS), "query_id int, t string")
+    qt = spark.createDataFrame(list(Q390_QUERY_TERMS), "query_id int, t string")
     out = bm25_serve(
         qt, postings, dfreq, stats, top_k=5,
-        terms=sorted({t for _, t in _Q390_QUERY_TERMS}),
+        terms=sorted({t for _, t in Q390_QUERY_TERMS}),
     )
     return out.select(
         "query_id",
@@ -4496,7 +4474,7 @@ _DSIR_B = 256
       FROM ws WHERE len(w) >= 2
     ), bk AS (
       SELECT doc_id,
-             ('0x' || substr(md5(g), 1, 8))::BIGINT % {_DSIR_B} AS b
+             {hex_int_sql("md5(g)")} % {_DSIR_B} AS b
       FROM bg
     ), tgt AS (SELECT b FROM bk WHERE doc_id % 7 = 0),
     rawb AS (SELECT doc_id, b FROM bk WHERE doc_id % 7 <> 0),
@@ -4570,7 +4548,7 @@ def q449_dsir_hashed_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     bk = bg.select(
         "doc_id",
         (
-            F.expr("cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint)") % B
+            F.expr(hex_int_expr("md5(g)")) % B
         ).alias("b"),
     )
     tgt = bk.filter(F.col("doc_id") % 7 == 0)
@@ -5083,7 +5061,7 @@ def q453_filter_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH h AS (
       SELECT doc_id, source,
              cast(len({_TOKS}) as bigint) AS n_tokens,
-             ('0x' || substr(md5('shuffle:' || cast(doc_id as varchar)), 1, 8))::BIGINT AS k
+             {hex_int_sql("md5('shuffle:' || cast(doc_id as varchar))")} AS k
       FROM documents
     ), sharded AS (
       SELECT doc_id, source, n_tokens, k, k % 16 AS shard FROM h
@@ -5102,8 +5080,8 @@ def q453_filter_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q454_deterministic_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DETERMINISTIC CORPUS SHUFFLE + SHARDING — the step between
     curation and the trainer: every doc gets a pseudorandom but
-    REPRODUCIBLE shuffle key (md5 of a salted doc_id, the _H32
-    protocol — re-runs and backfills land identical shard files), keys
+    REPRODUCIBLE shuffle key (md5 of a salted doc_id, the md5-prefix
+    digest — re-runs and backfills land identical shard files), keys
     bucket into 16 shards, and each shard reports its composition
     (doc/token counts, source spread, key range) plus an ORDER DIGEST:
     md5 over the doc_ids in exact (key, doc_id) write order — the q442
@@ -5121,9 +5099,7 @@ def q454_deterministic_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataF
     size = corpus/16 (at real scale the digest would fold per shard
     FILE — same protocol, finer grain, embarrassingly parallel)."""
     d = table(spark, sf_dir, "documents")
-    k = F.expr(
-        "cast(conv(substring(md5(concat('shuffle:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
-    )
+    k = F.expr(hex_int_expr("md5(concat('shuffle:', cast(doc_id as string)))"))
     sharded = d.select(
         "doc_id",
         "source",
@@ -5331,12 +5307,12 @@ def q455_packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "q456_split_leakage_matrix",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id,
-             CASE WHEN ('0x' || substr(md5('shuffle:' || cast(doc_id as varchar)), 1, 8))::BIGINT % 10 < 8
+             CASE WHEN {hex_int_sql("md5('shuffle:' || cast(doc_id as varchar))")} % 10 < 8
                   THEN 'train'
-                  WHEN ('0x' || substr(md5('shuffle:' || cast(doc_id as varchar)), 1, 8))::BIGINT % 10 = 8
+                  WHEN {hex_int_sql("md5('shuffle:' || cast(doc_id as varchar))")} % 10 = 8
                   THEN 'val' ELSE 'test' END AS split,
              string_split(text, ' ') AS words
       FROM documents
@@ -5397,9 +5373,7 @@ def q456_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no data motion), so the audit composes onto any hash-split
     corpus without a repartition."""
     d = table(spark, sf_dir, "documents")
-    k = F.expr(
-        "cast(conv(substring(md5(concat('shuffle:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
-    )
+    k = F.expr(hex_int_expr("md5(concat('shuffle:', cast(doc_id as string)))"))
     split = (
         F.when(F.pmod(k, F.lit(10)) < 8, F.lit("train"))
         .when(F.pmod(k, F.lit(10)) == 8, F.lit("val"))

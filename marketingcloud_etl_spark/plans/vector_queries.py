@@ -10,6 +10,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import checksum_half_sums, checksum_half_sums_sql, hex_int, hex_int_sql
 from ..functions.vectors import cosine, cosine_sql
 from ..io import query_state, table
 from ..operators.multimodal import attach_binary_payload, extract_features
@@ -191,14 +192,14 @@ def q73_frame_sample_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q337_multimodal_feature_parity",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            'image/fake' AS media_type,
            cast(octet_length(encode(text)) as bigint) AS n_bytes,
            md5(text) AS payload_digest,
-           cast(('0x' || substr(md5(text), 1, 4))::int % 1920 + 1 as int) AS width,
-           cast(('0x' || substr(md5(text), 5, 4))::int % 1080 + 1 as int) AS height,
-           ('0x' || substr(md5(text), 9, 8))::bigint / 4294967295.0 AS feat_mean
+           cast({hex_int_sql("md5(text)", 1, 4)} % 1920 + 1 as int) AS width,
+           cast({hex_int_sql("md5(text)", 5, 4)} % 1080 + 1 as int) AS height,
+           {hex_int_sql("md5(text)", 9)} / 4294967295.0 AS feat_mean
     FROM documents
     WHERE doc_id < 300 AND octet_length(encode(text)) = length(text)
     """,
@@ -1816,12 +1817,12 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q435_patch_grid_parity",
-    oracle="""
+    oracle=f"""
     WITH feats AS (
       SELECT doc_id,
              md5(text) AS payload_digest,
-             ('0x' || substr(md5(text), 1, 4))::int % 1920 + 1 AS width,
-             ('0x' || substr(md5(text), 5, 4))::int % 1080 + 1 AS height
+             cast({hex_int_sql("md5(text)", 1, 4)} % 1920 + 1 as int) AS width,
+             cast({hex_int_sql("md5(text)", 5, 4)} % 1080 + 1 as int) AS height
       FROM documents
       WHERE doc_id < 300 AND octet_length(encode(text)) = length(text)
     ), patches AS (
@@ -1837,11 +1838,8 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(count(DISTINCT doc_id) as bigint) AS n_docs,
            cast(count(*) as bigint) AS n_patches,
            cast(sum(pw * ph) as bigint) AS total_area,
-           cast(sum(d32 & 65535) as bigint) AS checksum_lo,
-           cast(sum(d32 >> 16) as bigint) AS checksum_hi
-    FROM (SELECT doc_id, doc_id % 8 AS bucket, pw, ph,
-                 ('0x' || substr(patch_digest, 1, 8))::BIGINT AS d32
-          FROM patches)
+           {checksum_half_sums_sql(hex_int_sql("patch_digest"))}
+    FROM (SELECT doc_id, doc_id % 8 AS bucket, pw, ph, patch_digest FROM patches)
     GROUP BY bucket
     """,
     tags=("multimodal", "parity"),
@@ -1876,21 +1874,17 @@ def q435_patch_grid_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feats = extract_features(attach_binary_payload(d))
     patches = patch_grid(feats, patch=256)
-    d32 = F.expr(
-        "cast(conv(substring(patch_digest, 1, 8), 16, 10) as bigint)"
-    )
     return patches.groupBy(F.pmod("doc_id", F.lit(8)).alias("bucket")).agg(
         F.count_distinct("doc_id").cast("bigint").alias("n_docs"),
         F.count(F.lit(1)).cast("bigint").alias("n_patches"),
         F.sum(F.col("pw") * F.col("ph")).cast("bigint").alias("total_area"),
-        F.sum(d32.bitwiseAND(F.lit(65535))).cast("bigint").alias("checksum_lo"),
-        F.sum(F.shiftright(d32, 16)).cast("bigint").alias("checksum_hi"),
+        *checksum_half_sums(hex_int("patch_digest")),
     )
 
 
 @query(
     "q452_interleaved_multimodal_packing",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
              list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS ws
@@ -1907,8 +1901,8 @@ def q435_patch_grid_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), feats AS (
       SELECT doc_id, source,
              md5(text) AS payload_digest,
-             ('0x' || substr(md5(text), 1, 4))::int % 1920 + 1 AS width,
-             ('0x' || substr(md5(text), 5, 4))::int % 1080 + 1 AS height
+             cast({hex_int_sql("md5(text)", 1, 4)} % 1920 + 1 as int) AS width,
+             cast({hex_int_sql("md5(text)", 5, 4)} % 1080 + 1 as int) AS height
       FROM documents
       WHERE doc_id < 300 AND octet_length(encode(text)) = length(text)
     ), patches AS (
@@ -1934,8 +1928,7 @@ def q435_patch_grid_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                   as bigint) - cost AS start
       FROM items
     ), seqs AS (
-      SELECT source, start // 512 AS seq_id, doc_id, m, cost,
-             ('0x' || substr(dg, 1, 8))::BIGINT AS d32
+      SELECT source, start // 512 AS seq_id, doc_id, m, cost, dg
       FROM packed
     )
     SELECT source, cast(seq_id as bigint) AS seq_id,
@@ -1946,8 +1939,7 @@ def q435_patch_grid_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(sum(CASE WHEN m = 1 THEN cost ELSE 0 END) as bigint) AS image_tokens,
            cast(sum(cost) as bigint) AS seq_tokens,
            min(doc_id) AS first_doc, max(doc_id) AS last_doc,
-           cast(sum(d32 & 65535) as bigint) AS checksum_lo,
-           cast(sum(d32 >> 16) as bigint) AS checksum_hi
+           {checksum_half_sums_sql(hex_int_sql("dg"))}
     FROM seqs GROUP BY source, seq_id
     """,
     tags=("multimodal", "llm-pipeline", "packing"),
@@ -2036,14 +2028,13 @@ def q452_interleaved_multimodal_packing(spark: SparkSession, sf_dir: str) -> Dat
     packed = items.withColumn(
         "start", F.sum("cost").over(w).cast("bigint") - F.col("cost")
     )
-    d32 = F.expr("cast(conv(substring(dg, 1, 8), 16, 10) as bigint)")
     seqs = packed.select(
         "source",
         F.expr("start div 512").cast("bigint").alias("seq_id"),
         "doc_id",
         "m",
         "cost",
-        d32.alias("d32"),
+        hex_int("dg").alias("d32"),
     )
     return seqs.groupBy("source", "seq_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
@@ -2062,8 +2053,5 @@ def q452_interleaved_multimodal_packing(spark: SparkSession, sf_dir: str) -> Dat
         F.sum("cost").cast("bigint").alias("seq_tokens"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
-        F.sum(F.col("d32").bitwiseAND(F.lit(65535)))
-        .cast("bigint")
-        .alias("checksum_lo"),
-        F.sum(F.shiftright("d32", 16)).cast("bigint").alias("checksum_hi"),
+        *checksum_half_sums(F.col("d32")),
     )

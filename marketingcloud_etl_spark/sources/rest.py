@@ -83,6 +83,14 @@ def fetch_page(base_url: str, page: int, token: str) -> dict:
     return _http_json(url, headers={"Authorization": f"Bearer {token}"})
 
 
+def check_page_size(page_size: int) -> None:
+    """Reject a page size < 1 before any Spark work: 0 divides by zero
+    in the planner and a negative size plans no pages, which a bulk
+    load would write over its target as 0 rows."""
+    if page_size < 1:
+        raise ValueError(f"page_size must be >= 1, got {page_size}")
+
+
 def plan_pages(api_count: int, db_count: int, page_size: int = DEFAULT_PAGE_SIZE) -> list[int]:
     """R3 scan pruning: resume at the page containing the first un-
     ingested record; empty plan when nothing new (:264, :271-280).
@@ -92,6 +100,7 @@ def plan_pages(api_count: int, db_count: int, page_size: int = DEFAULT_PAGE_SIZE
     fully ingested and ceil would re-download it every run; a partially
     ingested page still re-fetches (its duplicates die in the
     anti-join, the reference's unique-constraint safety net)."""
+    check_page_size(page_size)
     if api_count <= db_count:
         return []
     start_page = db_count // page_size + 1
@@ -186,7 +195,10 @@ class _RestPagesReader(DataSourceReader):
         pages = plan_pages(api_count, self.db_count, self.page_size)
         return _page_partitions(pages, self.slots)
 
-    def read(self, partition: _PagePartition) -> Iterator[tuple]:
+    def read(self, partition: _PagePartition | None) -> Iterator[tuple]:
+        # PySpark turns an empty plan (nothing new) into one None partition
+        if partition is None:
+            return
         for page in partition.pages:
             resp = self._fetch(page)
             for item in resp.get("items", []):

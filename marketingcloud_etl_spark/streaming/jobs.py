@@ -15,11 +15,14 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import query_state, table
+from ..session import conf_scope
 
 
 def _cents_sum(values) -> int:
@@ -228,6 +231,20 @@ RUN_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreP
 ROCKSDB_CONFS = {"spark.sql.streaming.stateStore.providerClass": RUN_ROCKSDB}
 
 
+@contextmanager
+def transform_with_state_scope(spark: SparkSession) -> Iterator[None]:
+    """Run the body as a transformWithState query: enable the API on
+    this session (RuntimeError when no protobuf resolves) and hold
+    :data:`ROCKSDB_CONFS` until the body's query has run."""
+    if not enable_transform_with_state(spark):
+        raise RuntimeError(
+            "transformWithState needs protobuf; neither a real "
+            "distribution nor the _pbcompat bundled runtime is available"
+        )
+    with conf_scope(spark, ROCKSDB_CONFS):
+        yield
+
+
 def enable_transform_with_state(spark: SparkSession) -> bool:
     """Make ``transformWithStateInPandas`` runnable on this session.
 
@@ -244,8 +261,8 @@ def enable_transform_with_state(spark: SparkSession) -> bool:
     2. the RocksDB state store (multiple column families) — set
        ``spark.sql.streaming.stateStore.providerClass`` to
        :data:`RUN_ROCKSDB` before STARTING the query (per-query conf,
-       read at query start; callers hold :data:`ROCKSDB_CONFS` with
-       ``session.conf_scope`` around the run).
+       read at query start; :func:`transform_with_state_scope` holds
+       :data:`ROCKSDB_CONFS` around the run).
 
     Returns False only when no protobuf can be resolved at all (then
     callers skip — never silently compute something else).
@@ -273,9 +290,8 @@ def stateful_running_totals_tws(stream: DataFrame) -> DataFrame:
     key. Kept alongside q81's formulation so both stateful APIs stay
     covered — they must produce identical final state.
 
-    Callers run :func:`enable_transform_with_state` first and start the
-    query under the RocksDB state store provider (see q104 /
-    tests/test_streaming.py::test_transform_with_state_matches_batch)."""
+    Callers start the query inside :func:`transform_with_state_scope`
+    (see q104)."""
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -545,8 +561,8 @@ def pattern_match_tws(stream: DataFrame) -> DataFrame:
     however long the stream runs — the property the collected-array
     batch formulation can't offer on an unbounded feed.
 
-    Callers run :func:`enable_transform_with_state` first and start
-    the query under the RocksDB state store provider (see q350)."""
+    Callers start the query inside :func:`transform_with_state_scope`
+    (see q350)."""
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

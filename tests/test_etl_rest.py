@@ -331,3 +331,50 @@ def test_overwrite_parquet_returns_written_rows(spark, tmp_path, partition_cols)
     # overwriting with an empty frame writes, and returns, 0 rows
     empty = df.filter("k < 0")
     assert overwrite_parquet(empty, target, partition_cols) == 0
+
+
+def _target_state(spark, target):
+    files = sorted((p.name, p.stat().st_size) for p in target.iterdir())
+    rows = sorted(repr(r) for r in spark.read.parquet(str(target)).collect())
+    return files, rows
+
+
+def test_read_with_nothing_new_returns_no_rows(spark, server):
+    """R3's skip-everything: API count ≤ target count plans no pages,
+    and the scan yields no rows instead of failing."""
+    items = read_lead_activity(
+        spark, base_url=server.base_url, auth_url=server.auth_url, client_id="id",
+        client_secret="secret", db_count=N_ITEMS, page_size=PAGE_SIZE,
+    )
+    assert items.count() == 0
+
+
+def test_noop_incremental_leaves_target_unchanged(spark, server, tmp_path):
+    """An incremental run against an API that holds fewer items than
+    the target inserts nothing and leaves the target's files and rows
+    as they were."""
+    target = tmp_path / "lead_activity"
+    assert _bulk(spark, server, target) == N_ITEMS - 1
+    before = _target_state(spark, target)
+    with MockSfmcServer(n_items=20) as small:
+        result = incremental_extract(
+            spark, base_url=small.base_url, target_path=str(target), auth_url=small.auth_url,
+            client_id="id", client_secret="secret", page_size=PAGE_SIZE,
+        )
+    assert result["inserted"] == 0
+    assert _target_state(spark, target) == before
+
+
+@pytest.mark.parametrize("page_size", [0, -1])
+def test_bad_page_size_rejected_before_overwrite(spark, server, tmp_path, page_size):
+    target = tmp_path / "lead_activity"
+    assert _bulk(spark, server, target) == N_ITEMS - 1
+    before = _target_state(spark, target)
+    with pytest.raises(ValueError, match="page_size"):
+        bulk_extract(
+            spark, base_url=server.base_url, target_path=str(target), auth_url=server.auth_url,
+            client_id="id", client_secret="secret", page_size=page_size,
+        )
+    with pytest.raises(ValueError, match="page_size"):
+        plan_pages(120000, 0, page_size)
+    assert _target_state(spark, target) == before

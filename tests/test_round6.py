@@ -10,6 +10,8 @@ import pyspark.sql.functions as F
 
 from marketingcloud_etl_spark.io import table
 from marketingcloud_etl_spark.plans.catalog import load_all
+from marketingcloud_etl_spark.session import conf_scope
+from marketingcloud_etl_spark.streaming.jobs import ROCKSDB_CONFS
 
 REG = load_all()
 
@@ -313,7 +315,6 @@ def test_value_state_ttl_expires_across_phases(spark, sf_dir, tmp_path):
     )
 
     from marketingcloud_etl_spark.streaming.jobs import (
-        RUN_ROCKSDB,
         enable_transform_with_state,
         replay_dir,
     )
@@ -342,9 +343,7 @@ def test_value_state_ttl_expires_across_phases(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     schema = spark.read.parquet(full).schema
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
 
         def run_phase(name: str):
             out_dir = str(tmp_path / name)
@@ -421,8 +420,3 @@ def test_value_state_ttl_expires_across_phases(spark, sf_dir, tmp_path):
         # expired state reads as absent: phase-2 counts restart at zero
         for u in dual:
             assert phase2[u] == h2[u], (u, phase2[u], h2[u])
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

@@ -264,10 +264,10 @@ def test_table_checksum_is_order_insensitive_and_content_sensitive(spark):
     rows = [(i, f"n{i}", i * 1.01) for i in range(1000)]
     df = spark.createDataFrame(rows, "k bigint, name string, amt double")
 
-    from marketingcloud_etl_spark.plans.audit_queries import _checksum_sums_spark
+    from marketingcloud_etl_spark.functions.hashing import checksum_half_sums
 
     def checksum(frame):
-        r = frame.agg(*_checksum_sums_spark(_row_digest_spark(cols))).first()
+        r = frame.agg(*checksum_half_sums(_row_digest_spark(cols))).first()
         return (r["checksum_lo"], r["checksum_hi"])
 
     base = checksum(df)

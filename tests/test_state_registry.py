@@ -3,8 +3,9 @@ and the source guards that keep it the only owner of per-query state
 in ``plans/``, ``sinks/``, ``operators/`` and ``streaming/``, keep
 ``ranking.pin_cache`` the only place ``plans/`` and ``operators/``
 persist a frame, keep ``io.table`` the only place that decides scan
-parallelism, and keep ``session.py`` the only module that changes
-session conf."""
+parallelism, keep ``session.py`` the only module that changes
+session conf, and keep ``functions/hashing.py`` the only module that
+spells the cross-engine digest format."""
 
 from __future__ import annotations
 
@@ -284,6 +285,63 @@ def test_queries_write_only_through_io():
             )
             if name in ("gettempdir", "atomic_cached_write"):
                 found.append(f"{rel}:{node.lineno}: {name}")
+    assert not found, "\n".join(found)
+
+
+# the one function outside functions/hashing.py that converts hex with
+# conv(): it parses a binary header's width/height/frame fields, not a digest
+_HEX_PARSE_EXEMPT = {("plans/etl_queries.py", "q251_binary_header_parse")}
+_DIGEST_SPELLINGS = {
+    r"'0x'\s*\|\|": "'0x' || hex-prefix cast",
+    r"conv\(\s*substring\(": "conv(substring( digest",
+    r"\b65535\b|>>\s*16\b": "hand-written half-sum",
+    r"'NULL'\s*\|\|\s*chr\(0\)": "NULL sentinel spelled in SQL",
+}
+
+
+def test_digest_format_is_spelled_only_in_hashing():
+    """functions/hashing.py is the only module that spells the
+    cross-engine digest format (the md5 hex-prefix integer, the NULL
+    sentinel, the half-sum checksum); every other module calls its
+    twins. No plan module imports a private name from another plan
+    module either (the digest constants used to travel that way)."""
+    import re
+
+    plan_mods = {p.stem for p in (PKG / "plans").glob("*.py")}
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/hashing.py":
+            continue
+        src = path.read_text()
+        for pat, what in _DIGEST_SPELLINGS.items():
+            for m in re.finditer(pat, src, flags=re.IGNORECASE):
+                found.append(f"{rel}:{src.count(chr(10), 0, m.start()) + 1}: {what}")
+        tree = ast.parse(src)
+        exempt = [
+            (f.lineno, f.end_lineno)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and (rel, f.name) in _HEX_PARSE_EXEMPT
+        ]
+        for c in ast.walk(tree):
+            if (
+                isinstance(c, ast.Call)
+                and ast.unparse(c.func).split(".")[-1] == "conv"
+                and not any(a <= c.lineno <= b for a, b in exempt)
+            ):
+                found.append(f"{rel}:{c.lineno}: conv() Column digest")
+        for n in ast.walk(tree):
+            if (
+                rel.startswith("plans/")
+                and isinstance(n, ast.ImportFrom)
+                and n.level == 1
+                and n.module in plan_mods
+            ):
+                found += [
+                    f"{rel}:{n.lineno}: imports private {a.name} from plans/{n.module}"
+                    for a in n.names
+                    if a.name.startswith("_")
+                ]
     assert not found, "\n".join(found)
 
 

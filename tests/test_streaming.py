@@ -9,6 +9,8 @@ import pyspark.sql.functions as F
 
 from marketingcloud_etl_spark.io import table
 from marketingcloud_etl_spark.plans.catalog import load_all
+from marketingcloud_etl_spark.session import conf_scope
+from marketingcloud_etl_spark.streaming.jobs import ROCKSDB_CONFS
 
 REGISTRY = load_all()
 
@@ -142,7 +144,6 @@ def test_transform_with_state_matches_batch(spark, sf_dir):
     from pyspark.sql.window import Window as W
 
     from marketingcloud_etl_spark.streaming.jobs import (
-        RUN_ROCKSDB,
         enable_transform_with_state,
         events_stream,
         run_to_memory,
@@ -151,20 +152,12 @@ def test_transform_with_state_matches_batch(spark, sf_dir):
 
     if not enable_transform_with_state(spark):
         pytest.skip("no protobuf available (real or bundled)")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         out = run_to_memory(
             stateful_running_totals_tws(events_stream(spark, sf_dir)),
             "tws_out",
             output_mode="update",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
         out.withColumn("__rn", F.row_number().over(w))
@@ -201,7 +194,6 @@ def test_transform_with_state_checkpoint_recovery(spark, sf_dir, tmp_path):
 
     from marketingcloud_etl_spark.io import table
     from marketingcloud_etl_spark.streaming.jobs import (
-        RUN_ROCKSDB,
         enable_transform_with_state,
         replay_dir,
         stateful_running_totals_tws,
@@ -240,21 +232,13 @@ def test_transform_with_state_checkpoint_recovery(spark, sf_dir, tmp_path):
         q.awaitTermination()
         return spark.read.parquet(out_dir)
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         for f in files[: len(files) // 2]:
             shutil.copy(os.path.join(full, f), src)
         p1 = run_phase("tws_ck1").localCheckpoint()  # snapshot before restart
         for f in files[len(files) // 2 :]:
             shutil.copy(os.path.join(full, f), src)
         p2 = run_phase("tws_ck2").localCheckpoint()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
     batch = (
         table(spark, sf_dir, "events")
@@ -391,7 +375,6 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from marketingcloud_etl_spark.streaming.jobs import (
-        RUN_ROCKSDB,
         enable_transform_with_state,
         session_close_tws,
     )
@@ -431,10 +414,7 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
     # session stays open (nothing after it)
     write_one([(2, "2025-06-01 20:00:00")], "f4", now)
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         stream = (
             spark.readStream.schema("user_id long, ts timestamp")
             .option("maxFilesPerTrigger", 1)
@@ -451,11 +431,6 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
     rows = sorted(
         spark.table("timer_sessions").collect(),
@@ -634,13 +609,7 @@ def test_rocksdb_state_store_matches_batch(spark, sf_dir):
     from marketingcloud_etl_spark.io import table
     from marketingcloud_etl_spark.streaming.jobs import events_stream, run_to_memory
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         agg = (
             events_stream(spark, sf_dir)
             .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -654,11 +623,6 @@ def test_rocksdb_state_store_matches_batch(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_pattern_automaton_checkpoint_recovery(spark, sf_dir, tmp_path):
@@ -676,7 +640,6 @@ def test_pattern_automaton_checkpoint_recovery(spark, sf_dir, tmp_path):
 
     from marketingcloud_etl_spark.io import table
     from marketingcloud_etl_spark.streaming.jobs import (
-        RUN_ROCKSDB,
         enable_transform_with_state,
         ordered_replay_dir,
         pattern_match_tws,
@@ -724,21 +687,13 @@ def test_pattern_automaton_checkpoint_recovery(spark, sf_dir, tmp_path):
         q.awaitTermination()
         return spark.read.parquet(out_dir)
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, RUN_ROCKSDB)
-    try:
+    with conf_scope(spark, ROCKSDB_CONFS):
         for d in slices[: len(slices) // 2]:
             shutil.copytree(os.path.join(full, d), os.path.join(src, d))
         run_phase("pat_ck1").localCheckpoint()
         for d in slices[len(slices) // 2 :]:
             shutil.copytree(os.path.join(full, d), os.path.join(src, d))
         p2 = run_phase("pat_ck2").localCheckpoint()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
     # matches is nondecreasing, so max over all emissions = final state
     got = {
