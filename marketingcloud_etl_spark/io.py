@@ -56,7 +56,6 @@ TABLES = (
 __all__ = [
     "TABLES",
     "table",
-    "register_views",
     "query_state",
     "scratch_dir",
 ]
@@ -112,12 +111,6 @@ def _normalize_events(t: pa.Table) -> pa.Table:
     i = t.schema.get_field_index("ts")
     ts = t.column(i).cast(pa.timestamp("us", tz="UTC"), safe=False)
     return t.set_column(i, "ts", ts)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql plans)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def fixture_tag(sf_dir: str) -> str:

@@ -1,13 +1,12 @@
 from .dedup import (  # noqa: F401
     dedup_exact,
-    dedup_keep_first,
     minhash_signature,
     minhash_lsh_candidates,
     simhash64,
     simhash_band_candidates,
     ngram_jaccard_pairs,
 )
-from .similarity import knn_bruteforce, random_hyperplane_lsh, ann_lsh_topk  # noqa: F401
+from .similarity import knn_bruteforce, ann_lsh_topk  # noqa: F401
 from .asof import asof_join  # noqa: F401
 from .sessionize import sessionize  # noqa: F401
 from .skew import salted_join_key  # noqa: F401

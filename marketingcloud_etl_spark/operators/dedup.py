@@ -27,7 +27,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from ..functions.hashing import content_hash
 from ..functions.text import tokens
@@ -60,15 +59,6 @@ def _expr_cached(key: tuple, build):
 def dedup_exact(df: DataFrame, cols: Sequence[str], hash_col: str = "hash") -> DataFrame:
     """Exact dedup by deterministic content hash over ``cols``."""
     return df.withColumn(hash_col, content_hash(cols)).dropDuplicates([hash_col])
-
-
-def dedup_keep_first(
-    df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[Column | str]
-) -> DataFrame:
-    """Keep the first row per key under a total order (deterministic —
-    callers must include a unique tiebreak in ``order_cols``)."""
-    w = W.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 # ------------------------------------------------------------- MinHash LSH

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_int_expr
 from .components import dedup_clusters
-from .similarity import _normalize
+from .similarity import l2_normalize
 
 
 def _probed_cells(
@@ -66,7 +66,7 @@ def _probed_cells(
     import numpy as np
     import pandas as pd
 
-    norm_cents = [_normalize([float(x) for x in c]) for _, c in codebook]
+    norm_cents = [l2_normalize([float(x) for x in c]) for _, c in codebook]
     CNT = np.asarray(norm_cents, dtype=np.float64).T
     _np_probe = int(n_probe)
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -58,35 +58,6 @@ def knn_bruteforce(
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def random_hyperplane_lsh(
-    df: DataFrame,
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    bucket_col: str = "lsh_bucket",
-) -> DataFrame:
-    """Append a sign-bit LSH bucket id (0 .. 2^n_planes-1).
-
-    bucket bit i = sign(v · h_i); computed with zip_with/aggregate folds
-    over literal hyperplane arrays — stays in whole-stage codegen.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-
-    def _dot_lit(plane: list[float]) -> Column:
-        lit_arr = F.array(*[F.lit(x) for x in plane])
-        return F.aggregate(
-            F.zip_with(v, lit_arr, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    bucket = None
-    for i, plane in enumerate(planes):
-        bit = F.when(_dot_lit(plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return df.withColumn(bucket_col, bucket.cast("int"))
 
 
 def ann_lsh_topk(
@@ -211,7 +182,8 @@ def _argmax_cell_sql(vec_sql: str, norm_cents: list[list[float]]) -> str:
     )
 
 
-def _normalize(c: list[float]) -> list[float]:
+def l2_normalize(c: list[float]) -> list[float]:
+    """Unit-length copy of ``c``; a zero vector is returned as it is."""
     n = math.sqrt(sum(x * x for x in c))
     return [x / n for x in c] if n > 0 else list(c)
 
@@ -262,7 +234,7 @@ def train_ivf_codebook(
         # and emits per-cell PARTIAL sums; the driver reduces the
         # ~partitions x cells partial rows — driver-sized, same
         # partial/final split a Spark aggregate performs.
-        CN = np.asarray([_normalize(c) for c in cents], dtype=np.float64).T
+        CN = np.asarray([l2_normalize(c) for c in cents], dtype=np.float64).T
 
         def partials(batches):
             for pdf in batches:
@@ -321,7 +293,7 @@ def ann_ivf_topk(
     if codebook is None:
         codebook = train_ivf_codebook(corpus, n_cells, refine_iters, id_col, vec_col)
     cents = spark.createDataFrame(codebook, "cell int, cent_vec array<double>")
-    norm_cents = [_normalize([float(x) for x in c]) for _, c in codebook]
+    norm_cents = [l2_normalize([float(x) for x in c]) for _, c in codebook]
 
     # corpus side (the big one): single-expression literal-matrix argmax
     # — a narrow map, no crossJoin, no per-vector window shuffle
@@ -485,7 +457,7 @@ def build_ivf_pq_index(
         F.col(id_col).alias("neighbor_id"),
         F.expr(
             _argmax_cell_sql(
-                vec_col, [_normalize([float(x) for x in c]) for _, c in ivf_codebook]
+                vec_col, [l2_normalize([float(x) for x in c]) for _, c in ivf_codebook]
             )
         ).alias("cell"),
         F.expr(_pq_encode_sql(vec_col, pq_codebooks)).alias("codes"),
@@ -675,17 +647,12 @@ def _sqdist_sql(vec_sql: str, cent: list[float]) -> str:
     return f"({terms})"
 
 
-def _argmin_sqdist_sql(vec_sql: str, cents: list[list[float]]) -> str:
+def argmin_sqdist_sql(vec_sql: str, cents: list[list[float]]) -> str:
     """Index of the nearest centroid (ties → lowest index)."""
     pairs = ", ".join(
         f"struct({_sqdist_sql(vec_sql, c)} as d, {i} as i)" for i, c in enumerate(cents)
     )
     return f"array_min(array({pairs})).i"
-
-
-def _min_sqdist_sql(vec_sql: str, cents: list[list[float]]) -> str:
-    dists = ", ".join(_sqdist_sql(vec_sql, c) for c in cents)
-    return f"array_min(array({dists}))"
 
 
 def kmeans_euclidean(
@@ -709,7 +676,7 @@ def kmeans_euclidean(
     history — the same partial/final split a Spark aggregate performs,
     with the final step on k x (dim+2) scalars.
 
-    The independent EXPRESSION path (_argmin_sqdist_sql, flat codegen
+    The independent EXPRESSION path (argmin_sqdist_sql, flat codegen
     arithmetic) stays the verification twin: the catalog query's
     ``assignment_is_argmin`` boolean cross-checks the two formulations.
 

@@ -36,15 +36,6 @@ def salted_join_key(
     return skewed_s, replicated_s
 
 
-def salted_groupby_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase aggregation for a skewed group-by count: partial
-    aggregate on (key, salt), then final on key — the map-side-combine
-    pattern made explicit for counts on hot keys."""
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts)))
-    partial = salted.groupBy(key, "__salt").agg(F.count(F.lit(1)).alias("__c"))
-    return partial.groupBy(key).agg(F.sum("__c").cast("long").alias("n"))
-
-
 def salted_count_distinct(
     df: DataFrame,
     key_cols: Sequence[str],

@@ -262,9 +262,17 @@ def q409_column_profile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct via one Expand, still a single scan), then the wide row
     unpivots driver-side into one row per column. No per-column
     rescans: profiling 100 TB costs one read."""
-    o = table(spark, sf_dir, "orders")
+    return column_profile(table(spark, sf_dir, "orders"), _PROFILE_COLS)
+
+
+def column_profile(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
+    """One row per ``(name, type)`` of ``cols``: ``col_name``,
+    ``n_rows``, ``n_null``, ``n_distinct`` and the ``min_canon`` /
+    ``max_canon`` strings of the column's canonical form (module doc),
+    all from ONE aggregation pass over ``df`` (Catalyst plans the
+    multi-distinct via one Expand), unpivoted with ``stack``."""
     aggs = []
-    for name, typ in _PROFILE_COLS:
+    for name, typ in cols:
         canon = _canon_spark(name, typ)
         aggs += [
             F.count(F.lit(1)).cast("bigint").alias(f"{name}__n"),
@@ -275,14 +283,14 @@ def q409_column_profile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(canon).cast("string").alias(f"{name}__min"),
             F.max(canon).cast("string").alias(f"{name}__max"),
         ]
-    wide = o.agg(*aggs)
+    wide = df.agg(*aggs)
     stack_args = ", ".join(
         f"'{name}', {name}__n, {name}__nulls, {name}__nd, {name}__min, {name}__max"
-        for name, _ in _PROFILE_COLS
+        for name, _ in cols
     )
     return wide.select(
         F.expr(
-            f"stack({len(_PROFILE_COLS)}, {stack_args}) AS "
+            f"stack({len(cols)}, {stack_args}) AS "
             "(col_name, n_rows, n_null, n_distinct, min_canon, max_canon)"
         )
     )
@@ -336,41 +344,50 @@ def q410_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     both existence checks join key-domain-sized frames — the parent
     side is dimension-sized and broadcastable. No fact-table row ever
     crosses a shuffle twice."""
-    outs = []
-    for rel, ct, ck, pt, pk in _FK_RELS:
-        child = table(spark, sf_dir, ct).select(F.col(ck).alias("k"))
-        parent = table(spark, sf_dir, pt).select(F.col(pk).alias("k"))
-        ckeys = child.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-        # n_child folds from the key-domain frame — a second child.agg
-        # would re-scan the fact table per relationship (coalesce: sum
-        # over an empty frame is NULL, the oracle's count(*) is 0)
-        n_child = ckeys.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_child")
+    outs = [
+        fk_audit(table(spark, sf_dir, ct), ck, table(spark, sf_dir, pt), pk).select(
+            F.lit(rel).alias("relationship"),
+            "n_child",
+            "n_orphan",
+            "n_parent",
+            "n_unreferenced",
         )
-        n_orphan = (
-            ckeys.join(F.broadcast(parent), "k", "left_anti")
-            .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphan"))
-        )
-        n_parent = parent.agg(F.count(F.lit(1)).cast("bigint").alias("n_parent"))
-        n_unref = parent.join(ckeys.select("k"), "k", "left_anti").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_unreferenced")
-        )
-        outs.append(
-            n_child.join(n_orphan, F.lit(True))
-            .join(n_parent, F.lit(True))
-            .join(n_unref, F.lit(True))
-            .select(
-                F.lit(rel).alias("relationship"),
-                "n_child",
-                "n_orphan",
-                "n_parent",
-                "n_unreferenced",
-            )
-        )
+        for rel, ct, ck, pt, pk in _FK_RELS
+    ]
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
+
+
+def fk_audit(child: DataFrame, ck: str, parent: DataFrame, pk: str) -> DataFrame:
+    """One lazy row auditing the foreign key ``child.ck`` →
+    ``parent.pk``: ``n_child`` rows, ``n_orphan`` child rows whose key
+    has no parent, ``n_parent`` rows and ``n_unreferenced`` parent rows
+    no child references. The child side reduces to its distinct keys
+    first, so both anti-joins see key-domain-sized frames."""
+    child = child.select(F.col(ck).alias("k"))
+    parent = parent.select(F.col(pk).alias("k"))
+    ckeys = child.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+    # n_child folds from the key-domain frame — a second child.agg
+    # would re-scan the fact table (coalesce: sum over an empty frame
+    # is NULL, the oracle's count(*) is 0)
+    n_child = ckeys.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_child")
+    )
+    n_orphan = (
+        ckeys.join(F.broadcast(parent), "k", "left_anti")
+        .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphan"))
+    )
+    n_parent = parent.agg(F.count(F.lit(1)).cast("bigint").alias("n_parent"))
+    n_unref = parent.join(ckeys.select("k"), "k", "left_anti").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_unreferenced")
+    )
+    return (
+        n_child.join(n_orphan, F.lit(True))
+        .join(n_parent, F.lit(True))
+        .join(n_unref, F.lit(True))
+    )
 
 
 # ----------------------------------------------------------------- freshness

@@ -325,25 +325,17 @@ def q83_rest_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).orderBy("hash")
 
 
-@query("q148_rest_stream_ingest", oracle=None, tags=("etl", "source", "streaming", "rows-only"))
-def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REST source's STREAMING twin (rest_pages streamReader):
-    continuous ingestion of the count-monotonic paginated API with a
-    complete-pages offset protocol — the offset only advances to
-    count // page_size, so the still-filling tail page is never
-    fetched twice and no item duplicates (exactly-once without sink
-    dedup; the batch path instead re-reads the partial page and
-    anti-joins). 35 mock items / page size 10 → exactly 30 rows from
-    pages 1-3, page 4 deferred until it completes. Page fetches pack
-    into one range per task slot — a wide cluster drains a backlog in
-    parallel inside one micro-batch. Deterministic output; rows-only
-    (HTTP source has no DuckDB twin); restart-idempotence pinned in
-    tests/test_etl_rest.py."""
+def _rest_stream_rows(spark: SparkSession, name: str) -> DataFrame:
+    """The REST source's streaming ingest of q148 and q341: a 35-item
+    mock SFMC API read by the ``rest_pages`` stream reader with
+    availableNow micro-batches, each appended by foreachBatch to
+    parquet under the query's scratch dir ``name``, then read back
+    after the server is gone."""
     from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
     from ..sources.rest import register_rest_source, slot_options
 
     register_rest_source(spark)
-    base = scratch_dir("q148")
+    base = scratch_dir(name)
     out_dir, ck = f"{base}/rows", f"{base}/ck"
 
     def sink(batch_df, batch_id):
@@ -368,8 +360,25 @@ def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+    return spark.read.parquet(out_dir)
+
+
+@query("q148_rest_stream_ingest", oracle=None, tags=("etl", "source", "streaming", "rows-only"))
+def q148_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REST source's STREAMING twin (rest_pages streamReader):
+    continuous ingestion of the count-monotonic paginated API with a
+    complete-pages offset protocol — the offset only advances to
+    count // page_size, so the still-filling tail page is never
+    fetched twice and no item duplicates (exactly-once without sink
+    dedup; the batch path instead re-reads the partial page and
+    anti-joins). 35 mock items / page size 10 → exactly 30 rows from
+    pages 1-3, page 4 deferred until it completes. Page fetches pack
+    into one range per task slot — a wide cluster drains a backlog in
+    parallel inside one micro-batch. Deterministic output; rows-only
+    (HTTP source has no DuckDB twin); restart-idempotence pinned in
+    tests/test_etl_rest.py."""
     return (
-        spark.read.parquet(out_dir)
+        _rest_stream_rows(spark, "q148")
         .select("keys.lead_id", "values.event_name", "page")
         .orderBy("page", "lead_id")
     )
@@ -623,36 +632,7 @@ def q341_rest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once, not content dedup — that's the batch path's
     anti-join, q340), raw uncleaned event_name proving the stream
     carries source fidelity."""
-    from ..sources.mock_sfmc import PAGE_SIZE, MockSfmcServer
-    from ..sources.rest import register_rest_source, slot_options
-
-    register_rest_source(spark)
-    base = scratch_dir("q341")
-    out_dir, ck = f"{base}/rows", f"{base}/ck"
-
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with MockSfmcServer(n_items=35) as server:
-        q = (
-            spark.readStream.format("rest_pages")
-            .options(
-                base_url=server.base_url,
-                auth_url=server.auth_url,
-                client_id="demo",
-                client_secret="demo",
-                page_size=PAGE_SIZE,
-                **slot_options(spark),
-            )
-            .load()
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    return _rest_stream_rows(spark, "q341").select(
         "keys.lead_id",
         F.col("values.event_name").alias("event_name"),
         F.col("page").cast("int").alias("page"),
@@ -2991,38 +2971,40 @@ def q314_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     dependency o_orderkey → o_custkey whose violation turns every
     downstream join into a fan-out. Each check is one anti-join or
     grouped HAVING — the same shuffle keys the production joins use, so
-    the audit costs no more than the joins it protects."""
+    the audit costs no more than the joins it protects. The FK counts
+    come from the audit surface's ``fk_audit`` (q410's per-relationship
+    operator), and every check stays lazy: building the query runs no
+    job."""
+    from .audit_queries import fk_audit
+
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     c = table(spark, sf_dir, "customer")
+    li_o = fk_audit(li, "l_orderkey", o, "o_orderkey")
+    o_c = fk_audit(o, "o_custkey", c, "c_custkey")
 
-    def one(name: str, n_col: F.Column) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(name).alias("check_name"), n_col.alias("n_violations")
+    def n_groups(df: DataFrame, keys: list[str], over: F.Column) -> DataFrame:
+        return df.groupBy(*keys).agg(over.alias("k")).filter(F.col("k") > 1).agg(
+            F.count(F.lit(1)).alias("n")
         )
 
-    orphan_li = li.join(o, li.l_orderkey == o.o_orderkey, "left_anti").count()
-    childless = o.join(li, o.o_orderkey == li.l_orderkey, "left_anti").count()
-    bad_cust = o.join(c, o.o_custkey == c.c_custkey, "left_anti").count()
-    dup_key = (
-        li.groupBy("l_orderkey", "l_linenumber")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .filter(F.col("k") > 1)
-        .count()
-    )
-    fd_viol = (
-        o.groupBy("o_orderkey")
-        .agg(F.countDistinct("o_custkey").alias("d"))
-        .filter(F.col("d") > 1)
-        .count()
-    )
-    out = (
-        one("childless_orders", F.lit(childless).cast("bigint"))
-        .unionByName(one("lineitem_dup_composite_key", F.lit(dup_key).cast("bigint")))
-        .unionByName(one("orders_bad_custkey", F.lit(bad_cust).cast("bigint")))
-        .unionByName(one("orders_fd_orderkey_custkey", F.lit(fd_viol).cast("bigint")))
-        .unionByName(one("orphan_lineitems", F.lit(orphan_li).cast("bigint")))
-    )
+    checks = [
+        ("childless_orders", li_o.select(F.col("n_unreferenced").alias("n"))),
+        (
+            "lineitem_dup_composite_key",
+            n_groups(li, ["l_orderkey", "l_linenumber"], F.count(F.lit(1))),
+        ),
+        ("orders_bad_custkey", o_c.select(F.col("n_orphan").alias("n"))),
+        ("orders_fd_orderkey_custkey", n_groups(o, ["o_orderkey"], F.countDistinct("o_custkey"))),
+        ("orphan_lineitems", li_o.select(F.col("n_orphan").alias("n"))),
+    ]
+    rows = [
+        n.select(F.lit(name).alias("check_name"), F.col("n").cast("bigint").alias("n_violations"))
+        for name, n in checks
+    ]
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionByName(r)
     return out.orderBy("check_name")
 
 

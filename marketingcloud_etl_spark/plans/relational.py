@@ -1565,25 +1565,25 @@ def q126_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table profiling (ANALYZE-style): per-column row count, null
     count, exact distinct count, and min/max — the metadata sweep
     that drives partition and join planning decisions before a big
-    job. One aggregation pass per column over a scan pruned to that
-    column (min/max cast to string so heterogeneous columns stack in
-    one result). At 100 TB the exact count(DISTINCT) per column is
-    the expensive honest version; q60's HLL path is the sketch
-    alternative."""
-    o = table(spark, sf_dir, "orders")
+    job: q409's one-pass ``column_profile`` over three columns of
+    ``orders`` (Catalyst plans the three count(DISTINCT)s via one
+    Expand, so the table is scanned once), min/max as strings so
+    heterogeneous columns stack in one result. At 100 TB the exact
+    count(DISTINCT) per column is the expensive honest version; q60's
+    HLL path is the sketch alternative."""
+    from .audit_queries import column_profile
 
-    def prof(c: str):
-        return o.select(c).agg(
-            F.lit(c).alias("col"),
-            F.count(F.lit(1)).alias("n"),
-            (F.count(F.lit(1)) - F.count(c)).alias("n_null"),
-            F.countDistinct(c).alias("n_distinct"),
-            F.min(c).cast("string").alias("min_value"),
-            F.max(c).cast("string").alias("max_value"),
-        ).select("col", "n", "n_null", "n_distinct", "min_value", "max_value")
-
-    return prof("o_orderkey").unionByName(prof("o_orderstatus")).unionByName(
-        prof("o_orderpriority")
+    prof = column_profile(
+        table(spark, sf_dir, "orders"),
+        [("o_orderkey", "int"), ("o_orderstatus", "str"), ("o_orderpriority", "str")],
+    )
+    return prof.select(
+        F.col("col_name").alias("col"),
+        F.col("n_rows").alias("n"),
+        "n_null",
+        "n_distinct",
+        F.col("min_canon").alias("min_value"),
+        F.col("max_canon").alias("max_value"),
     )
 
 

@@ -657,6 +657,56 @@ def q344_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_click_join(
+    spark: SparkSession, sf_dir: str, how: str, cols: list[str], sink: str
+) -> DataFrame:
+    """The stream⋈stream join of q196/q250/q358/q367, run to its memory
+    sink ``sink`` and projected to ``cols``: purchases (``user_id``,
+    ``p_id``, ``p_ts``) and clicks (``c_user``, ``c_id``, ``c_ts``) of
+    the event-time-ordered replay, each side under a 1-hour watermark,
+    joined with mode ``how`` on the same user and a click in the 30
+    minutes up to the purchase (both bounds inclusive)."""
+    from ..streaming.jobs import events_stream_ordered, run_to_memory
+
+    s = events_stream_ordered(spark, sf_dir)
+    p = (
+        s.filter(F.col("event_type") == "purchase")
+        .select("user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "1 hour")
+    )
+    c = (
+        s.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("c_id"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "1 hour")
+    )
+    j = p.join(
+        c,
+        (F.col("user_id") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+        how,
+    )
+    return run_to_memory(j.select(*cols), sink, output_mode="append")
+
+
+def _with_stream_cut(spark: SparkSession, sf_dir: str, out: DataFrame) -> DataFrame:
+    """``out`` with the end-of-stream ``cut`` column: the earlier of the
+    last purchase and the last click, which the outer joins' finality
+    cutoffs count back from."""
+    ev = table(spark, sf_dir, "events")
+    cut = ev.agg(
+        F.least(
+            F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+        ).alias("cut")
+    )
+    return out.join(F.broadcast(cut), F.lit(True))
+
+
 @query(
     "q196_stream_stream_left_outer",
     oracle="""
@@ -689,42 +739,11 @@ def q196_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     (30 min join bound + 60 min watermark + 5 min slack) — the same
     cutoff applied to the streamed result, so the compare covers both
     matched multiplicities and the null emissions."""
-    from ..streaming.jobs import events_stream_ordered, run_to_memory
-
-    s = events_stream_ordered(spark, sf_dir)
-    p = (
-        s.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("c_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftOuter",
-    )
-    out = run_to_memory(
-        j.select("user_id", "p_id", "p_ts", "c_id"), "q196_out", output_mode="append"
-    )
-    ev = table(spark, sf_dir, "events")
-    cut = ev.agg(
-        F.least(
-            F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-        ).alias("cut")
+    out = _purchase_click_join(
+        spark, sf_dir, "leftOuter", ["user_id", "p_id", "p_ts", "c_id"], "q196_out"
     )
     return (
-        out.join(F.broadcast(cut), F.lit(True))
+        _with_stream_cut(spark, sf_dir, out)
         .filter(F.col("p_ts") < F.col("cut") - F.expr("INTERVAL 95 MINUTES"))
         .groupBy("user_id", "p_id")
         .agg(
@@ -925,17 +944,9 @@ def q236_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     overshoots the lagged watermark are provably dropped — the oracle
     counts must agree exactly, proving drop semantics, not just
     plumbing."""
-    from ..streaming.jobs import late_replay_dir, run_to_memory
+    from ..streaming.jobs import file_replay_stream, late_replay_dir, run_to_memory
 
-    src = late_replay_dir(spark, sf_dir, shift_hours=120)
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
+    stream = file_replay_stream(spark, late_replay_dir(spark, sf_dir, shift_hours=120))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1030,43 +1041,14 @@ def q250_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     the asymmetry that makes naive symmetric-cutoff oracles wrong).
     Matched multiplicities, null-padded purchases AND null-padded
     clicks all hash-match the batch reconstruction."""
-    from ..streaming.jobs import events_stream_ordered, run_to_memory
-
-    s = events_stream_ordered(spark, sf_dir)
-    p = (
-        s.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("c_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
+    out = _purchase_click_join(
+        spark,
+        sf_dir,
         "fullOuter",
-    )
-    out = run_to_memory(
-        j.select("user_id", "p_id", "p_ts", "c_user", "c_id", "c_ts"),
+        ["user_id", "p_id", "p_ts", "c_user", "c_id", "c_ts"],
         "q250_out",
-        output_mode="append",
     )
-    ev = table(spark, sf_dir, "events")
-    cut = ev.agg(
-        F.least(
-            F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-        ).alias("cut")
-    )
-    o = out.join(F.broadcast(cut), F.lit(True))
+    o = _with_stream_cut(spark, sf_dir, out)
     p_rows = (
         o.filter(
             F.col("p_id").isNotNull()
@@ -1125,33 +1107,7 @@ def q358_stream_stream_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole log, and the at-most-once emission is itself the verified
     property (a double-emit breaks the count column's hash). State
     stays watermark-bounded on both sides like the other modes."""
-    from ..streaming.jobs import events_stream_ordered, run_to_memory
-
-    s = events_stream_ordered(spark, sf_dir)
-    p = (
-        s.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("c_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftSemi",
-    )
-    out = run_to_memory(
-        j.select("user_id", "p_id"), "q358_out", output_mode="append"
-    )
+    out = _purchase_click_join(spark, sf_dir, "leftSemi", ["user_id", "p_id"], "q358_out")
     # count(*) pins at-most-once emission: a re-emitted anchor would
     # make some n > 1 and break the value hash, not just the row count
     return out.groupBy("user_id", "p_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1355,42 +1311,11 @@ def q367_stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFram
     right join (written as the swapped left join) restricted to clicks
     whose outer decision is final at stream end — cut − (30 min bound
     + 60 min watermark + 5 min slack), q196's cutoff protocol."""
-    from ..streaming.jobs import events_stream_ordered, run_to_memory
-
-    s = events_stream_ordered(spark, sf_dir)
-    p = (
-        s.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("c_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "rightOuter",
-    )
-    out = run_to_memory(
-        j.select("c_user", "c_id", "c_ts", "p_id"), "q367_out", output_mode="append"
-    )
-    ev = table(spark, sf_dir, "events")
-    cut = ev.agg(
-        F.least(
-            F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-        ).alias("cut")
+    out = _purchase_click_join(
+        spark, sf_dir, "rightOuter", ["c_user", "c_id", "c_ts", "p_id"], "q367_out"
     )
     return (
-        out.join(F.broadcast(cut), F.lit(True))
+        _with_stream_cut(spark, sf_dir, out)
         .filter(F.col("c_ts") < F.col("cut") - F.expr("INTERVAL 95 MINUTES"))
         .groupBy(F.col("c_user").alias("user_id"), "c_id")
         .agg(
@@ -1408,27 +1333,38 @@ _TOKSQ = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t != '')"
 _FPQ = f"md5(array_to_string(list_sort({_SH3Q.format(t=_TOKSQ)}), chr(31)))"
 
 
-def _replay_copy(name: str, golden: str, state: str) -> str:
-    """Fresh per-run copy of a stream replay's golden inputs: returns
-    the run's scratch dir holding ``arrivals/`` and ``<state>/`` (the
-    caller's stream checkpoint goes there too). The replay appends to
-    its state, so every run starts from its own copy of the golden dir.
-    Arrival files are re-stamped one second apart per batch ``b=0..2``:
-    mtime order defines the batch boundaries (one file per arrival)."""
+def _replay_arrivals(spark: SparkSession, name: str, golden: str, state: str, process) -> None:
+    """Replay a golden dir's three arrival files ``arrivals/b=0..2``
+    through ``process(batch_df, batch_id, state_dir)``, one file per
+    micro-batch, to the end of the feed. The replay appends to its
+    state, so every run works on its own scratch copy of ``arrivals/``
+    and ``<state>/`` (``state_dir``), with its stream checkpoint beside
+    them. Arrival files are re-stamped one second apart per batch:
+    mtime order defines the batch boundaries."""
     import shutil
     import time
+
+    from ..streaming.jobs import file_replay_stream
 
     base = scratch_dir(name)
     src = os.path.join(base, "arrivals")
     shutil.copytree(os.path.join(golden, "arrivals"), src)
-    shutil.copytree(os.path.join(golden, state), os.path.join(base, state))
+    state_dir = os.path.join(base, state)
+    shutil.copytree(os.path.join(golden, state), state_dir)
     now = time.time()
     for b in range(3):
         sub = os.path.join(src, f"b={b}")
         for f in os.listdir(sub):
             if f.endswith(".parquet"):
                 os.utime(os.path.join(sub, f), (now + b, now + b))
-    return base
+    q = (
+        file_replay_stream(spark, src)
+        .writeStream.foreachBatch(lambda batch_df, batch_id: process(batch_df, batch_id, state_dir))
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @query(
@@ -1515,8 +1451,6 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         ).parquet(os.path.join(golden, "minhash_index"))
 
     golden, _ = query_state("q392", sf_dir, build)
-    base = _replay_copy("q392", golden, "minhash_index")
-    src, state_dir = os.path.join(base, "arrivals"), os.path.join(base, "minhash_index")
 
     # keyed by batch_id so an at-least-once foreachBatch redelivery
     # overwrites rather than duplicates a count row. (A redelivery
@@ -1527,7 +1461,7 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # catch it if it did.)
     results: dict[int, tuple[int, int]] = {}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
         # ONE minhash/shingle pass per micro-batch: build the batch's
         # index rows once, probe the state from them, and append the
         # SURVIVOR SUBSET of the same rows — probing the text and then
@@ -1554,22 +1488,7 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
             "band"
         ).parquet(state_dir)
 
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _replay_arrivals(spark, "q392", golden, "minhash_index", process)
     return spark.createDataFrame(
         [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
         "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
@@ -1684,12 +1603,10 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return codebook
 
     gdir, codebook = query_state("q437", sf_dir, build)
-    base = _replay_copy("q437", gdir, "semantic_index")
-    src, state_dir = os.path.join(base, "arrivals"), os.path.join(base, "semantic_index")
 
     results: dict[int, tuple[int, int]] = {}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
         # ONE Arrow matmul + fingerprint pass per micro-batch: build
         # the batch's index rows once, probe the state FROM them, and
         # append the SURVIVOR SUBSET of the same rows — probing the
@@ -1715,22 +1632,7 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell"
         ).parquet(state_dir)
 
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _replay_arrivals(spark, "q437", gdir, "semantic_index", process)
     return spark.createDataFrame(
         [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
         "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
@@ -1868,8 +1770,6 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     golden, _ = query_state("q443", sf_dir, build)
-    base = _replay_copy("q443", golden, "bm25")
-    src, state = os.path.join(base, "arrivals"), os.path.join(base, "bm25")
 
     qt = spark.createDataFrame(
         list(Q390_QUERY_TERMS), "query_id int, t string"
@@ -1877,7 +1777,7 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = sorted({t for _, t in Q390_QUERY_TERMS})
     results: list[tuple] = []
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, state: str) -> None:
         # (a) append the batch's postings — one tokenize of the batch,
         # never of the corpus
         new_postings, _, _ = build_bm25_index(
@@ -1919,22 +1819,7 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _replay_arrivals(spark, "q443", golden, "bm25", process)
     out = spark.createDataFrame(
         sorted(results),
         "batch_idx bigint, query_id int, rank bigint, doc_id bigint, "

@@ -500,7 +500,7 @@ def q163_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong argmin flips a boolean."""
     import numpy as np
 
-    from ..operators.similarity import _argmin_sqdist_sql, kmeans_euclidean
+    from ..operators.similarity import argmin_sqdist_sql, kmeans_euclidean
 
     emb = table(spark, sf_dir, "embeddings")
     cents, history = kmeans_euclidean(emb, k=8, iters=4)
@@ -532,7 +532,7 @@ def q163_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("vec_id", "embedding")
         .join(F.broadcast(sample_ids), "vec_id")
         .withColumn("cell", assign("embedding"))
-        .withColumn("cell2", F.expr(_argmin_sqdist_sql("embedding", cents)))
+        .withColumn("cell2", F.expr(argmin_sqdist_sql("embedding", cents)))
     )
     argmin_ok = audit.agg(F.min(F.col("cell") == F.col("cell2")).alias("__argmin_ok"))
     n_points = emb.agg(F.count(F.lit(1)).alias("n_points"))

@@ -5,6 +5,12 @@ Local-mode posture per the 100 TB design notes in SURVEY.md §4: AQE on
 partitions sized to cores (not the 200 default), session timezone pinned
 to UTC so timestamp semantics match the DuckDB oracle, Arrow enabled for
 any pandas-exchange path.
+
+The core count is decided here only, by :func:`cores`:
+``$SPARK_GRAFT_CPUS`` when it is set (a value that is not an integer
+raises), else the session's ``defaultParallelism``, else, before there
+is a session, ``os.cpu_count()``. ``get_spark``'s default master
+``local[N]`` and both shuffle-partition settings ask it.
 """
 
 from __future__ import annotations
@@ -16,7 +22,32 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "prep", "conf_scope"]
+__all__ = ["cores", "get_spark", "prep", "conf_scope"]
+
+
+def cores(spark: SparkSession | None = None) -> int:
+    """How many cores the engine plans for (the rule is the module doc)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if spark is not None:
+        return spark.sparkContext.defaultParallelism
+    return os.cpu_count() or 1
+
+
+def _runtime_conf(n_cores: int) -> dict[str, str]:
+    """The runtime-settable conf both :func:`get_spark` and :func:`prep`
+    apply: results depend on the UTC timezone (timestamp values must
+    agree with the DuckDB oracle), and the catalog's plans are laid out
+    for core-sized shuffles with AQE coalescing and a 64 MB broadcast
+    threshold (an externally-created session has 200 partitions and
+    10 MB)."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(max(n_cores, 4)),
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
 
 
 def get_spark(
@@ -25,28 +56,20 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 4)
-        except ValueError:
-            shuffle_partitions = 32
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    n_cores = cores()
+    conf = {
+        **_runtime_conf(n_cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
         # keep managed-table metadata out of the working directory
-        .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "mcetl_warehouse"))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.warehouse.dir": os.path.join(tempfile.gettempdir(), "mcetl_warehouse"),
+    }
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    builder = SparkSession.builder.appName(app_name).master(master or f"local[{n_cores}]")
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -58,31 +81,16 @@ def prep(spark: SparkSession) -> SparkSession:
 
     The catalog's ``query()`` decorator calls it before every registered
     query runs, so results are stable even under an externally-created
-    SparkSession (a caller that builds its own):
-    UTC session timezone (timestamp values must agree with the DuckDB
-    oracle) and ANSI off (null-on-bad-cast semantics, matching the
-    reference's null-on-parse-failure at
-    /root/reference/app/salesforce_extractor.py:149-151).
+    SparkSession (a caller that builds its own): :func:`get_spark`'s
+    runtime conf, shuffle partitions sized from the session's own core
+    count, and ANSI off (null-on-bad-cast semantics, matching the
+    reference's null-on-parse-failure at salesforce_extractor.py:149-151).
+    ANSI is prep's alone: the ETL runs on a ``get_spark`` session
+    without it.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for k, v in _runtime_conf(cores(spark)).items():
+        spark.conf.set(k, v)
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    # runtime-settable perf conf: an externally-created session defaults
-    # to 200 shuffle partitions — wrong for both local runs (over-
-    # parallelized) and the fixture scales; AQE coalescing needs to be
-    # on to shrink post-shuffle stages. Size from the session's ACTUAL
-    # core count (an 8-core test session must not get the 32 the env
-    # default implies); $SPARK_GRAFT_CPUS overrides when set explicitly.
-    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    try:
-        cpus = int(env_cpus) if env_cpus else spark.sparkContext.defaultParallelism
-    except ValueError:
-        cpus = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # the broadcast threshold get_spark sets: an externally-created
-    # session keeps Spark's 10 MB default, and the catalog's join
-    # plans are laid out for the larger one
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     return spark
 
 

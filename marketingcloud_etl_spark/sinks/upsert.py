@@ -19,21 +19,33 @@ row-group skipping. With a Delta/Iceberg catalog this becomes
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 def overwrite_parquet(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> int:
-    """Full refresh (R15): replace the target atomically (staging write
-    + swap is handled by Spark's output committer). Returns the rows
-    written, counted by an observation on the write itself — no second
-    listing and scan of the target."""
+    """Full refresh (R15): replace the target atomically. The new rows
+    are written to a hidden sibling staging dir; only once that write
+    has completed is the old target renamed aside and the staging dir
+    renamed into its place (local filesystem renames), so a write that
+    fails leaves the old target whole. Spark's own overwrite would
+    delete the target before its tasks run. Returns the rows written,
+    counted by an observation on the write itself — no second listing
+    and scan of the target."""
+    parent, name = os.path.split(os.path.abspath(path))
+    staging, old = (os.path.join(parent, f".{name}.{tag}") for tag in ("staging", "old"))
     written = Observation()
     w = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+    w.parquet(staging)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
     return written.get["n"]
 
 

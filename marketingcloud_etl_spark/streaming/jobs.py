@@ -51,14 +51,23 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
     )[0]
 
 
-def events_stream(spark: SparkSession, sf_dir: str, files_per_trigger: int = 2) -> DataFrame:
-    src = replay_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+def file_replay_stream(spark: SparkSession, src: str, files_per_trigger: int = 1) -> DataFrame:
+    """The one file-source reader every replay uses: the parquet files
+    under ``src`` (subdirectories included, with no partition columns
+    inferred from their names), ``files_per_trigger`` per micro-batch,
+    oldest modification time first."""
+    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
+        .option("recursiveFileLookup", "true")
+        .option("latestFirst", "false")
         .parquet(src)
     )
+
+
+def events_stream(spark: SparkSession, sf_dir: str, files_per_trigger: int = 2) -> DataFrame:
+    return file_replay_stream(spark, replay_dir(spark, sf_dir), files_per_trigger)
 
 
 def ordered_replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
@@ -125,15 +134,7 @@ def late_replay_dir(
 def events_stream_ordered(
     spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
 ) -> DataFrame:
-    src = ordered_replay_dir(spark, sf_dir)
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(src).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
+    return file_replay_stream(spark, ordered_replay_dir(spark, sf_dir), files_per_trigger)
 
 
 def tumbling_counts(stream: DataFrame, window: str = "1 hour", watermark: str = "30 minutes") -> DataFrame:

@@ -19,7 +19,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="mcetl-tests", master="local[8]", shuffle_partitions=8)
+    # plan-shape tests find state dirs by name in the printed scan
+    # Location, which Spark cuts at maxMetadataStringLength (100 chars
+    # by default): print whole paths, however long TMPDIR is
+    s = get_spark(
+        app_name="mcetl-tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.maxMetadataStringLength": "1000"},
+    )
     yield s
 
 

@@ -333,6 +333,26 @@ def test_overwrite_parquet_returns_written_rows(spark, tmp_path, partition_cols)
     assert overwrite_parquet(empty, target, partition_cols) == 0
 
 
+def test_failed_overwrite_keeps_the_old_target(spark, tmp_path):
+    """An overwrite whose task raises leaves the old target whole and
+    readable: the new rows are staged beside it and swapped in only once
+    they are complete. A narrow plan (no shuffle) is the case where
+    Spark's own overwrite deletes the target before any task runs."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    target = str(tmp_path / "t")
+    assert overwrite_parquet(spark.range(1000), target) == 1000
+    bad = spark.range(10).withColumn("x", F.raise_error(F.lit("task failed")))
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        overwrite_parquet(bad, target)
+    assert spark.read.parquet(target).count() == 1000
+    # the next overwrite replaces it and leaves no staging dir behind
+    assert overwrite_parquet(spark.range(5), target) == 5
+    assert spark.read.parquet(target).count() == 5
+    assert [p.name for p in tmp_path.iterdir()] == ["t"]
+
+
 def _target_state(spark, target):
     files = sorted((p.name, p.stat().st_size) for p in target.iterdir())
     rows = sorted(repr(r) for r in spark.read.parquet(str(target)).collect())

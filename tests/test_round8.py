@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
+from marketingcloud_etl_spark.plans.audit_queries import fk_audit
 from marketingcloud_etl_spark.plans.catalog import load_all
 
 REG = load_all()
@@ -307,8 +308,6 @@ def test_referential_integrity_plan_broadcasts_and_counts_orphans(spark, sf_dir)
     """q410: the parent-side existence checks must be broadcast joins
     (dimensions are broadcast-sized at every scale the audit targets)
     and a planted orphan must be counted exactly once per child row."""
-    from pyspark.sql import functions as F
-
     plan = (
         REG["q410_referential_integrity_audit"]
         .fn(spark, sf_dir)
@@ -317,30 +316,42 @@ def test_referential_integrity_plan_broadcasts_and_counts_orphans(spark, sf_dir)
         .toString()
     )
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan
-    # planted orphan probe on constructed frames, through the same shape
-    child = spark.createDataFrame([(1,), (1,), (7,)], "k bigint")
-    parent = spark.createDataFrame([(1,), (2,)], "k bigint")
-    ckeys = child.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    orphans = (
-        ckeys.join(F.broadcast(parent), "k", "left_anti")
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n"))
-        .first()["n"]
-    )
-    unref = parent.join(ckeys.select("k"), "k", "left_anti").count()
-    assert orphans == 1 and unref == 1
+    # planted orphan probe on constructed frames, through the operator
+    child = spark.createDataFrame([(1,), (1,), (7,)], "c bigint")
+    parent = spark.createDataFrame([(1,), (2,)], "p bigint")
+    row = fk_audit(child, "c", parent, "p").first().asDict()
+    assert row == {"n_child": 3, "n_orphan": 1, "n_parent": 2, "n_unreferenced": 1}
+
+
+def test_fk_audit_builds_lazily(spark, sf_dir):
+    """q314 takes its FK counts from q410's fk_audit and keeps every
+    check lazy: building it runs no job beyond the schema reads of its
+    three tables."""
+    from marketingcloud_etl_spark.io import table
+
+    sc = spark.sparkContext
+
+    def jobs(build, group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tables = ("orders", "lineitem", "customer")
+    reads = jobs(lambda: [table(spark, sf_dir, t) for t in tables], "fk-audit-reads")
+    q314 = REG["q314_referential_integrity_audit"].fn
+    assert jobs(lambda: q314(spark, sf_dir), "fk-audit-build") == reads
 
 
 def test_column_profile_is_single_scan(spark, sf_dir):
-    """q409 promises one pass over orders: the executed plan must
-    contain exactly one parquet scan of the orders fixture."""
-    plan = (
-        REG["q409_column_profile_audit"]
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("orders.parquet") == 1
+    """q409 promises one pass over orders, and q126 runs the same
+    column_profile: each executed plan must contain exactly one parquet
+    scan of the orders fixture."""
+    for name in ("q409_column_profile_audit", "q126_column_profile"):
+        plan = REG[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("orders.parquet") == 1, name
 
 
 def test_warm_start_pagerank_continuation_identity(spark, sf_dir):

@@ -4,8 +4,10 @@ in ``plans/``, ``sinks/``, ``operators/`` and ``streaming/``, keep
 ``ranking.pin_cache`` the only place ``plans/`` and ``operators/``
 persist a frame, keep ``io.table`` the only place that decides scan
 parallelism, keep ``session.py`` the only module that changes
-session conf, and keep ``functions/hashing.py`` the only module that
-spells the cross-engine digest format."""
+session conf or decides the core count, keep ``functions/hashing.py``
+the only module that spells the cross-engine digest format, keep each
+streaming replay fragment spelled once, and keep private names inside
+their module."""
 
 from __future__ import annotations
 
@@ -303,11 +305,9 @@ def test_digest_format_is_spelled_only_in_hashing():
     """functions/hashing.py is the only module that spells the
     cross-engine digest format (the md5 hex-prefix integer, the NULL
     sentinel, the half-sum checksum); every other module calls its
-    twins. No plan module imports a private name from another plan
-    module either (the digest constants used to travel that way)."""
+    twins."""
     import re
 
-    plan_mods = {p.stem for p in (PKG / "plans").glob("*.py")}
     found = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -330,18 +330,96 @@ def test_digest_format_is_spelled_only_in_hashing():
                 and not any(a <= c.lineno <= b for a, b in exempt)
             ):
                 found.append(f"{rel}:{c.lineno}: conv() Column digest")
+    assert not found, "\n".join(found)
+
+
+def test_no_private_name_crosses_a_module():
+    """No package module imports a ``_``-prefixed name from another
+    package module (the digest constants and the similarity helpers
+    used to travel that way): a name another module needs is public.
+    Importing a private module itself (``from .. import _pbcompat``)
+    is allowed."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.ImportFrom) and n.level >= 1:
+                base = path.parents[n.level - 1].joinpath(*(n.module or "").split("."))
+            elif isinstance(n, ast.ImportFrom) and (n.module or "").startswith(PKG.name):
+                base = PKG.parent.joinpath(*n.module.split("."))
+            else:
+                continue
+            found += [
+                f"{rel}:{n.lineno}: imports private {a.name} from {n.module or '.'}"
+                for a in n.names
+                if a.name.startswith("_")
+                and not (base / f"{a.name}.py").exists()
+                and not (base / a.name).is_dir()
+            ]
+    assert not found, "\n".join(found)
+
+
+def _top_level_owner(tree: ast.Module) -> dict[int, str | None]:
+    """id(node) -> the top-level function whose body holds it (None at
+    module level)."""
+    owner: dict[int, str | None] = {id(n): None for n in ast.walk(tree)}
+    for f in tree.body:
+        if isinstance(f, ast.FunctionDef):
+            owner.update({id(n): f.name for n in ast.walk(f)})
+    return owner
+
+
+def test_core_count_is_decided_only_in_session():
+    """session.cores is the one rule for the core count: no other
+    package module reads $SPARK_GRAFT_CPUS, and no module hard-codes a
+    32-core master."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        src = path.read_text()
+        if rel != "session.py" and "SPARK_GRAFT_CPUS" in src:
+            found.append(f"{rel}: reads SPARK_GRAFT_CPUS")
+        if "local[32]" in src:
+            found.append(f"{rel}: local[32]")
+    assert not found, "\n".join(found)
+
+
+# each streaming replay fragment and the one function that spells it
+_STREAM_FRAGMENT_OWNERS = {
+    "readStream": {
+        ("streaming/jobs.py", "file_replay_stream"),
+        ("plans/etl_queries.py", "_rest_stream_rows"),
+    },
+    "purchase/click watermark": {("plans/streaming_queries.py", "_purchase_click_join")},
+}
+
+
+def test_streaming_replay_fragments_are_spelled_once():
+    """A file-replay or REST stream is opened only by
+    jobs.file_replay_stream and the REST stream helper, and the
+    watermarked purchase/click sides of the stream-stream joins are
+    built only by _purchase_click_join."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        owner = _top_level_owner(tree)
         for n in ast.walk(tree):
-            if (
-                rel.startswith("plans/")
-                and isinstance(n, ast.ImportFrom)
-                and n.level == 1
-                and n.module in plan_mods
+            if isinstance(n, ast.Attribute) and n.attr == "readStream":
+                what = "readStream"
+            elif (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "withWatermark"
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value in ("p_ts", "c_ts")
             ):
-                found += [
-                    f"{rel}:{n.lineno}: imports private {a.name} from plans/{n.module}"
-                    for a in n.names
-                    if a.name.startswith("_")
-                ]
+                what = "purchase/click watermark"
+            else:
+                continue
+            if (rel, owner[id(n)]) not in _STREAM_FRAGMENT_OWNERS[what]:
+                found.append(f"{rel}:{n.lineno}: {what} in {owner[id(n)]}")
     assert not found, "\n".join(found)
 
 
