@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import content_hash
 from ..functions.text import tokens
+from .state import BucketLayout, probe_bucket_rows
 
 # universal-hash params sized so a*h32 + b < 2^63: works identically
 # with ANSI mode on or off (no long overflow by construction)
@@ -328,6 +329,16 @@ def shingle_set_fingerprint(text_col: Column | str, n: int = 3) -> Column:
     return build()
 
 
+# the persisted band-bucket index (build_minhash_index's rows):
+# partitioned on band, probed on (band, bucket), verified on set_fp
+MINHASH_LAYOUT = BucketLayout(
+    partition="band",
+    keys=("band", "bucket"),
+    fp="set_fp",
+    schema="id bigint, band int, bucket bigint, set_fp string",
+)
+
+
 def build_minhash_index(
     corpus: DataFrame,
     id_col: str = "doc_id",
@@ -338,13 +349,14 @@ def build_minhash_index(
     seed: int = 42,
 ) -> DataFrame:
     """The persisted near-dup STATE for cross-batch incremental dedup:
-    one row per (doc, band) — (id, band, bucket, set_fp). Write it out
-    once (partitioned by ``band`` at scale, so a probe's (band,bucket)
-    join prunes partitions); subsequent batches dedup against the
-    INDEX alone — the corpus text is never re-scanned or re-hashed.
-    This is the probabilistic twin of the q359 Bloom tier, at R16's
-    incremental posture: state grows by the surviving docs' bands per
-    batch (append :func:`probe_minhash_index` survivors' index rows).
+    one row per (doc, band) — (id, band, bucket, set_fp), the
+    :data:`MINHASH_LAYOUT` that operators/state.py writes, probes,
+    appends to and compacts. Write it out once (partitioned by
+    ``band``, so a probe's (band,bucket) join prunes partitions);
+    subsequent batches dedup against the INDEX alone — the corpus text
+    is never re-scanned or re-hashed. This is the probabilistic twin
+    of the q359 Bloom tier, at R16's incremental posture: state grows
+    by the surviving docs' bands per batch (state.probe_then_append).
 
     Exactness contract: banded minhash has NO false negatives for
     shingle-set-IDENTICAL docs (equal sets ⇒ equal signatures ⇒ every
@@ -390,103 +402,17 @@ def probe_minhash_index(
     verify over the stored fingerprints, and ``dup_of`` is the lowest
     matching corpus id (null when new).
 
-    PRECONDITION: ``id_col`` must be UNIQUE within ``batch``. The
-    probe joins the batch's band buckets with its fingerprints on id;
-    a duplicated id crosses one doc's buckets with the other doc's
-    fingerprint, and the per-id aggregation silently merges both docs
-    into one wrong row. Callers minting synthetic ids (re-crawl
+    PRECONDITION: ``id_col`` must be UNIQUE within ``batch`` (see
+    state.probe_bucket_rows). Callers minting synthetic ids (re-crawl
     batches) must mint collision-free ones — q388 negates re-crawl ids
-    so they can never meet a genuine id at any scale.
-
-    Scale shape: the only join is (band, bucket)-keyed, batch-side
-    broadcast by default (a daily batch is orders of magnitude smaller
-    than the corpus index, and broadcasting it turns the probe into a
-    map-side scan of the index — zero shuffle of the state table). Set
-    ``broadcast_batch=False`` when the batch rivals the corpus; the
-    join then shuffles on (band, bucket), still docs×bands rows."""
+    so they can never meet a genuine id at any scale. The only join is
+    (band, bucket)-keyed with the batch broadcast by default; callers
+    that also append the survivors build the rows once and use
+    state.probe_then_append instead."""
     rows = build_minhash_index(
         batch, id_col, text_col, num_perm, bands, shingle_n, seed
     )
-    return probe_minhash_rows(rows, index, broadcast_batch=broadcast_batch)
-
-
-def probe_minhash_rows(
-    batch_rows: DataFrame,
-    index: DataFrame,
-    broadcast_batch: bool = True,
-) -> DataFrame:
-    """:func:`probe_minhash_index` from PREBUILT batch index rows —
-    the (id, band, bucket, set_fp) frame :func:`build_minhash_index`
-    emits. Callers that both probe a batch AND append its survivors'
-    rows to the state (the q392 foreachBatch loop) build the rows
-    ONCE, probe from them, and append the survivor subset — halving
-    the minhash/shingle compute per micro-batch versus probing the
-    text and then re-fingerprinting the survivors. Same uniqueness
-    precondition and (id, n_candidates, is_dup, dup_of) contract as
-    the text-input probe, which now delegates here."""
-    bfp = batch_rows.select("id", F.col("set_fp").alias("__bfp")).distinct()
-    probe = batch_rows.select(
-        "id", "band", "bucket", F.col("set_fp").alias("__bfp")
-    )
-    if broadcast_batch:
-        probe = F.broadcast(probe)
-    cand = probe.join(
-        index.select(
-            F.col("band"), F.col("bucket"),
-            F.col("id").alias("__cid"), F.col("set_fp").alias("__cfp"),
-        ),
-        ["band", "bucket"],
-    )
-    hits = cand.groupBy("id").agg(
-        F.count_distinct("__cid").alias("n_candidates"),
-        F.max(F.col("__bfp") == F.col("__cfp")).alias("is_dup"),
-        F.min(F.when(F.col("__bfp") == F.col("__cfp"), F.col("__cid"))).alias("dup_of"),
-    )
-    return (
-        bfp.join(hits, "id", "left")
-        .select(
-            "id",
-            F.coalesce("n_candidates", F.lit(0)).cast("bigint").alias("n_candidates"),
-            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-            "dup_of",
-        )
-    )
-
-
-def compact_minhash_index(
-    spark,
-    state_dir: str,
-    out_dir: str,
-    keep: Column | None = None,
-) -> DataFrame:
-    """MAINTENANCE pass for the persisted band-bucket state: rewrite an
-    append-grown index into ONE file per band partition, dropping rows
-    that fail the ``keep`` predicate (TTL / retention / right-to-erasure
-    deletes). Every probed batch appends its survivors' index rows
-    (:func:`probe_minhash_index` loop), so after N batches each band
-    partition holds N small files — the classic streaming-ingest
-    small-file pile-up — and expired docs keep matching forever unless
-    their rows are dropped. Compaction is the q120 small-file story
-    applied to the state layout.
-
-    Scale shape: ONE shuffle keyed on ``band`` over the INDEX (bounded
-    by docs × bands rows of four scalars — never the corpus text), with
-    the ``keep`` predicate evaluated before the exchange so expired
-    rows don't shuffle; one writer per band ⇒ one file per band.
-    Writes to ``out_dir`` (generation-style: the caller swaps dirs or
-    repoints readers — rewriting ``state_dir`` in place would race
-    concurrent probes). Returns the compacted index frame.
-
-    Probe-equivalence contract: for any batch, probing the compacted
-    index equals probing the original MINUS matches against dropped
-    docs (pinned in tests/test_operators.py)."""
-    idx = spark.read.parquet(state_dir)
-    if keep is not None:
-        idx = idx.filter(keep)
-    idx.repartition("band").write.mode("overwrite").partitionBy("band").parquet(
-        out_dir
-    )
-    return spark.read.parquet(out_dir)
+    return probe_bucket_rows(rows, index, MINHASH_LAYOUT, broadcast_batch)
 
 
 def split_hot_buckets(
@@ -547,8 +473,8 @@ def fan_out_probe_rows(batch_rows: DataFrame, registry: DataFrame) -> DataFrame:
     either, since residents were rehashed by THEIR ids), a row aimed
     at a cold bucket maps to ``2b``; buckets absent from the registry
     (signatures never seen at split time) are cold by definition.
-    Probe-equivalence contract: ``probe_minhash_rows(fan_out(rows),
-    split_index) == probe_minhash_rows(rows, index)`` — pinned in
+    Probe-equivalence contract: ``probe_bucket_rows(fan_out(rows),
+    split_index) == probe_bucket_rows(rows, index)`` — pinned in
     tests/test_operators.py. The fan-out is a bounded ×2 on hot
     buckets only; the registry is bucket-domain-sized and broadcast."""
     j = batch_rows.join(F.broadcast(registry), ["band", "bucket"], "left")

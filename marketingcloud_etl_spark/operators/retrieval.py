@@ -10,13 +10,16 @@ Index layout (the classic serving split, Lucene-shaped):
   the doc-length norm DENORMALIZED into the posting row, so scoring a
   query never joins the corpus-sized doc-length table — the only
   corpus-sized frame a probe touches is the postings themselves,
-  pruned to the query's terms. Written repartitioned + sorted by term:
-  parquet min/max row-group stats then skip every block that contains
-  none of the query's terms (the file-format form of an index seek).
+  pruned to the query's terms. Written repartitioned + sorted by term
+  (:func:`write_postings`, the one writer of the layout): parquet
+  min/max row-group stats then skip every block that contains none of
+  the query's terms (the file-format form of an index seek).
 * ``df`` — (t, df): per-term document frequency (broadcast-sized for
   any query batch).
 * ``stats`` — one row (n_docs, total_len): the global normalization
   constants.
+
+:func:`read_bm25_index` is the one reader of the triple.
 
 Scoring is q278's exact BM25 arithmetic (Robertson idf, k1=1.2,
 b=0.75, per-doc sorted-fold sum — the bitwise-reproducible float
@@ -32,6 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokens
+from .state import write_generation
+
+# the postings table's schema (build_bm25_index's postings frame)
+POSTINGS_SCHEMA = "t string, doc_id bigint, tf bigint, len bigint"
 
 
 def build_bm25_index(
@@ -73,6 +80,44 @@ def build_bm25_index(
     return postings, df, stats
 
 
+def _sharded_postings(postings: DataFrame, n_shards: int) -> DataFrame:
+    # term-sharded, term-sorted within each shard: the layout a probe's
+    # term filter prunes row groups on
+    return postings.repartition(n_shards, "t").sortWithinPartitions("t", "doc_id")
+
+
+def write_postings(
+    postings: DataFrame, path: str, n_shards: int = 8, mode: str = "overwrite"
+) -> None:
+    """Write ``postings`` at ``path`` in the serving layout: shards on
+    the term, SORTED by term within each shard, so a probe's term
+    filter prunes row groups via parquet min/max stats — the columnar
+    stand-in for an index seek. ``mode="append"`` extends an index
+    with new docs' postings (each append adds sorted files, but the
+    shard as a whole is no longer one sorted run — compaction's job)."""
+    _sharded_postings(postings, n_shards).write.mode(mode).parquet(path)
+
+
+def read_bm25_index(spark, base_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The (postings, df, stats) triple written under ``base_dir`` by
+    :func:`write_bm25_index` or :func:`compact_bm25_index`."""
+    return tuple(
+        spark.read.parquet(f"{base_dir}/{t}") for t in ("postings", "df", "stats")
+    )
+
+
+def refold_stats(postings: DataFrame) -> DataFrame:
+    """The one-row (n_docs, total_len) stats refolded from postings:
+    one (doc_id, len) row per doc, counted and summed. Counts docs
+    with at least one posting — unlike :func:`build_bm25_index`'s
+    stats, which count corpus rows (a doc without tokens differs)."""
+    return (
+        postings.select("doc_id", "len")
+        .distinct()
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("len").alias("total_len"))
+    )
+
+
 def write_bm25_index(
     corpus: DataFrame,
     base_dir: str,
@@ -81,18 +126,11 @@ def write_bm25_index(
     n_shards: int = 8,
 ) -> None:
     """Materialize the index under ``base_dir`` (postings/, df/,
-    stats/). Postings are repartitioned on the term and SORTED by term
-    within each shard, so a probe's term filter prunes row groups via
-    parquet min/max stats — the columnar stand-in for an index seek.
-    At 100 TB shard count scales with the corpus; df/stats stay
-    broadcast-sized regardless."""
+    stats/), postings in the :func:`write_postings` layout. At 100 TB
+    shard count scales with the corpus; df/stats stay broadcast-sized
+    regardless."""
     postings, df, stats = build_bm25_index(corpus, id_col, text_col)
-    (
-        postings.repartition(n_shards, "t")
-        .sortWithinPartitions("t", "doc_id")
-        .write.mode("overwrite")
-        .parquet(base_dir + "/postings")
-    )
+    write_postings(postings, base_dir + "/postings", n_shards)
     df.coalesce(1).write.mode("overwrite").parquet(base_dir + "/df")
     stats.coalesce(1).write.mode("overwrite").parquet(base_dir + "/stats")
 
@@ -193,28 +231,20 @@ def compact_bm25_index(
     tf, len scalars — never the corpus text) with ``keep`` evaluated
     before the exchange; df folds from the compacted postings (one row
     per (t, doc) by construction); stats is a doc-keyed distinct +
-    one-row reduction. Writes a fresh generation under ``out_dir``
-    (postings/, df/, stats/) — never in place. Returns the three
-    frames read back from it."""
+    one-row reduction (:func:`refold_stats`). Writes a fresh
+    generation under ``out_dir`` (postings/, df/, stats/) —
+    state.write_generation rejects an ``out_dir`` that is
+    ``base_dir``. Returns the three frames read back from it."""
     postings = spark.read.parquet(base_dir + "/postings")
     if keep is not None:
         postings = postings.filter(keep)
-    (
-        postings.repartition(n_shards, "t")
-        .sortWithinPartitions("t", "doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir + "/postings")
+    write_generation(
+        _sharded_postings(postings, n_shards),
+        base_dir + "/postings",
+        out_dir + "/postings",
     )
     p2 = spark.read.parquet(out_dir + "/postings")
     df = p2.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     df.coalesce(1).write.mode("overwrite").parquet(out_dir + "/df")
-    dl = p2.select("doc_id", "len").distinct()
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("len").alias("total_len")
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(out_dir + "/stats")
-    return (
-        p2,
-        spark.read.parquet(out_dir + "/df"),
-        spark.read.parquet(out_dir + "/stats"),
-    )
+    refold_stats(p2).coalesce(1).write.mode("overwrite").parquet(out_dir + "/stats")
+    return read_bm25_index(spark, out_dir)

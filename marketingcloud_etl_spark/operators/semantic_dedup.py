@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hex_int_expr
 from .components import dedup_clusters
 from .similarity import l2_normalize
+from .state import BucketLayout, probe_bucket_rows
 
 
 def _probed_cells(
@@ -214,6 +215,16 @@ def vector_fingerprint(vec_col: Column | str = "embedding") -> Column:
     return F.md5(F.concat_ws(",", F.transform(c, lambda x: x.cast("string"))))
 
 
+# the persisted cell index (build_semantic_index's rows): partitioned
+# on cell, probed on cell, verified on vec_fp
+SEMANTIC_LAYOUT = BucketLayout(
+    partition="cell",
+    keys=("cell",),
+    fp="vec_fp",
+    schema="id bigint, cell int, vec_fp string",
+)
+
+
 def build_semantic_index(
     corpus: DataFrame,
     codebook: list,
@@ -223,8 +234,10 @@ def build_semantic_index(
 ) -> DataFrame:
     """The persisted vector-space STATE for cross-batch incremental
     semantic dedup: one row per (vector, probed cell) — (id, cell,
-    vec_fp). The q388 minhash-state posture transposed to embeddings:
-    write it once (partitioned by ``cell`` at scale), probe every
+    vec_fp), the :data:`SEMANTIC_LAYOUT` that operators/state.py
+    writes, probes, appends to and compacts. The q388 minhash-state
+    posture transposed to embeddings: write it once (partitioned by
+    ``cell``), probe every
     arriving batch against the INDEX alone — corpus vectors are never
     re-scanned or re-scored. The codebook that defines the cells is
     part of the state (persist it next to the index; it is n_cells×dim
@@ -265,85 +278,11 @@ def probe_semantic_index(
     via the stored fingerprint, ``dup_of`` the lowest matching corpus
     id. The only join is cell-keyed with the (small) batch side
     broadcast, so the corpus-sized index is scanned map-side and never
-    shuffled; survivors' index rows append to the state, closing the
-    incremental loop (same shape as dedup.probe_minhash_index).
+    shuffled (state.probe_bucket_rows); callers that also append the
+    survivors build the rows once and use state.probe_then_append.
 
-    PRECONDITION: ``id_col`` must be UNIQUE within ``batch`` — a
-    duplicated id crosses one vector's probed cells with the other's
-    fingerprint and the per-id aggregation merges both into one wrong
-    row (see probe_minhash_index; q389 negates re-ingest ids so
-    synthetic ids never collide with genuine ones)."""
+    PRECONDITION: ``id_col`` must be UNIQUE within ``batch`` (q389
+    negates re-ingest ids so synthetic ids never collide with genuine
+    ones)."""
     rows = build_semantic_index(batch, codebook, n_probe, id_col, vec_col)
-    return probe_semantic_rows(rows, index, broadcast_batch=broadcast_batch)
-
-
-def probe_semantic_rows(
-    batch_rows: DataFrame,
-    index: DataFrame,
-    broadcast_batch: bool = True,
-) -> DataFrame:
-    """:func:`probe_semantic_index` from PREBUILT batch index rows —
-    the (id, cell, vec_fp) frame :func:`build_semantic_index` emits.
-    Callers that both probe a batch AND append its survivors' rows to
-    the state (the q437 foreachBatch loop) build the rows ONCE, probe
-    from them, and append the survivor subset — halving the per-batch
-    Arrow matmul + fingerprint work versus probing the vectors and
-    then re-deriving the survivors' cells (the q392
-    probe_minhash_rows pattern, transposed to the vector index). Same
-    uniqueness precondition and (id, n_candidates, is_dup, dup_of)
-    contract as the vector-input probe, which now delegates here."""
-    bfp = batch_rows.select(
-        F.col("id").alias("__id"), F.col("vec_fp").alias("__bfp")
-    ).distinct()
-    probe = batch_rows.select(
-        F.col("id").alias("__id"), "cell", F.col("vec_fp").alias("__bfp")
-    )
-    if broadcast_batch:
-        probe = F.broadcast(probe)
-    cand = probe.join(
-        index.select(
-            "cell", F.col("id").alias("__cid"), F.col("vec_fp").alias("__cfp")
-        ),
-        "cell",
-    )
-    hits = cand.groupBy("__id").agg(
-        F.count_distinct("__cid").alias("n_candidates"),
-        F.max(F.col("__bfp") == F.col("__cfp")).alias("is_dup"),
-        F.min(F.when(F.col("__bfp") == F.col("__cfp"), F.col("__cid"))).alias("dup_of"),
-    )
-    return bfp.join(hits, "__id", "left").select(
-        F.col("__id").alias("id"),
-        F.coalesce("n_candidates", F.lit(0)).cast("bigint").alias("n_candidates"),
-        F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-        "dup_of",
-    )
-
-
-def compact_semantic_index(
-    spark,
-    state_dir: str,
-    out_dir: str,
-    keep=None,
-) -> DataFrame:
-    """MAINTENANCE pass for the cell-partitioned semantic state
-    (:func:`build_semantic_index`): rewrite an append-grown index into
-    one file per cell partition, dropping rows that fail ``keep``
-    (TTL / right-to-erasure). Every probed batch appends its
-    survivors' (id, cell, fp) rows, so cells accumulate one small file
-    per batch and expired vectors keep verifying as dups until their
-    rows leave. Compaction is ONE cell-keyed shuffle of the index —
-    three scalars per row, the embeddings themselves are never re-read
-    or re-scored and the codebook is untouched — with ``keep``
-    evaluated before the exchange. Writes a fresh generation dir
-    (concurrent probes never see a half-rewritten state); returns the
-    compacted index frame. Probe-equivalence: probing the compacted
-    index equals probing the original minus matches against dropped
-    vectors (q397 checks this end-to-end through the re-ingest
-    oracle)."""
-    idx = spark.read.parquet(state_dir)
-    if keep is not None:
-        idx = idx.filter(keep)
-    idx.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        out_dir
-    )
-    return spark.read.parquet(out_dir)
+    return probe_bucket_rows(rows, index, SEMANTIC_LAYOUT, broadcast_batch)

@@ -265,25 +265,40 @@ def q409_column_profile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return column_profile(table(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
-def column_profile(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
-    """One row per ``(name, type)`` of ``cols``: ``col_name``,
-    ``n_rows``, ``n_null``, ``n_distinct`` and the ``min_canon`` /
-    ``max_canon`` strings of the column's canonical form (module doc),
-    all from ONE aggregation pass over ``df`` (Catalyst plans the
-    multi-distinct via one Expand), unpivoted with ``stack``."""
+def wide_profile(
+    df: DataFrame, cols: list[tuple[str, str]], prefix: str = "", stringify: bool = True
+) -> DataFrame:
+    """The one-row profile of ``cols`` over ``df`` in ONE aggregation
+    pass (Catalyst plans the multi-distinct via one Expand): per column
+    ``<prefix><name>__n`` / ``__nulls`` / ``__nd`` (bigint) and the
+    ``__min`` / ``__max`` of its canonical form (module doc), cast to
+    string when ``stringify`` — else native-typed, so numeric columns
+    compare numerically."""
     aggs = []
     for name, typ in cols:
         canon = _canon_spark(name, typ)
+        lo, hi = F.min(canon), F.max(canon)
+        if stringify:
+            lo, hi = lo.cast("string"), hi.cast("string")
+        c = f"{prefix}{name}"
         aggs += [
-            F.count(F.lit(1)).cast("bigint").alias(f"{name}__n"),
+            F.count(F.lit(1)).cast("bigint").alias(f"{c}__n"),
             F.sum(F.col(name).isNull().cast("bigint"))
             .cast("bigint")
-            .alias(f"{name}__nulls"),
-            F.countDistinct(canon).cast("bigint").alias(f"{name}__nd"),
-            F.min(canon).cast("string").alias(f"{name}__min"),
-            F.max(canon).cast("string").alias(f"{name}__max"),
+            .alias(f"{c}__nulls"),
+            F.countDistinct(canon).cast("bigint").alias(f"{c}__nd"),
+            lo.alias(f"{c}__min"),
+            hi.alias(f"{c}__max"),
         ]
-    wide = df.agg(*aggs)
+    return df.agg(*aggs)
+
+
+def column_profile(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
+    """One row per ``(name, type)`` of ``cols``: ``col_name``,
+    ``n_rows``, ``n_null``, ``n_distinct`` and the ``min_canon`` /
+    ``max_canon`` strings of the column's canonical form, from the one
+    pass of :func:`wide_profile`, unpivoted with ``stack``."""
+    wide = wide_profile(df, cols)
     stack_args = ", ".join(
         f"'{name}', {name}__n, {name}__nulls, {name}__nd, {name}__min, {name}__max"
         for name, _ in cols
@@ -865,28 +880,18 @@ def q419_schema_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size."""
     e = table(spark, sf_dir, "events")
 
-    def profile(df: DataFrame, p: str) -> DataFrame:
-        aggs = []
-        for name, typ in _EVENTS_COLS:
-            canon = _canon_spark(name, typ)
-            aggs += [
-                F.count(F.lit(1)).cast("bigint").alias(f"{p}_{name}__n"),
-                F.sum(F.col(name).isNull().cast("bigint"))
-                .cast("bigint")
-                .alias(f"{p}_{name}__nulls"),
-                F.countDistinct(canon).cast("bigint").alias(f"{p}_{name}__nd"),
-                F.min(canon).alias(f"{p}_{name}__mn"),
-                F.max(canon).alias(f"{p}_{name}__mx"),
-            ]
-        return df.agg(*aggs)
-
     # both windows' wide one-row profiles join 1x1; the min/max
     # EXTENSION flags are computed here, column by column, on the
     # NATIVE canonical types (a stringified stack would compare
     # "10" < "9" lexically for numeric columns), and only the uniform
     # bigint/boolean outputs go through the stack unpivot
-    wide = profile(e.filter(F.col("ts") < "2024-01-16"), "b").join(
-        profile(e.filter(F.col("ts") >= "2024-01-16"), "c"), F.lit(True)
+    wide = wide_profile(
+        e.filter(F.col("ts") < "2024-01-16"), _EVENTS_COLS, "b_", stringify=False
+    ).join(
+        wide_profile(
+            e.filter(F.col("ts") >= "2024-01-16"), _EVENTS_COLS, "c_", stringify=False
+        ),
+        F.lit(True),
     )
     stack_args = ", ".join(
         f"'{name}', b_{name}__n, c_{name}__n, "
@@ -895,7 +900,7 @@ def q419_schema_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"c_{name}__nulls * 1000000 div c_{name}__n "
         f"- b_{name}__nulls * 1000000 div b_{name}__n, "
         f"c_{name}__nd * 1000000 div b_{name}__nd, "
-        f"c_{name}__mn < b_{name}__mn, c_{name}__mx > b_{name}__mx"
+        f"c_{name}__min < b_{name}__min, c_{name}__max > b_{name}__max"
         for name, _ in _EVENTS_COLS
     )
     return wide.select(

@@ -10,15 +10,25 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_int, hex_int_expr, hex_int_sql
 from ..functions.text import tokens_sql
-from ..io import query_state, table
+from ..io import query_state, scratch_dir, table
 from ..operators.dedup import (
+    MINHASH_LAYOUT,
+    build_minhash_index,
     minhash_lsh_candidates,
     ngram_jaccard,
     ngram_set,
+    probe_minhash_index,
     simhash64,
     simhash_band_candidates,
 )
 from ..operators.ranking import pin_cache
+from ..operators.state import (
+    compact_bucket_index,
+    probe_bucket_rows,
+    probe_then_append,
+    read_bucket_index,
+    write_bucket_index,
+)
 from .catalog import query
 
 _TOKS_A = tokens_sql("a.text")
@@ -2708,8 +2718,6 @@ def q388_incremental_minhash_state(spark: SparkSession, sf_dir: str) -> DataFram
     touched exactly once in its lifetime. The same posture as the
     reference's count-watermark increment (R16), for near-dup instead
     of page-count."""
-    from ..operators.dedup import build_minhash_index, probe_minhash_index
-
     d = table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
     # Re-crawled docs arrive under fresh ids. NEGATION, not an additive
@@ -2732,15 +2740,13 @@ def q388_incremental_minhash_state(spark: SparkSession, sf_dir: str) -> DataFram
     # steady state (what the bench times after its setup pass) is
     # probe-only. Content is deterministic, so a rebuild is equivalent.
     def build(sd: str) -> None:
-        # repartition ON the partition column before the partitioned
-        # write: one shuffle keyed on band → one writer (one file) per
-        # band, instead of every task opening a writer per band
-        # (bands × tasks small files and writer-memory thrash)
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(sd + "/minhash_index")
+        write_bucket_index(
+            build_minhash_index(corpus), MINHASH_LAYOUT, sd + "/minhash_index"
+        )
 
-    index = spark.read.parquet(query_state("q388", sf_dir, build)[0] + "/minhash_index")
+    index = read_bucket_index(
+        spark, MINHASH_LAYOUT, query_state("q388", sf_dir, build)[0] + "/minhash_index"
+    )
     res = probe_minhash_index(batch, index)
     return (
         batch.select(F.col("doc_id").alias("id"), "source")
@@ -2810,7 +2816,11 @@ def q389_incremental_semantic_state(spark: SparkSession, sf_dir: str) -> DataFra
     import json
     import os
 
-    from ..operators.semantic_dedup import build_semantic_index, probe_semantic_index
+    from ..operators.semantic_dedup import (
+        SEMANTIC_LAYOUT,
+        build_semantic_index,
+        probe_semantic_index,
+    )
     from ..operators.similarity import train_ivf_codebook
 
     e = table(spark, sf_dir, "embeddings")
@@ -2829,13 +2839,15 @@ def q389_incremental_semantic_state(spark: SparkSession, sf_dir: str) -> DataFra
         codebook = train_ivf_codebook(corpus, n_cells=16, refine_iters=1)
         with open(os.path.join(base, "codebook.json"), "w") as f:
             json.dump([[c, list(map(float, v))] for c, v in codebook], f)
-        build_semantic_index(corpus, codebook).repartition("cell").write.partitionBy(
-            "cell"
-        ).parquet(os.path.join(base, "semantic_index"))
+        write_bucket_index(
+            build_semantic_index(corpus, codebook),
+            SEMANTIC_LAYOUT,
+            os.path.join(base, "semantic_index"),
+        )
         return codebook
 
     base, codebook = query_state("q389", sf_dir, build)
-    index = spark.read.parquet(os.path.join(base, "semantic_index"))
+    index = read_bucket_index(spark, SEMANTIC_LAYOUT, os.path.join(base, "semantic_index"))
     res = probe_semantic_index(batch, index, codebook)
     return (
         batch.select(F.col("vec_id").alias("id"), "label")
@@ -2912,6 +2924,42 @@ def q391_incremental_components_state(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
+def _published_minhash_generations(spark: SparkSession, sf_dir: str) -> str:
+    """The state q393, q398 and q415 share; returns its manifest path.
+    gen0 is the state one step of q388's loop leaves (the corpus,
+    doc_id % 3 != 0, indexed; the batch, doc_id % 3 = 0, probed against
+    it and its survivors' rows appended), gen1 its TTL compaction
+    (id % 7 != 2), each published once, in the build: published
+    generation dirs are immutable, so no call rewrites them and the
+    manifest history holds exactly these two publishes. Generations
+    publish relative to the manifest: the state is built in a tmp dir
+    and renamed into place."""
+    import os
+
+    from ..sinks.manifest import publish_generation
+
+    d = table(spark, sf_dir, "documents")
+    corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
+    batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
+
+    def build(base: str) -> None:
+        g0 = os.path.join(base, "gen0")
+        write_bucket_index(build_minhash_index(corpus), MINHASH_LAYOUT, g0)
+        probe_then_append(spark, MINHASH_LAYOUT, build_minhash_index(batch), g0)
+        manifest = os.path.join(base, "MANIFEST.json")
+        publish_generation(manifest, "gen0", {"generation": 0})
+        compact_bucket_index(
+            spark,
+            MINHASH_LAYOUT,
+            g0,
+            os.path.join(base, "gen1"),
+            keep=F.col("id") % 7 != 2,
+        )
+        publish_generation(manifest, "gen1", {"generation": 1})
+
+    return os.path.join(query_state("q398", sf_dir, build)[0], "MANIFEST.json")
+
+
 @query(
     "q393_state_compaction_ttl",
     oracle=f"""
@@ -2955,10 +3003,11 @@ def q393_state_compaction_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATE-TABLE MAINTENANCE — the lifecycle pass the incremental
     family (q388–q392) implies: the band-bucket index grows by one
     small-file append per probed batch FOREVER, and expired docs keep
-    matching until their rows leave the state. This query builds the
+    matching until their rows leave the state. This query takes the
     two-generation state q388's steady loop produces (corpus index +
-    appended batch survivors), then runs
-    operators/dedup.py::compact_minhash_index — TTL-drop rows for
+    appended batch survivors: gen0 of the state q398/q415 publish),
+    then runs operators/state.py::compact_bucket_index into a scratch
+    dir of the call — TTL-drop rows for
     aged-out docs (retention proxy: doc_id % 7 = 2), one band-keyed
     shuffle, one file per band — and reports the compacted state's
     per-band profile.
@@ -2982,35 +3031,13 @@ def q393_state_compaction_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     index maintenance)."""
     import os
 
-    from ..operators.dedup import (
-        build_minhash_index,
-        compact_minhash_index,
-        probe_minhash_index,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-    batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-
-    def build(base: str) -> None:
-        sd = os.path.join(base, "index")
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(sd)
-        index = spark.read.parquet(sd)
-        res = probe_minhash_index(batch, index)
-        survivors = batch.join(
-            res.filter(~F.col("is_dup")).select("id"),
-            batch.doc_id == F.col("id"),
-        ).select("doc_id", "text")
-        build_minhash_index(survivors).repartition("band").write.mode(
-            "append"
-        ).partitionBy("band").parquet(sd)
-
-    base, _ = query_state("q393", sf_dir, build)
-    sd = os.path.join(base, "index")
-    compacted = compact_minhash_index(
-        spark, sd, os.path.join(base, "compacted"), keep=F.col("id") % 7 != 2
+    manifest = _published_minhash_generations(spark, sf_dir)
+    compacted = compact_bucket_index(
+        spark,
+        MINHASH_LAYOUT,
+        os.path.join(os.path.dirname(manifest), "gen0"),
+        scratch_dir("q393"),
+        keep=F.col("id") % 7 != 2,
     )
     return compacted.groupBy(F.col("band").cast("int").alias("band")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_entries"),
@@ -3217,7 +3244,6 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..operators.components import connected_components, incremental_components
-    from ..operators.dedup import build_minhash_index, probe_minhash_index
     from ..operators.ranking import global_prefix_sum
 
     d = table(spark, sf_dir, "documents")
@@ -3225,9 +3251,9 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
 
     def build(base: str) -> None:
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(os.path.join(base, "index"))
+        write_bucket_index(
+            build_minhash_index(corpus), MINHASH_LAYOUT, os.path.join(base, "index")
+        )
         connected_components(
             _gap_edges(corpus).localCheckpoint(eager=True)
         ).write.parquet(
@@ -3235,7 +3261,7 @@ def q395_corpus_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base, _ = query_state("q395", sf_dir, build)
-    index = spark.read.parquet(os.path.join(base, "index"))
+    index = read_bucket_index(spark, MINHASH_LAYOUT, os.path.join(base, "index"))
     labels = spark.read.parquet(os.path.join(base, "labels"))
 
     # 1. probe: batch vs the INDEX alone. The survivor-id frame is
@@ -3351,9 +3377,10 @@ def q397_semantic_index_compaction(spark: SparkSession, sf_dir: str) -> DataFram
     the vector-space state (q389): generation 1 indexes the corpus
     (vec_id % 3 ≠ 0) under the offline IVF codebook, the batch's
     survivors (vec_id % 3 = 0, not embedding-identical to the corpus)
-    APPEND their cell rows, then operators/semantic_dedup.py::
-    compact_semantic_index TTL-drops aged vectors (vec_id % 7 = 2) and
-    rewrites one file per cell partition. Correctness is observed
+    APPEND their cell rows, then operators/state.py::
+    compact_bucket_index TTL-drops aged vectors (vec_id % 7 = 2) and
+    rewrites one file per cell partition into a scratch dir of the
+    call. Correctness is observed
     THROUGH PROBE BEHAVIOR — the only lens a cell layout admits, since
     cells are codebook-dependent and no SQL oracle can name them: the
     whole refreshed set re-ingests under fresh (negated) ids against
@@ -3375,8 +3402,8 @@ def q397_semantic_index_compaction(spark: SparkSession, sf_dir: str) -> DataFram
     import os
 
     from ..operators.semantic_dedup import (
+        SEMANTIC_LAYOUT,
         build_semantic_index,
-        compact_semantic_index,
         probe_semantic_index,
     )
     from ..operators.similarity import train_ivf_codebook
@@ -3390,24 +3417,18 @@ def q397_semantic_index_compaction(spark: SparkSession, sf_dir: str) -> DataFram
         with open(os.path.join(base, "codebook.json"), "w") as f:
             json.dump([[c, list(map(float, v))] for c, v in codebook], f)
         idx = os.path.join(base, "index")
-        build_semantic_index(corpus, codebook).repartition("cell").write.partitionBy(
-            "cell"
-        ).parquet(idx)
-        res = probe_semantic_index(batch, spark.read.parquet(idx), codebook)
-        surv = batch.join(
-            res.filter(~F.col("is_dup")).select(F.col("id").alias("vec_id")),
-            "vec_id",
+        write_bucket_index(build_semantic_index(corpus, codebook), SEMANTIC_LAYOUT, idx)
+        probe_then_append(
+            spark, SEMANTIC_LAYOUT, build_semantic_index(batch, codebook), idx
         )
-        build_semantic_index(surv, codebook).repartition("cell").write.mode(
-            "append"
-        ).partitionBy("cell").parquet(idx)
         return codebook
 
     base, codebook = query_state("q397", sf_dir, build)
-    compacted = compact_semantic_index(
+    compacted = compact_bucket_index(
         spark,
+        SEMANTIC_LAYOUT,
         os.path.join(base, "index"),
-        os.path.join(base, "compacted"),
+        scratch_dir("q397"),
         keep=F.col("id") % 7 != 2,
     )
     # re-ingest the whole refreshed set under fresh negated ids (-id-1:
@@ -3476,14 +3497,14 @@ def q398_generation_manifest_swap(spark: SparkSession, sf_dir: str) -> DataFrame
     (sinks/manifest.py) names the live one; publishing is write-temp +
     rename, so a reader racing the publish sees the old generation or
     the new one, never a torn rewrite (q343's two-phase-commit
-    discipline applied to state instead of output). This query runs the
-    full lifecycle: build the appended two-generation minhash index
-    (q393's shape), PUBLISH it, compact with TTL into a fresh
-    generation, PUBLISH that, then report the per-band profile of
-    whatever the manifest points at — which the oracle checks equals
-    the compacted content exactly (same conservation algebra as q393).
-    Torn-publish behavior (a dangling .tmp never changes what readers
-    see) is pinned in tests/test_operators.py.
+    discipline applied to state instead of output). Its state runs the
+    full lifecycle once, at build: build the appended two-generation
+    minhash index (q393's shape), PUBLISH it, compact with TTL into a
+    fresh generation, PUBLISH that. Each call reports the per-band
+    profile of whatever the manifest points at — which the oracle
+    checks equals the compacted content exactly (same conservation
+    algebra as q393). Torn-publish behavior (a dangling .tmp never
+    changes what readers see) is pinned in tests/test_operators.py.
 
     100 TB story: the manifest is one JSON object on storage with
     rename-or-overwrite atomicity (POSIX rename here, conditional-PUT
@@ -3491,41 +3512,9 @@ def q398_generation_manifest_swap(spark: SparkSession, sf_dir: str) -> DataFrame
     so retention is 'delete generations unreferenced past the grace
     period' and rollback is re-pointing the manifest at the previous
     generation — state-table time travel for the cost of a file."""
-    import os
+    from ..sinks.manifest import read_current
 
-    from ..operators.dedup import (
-        build_minhash_index,
-        compact_minhash_index,
-        probe_minhash_index,
-    )
-    from ..sinks.manifest import publish_generation, read_current
-
-    d = table(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-    batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-
-    def build(base: str) -> None:
-        g0 = os.path.join(base, "gen0")
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(g0)
-        res = probe_minhash_index(batch, spark.read.parquet(g0))
-        survivors = batch.join(
-            res.filter(~F.col("is_dup")).select("id"),
-            batch.doc_id == F.col("id"),
-        ).select("doc_id", "text")
-        build_minhash_index(survivors).repartition("band").write.mode(
-            "append"
-        ).partitionBy("band").parquet(g0)
-
-    base, _ = query_state("q398", sf_dir, build)
-    manifest = os.path.join(base, "MANIFEST.json")
-    g0 = os.path.join(base, "gen0")
-    g1 = os.path.join(base, "gen1")
-    publish_generation(manifest, g0, {"generation": 0})
-    compact_minhash_index(spark, g0, g1, keep=F.col("id") % 7 != 2)
-    publish_generation(manifest, g1, {"generation": 1})
-    live = read_current(spark, manifest)
+    live = read_current(spark, _published_minhash_generations(spark, sf_dir))
     return live.groupBy(F.col("band").cast("int").alias("band")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_entries"),
         F.count_distinct("id").cast("bigint").alias("n_docs"),
@@ -3575,8 +3564,8 @@ def q415_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-side complement of q398's atomic publish: the manifest records
     every generation it has ever pointed at (immutable dirs + an
     ordered history list), so any past state remains addressable after
-    later publishes. This query runs q398's full lifecycle (appended
-    index → publish gen0 → TTL compaction → publish gen1), then reads
+    later publishes. This query shares q398's state (appended index →
+    publish gen0 → TTL compaction → publish gen1), and reads
     the state AS OF THE FIRST PUBLISH via
     sinks/manifest.py::read_generation(manifest, 0) — while ``current``
     points at the compacted gen1 — and reports its per-band profile.
@@ -3591,44 +3580,9 @@ def q415_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates the history tail. This is the same design as Iceberg/
     Delta snapshot reads, reduced to its primitive: immutable data +
     an ordered pointer list."""
-    import os
+    from ..sinks.manifest import read_generation
 
-    from ..operators.dedup import (
-        build_minhash_index,
-        compact_minhash_index,
-        probe_minhash_index,
-    )
-    from ..sinks.manifest import publish_generation, read_generation
-
-    d = table(spark, sf_dir, "documents")
-
-    def build(base: str) -> None:
-        corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-        batch = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-        g0 = os.path.join(base, "gen0")
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(g0)
-        res = probe_minhash_index(batch, spark.read.parquet(g0))
-        survivors = batch.join(
-            res.filter(~F.col("is_dup")).select(F.col("id").alias("doc_id")),
-            "doc_id",
-        )
-        build_minhash_index(survivors).repartition("band").write.mode(
-            "append"
-        ).partitionBy("band").parquet(g0)
-        # generations publish relative to the manifest: the state is
-        # built in a tmp dir and renamed into place
-        manifest = os.path.join(base, "MANIFEST.json")
-        publish_generation(manifest, "gen0", {"generation": 0})
-        compact_minhash_index(
-            spark, g0, os.path.join(base, "gen1"), keep=F.col("id") % 7 != 2
-        )
-        publish_generation(manifest, "gen1", {"generation": 1})
-
-    manifest = os.path.join(query_state("q415", sf_dir, build)[0], "MANIFEST.json")
-
-    asof = read_generation(spark, manifest, 0)
+    asof = read_generation(spark, _published_minhash_generations(spark, sf_dir), 0)
     return asof.groupBy(F.col("band").cast("int").alias("band")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_entries"),
         F.count_distinct("id").cast("bigint").alias("n_docs"),
@@ -3696,22 +3650,21 @@ def q421_manifest_generation_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``meta``."""
     import os
 
-    from ..operators.dedup import build_minhash_index, compact_minhash_index
     from ..sinks.manifest import gc_generations, publish_generation
 
     d = table(spark, sf_dir, "documents")
 
     def build(base: str) -> None:
         g0, g1, g2 = (os.path.join(base, f"gen{i}") for i in range(3))
-        build_minhash_index(d.select("doc_id", "text")).repartition(
-            "band"
-        ).write.partitionBy("band").parquet(g0)
-        # relative publishes: see q415
+        write_bucket_index(
+            build_minhash_index(d.select("doc_id", "text")), MINHASH_LAYOUT, g0
+        )
+        # relative publishes: see _published_minhash_generations
         manifest = os.path.join(base, "MANIFEST.json")
         publish_generation(manifest, "gen0", {"generation": 0})
-        compact_minhash_index(spark, g0, g1, keep=F.col("id") % 7 != 2)
+        compact_bucket_index(spark, MINHASH_LAYOUT, g0, g1, keep=F.col("id") % 7 != 2)
         publish_generation(manifest, "gen1", {"generation": 1})
-        compact_minhash_index(spark, g1, g2, keep=F.col("id") % 5 != 1)
+        compact_bucket_index(spark, MINHASH_LAYOUT, g1, g2, keep=F.col("id") % 5 != 1)
         publish_generation(manifest, "gen2", {"generation": 2})
         gc_generations(manifest, keep_last=2)
 
@@ -3735,7 +3688,7 @@ def q421_manifest_generation_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         if kept:
             rows.append(
-                spark.read.parquet(gen_dir).agg(
+                read_bucket_index(spark, MINHASH_LAYOUT, gen_dir).agg(
                     F.count(F.lit(1)).cast("bigint").alias("n_entries"),
                     F.count_distinct("id").cast("bigint").alias("n_docs"),
                     F.min("id").alias("min_id"),
@@ -3815,16 +3768,15 @@ def q399_erasure_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest publish (q398) keeps concurrent probes consistent."""
     import os
 
-    from ..operators.dedup import build_minhash_index, probe_minhash_rows
     from ..operators.state import erase_from_state
 
     d = table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
 
     def build(base: str) -> None:
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(os.path.join(base, "index"))
+        write_bucket_index(
+            build_minhash_index(corpus), MINHASH_LAYOUT, os.path.join(base, "index")
+        )
 
     base, _ = query_state("q399", sf_dir, build)
     idx = os.path.join(base, "index")
@@ -3835,10 +3787,10 @@ def q399_erasure_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     erased = erase_from_state(
         spark,
         idx,
-        os.path.join(base, "erased"),
+        scratch_dir("q399"),
         tomb,
         id_col="id",
-        partition_col="band",
+        partition_col=MINHASH_LAYOUT.partition,
     )
 
     # re-ingest the whole corpus under negated ids (collision-free with
@@ -3851,10 +3803,10 @@ def q399_erasure_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state while skipping the corpus-sized signature recompute (the
     # dominant cost of the pass; probe-from-text stays exercised at
     # this scale by q388/q392/q395).
-    reingest_rows = spark.read.parquet(idx).select(
+    reingest_rows = read_bucket_index(spark, MINHASH_LAYOUT, idx).select(
         (-F.col("id")).alias("id"), "band", "bucket", "set_fp"
     )
-    res = probe_minhash_rows(reingest_rows, erased)
+    res = probe_bucket_rows(reingest_rows, erased, MINHASH_LAYOUT)
     meta = d.filter(F.col("doc_id") % 3 != 0).select(
         (-F.col("doc_id")).alias("id"),
         "source",

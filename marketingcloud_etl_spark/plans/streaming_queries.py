@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.money import dec
 from ..io import query_state, scratch_dir, table
 from ..operators.sessionize import sessionize
+from ..operators.state import probe_then_append, write_bucket_index
 from .catalog import query
 
 
@@ -1367,6 +1368,41 @@ def _replay_arrivals(spark: SparkSession, name: str, golden: str, state: str, pr
     q.awaitTermination()
 
 
+def _replay_probe_then_append(
+    spark: SparkSession, name: str, golden: str, state: str, layout, build_rows
+) -> DataFrame:
+    """Replay ``golden``'s arrivals (:func:`_replay_arrivals`) through
+    the incremental dedup loop over the bucket index ``<state>/``:
+    each micro-batch's index rows (``build_rows(batch_df)``, built and
+    checkpointed once) probe the state and append their survivors
+    (state.probe_then_append). Returns per batch (batch_idx, n_batch,
+    n_dup, n_new).
+
+    Counts are keyed by batch_id so an at-least-once foreachBatch
+    redelivery overwrites rather than duplicates a count row. (A
+    redelivery AFTER the append would additionally see the batch's own
+    survivors in the index — full exactly-once state maintenance needs
+    q343's batchId-manifest two-phase commit; this bounded
+    deterministic replay never retries, and the oracle would catch it
+    if it did.)"""
+    results: dict[int, tuple[int, int]] = {}
+
+    def process(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+        rows = build_rows(batch_df).localCheckpoint(eager=True)
+        res = probe_then_append(spark, layout, rows, state_dir)
+        row = res.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_dup").cast("bigint")).alias("d"),
+        ).first()
+        results[int(batch_id)] = (int(row.n or 0), int(row.d or 0))
+
+    _replay_arrivals(spark, name, golden, state, process)
+    return spark.createDataFrame(
+        [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
+        "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
+    )
+
+
 @query(
     "q392_stream_incremental_dedup",
     oracle=f"""
@@ -1426,7 +1462,7 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     batch-sized append; state grows by survivors only. The batch
     boundary is data-defined (one file per arrival), so re-running the
     replay reproduces byte-identical counts."""
-    from ..operators.dedup import build_minhash_index, probe_minhash_rows
+    from ..operators.dedup import MINHASH_LAYOUT, build_minhash_index
 
     d = table(spark, sf_dir, "documents")
 
@@ -1446,52 +1482,26 @@ def q392_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
                 1
             ).write.parquet(sub)
         corpus = d.filter(F.col("doc_id") % 4 == 3).select("doc_id", "text")
-        build_minhash_index(corpus).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(os.path.join(golden, "minhash_index"))
+        write_bucket_index(
+            build_minhash_index(corpus),
+            MINHASH_LAYOUT,
+            os.path.join(golden, "minhash_index"),
+        )
 
     golden, _ = query_state("q392", sf_dir, build)
 
-    # keyed by batch_id so an at-least-once foreachBatch redelivery
-    # overwrites rather than duplicates a count row. (A redelivery
-    # AFTER the append below would additionally see the batch's own
-    # survivors in the index — full exactly-once state maintenance
-    # needs q343's batchId-manifest two-phase commit; this query's
-    # bounded deterministic replay never retries, and the oracle would
-    # catch it if it did.)
-    results: dict[int, tuple[int, int]] = {}
-
-    def process(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-        # ONE minhash/shingle pass per micro-batch: build the batch's
-        # index rows once, probe the state from them, and append the
-        # SURVIVOR SUBSET of the same rows — probing the text and then
-        # re-fingerprinting the survivors ran the (dominant) signature
-        # compute twice per batch.
-        rows = build_minhash_index(batch_df.select("doc_id", "text")).localCheckpoint(
-            eager=True
-        )
-        # explicit schema — the state layout is fixed by
-        # build_minhash_index; skips per-batch footer inference
-        index = spark.read.schema(
-            "id bigint, band int, bucket bigint, set_fp string"
-        ).parquet(state_dir)
-        res = probe_minhash_rows(rows, index).localCheckpoint(eager=True)
-        row = res.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_dup").cast("bigint")).alias("d"),
-        ).first()
-        results[int(batch_id)] = (int(row.n or 0), int(row.d or 0))
-        surv_rows = rows.join(
-            res.filter(~F.col("is_dup")).select("id"), "id"
-        )
-        surv_rows.repartition("band").write.mode("append").partitionBy(
-            "band"
-        ).parquet(state_dir)
-
-    _replay_arrivals(spark, "q392", golden, "minhash_index", process)
-    return spark.createDataFrame(
-        [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
-        "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
+    # ONE minhash/shingle pass per micro-batch: the batch's index rows
+    # are built once, the state probed from them, and the SURVIVOR
+    # SUBSET of the same rows appended — probing the text and then
+    # re-fingerprinting the survivors ran the (dominant) signature
+    # compute twice per batch.
+    return _replay_probe_then_append(
+        spark,
+        "q392",
+        golden,
+        "minhash_index",
+        MINHASH_LAYOUT,
+        lambda batch_df: build_minhash_index(batch_df.select("doc_id", "text")),
     )
 
 
@@ -1544,7 +1554,7 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     as three ordered micro-batches (one parquet file each,
     mtime-ordered, maxFilesPerTrigger=1), and each batch (a) probes
     the persisted cell-partitioned semantic index
-    (operators/semantic_dedup.py::probe_semantic_index), (b) records
+    (operators/state.py::probe_bucket_rows), (b) records
     its (n_batch, n_dup, n_new), and (c) APPENDS its survivors' index
     rows — so batch 1 dedups against the corpus AND batch 0's
     survivors. Each batch plants re-ingests of the PREVIOUS tier under
@@ -1569,10 +1579,7 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and shared by every batch, exactly like the ANN path's
     offline codebook. Batch boundaries are data-defined (one file per
     arrival), so the replay is deterministic end-to-end."""
-    from ..operators.semantic_dedup import (
-        build_semantic_index,
-        probe_semantic_rows,
-    )
+    from ..operators.semantic_dedup import SEMANTIC_LAYOUT, build_semantic_index
     from ..operators.similarity import train_ivf_codebook
 
     e = table(spark, sf_dir, "embeddings")
@@ -1597,45 +1604,29 @@ def q437_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fresh process rebuilds the whole golden dir (training is
         # deterministic), so persisting it would be dead weight
         codebook = train_ivf_codebook(corpus, n_cells=16, refine_iters=1)
-        build_semantic_index(corpus, codebook).repartition("cell").write.partitionBy(
-            "cell"
-        ).parquet(os.path.join(gdir, "semantic_index"))
+        write_bucket_index(
+            build_semantic_index(corpus, codebook),
+            SEMANTIC_LAYOUT,
+            os.path.join(gdir, "semantic_index"),
+        )
         return codebook
 
     gdir, codebook = query_state("q437", sf_dir, build)
 
-    results: dict[int, tuple[int, int]] = {}
-
-    def process(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-        # ONE Arrow matmul + fingerprint pass per micro-batch: build
-        # the batch's index rows once, probe the state FROM them, and
-        # append the SURVIVOR SUBSET of the same rows — probing the
-        # vectors and then re-deriving the survivors' cells ran the
-        # (dominant) cell-scoring matmul twice per batch (the q392
-        # probe_minhash_rows pattern, r13)
-        rows = build_semantic_index(
+    # ONE Arrow matmul + fingerprint pass per micro-batch: the batch's
+    # index rows are built once, the state probed FROM them, and the
+    # SURVIVOR SUBSET of the same rows appended — probing the vectors
+    # and then re-deriving the survivors' cells ran the (dominant)
+    # cell-scoring matmul twice per batch (q392's shape, r13)
+    return _replay_probe_then_append(
+        spark,
+        "q437",
+        gdir,
+        "semantic_index",
+        SEMANTIC_LAYOUT,
+        lambda batch_df: build_semantic_index(
             batch_df.select("vec_id", "embedding"), codebook
-        ).localCheckpoint(eager=True)
-        # explicit schema — the state layout is fixed by
-        # build_semantic_index; skips per-batch footer inference
-        index = spark.read.schema(
-            "id bigint, cell int, vec_fp string"
-        ).parquet(state_dir)
-        res = probe_semantic_rows(rows, index).localCheckpoint(eager=True)
-        row = res.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_dup").cast("bigint")).alias("d"),
-        ).first()
-        results[int(batch_id)] = (int(row.n or 0), int(row.d or 0))
-        surv_rows = rows.join(res.filter(~F.col("is_dup")).select("id"), "id")
-        surv_rows.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(state_dir)
-
-    _replay_arrivals(spark, "q437", gdir, "semantic_index", process)
-    return spark.createDataFrame(
-        [(b, n, dup, n - dup) for b, (n, dup) in sorted(results.items())],
-        "batch_idx bigint, n_batch bigint, n_dup bigint, n_new bigint",
+        ),
     )
 
 
@@ -1743,7 +1734,13 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     by postings hits. Periodic q396 compaction restores the term-
     sorted row-group layout the appends erode; none of this re-reads
     the corpus text."""
-    from ..operators.retrieval import bm25_serve, build_bm25_index
+    from ..operators.retrieval import (
+        POSTINGS_SCHEMA,
+        bm25_serve,
+        build_bm25_index,
+        refold_stats,
+        write_postings,
+    )
     from .text_queries import Q390_QUERY_TERMS
 
     d = table(spark, sf_dir, "documents")
@@ -1763,11 +1760,7 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # be dead weight copied into every timed run. Same term-sorted
         # shard layout write_bm25_index produces.
         gen0, _, _ = build_bm25_index(corpus)
-        (
-            gen0.repartition(8, "t")
-            .sortWithinPartitions("t", "doc_id")
-            .write.parquet(os.path.join(golden, "bm25", "postings"))
-        )
+        write_postings(gen0, os.path.join(golden, "bm25", "postings"))
 
     golden, _ = query_state("q443", sf_dir, build)
 
@@ -1792,19 +1785,13 @@ def q443_stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch (identical served scores). Explicit schema: the state
         # layout is fixed by build_bm25_index, so the per-batch footer
         # read schema inference would pay is skipped (3× per replay).
-        postings = spark.read.schema(
-            "t string, doc_id bigint, tf bigint, len bigint"
-        ).parquet(state + "/postings")
+        postings = spark.read.schema(POSTINGS_SCHEMA).parquet(state + "/postings")
         dfreq = (
             postings.filter(F.col("t").isin(*terms))
             .groupBy("t")
             .agg(F.count(F.lit(1)).alias("df"))
         )
-        dl = postings.select("doc_id", "len").distinct()
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("len").alias("total_len"),
-        )
+        stats = refold_stats(postings)
         # (c) serve the battery against the maintained index
         served = bm25_serve(qt, postings, dfreq, stats, top_k=3, terms=terms)
         for r in served.collect():

@@ -3496,14 +3496,12 @@ def q390_bm25_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hit-bounded (query, doc) aggregation — per-batch cost scales
     with HITS, not corpus. Maintenance is an append of the new docs'
     postings + a df/stats re-fold, R16's incremental posture."""
-    from ..operators.retrieval import bm25_serve, write_bm25_index
+    from ..operators.retrieval import bm25_serve, read_bm25_index, write_bm25_index
 
     base, _ = query_state(
         "q390", sf_dir, lambda sd: write_bm25_index(table(spark, sf_dir, "documents"), sd)
     )
-    postings = spark.read.parquet(base + "/postings")
-    dfreq = spark.read.parquet(base + "/df")
-    stats = spark.read.parquet(base + "/stats")
+    postings, dfreq, stats = read_bm25_index(spark, base)
     qt = spark.createDataFrame(list(Q390_QUERY_TERMS), "query_id int, t string")
     out = bm25_serve(
         qt, postings, dfreq, stats, top_k=5,
@@ -3594,13 +3592,12 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     two broadcast-sized re-folds; the retention predicate is evaluated
     before the exchange. Serving keeps q390's shape — term IN-list
     pushed into the sorted postings scan, hit-bounded aggregation."""
-    import os
-
     from ..operators.retrieval import (
         bm25_serve,
         build_bm25_index,
         compact_bm25_index,
         write_bm25_index,
+        write_postings,
     )
 
     d = table(spark, sf_dir, "documents")
@@ -3610,14 +3607,11 @@ def q396_bm25_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # maintenance append: the new docs' postings extend the shards
         # (breaking sort order within shards — compaction's job to fix)
         new_postings, _, _ = build_bm25_index(d.filter(F.col("doc_id") % 3 == 0))
-        new_postings.repartition(8, "t").sortWithinPartitions("t", "doc_id").write.mode(
-            "append"
-        ).parquet(base + "/postings")
+        write_postings(new_postings, base + "/postings", mode="append")
 
     base, _ = query_state("q396", sf_dir, build)
-    out_dir = os.path.join(base, "compacted")
     postings, dfreq, stats = compact_bm25_index(
-        spark, base, out_dir, keep=F.col("doc_id") % 7 != 2
+        spark, base, scratch_dir("q396"), keep=F.col("doc_id") % 7 != 2
     )
     qt = spark.createDataFrame(list(Q390_QUERY_TERMS), "query_id int, t string")
     out = bm25_serve(

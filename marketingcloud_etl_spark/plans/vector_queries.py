@@ -1716,7 +1716,7 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from ..functions.text import tokens
-    from ..operators.retrieval import bm25_serve, write_bm25_index
+    from ..operators.retrieval import bm25_serve, read_bm25_index, write_bm25_index
 
     d = table(spark, sf_dir, "documents")
     e = table(spark, sf_dir, "embeddings")
@@ -1745,9 +1745,7 @@ def q439_rag_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bm25_index(chunks, base, id_col="ckey", text_col="ctext")
 
     base, _ = query_state("q439", sf_dir, build)
-    postings = spark.read.parquet(base + "/postings")
-    dfreq = spark.read.parquet(base + "/df")
-    stats = spark.read.parquet(base + "/stats")
+    postings, dfreq, stats = read_bm25_index(spark, base)
 
     qt = spark.createDataFrame(
         [(1, t) for t in _Q439_TERMS], "query_id int, t string"

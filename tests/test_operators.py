@@ -104,17 +104,10 @@ def test_minhash_index_probe_incremental(spark, sf_dir, tmp_path):
     assert all(res2[i + 5000].dup_of == i + 2000 for i in range(10, 20))
 
 
-def test_minhash_index_compaction_ttl(spark, sf_dir, tmp_path):
-    """compact_minhash_index (q393's operator): (1) an append-grown
-    state collapses to ONE file per band partition; (2) probing the
-    compacted index equals probing the original for every doc whose
-    matches were not TTL'd; (3) TTL'd docs stop matching — their
-    re-ingests come back NEW."""
-    import os
-
+def _minhash_compaction_case(spark, sf_dir):
     from marketingcloud_etl_spark.operators.dedup import (
+        MINHASH_LAYOUT,
         build_minhash_index,
-        compact_minhash_index,
         probe_minhash_index,
     )
 
@@ -123,40 +116,87 @@ def test_minhash_index_compaction_ttl(spark, sf_dir, tmp_path):
         .select("doc_id", "text")
         .filter(F.col("doc_id") < 60)
     )
+    return MINHASH_LAYOUT, docs, "doc_id", build_minhash_index, probe_minhash_index
+
+
+def _semantic_compaction_case(spark, sf_dir):
+    from marketingcloud_etl_spark.operators.semantic_dedup import (
+        SEMANTIC_LAYOUT,
+        build_semantic_index,
+        probe_semantic_index,
+    )
+    from marketingcloud_etl_spark.operators.similarity import train_ivf_codebook
+
+    vecs = (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < 60)
+    )
+    cb = train_ivf_codebook(vecs, n_cells=4, refine_iters=1)
+    return (
+        SEMANTIC_LAYOUT,
+        vecs,
+        "vec_id",
+        lambda f: build_semantic_index(f, cb),
+        lambda batch, index: probe_semantic_index(batch, index, cb),
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_minhash_compaction_case, _semantic_compaction_case],
+    ids=["minhash", "semantic"],
+)
+def test_minhash_index_compaction_ttl(spark, sf_dir, tmp_path, case):
+    """compact_bucket_index (q393's and q397's operator), for the
+    minhash band index and the semantic cell index: (1) an
+    append-grown state collapses to ONE file per partition; (2)
+    probing the compacted index equals probing the original for every
+    item whose matches were not TTL'd; (3) TTL'd items stop matching —
+    their re-ingests come back NEW."""
+    import os
+
+    from marketingcloud_etl_spark.operators.state import (
+        compact_bucket_index,
+        read_bucket_index,
+        write_bucket_index,
+    )
+
+    layout, docs, id_col, build, probe = case(spark, sf_dir)
+    part = layout.partition
     state = str(tmp_path / "idx")
-    gen1 = docs.filter(F.col("doc_id") < 30)
-    gen2 = docs.filter(F.col("doc_id") >= 30)
-    build_minhash_index(gen1).repartition("band").write.partitionBy("band").parquet(state)
-    build_minhash_index(gen2).repartition("band").write.mode("append").partitionBy(
-        "band"
-    ).parquet(state)
-    band_dirs = [p for p in os.listdir(state) if p.startswith("band=")]
-    assert band_dirs, "no band partitions written"
+    gen1 = docs.filter(F.col(id_col) < 30)
+    gen2 = docs.filter(F.col(id_col) >= 30)
+    write_bucket_index(build(gen1), layout, state)
+    write_bucket_index(build(gen2), layout, state, mode="append")
+    part_dirs = [p for p in os.listdir(state) if p.startswith(f"{part}=")]
+    assert part_dirs, f"no {part} partitions written"
     n_files_before = sum(
         len([f for f in os.listdir(os.path.join(state, b)) if f.endswith(".parquet")])
-        for b in band_dirs
+        for b in part_dirs
     )
-    assert n_files_before >= 2 * len(band_dirs)  # two generations of files
+    assert n_files_before >= 2 * len(part_dirs)  # two generations of files
 
-    # TTL: drop docs 0..9; compact the rest
+    # TTL: drop items 0..9; compact the rest
     out = str(tmp_path / "idx_compacted")
-    compacted = compact_minhash_index(spark, state, out, keep=F.col("id") >= 10)
-    for b in [p for p in os.listdir(out) if p.startswith("band=")]:
+    compacted = compact_bucket_index(spark, layout, state, out, keep=F.col("id") >= 10)
+    for b in [p for p in os.listdir(out) if p.startswith(f"{part}=")]:
         files = [f for f in os.listdir(os.path.join(out, b)) if f.endswith(".parquet")]
         assert len(files) == 1, f"{b}: {len(files)} files after compaction"
 
-    # probe equivalence: re-ingest every doc under fresh (negated-odd)
-    # ids; kept docs still verify as dups, TTL'd docs come back new
-    reingest = docs.select((-F.col("doc_id") - 1).alias("doc_id"), "text")
-    before = {r.id: r for r in probe_minhash_index(reingest, spark.read.parquet(state)).collect()}
-    after = {r.id: r for r in probe_minhash_index(reingest, compacted).collect()}
+    # probe equivalence: re-ingest every item under fresh (negated-odd)
+    # ids; kept items still verify as dups, TTL'd items come back new
+    reingest = docs.withColumn(id_col, -F.col(id_col) - 1)
+    original = read_bucket_index(spark, layout, state)
+    before = {r.id: r for r in probe(reingest, original).collect()}
+    after = {r.id: r for r in probe(reingest, compacted).collect()}
     for i in range(60):
         rid = -i - 1
-        assert before[rid].is_dup, f"doc {i} should dup pre-compaction"
+        assert before[rid].is_dup, f"item {i} should dup pre-compaction"
         if i >= 10:
             assert after[rid].is_dup and after[rid].dup_of == before[rid].dup_of
         else:
-            assert not after[rid].is_dup, f"TTL'd doc {i} still matches"
+            assert not after[rid].is_dup, f"TTL'd item {i} still matches"
 
 
 def test_recrawl_id_minting_collision_free(spark):
@@ -2558,19 +2598,54 @@ def test_manifest_rejects_reserved_meta_keys(spark, tmp_path):
     publish_generation(man, g, {"generation": 0})  # normal meta fine
 
 
-def test_erase_from_state_rejects_in_place_rewrite(spark, tmp_path):
-    """erase_from_state's overwrite write would destroy the state
-    mid-read if pointed back at the source — the in-place rewrite the
-    state contract forbids must be rejected, not executed."""
-    import pytest
-
+def _erase_pass(spark, state, out):
     from marketingcloud_etl_spark.operators.state import erase_from_state
 
+    erase_from_state(spark, state, out, spark.createDataFrame([(1,)], "id long"))
+
+
+def _compact_pass(spark, state, out):
+    from marketingcloud_etl_spark.operators.dedup import MINHASH_LAYOUT
+    from marketingcloud_etl_spark.operators.state import compact_bucket_index
+
+    compact_bucket_index(spark, MINHASH_LAYOUT, state, out)
+
+
+def _compact_bm25_pass(spark, state, out):
+    from marketingcloud_etl_spark.operators.retrieval import compact_bm25_index
+
+    compact_bm25_index(spark, state, out)
+
+
+_REWRITE_PASSES = pytest.mark.parametrize(
+    "rewrite",
+    [_erase_pass, _compact_pass, _compact_bm25_pass],
+    ids=["erase", "compact", "compact_bm25"],
+)
+
+
+def _one_row_state(spark, state):
+    # a one-row table at the state dir and at its postings/ (BM25's
+    # table) with the columns each pass plans on
+    for d in (state, f"{state}/postings"):
+        spark.createDataFrame([(1, "a", 1)], "id long, t string, doc_id long").write.parquet(d)
+
+
+@_REWRITE_PASSES
+def test_erase_from_state_rejects_in_place_rewrite(spark, tmp_path, rewrite):
+    """Every maintenance pass (erasure, bucket compaction, BM25
+    compaction) writes through state.write_generation, whose overwrite
+    would destroy the state mid-read if pointed back at the source —
+    the in-place rewrite the state contract forbids must be rejected,
+    not executed."""
+    import os
+
     state = str(tmp_path / "idx")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(state)
-    tomb = spark.createDataFrame([(1,)], "id long")
+    _one_row_state(spark, state)
+    before = sorted(os.listdir(state))
     with pytest.raises(ValueError, match="FRESH generation"):
-        erase_from_state(spark, state, state, tomb)
+        rewrite(spark, state, state)
+    assert sorted(os.listdir(state)) == before
 
 
 def test_gc_generations_before_first_publish_is_noop(tmp_path):
@@ -2653,24 +2728,20 @@ def test_read_generation_detects_gc_winning_the_race(spark, tmp_path, monkeypatc
         read_generation(spark, man, 0)
 
 
-def test_erase_from_state_rejects_symlinked_alias(spark, tmp_path):
+@_REWRITE_PASSES
+def test_erase_from_state_rejects_symlinked_alias(spark, tmp_path, rewrite):
     """The in-place-rewrite guard must compare RESOLVED paths: a
     symlink pointing back at the state dir is the same storage under a
     different spelling, and writing through it destroys the live state
     exactly like out_dir == state_dir does."""
     import os
 
-    import pytest
-
-    from marketingcloud_etl_spark.operators.state import erase_from_state
-
     state = str(tmp_path / "idx")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(state)
+    _one_row_state(spark, state)
     alias = str(tmp_path / "idx_alias")
     os.symlink(state, alias)
-    tomb = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="FRESH generation"):
-        erase_from_state(spark, state, alias, tomb)
+        rewrite(spark, state, alias)
 
 
 def test_merge_checksum_triples_null_key_is_one_group(spark):
@@ -2702,11 +2773,12 @@ def test_split_hot_buckets_probe_equivalence(spark, sf_dir):
 
     from marketingcloud_etl_spark.io import table
     from marketingcloud_etl_spark.operators.dedup import (
+        MINHASH_LAYOUT,
         build_minhash_index,
         fan_out_probe_rows,
-        probe_minhash_rows,
         split_hot_buckets,
     )
+    from marketingcloud_etl_spark.operators.state import probe_bucket_rows
 
     d = table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
@@ -2727,12 +2799,12 @@ def test_split_hot_buckets_probe_equivalence(spark, sf_dir):
 
     base = {
         r["id"]: (r["n_candidates"], r["is_dup"], r["dup_of"])
-        for r in probe_minhash_rows(batch_rows, index).collect()
+        for r in probe_bucket_rows(batch_rows, index, MINHASH_LAYOUT).collect()
     }
     fanned = fan_out_probe_rows(batch_rows, registry)
     split_res = {
         r["id"]: (r["n_candidates"], r["is_dup"], r["dup_of"])
-        for r in probe_minhash_rows(fanned, split_index).collect()
+        for r in probe_bucket_rows(fanned, split_index, MINHASH_LAYOUT).collect()
     }
     assert split_res == base
 

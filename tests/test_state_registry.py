@@ -6,8 +6,9 @@ persist a frame, keep ``io.table`` the only place that decides scan
 parallelism, keep ``session.py`` the only module that changes
 session conf or decides the core count, keep ``functions/hashing.py``
 the only module that spells the cross-engine digest format, keep each
-streaming replay fragment spelled once, and keep private names inside
-their module."""
+streaming replay fragment spelled once, keep private names inside
+their module, and keep each persisted index layout spelled only by
+its owning operator module."""
 
 from __future__ import annotations
 
@@ -421,6 +422,96 @@ def test_streaming_replay_fragments_are_spelled_once():
             if (rel, owner[id(n)]) not in _STREAM_FRAGMENT_OWNERS[what]:
                 found.append(f"{rel}:{n.lineno}: {what} in {owner[id(n)]}")
     assert not found, "\n".join(found)
+
+
+# the modules that own a persisted index layout (operators/state.py the
+# bucket-index protocol, dedup.py / semantic_dedup.py its two layouts,
+# retrieval.py the BM25 postings)
+_INDEX_LAYOUT_OWNERS = {
+    "operators/state.py",
+    "operators/dedup.py",
+    "operators/semantic_dedup.py",
+    "operators/retrieval.py",
+}
+_INDEX_SCHEMAS = (
+    "id bigint, band int, bucket bigint, set_fp string",
+    "id bigint, cell int, vec_fp string",
+    "t string, doc_id bigint, tf bigint, len bigint",
+)
+
+
+def test_index_layouts_are_spelled_only_by_their_owners():
+    """The minhash-band and semantic-cell indexes are written, probed
+    and compacted through operators/state.py with the layouts dedup.py
+    and semantic_dedup.py describe, and the BM25 postings layout is
+    written and read by operators/retrieval.py: no other module
+    partitions on band or cell, spells the postings sort, or spells an
+    index schema."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel in _INDEX_LAYOUT_OWNERS:
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                args = [a.value for a in n.args if isinstance(a, ast.Constant)]
+                if n.func.attr in ("repartition", "partitionBy") and (
+                    {"band", "cell"} & set(args)
+                ):
+                    found.append(f"{rel}:{n.lineno}: {n.func.attr}{tuple(args)}")
+                if n.func.attr == "sortWithinPartitions" and args == ["t", "doc_id"]:
+                    found.append(f"{rel}:{n.lineno}: postings sort")
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                text = " ".join(n.value.split())
+                found += [
+                    f"{rel}:{n.lineno}: index schema {ddl!r}"
+                    for ddl in _INDEX_SCHEMAS
+                    if ddl in text
+                ]
+    assert not found, "\n".join(found)
+
+
+def _tree_listing(top: str) -> dict[str, tuple[int, int]]:
+    """(size, mtime_ns) of ``top`` and of everything under it."""
+    out = {}
+    for d, dirs, files in os.walk(top):
+        for p in [d] + [os.path.join(d, f) for f in files]:
+            st = os.lstat(p)
+            out[os.path.relpath(p, top)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_queries_leave_their_build_once_state_as_built(spark, sf_dir):
+    """A query writes its state once, at build, and each call's outputs
+    into a scratch dir of its own: a second call of each maintenance
+    query changes nothing the first call left under the state root,
+    and q398's manifest holds exactly the two publishes of its build
+    (it used to re-publish both, and rewrite the published gen1, on
+    every call)."""
+    import json
+
+    from marketingcloud_etl_spark.plans.catalog import load_all
+
+    registry = load_all()
+    root = io._state_root()
+    for prefix in ("q393", "q396", "q397", "q398", "q399"):
+        (name,) = [n for n in registry if n.startswith(prefix + "_")]
+        registry[name].fn(spark, sf_dir).collect()
+        first = {e: _tree_listing(os.path.join(root, e)) for e in os.listdir(root)}
+        registry[name].fn(spark, sf_dir).collect()
+        changed = [
+            e for e, listing in first.items()
+            if _tree_listing(os.path.join(root, e)) != listing
+        ]
+        assert not changed, f"{name}'s second call rewrote {changed}"
+
+    def unbuilt(d):
+        raise AssertionError("q398's state was not built")
+
+    base, _ = io.query_state("q398", sf_dir, unbuilt)
+    with open(os.path.join(base, "MANIFEST.json")) as f:
+        history = json.load(f)["history"]
+    assert [h["generation"] for h in history] == [0, 1]
 
 
 def test_no_hard_coded_tmp_paths():
